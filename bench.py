@@ -52,53 +52,6 @@ DELTA_NOTES: dict[str, str] = {
         "the at-scale degradation from a pair-sized shuffle to a "
         "corpus-sized co-partitioned join"
     ),
-    # r15 optimization round — intentional plan changes (full evidence in
-    # OPTIMIZATION_r15.md; values identical, sweep-verified):
-    "q49_copurchase_pagerank": (
-        "r15: degree join hoisted out of the power loop (one edge shuffle "
-        "per iteration removed)"
-    ),
-    "decontaminate_blast_radius": (
-        "r15: BFS 2 jobs/hop (was 3) + contamination_stats single-pass"
-    ),
-    "q50_copurchase_reach": "r15: BFS 2 jobs/hop (was 3)",
-    "dedup_keep_survivors": (
-        "r15: bounded-CC driver union-find + broadcast labels "
-        "(was distributed CC + SMJ)"
-    ),
-    "dedup_keep_priority": "r15: same bounded-CC + broadcast-labels change",
-    "split_leakage_safe": "r15: same bounded-CC + broadcast-labels change",
-    "entity_resolution_golden": "r15: same bounded-CC + broadcast-labels change",
-    "ann_topk_bruteforce": "r15: per-row norms hoisted out of per-pair cosine",
-    "ann_topk_ivf": "r15: per-row norms hoisted out of per-pair cosine",
-    "ann_hard_negatives": "r15: per-row norms hoisted out of per-pair cosine",
-    "mmr_diverse_topk": "r15: norm hoist in the pool^2 pair-sim stage",
-    "mmr_diverse_topk_ivf": "r15: norm hoist (IVF pool + pair sims)",
-    "semantic_dedup": "r15: (already norm-hoisted) unchanged semantics",
-    "embedding_near_dup": "r15: per-row norms hoisted in the verify stage",
-    "q40_trimmed_mean_price": (
-        "r15: percentile cuts broadcast (joined relation no longer "
-        "re-exchanged)"
-    ),
-    "streaming_ingest_batch": (
-        "r15: batch min-hashed once per epoch; exact stage as one "
-        "fingerprint window; literal-prune keys via raw CollectLimit; "
-        "candidate base text via the point-lookup seam (O(batch), was "
-        "O(corpus) text scan)"
-    ),
-    "semantic_ingest_batch": (
-        "r15: norm hoist in the cross-corpus probe + raw-collect cell keys"
-    ),
-    "dedup_chunks_incremental": (
-        "r15: only fold state checkpointed; batch rewrites run in one "
-        "parallel job"
-    ),
-    "repetition_quality": (
-        "r15: zero-shuffle rewrite tried and REVERTED (interpreted fold "
-        "1.5x slower); committed code = r14 plan, but this query is "
-        "order-sensitive in-bench (spread 2.1-7.8 s across windows on "
-        "identical code)"
-    ),
 }
 
 # round-10 methodology change, affecting EVERY per-query number at once

@@ -107,24 +107,6 @@ def money_sum(col: ColumnOrName, scale: int = 6) -> Column:
     return F.sum(_c(col).cast(f"decimal(18,{scale})")).cast("double")
 
 
-def money_avg(col: ColumnOrName, scale: int = 6) -> Column:
-    """Deterministic AVG: exact decimal sum / count, evaluated in double."""
-    c = _c(col)
-    return money_sum(c, scale) / F.count(c)
-
-
-def ratio_pct(num: Column, den: Column, scale: int = 2) -> Column:
-    """Ratio-of-aggregates × 100 (M3), null-safe, rounded."""
-    return F.round(num / F.nullif(den, F.lit(0)) * 100, scale)
-
-
-def parse_date(col: ColumnOrName, fmt: str | None = None) -> Column:
-    """Parse to date, unparseable -> null (D1) — same coerce semantics as
-    pandas ``to_datetime(errors='coerce')``. try_to_date: under Spark 4's
-    default ANSI mode, plain to_date raises on malformed input."""
-    return F.try_to_date(_c(col), fmt) if fmt else F.try_to_date(_c(col))
-
-
 def day_name(col: ColumnOrName) -> Column:
     """Full day-of-week name (D5)."""
     return F.date_format(_c(col), "EEEE")

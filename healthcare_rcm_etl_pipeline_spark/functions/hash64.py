@@ -27,6 +27,7 @@ _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
 SEED = np.uint64(42)
 _U8 = np.uint64(8)
+_U23 = np.uint64(23)
 _U27 = np.uint64(27)
 _U29 = np.uint64(29)
 _U31 = np.uint64(31)
@@ -34,6 +35,9 @@ _U32 = np.uint64(32)
 _U33 = np.uint64(33)
 _U37 = np.uint64(37)
 _U64 = np.uint64(64)
+# the 4-byte hashInt path's mask (rotation 23 above): the minhash kernel in
+# operators/dedup.py applies it to its INT permutation seeds
+_M32 = np.uint64(0xFFFFFFFF)
 
 
 def _rotl(x: np.ndarray, r: np.uint64) -> np.ndarray:
@@ -61,45 +65,17 @@ def fmix(h: np.ndarray) -> np.ndarray:
 def xxh64_long(value, seed=SEED) -> np.ndarray:
     """Spark ``XXH64.hashLong(value, seed)`` element-wise. ``value`` and
     ``seed`` broadcast against each other; int64 inputs are reinterpreted
-    as uint64 (same bits). Returns uint64; view as int64 for Spark longs."""
+    as uint64 (same bits). Returns uint64; view as int64 for Spark longs.
+    The uint64 wraparound is the algorithm, so NumPy's overflow warning
+    (raised for 0-d inputs only) is silenced."""
     v = np.asarray(value)
     if v.dtype != np.uint64:
         v = v.astype(np.int64, copy=False).view(np.uint64)
     s = np.asarray(seed)
     if s.dtype != np.uint64:
         s = s.astype(np.int64, copy=False).view(np.uint64)
-    h = s + _P5 + _U8
-    h = h ^ k1_mix(v)
-    h = _rotl(h, _U27) * _P1 + _P4
-    return fmix(h)
-
-
-_U23 = np.uint64(23)
-_M32 = np.uint64(0xFFFFFFFF)
-
-
-def xxh64_int(value, seed=SEED) -> np.ndarray:
-    """Spark ``XXH64.hashInt(value, seed)`` — the 4-byte path Catalyst
-    uses for INT children (e.g. ``F.lit(i)`` from a small Python int):
-    hash = seed + P5 + 4; hash ^= (v & 0xffffffff) * P1;
-    hash = rotl23(hash) * P2 + P3; fmix."""
-    v = np.asarray(value)
-    if v.dtype != np.uint64:
-        v = v.astype(np.int64, copy=False).view(np.uint64)
-    s = np.asarray(seed)
-    if s.dtype != np.uint64:
-        s = s.astype(np.int64, copy=False).view(np.uint64)
-    h = s + _P5 + np.uint64(4)
-    h = h ^ ((v & _M32) * _P1)
-    h = _rotl(h, _U23) * _P2 + _P3
-    return fmix(h)
-
-
-def xxh64_long_chain(columns, seed=SEED) -> np.ndarray:
-    """Spark ``xxhash64(c1, c2, ...)`` over LONG columns: left fold of
-    hashLong with the running hash as seed. ``columns`` is a sequence of
-    equal-length arrays. Returns int64 (Spark long)."""
-    h = np.asarray(seed, dtype=np.uint64)
-    for c in columns:
-        h = xxh64_long(c, h)
-    return h.view(np.int64)
+    with np.errstate(over="ignore"):
+        h = s + _P5 + _U8
+        h = h ^ k1_mix(v)
+        h = _rotl(h, _U27) * _P1 + _P4
+        return fmix(h)

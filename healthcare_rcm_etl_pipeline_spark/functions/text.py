@@ -154,12 +154,6 @@ def fingerprint_md5(col: ColumnOrName) -> Column:
     return F.md5(normalize_text(col))
 
 
-def fingerprint_xx64(col: ColumnOrName) -> Column:
-    """64-bit xxhash fingerprint of canonical text (cheap clustering key).
-    Engine-internal (not portable across engines) — used by minhash/simhash."""
-    return F.xxhash64(normalize_text(col))
-
-
 PII_PATTERNS: dict[str, str] = {
     # pragmatic patterns, portable between Java regex and RE2 (DuckDB):
     # no lookaround, no \p classes

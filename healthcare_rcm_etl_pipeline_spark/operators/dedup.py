@@ -1301,7 +1301,7 @@ def best_survivors_from_components(
     """``best_survivors`` served from a PRECOMPUTED component labeling
     ((doc, component) rows — e.g. the persisted state a component-labeling
     ingestion stream maintains, ``streaming/ingest.py:
-    make_component_ingest_batch_fn`` + ``read_components``): one join +
+    make_component_ingest_batch_fn`` + ``read_labels``): one join +
     one map-side-combinable ``max_by`` per call, no pair generation and no
     CC iteration — the production shape when the survivor policy is
     applied repeatedly over a growing corpus. Docs absent from the

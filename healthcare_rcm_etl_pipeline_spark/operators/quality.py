@@ -30,11 +30,6 @@ def rule_violations(df: DataFrame, predicate: Column) -> DataFrame:
     return df.filter(predicate)
 
 
-def reconcile_counts(written: DataFrame, readback: DataFrame) -> bool:
-    """Row-count reconciliation after a load (V3/S8)."""
-    return written.count() == readback.count()
-
-
 _NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 

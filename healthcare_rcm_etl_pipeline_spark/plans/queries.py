@@ -7373,7 +7373,7 @@ def _served_components_base(spark: SparkSession, sf_dir: str) -> str:
     ascending-doc_id micro-batches — a deterministic replay of the
     production stream at the default LSH config (k=64, bands=16, n=3,
     verify 0.5 — the ``dedup_minhash_lsh`` config). The serving queries
-    below read the resulting components state (``read_components``)
+    below read the resulting components state (``read_labels``)
     instead of recomputing pairs + CC per call. Staged under the system
     tmpdir keyed by uid+pid+sf_dir (same isolation rationale as
     ``_HQ_STAR_DIR``)."""
@@ -7410,7 +7410,9 @@ def _served_components_base(spark: SparkSession, sf_dir: str) -> str:
 def _served_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_rcm_etl_pipeline_spark.streaming import ingest as _ingest
 
-    comps = _ingest.read_components(spark, _served_components_base(spark, sf_dir))
+    comps = _ingest.read_labels(
+        spark, _served_components_base(spark, sf_dir), "components"
+    )
     if comps is None:  # a pair-free corpus never writes component state
         return spark.createDataFrame([], "doc long, component long")
     return comps
@@ -7420,7 +7422,7 @@ def _served_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def split_leakage_safe_served_q(spark, sf_dir):
     """Leakage-safe split SERVED from the component-labeling ingest
     stream's persisted state (``leakage_safe_split_from_components`` over
-    ``read_components``) — one left join + pure-expression bucketing per
+    ``read_labels``) — one left join + pure-expression bucketing per
     call, no pair generation, no CC iteration. Correctness chain, each
     link pinned elsewhere: served labels ≡ one-shot
     CC(minhash_lsh_pairs(everything ingested)) (fold invariance,
@@ -7510,7 +7512,7 @@ def entity_resolution_golden_served_q(spark, sf_dir):
 
     base = _served_entities_base(spark, sf_dir)
     rows = _ingest.read_entity_rows(spark, base).drop("epoch")
-    labels = _ingest.read_entities(spark, base)
+    labels = _ingest.read_labels(spark, base, "entities")
     if labels is None:
         labels = spark.createDataFrame([], "doc long, component long")
     return fuzzy.golden_from_labels(

@@ -35,19 +35,25 @@ usual; different token (new checkpoint against an existing base) -> the
 stream REBINDS, mapping its first batch to the next free physical epoch.
 Ingestion continues where the corpus left off instead of dropping data.
 
-This composes three independently-tested pieces: the incremental LSH probe
-(operators/dedup.py), the persisted band index layout, and the _EPOCH
-marker recipe shared with ``events.make_upsert_batch_fn``.
+All five ingest families (dedup above, semantic, chunk, component,
+entity) run this protocol through ONE skeleton, ``_epoch_batch_fn``, and
+supply only their probe and delta logic; ``ingest_stream`` drives any of
+them from a stream. (``events.make_upsert_batch_fn`` keeps its own bare
+integer marker: no run token, no rebind.)
 """
 
 from __future__ import annotations
 
+import contextlib
+import time
 import uuid
 import warnings
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from healthcare_rcm_etl_pipeline_spark.functions.text import fingerprint_md5
 from healthcare_rcm_etl_pipeline_spark.operators import dedup, graph
 from healthcare_rcm_etl_pipeline_spark.sources import sinks
 
@@ -91,7 +97,9 @@ def checkpoint_run_token(spark: SparkSession, checkpoint: str) -> str:
     return token
 
 
-def _read_epoched(spark: SparkSession, path: str, max_epoch: int | None) -> DataFrame | None:
+def _read_epoched(
+    spark: SparkSession, path: str, max_epoch: int | None, keep_epoch: bool = False
+) -> DataFrame | None:
     """Read an epoch-partitioned dataset, None if it doesn't exist yet.
 
     ``max_epoch`` filters to COMMITTED epochs only (epoch <= marker): a
@@ -103,13 +111,14 @@ def _read_epoched(spark: SparkSession, path: str, max_epoch: int | None) -> Data
     read failure's message, which drifts across Spark versions); any READ
     failure on an existing path (corrupt footer, permissions, transient
     storage error) propagates — silently treating those as 'no corpus yet'
-    would skip cross-corpus dedup and ingest duplicates without a trace."""
+    would skip cross-corpus dedup and ingest duplicates without a trace.
+    ``keep_epoch`` keeps the partition column (label states reduce on it)."""
     if not sinks.path_exists(spark, path):
         return None
     df = spark.read.parquet(path)
     if max_epoch is not None:
         df = df.filter(F.col("epoch") <= max_epoch)
-    return df.drop("epoch")
+    return df if keep_epoch else df.drop("epoch")
 
 
 def read_corpus(
@@ -165,6 +174,26 @@ def _in_literals(col: str, keys) -> F.Column:
     return F.col(col).isin(ks)
 
 
+def _probe_keys(probe: DataFrame, col: str, limit: int) -> list:
+    """The distinct keys of ``probe[col]`` for a literal prune — more than
+    ``limit`` of them means "too many to inline".
+
+    Bounded RAW collect first (r15): a narrow CollectLimit job with no
+    exchange. When the probe's raw rows fit under 8x the literal bound
+    (every micro-batch: bands x batch rows, or a batch's (id, cell) rows),
+    the distinct set is computed driver-side — no distinct SHUFFLE job per
+    batch. A bigger probe falls back to the distinct+limit path, so the
+    over-the-bound decision is unchanged. NULL keys are dropped before
+    sorting (None is unorderable): a NULL never matches ``isin`` in the
+    fallback path either, so the two paths stay row-identical for
+    NULL-bearing probes."""
+    raw_cap = 8 * (limit + 1)
+    raw = probe.select(col).limit(raw_cap).collect()
+    if len(raw) < raw_cap:
+        return sorted({r[0] for r in raw if r[0] is not None})
+    return [r[0] for r in probe.select(col).distinct().limit(limit + 1).collect()]
+
+
 def _literal_pruned(
     state: DataFrame, probe: DataFrame, col: str, limit: int | None = None
 ) -> DataFrame:
@@ -177,38 +206,13 @@ def _literal_pruned(
     literal predicate costs more in driver plan construction and
     per-row-group filter evaluation than the scan it saves). ``limit``
     defaults to the module's ``_PROBE_LITERAL_MAX`` at CALL time (tests
-    pin the fallback branch by patching it)."""
+    pin the fallback branch by patching it). On the band index
+    (``col="bh"``) the prune is exact by the ``read_band_index_for``
+    argument."""
     if limit is None:
         limit = _PROBE_LITERAL_MAX
-    # Bounded RAW collect first (r15): a narrow CollectLimit job with no
-    # exchange. When the probe's raw rows fit under 8x the literal bound
-    # (every micro-batch: bands x batch rows), the distinct set is computed
-    # driver-side — the distinct SHUFFLE job this used to pay per batch is
-    # gone. A bigger probe falls back to the distinct+limit path, so the
-    # decision (and the fallback behavior tests pin) is unchanged.
-    raw_cap = 8 * (limit + 1)
-    raw = probe.select(col).limit(raw_cap).collect()
-    if len(raw) < raw_cap:
-        # NULL keys are dropped before sorting (None is unorderable): a
-        # NULL never matches `isin` in the fallback path either, so the
-        # two paths stay row-identical for NULL-bearing probes
-        keys = sorted({r[0] for r in raw if r[0] is not None})
-    else:
-        keys = [
-            r[0] for r in probe.select(col).distinct().limit(limit + 1).collect()
-        ]
-    if len(keys) > limit:
-        return state
-    return state.filter(_in_literals(col, keys))
-
-
-def _literal_pruned_index(
-    index: DataFrame, probe_bands: DataFrame, limit: int | None = None
-) -> DataFrame:
-    """Band-index specialization of ``_literal_pruned`` (exactness argument
-    in ``read_band_index_for``: dropping non-probe band hashes is exact,
-    keeping same-bh rows from other bands is harmless)."""
-    return _literal_pruned(index, probe_bands, "bh", limit)
+    keys = _probe_keys(probe, col, limit)
+    return state if len(keys) > limit else state.filter(_in_literals(col, keys))
 
 
 def read_band_index_for(
@@ -232,6 +236,21 @@ def read_band_index_for(
     return None if idx is None else idx.filter(_in_literals("bh", keys))
 
 
+def _doc_fetch(spark: SparkSession, base: str, id_col: str, last: int):
+    """The ``base_lookup`` seam of ``minhash_lsh_pairs_incremental``:
+    candidate base TEXT by a literal id filter over the range-sorted docs
+    state, so footer min/max stats prune to the matching files/row groups
+    instead of the verify semi-join scanning the accumulated docs text.
+    The collected id list is bounded by max_bucket semantics."""
+
+    def fetch(ids: list) -> DataFrame:
+        return read_corpus(spark, base, max_epoch=last).filter(
+            _in_literals(id_col, list(ids))
+        )
+
+    return fetch
+
+
 def probe_near_dups(
     spark: SparkSession,
     base: str,
@@ -246,9 +265,9 @@ def probe_near_dups(
     """Serve "what are this document's near-dups in the corpus?" as a
     POINT LOOKUP: the probe's band keys prune the persisted index scan
     (``read_band_index_for``), and candidate base TEXT is fetched by a
-    literal id filter over the range-sorted docs state (the
-    ``base_lookup`` seam) — so a few-doc probe touches a few files of
-    each state dataset, never the corpus. Output ≡
+    literal id filter over the range-sorted docs state (``_doc_fetch``,
+    the same seam the dedup ingest uses) — so a few-doc probe touches a
+    few files of each state dataset, never the corpus. Output ≡
     ``minhash_lsh_pairs_incremental(probe, full corpus)`` exactly (pinned
     in tests/test_streaming_component_ingest.py). Returns None before the
     first commit; does not mutate state."""
@@ -259,12 +278,6 @@ def probe_near_dups(
     idx = read_band_index_for(spark, base, probe_bands, max_epoch=last)
     if idx is None:
         return None
-
-    def fetch(ids: list) -> DataFrame:
-        return read_corpus(spark, base, max_epoch=last).filter(
-            _in_literals(id_col, list(ids))
-        )
-
     return dedup.minhash_lsh_pairs_incremental(
         probe_df,
         None,
@@ -275,7 +288,7 @@ def probe_near_dups(
         n=n,
         verify_threshold=verify_threshold,
         base_bands=idx,
-        base_lookup=fetch,
+        base_lookup=_doc_fetch(spark, base, id_col, last),
     )
 
 
@@ -298,6 +311,142 @@ def _resolve_epoch(
     return run_token, physical - epoch_id, physical, last
 
 
+class _Delta(NamedTuple):
+    """One batch's contribution, as an ingest family hands it to the
+    epoch skeleton."""
+
+    # (dataset, df, sort_col): lands range-sorted as {base}/{dataset}/epoch=N
+    writes: list
+    # label families: the batch's (doc_a, doc_b) pair set to merge
+    pairs: DataFrame | None = None
+    # persisted around the writes when they share one costly lineage
+    pin: DataFrame | None = None
+
+
+@contextlib.contextmanager
+def _step(spark: SparkSession, family: str, name: str, steps: dict):
+    """Run one skeleton step with every Spark job it launches labelled
+    ``ingest.<family>.<name>`` (the caller's job description is restored
+    after) and its wall seconds recorded in ``steps``."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"ingest.{family}.{name}")
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        steps[name] = round(time.perf_counter() - t0, 4)
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _epoch_batch_fn(
+    base: str,
+    run_token: str | None,
+    family: str,
+    delta_fn,
+    labels: str | None = None,
+    compact_labels_every: int | None = None,
+):
+    """The foreachBatch body every ingest family runs: the exactly-once
+    epoch protocol of the module docstring around the family's
+    ``delta_fn(spark, batch_df, last) -> _Delta``. Steps, in order:
+
+    - ``resolve``: map the epoch id to this base's physical epoch
+      (``_resolve_epoch``); a replay of a committed epoch stops here.
+    - ``heal``: a maintenance op (purge/compact) that crashed mid-swap
+      leaves a trash/tmp leftover; ``recover_base`` resolves it BEFORE any
+      state is read, or the batch would probe a half-swapped view.
+    - ``delta``: the family probes the state at ``max_epoch=last`` (a
+      replay of a partially-written epoch must not see its own ghost
+      files) and computes its delta. Label families (``labels`` = the
+      label state name) hand back a pair set, which is pinned once and
+      merged into the label state here (``_merge_label_state``).
+    - ``write``: every delta dataset OVERWRITES its ``epoch=N`` directory,
+      range-sorted on its probe key — idempotent on replay — then the
+      label delta under both sort orders (``_write_label_delta``). The
+      delta's ``pin`` is persisted around these writes.
+    - ``commit``: the marker advances, last.
+    - ``fold`` (label families, every ``compact_labels_every`` committed
+      epochs): opt-in self-maintenance, ``compact_epochs`` over the label
+      state pair (see ``make_component_ingest_batch_fn``).
+
+    Each step's jobs carry the Spark job description
+    ``ingest.<family>.<step>``; the seconds of the steps that ran land on
+    ``apply_batch.last_steps``."""
+
+    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        steps = apply_batch.last_steps = {}
+        with _step(spark, family, "resolve", steps):
+            resolved = _resolve_epoch(spark, base, epoch_id, run_token)
+        if resolved is None:
+            return
+        bound, offset, physical, last = resolved
+        with _step(spark, family, "heal", steps):
+            recover_base(spark, base, own_token=bound)
+        with _step(spark, family, "delta", steps):
+            delta = delta_fn(spark, batch_df, last)
+            if labels:
+                # the pair set is re-read several times by the merge
+                # (nodes, CC edges); it is batch-neighborhood-sized
+                pairs = delta.pairs.localCheckpoint(eager=True)
+                label_delta = _merge_label_state(spark, base, labels, pairs, last)
+        with _step(spark, family, "write", steps):
+            pin = None if delta.pin is None else delta.pin.persist()
+            try:
+                for name, df, col in delta.writes:
+                    _range_sorted(df, col).write.mode("overwrite").parquet(
+                        f"{base}/{name}/epoch={physical}"
+                    )
+                if labels:
+                    _write_label_delta(label_delta, base, labels, physical)
+            finally:
+                if pin is not None:
+                    pin.unpersist()
+        with _step(spark, family, "commit", steps):
+            _write_marker(spark, base, bound, offset, physical)
+        if compact_labels_every and (physical + 1) % compact_labels_every == 0:
+            # owner=bound: the lock carries this stream's run token so a
+            # crash mid-fold is self-healed by the next incarnation's
+            # recover_base (r14 ADVICE high). MaintenanceLockHeld — a
+            # concurrent operator purge/compact, or an orphan a foreign
+            # owner must resolve — defers the fold to the next cadence
+            # epoch instead of failing the (already-committed) batch and
+            # killing the streaming query (r14 ADVICE medium).
+            with _step(spark, family, "fold", steps):
+                try:
+                    compact_epochs(
+                        spark,
+                        base,
+                        datasets=(labels, f"{labels}_by_label"),
+                        owner=bound,
+                    )
+                except MaintenanceLockHeld as exc:
+                    warnings.warn(
+                        f"cadence label fold deferred at epoch {physical}: {exc}",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
+
+    apply_batch.last_steps = None  # no batch applied yet
+    return apply_batch
+
+
+def ingest_stream(make_batch_fn, stream_df: DataFrame, checkpoint: str, *args, **kwargs):
+    """Drive a stream through any ingest family: ``make_batch_fn`` is one
+    of the ``make_*_ingest_batch_fn`` factories, called with ``*args``,
+    ``**kwargs`` and this checkpoint's run token (minted once, here)."""
+    token = checkpoint_run_token(stream_df.sparkSession, checkpoint)
+    return (
+        stream_df.writeStream.foreachBatch(
+            make_batch_fn(*args, run_token=token, **kwargs)
+        )
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def make_dedup_ingest_batch_fn(
     base: str,
     text_col: str = "text",
@@ -308,35 +457,22 @@ def make_dedup_ingest_batch_fn(
     verify_threshold: float = 0.5,
     run_token: str | None = None,
 ):
-    """foreachBatch body implementing the gated ingestion described above.
+    """foreachBatch body implementing the gated ingestion described above,
+    on the shared epoch skeleton (``_epoch_batch_fn``).
 
     ``run_token`` identifies the checkpoint instance driving this stream
     (see module docstring). None keeps raw-epoch semantics — correct only
     when the caller guarantees the checkpoint and base live and die
-    together; ``dedup_ingest_stream`` always passes a token."""
+    together; ``ingest_stream`` always passes a token."""
+    lsh = dict(k=k, bands=bands, n=n)
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        resolved = _resolve_epoch(spark, base, epoch_id, run_token)
-        if resolved is None:
-            return
-        bound, offset, physical, last = resolved
-        # a maintenance op (purge/compact) that crashed mid-swap leaves a
-        # trash/tmp leftover; resolve it BEFORE reading the corpus/index,
-        # or this batch would dedup against a half-swapped view (one
-        # directory listing per dataset — negligible next to the batch)
-        recover_base(spark, base, own_token=bound)
-
+    def delta(spark: SparkSession, batch_df: DataFrame, last: int) -> _Delta:
         # 1. within-batch: exact, then near-dup clusters -> min-id survivor.
         # The exact stage is ONE fingerprint-keyed window (row_number == 1
         # keeps the min-id row per md5 group — the identical survivor set
         # exact_dedup's groupBy + semi-join selects) instead of two
         # exchanges plus a join back on id (r15; the batch operator keeps
         # its groupBy form because its contract also returns group counts).
-        from pyspark.sql import Window
-
-        from healthcare_rcm_etl_pipeline_spark.functions.text import fingerprint_md5
-
         w_fp = Window.partitionBy("__fp").orderBy(F.col(id_col))
         batch = (
             batch_df.withColumn("__fp", fingerprint_md5(text_col))
@@ -349,30 +485,25 @@ def make_dedup_ingest_batch_fn(
         # final survivors) feeds the within-batch LSH below via
         # prebuilt_bands, the cross-corpus index prune, the incremental
         # probe's new side AND — restricted to survivors — the state
-        # write. Through r14 the within-batch pairs and the cross-corpus
-        # table were two separate minhash_band_table builds (tokenize +
-        # shingle + k hashes each). Superset rows are provably inert
-        # downstream: extra bh keys only make the literal index prune
-        # keep more rows (exactness argument unchanged), and a candidate
-        # pair whose new doc was dropped by the CC step dies in the
-        # verify stage (the shingle join is INNER on the narrowed batch,
-        # so its jaccard is NULL and the threshold filter removes it).
+        # write. Superset rows are provably inert downstream: extra bh
+        # keys only make the literal index prune keep more rows
+        # (exactness argument unchanged), and a candidate pair whose new
+        # doc was dropped by the CC step dies in the verify stage (the
+        # shingle join is INNER on the narrowed batch, so its jaccard is
+        # NULL and the threshold filter removes it).
         batch_bands = dedup.minhash_band_table(
-            batch, text_col, id_col, k=k, bands=bands, n=n
+            batch, text_col, id_col, **lsh
         ).localCheckpoint(eager=True)
         # pin the pair set: the bounded-CC probe below collects from it,
         # and on fallback the distributed CC would otherwise re-execute
-        # the whole LSH lineage a second time (it is batch-sized either
-        # way — the checkpoint replaces the edges checkpoint CC used to
-        # pay internally, so the common-path job count is unchanged)
+        # the whole LSH lineage a second time
         pairs = dedup.minhash_lsh_pairs(
-            batch, text_col, id_col, k=k, bands=bands, n=n,
+            batch, text_col, id_col, **lsh,
             verify_threshold=verify_threshold, prebuilt_bands=batch_bands,
         ).localCheckpoint(eager=True)
         # bounded CC: a micro-batch's pair set is batch-sized, so the
         # driver union-find fast path replaces ~6 iteration jobs with one
-        # bounded collect (distributed fallback above the bound) — part of
-        # the round-12 per-batch fixed-cost-floor cut
+        # bounded collect (distributed fallback above the bound)
         losers = (
             graph.connected_components_bounded(
                 pairs, collect_limit=_PROBE_LITERAL_MAX
@@ -384,95 +515,38 @@ def make_dedup_ingest_batch_fn(
 
         # 2. cross-corpus: probe the persisted band index; only candidate
         # docs are shingled (operators/dedup.py semi-join guarantee).
-        # max_epoch=last: a replay of a partially-committed epoch must not
-        # see its own ghost files, or every batch doc would collide with
-        # itself and the anti-join would silently drop the whole batch.
+        # Small batches inline their band keys as a pushed-down literal
+        # predicate on the index scan — per-batch cost then tracks the
+        # batch even when the accumulated index is corpus-sized; big
+        # batches fall back to the join-based prune inside the probe.
         corpus = read_corpus(spark, base, max_epoch=last)
         index = read_band_index(spark, base, max_epoch=last)
         if corpus is not None and index is not None:
-            # Small batches inline their band keys as a pushed-down literal
-            # predicate on the index scan (the point-lookup device) —
-            # per-batch cost then tracks the batch even when the
-            # accumulated index is corpus-sized; big batches fall back to
-            # the join-based prune inside the incremental probe.
-            index = _literal_pruned_index(index, batch_bands)
-
-            # candidate BASE text via the POINT-LOOKUP seam (r15): the
-            # serving path (probe_near_dups) already fetched candidate
-            # docs with a literal id filter over the range-sorted docs
-            # state — footer min/max stats prune to the matching
-            # files/row groups. The ingest path instead passed the whole
-            # corpus relation, whose verify semi-join SCANNED the full
-            # accumulated docs text every epoch (the one remaining
-            # O(corpus) read in the batch body). The collected id list is
-            # bounded by max_bucket semantics (same contract as the
-            # serving path); output is pinned equal in the incremental
-            # tests either way.
-            def fetch(ids: list) -> DataFrame:
-                return read_corpus(spark, base, max_epoch=last).filter(
-                    _in_literals(id_col, list(ids))
-                )
-
             dup_new = (
                 dedup.minhash_lsh_pairs_incremental(
-                    batch, None, text_col, id_col,
-                    k=k, bands=bands, n=n, verify_threshold=verify_threshold,
-                    base_bands=index, new_bands=batch_bands,
-                    base_lookup=fetch,
+                    batch, None, text_col, id_col, **lsh,
+                    verify_threshold=verify_threshold,
+                    base_bands=_literal_pruned(index, batch_bands, "bh"),
+                    new_bands=batch_bands,
+                    base_lookup=_doc_fetch(spark, base, id_col, last),
                 )
                 .select(F.col("doc_new").alias(id_col))
                 .distinct()
             )
             batch = batch.join(dup_new, id_col, "left_anti")
 
-        # 3. per-epoch overwrite (idempotent on replay), marker last.
-        # persist: the docs write and the band-table write are two actions
-        # over the same lineage (LSH + connected components + cross probe) —
-        # without it the whole dedup graph executes twice per epoch.
-        batch = batch.persist()
-        try:
-            _range_sorted(batch, id_col).write.mode("overwrite").parquet(
-                f"{base}/docs/epoch={physical}"
-            )
-            # survivors' band rows: restrict the pinned batch band table
-            # instead of min-hashing the survivors again (r15: the pinned
-            # table now exists on EVERY epoch, including the first — the
-            # first batch used to min-hash a third time here)
-            out_bands = batch_bands.join(
-                F.broadcast(batch.select(F.col(id_col).alias("doc"))),
-                "doc",
-                "left_semi",
-            )
-            _range_sorted(out_bands, "bh").write.mode("overwrite").parquet(
-                f"{base}/bands/epoch={physical}"
-            )
-        finally:
-            batch.unpersist()
-        _write_marker(spark, base, bound, offset, physical)
-
-    return apply_batch
-
-
-def dedup_ingest_stream(
-    stream_df: DataFrame,
-    base: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **lsh_kwargs,
-):
-    """Drive a document stream through the near-dup-gated ingestion."""
-    token = checkpoint_run_token(stream_df.sparkSession, checkpoint)
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_dedup_ingest_batch_fn(
-                base, text_col, id_col, run_token=token, **lsh_kwargs
-            )
+        # 3. survivors and their band rows (the pinned batch band table
+        # restricted to survivors — no re-minhash). pin: the two writes
+        # share the whole dedup lineage (LSH + CC + cross probe), which
+        # would otherwise execute twice per epoch.
+        out_bands = batch_bands.join(
+            F.broadcast(batch.select(F.col(id_col).alias("doc"))),
+            "doc",
+            "left_semi",
         )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+        return _Delta([("docs", batch, id_col), ("bands", out_bands, "bh")], pin=batch)
+
+    return _epoch_batch_fn(base, run_token, "dedup", delta)
 
 
 def read_vectors(
@@ -494,7 +568,8 @@ def make_semantic_ingest_batch_fn(
 ):
     """foreachBatch body for EMBEDDING streams: semantic-dedup-gated
     ingestion against a persisted sign-sketch CELL index — the vector twin
-    of ``make_dedup_ingest_batch_fn``.
+    of ``make_dedup_ingest_batch_fn``, on the same epoch skeleton
+    (``_epoch_batch_fn``).
 
     Per micro-batch:
 
@@ -505,9 +580,7 @@ def make_semantic_ingest_batch_fn(
        on a ~|batch| cell list (parquet row-group stats prune the scan;
        never a full-corpus read) and verifies exact cosine within equal
        cells. Batch vectors with a base cell-mate at/above threshold drop.
-    3. APPEND survivors as ``vectors/epoch=N`` rows; ``_EPOCH`` marker
-       advances. Same run-token/rebind/per-epoch-overwrite exactly-once
-       recipe as the text path (shared ``_resolve_epoch``).
+    3. APPEND survivors as ``vectors/epoch=N`` rows.
 
     ``n_planes`` is FIXED (not adaptive): the cell assignment IS the
     persisted index layout, so every epoch must bucket identically — size
@@ -516,32 +589,17 @@ def make_semantic_ingest_batch_fn(
     exactly as in batch semantic_dedup (SemDeDup semantics).
     """
     from healthcare_rcm_etl_pipeline_spark.functions.vector import dot, norm
-    from healthcare_rcm_etl_pipeline_spark.operators.similarity import (
-        hyperplanes,
-        sign_sketch,
-    )
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        resolved = _resolve_epoch(spark, base, epoch_id, run_token)
-        if resolved is None:
-            return
-        bound, offset, physical, last = resolved
-        recover_base(spark, base, own_token=bound)  # same pre-read healing as the text path
-
+    def delta(spark: SparkSession, batch_df: DataFrame, last: int) -> _Delta:
         # 1. within-batch semantic dedup (fixed planes; returns (id, cell))
         surv = dedup.semantic_dedup(
             batch_df, vec_col, id_col,
             threshold=threshold, n_planes=n_planes, dim=dim, seed=seed,
             max_cell=None,
         )
-        batch = (
-            batch_df.join(surv.select(id_col, "cell"), id_col)
-        )
+        batch = batch_df.join(surv.select(id_col, "cell"), id_col)
 
-        # 2. cross-corpus: probe ONLY the batch's cells in the persisted
-        # index (max_epoch=last hides this epoch's own ghost files on
-        # replay, same rationale as the text path)
+        # 2. cross-corpus: probe ONLY the batch's cells in the persisted index
         index = read_vectors(spark, base, max_epoch=last)
         if index is not None:
             # LITERAL cell filter when the batch's distinct-cell count fits
@@ -560,42 +618,19 @@ def make_semantic_ingest_batch_fn(
             # the whole index (the round-11 upward-trend finding). The
             # per-batch probe stats land on ``apply_batch.last_probe`` so
             # harnesses can verify which regime they measured.
-            # bounded RAW collect first (r15, same device as
-            # _literal_pruned): a micro-batch's (id, cell) rows fit under
-            # 8x the literal bound, so the distinct set comes from one
-            # narrow CollectLimit job instead of a distinct shuffle;
-            # oversized batches fall back to the distinct path unchanged.
-            raw_cap = 8 * (_PROBE_LITERAL_MAX + 1)
-            raw = batch.select("cell").limit(raw_cap).collect()
-            if len(raw) < raw_cap:
-                # NULL-safe like _literal_pruned: drop Nones pre-sort
-                cells = sorted({r[0] for r in raw if r[0] is not None})
-            else:
-                cells = [
-                    r[0]
-                    for r in batch.select("cell")
-                    .distinct()
-                    .limit(_PROBE_LITERAL_MAX + 1)
-                    .collect()
-                ]
-            if len(cells) <= _PROBE_LITERAL_MAX:
+            cells = _probe_keys(batch, "cell", _PROBE_LITERAL_MAX)
+            literal = len(cells) <= _PROBE_LITERAL_MAX
+            if literal:
                 cand = index.filter(_in_literals("cell", cells))
-                apply_batch.last_probe = {
-                    "cells_probed": len(cells),
-                    "cells_space": 2 ** n_planes,
-                    "path": "literal",
-                }
             else:
                 cand = index.join(
-                    F.broadcast(batch.select("cell").distinct()),
-                    "cell",
-                    "left_semi",
+                    F.broadcast(batch.select("cell").distinct()), "cell", "left_semi"
                 )
-                apply_batch.last_probe = {
-                    "cells_probed": None,
-                    "cells_space": 2 ** n_planes,
-                    "path": "join",
-                }
+            apply_batch.last_probe = {
+                "cells_probed": len(cells) if literal else None,
+                "cells_space": 2 ** n_planes,
+                "path": "literal" if literal else "join",
+            }
             # per-row norms hoisted out of the per-candidate cosine (r15,
             # same device as similarity.brute_force_topk): one interpreted
             # array fold per cell-mate pair (dot) instead of three —
@@ -621,36 +656,11 @@ def make_semantic_ingest_batch_fn(
                 .distinct()
             )
             batch = batch.join(hit, id_col, "left_anti")
+        return _Delta([("vectors", batch.select(id_col, "cell", vec_col), "cell")])
 
-        _range_sorted(batch.select(id_col, "cell", vec_col), "cell").write.mode(
-            "overwrite"
-        ).parquet(f"{base}/vectors/epoch={physical}")
-        _write_marker(spark, base, bound, offset, physical)
-
+    apply_batch = _epoch_batch_fn(base, run_token, "semantic", delta)
     apply_batch.last_probe = None  # no index probed yet
     return apply_batch
-
-
-def semantic_ingest_stream(
-    stream_df: DataFrame,
-    base: str,
-    checkpoint: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    **kwargs,
-):
-    """Drive an embedding stream through semantic-dedup-gated ingestion."""
-    token = checkpoint_run_token(stream_df.sparkSession, checkpoint)
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_semantic_ingest_batch_fn(
-                base, vec_col, id_col, run_token=token, **kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 _DATASETS = (
@@ -744,7 +754,8 @@ def make_chunk_ingest_batch_fn(
     state before landing — the streaming consumer of
     ``corpus.chunk_dedup_rewrite_incremental``, whose ascending-id fold is
     pinned hash-equal to the one-shot batch rewrite by the
-    ``dedup_chunks_incremental`` registered oracle query.
+    ``dedup_chunks_incremental`` registered oracle query. Runs on the
+    shared epoch skeleton (``_epoch_batch_fn``).
 
     Per micro-batch:
 
@@ -755,11 +766,9 @@ def make_chunk_ingest_batch_fn(
     2. APPEND: the rewritten docs land as ``docs/epoch=N`` (schema
        doc_id, n_chunks, n_kept, clean_text) and the batch's newly-claimed
        chunks as ``chunks/epoch=N`` (chunk, keeper_doc — keeper provenance
-       so ``purge_ids`` can forget a purged doc's claimed texts); the
-       ``_EPOCH`` marker advances last. Same run-token / rebind /
-       per-epoch-overwrite exactly-once recipe as the LSH text path
-       (shared ``_resolve_epoch``); the shared rewrite lineage is
-       localCheckpointed once so the two writes don't recompute it.
+       so ``purge_ids`` can forget a purged doc's claimed texts). The
+       shared rewrite lineage is localCheckpointed once so the two writes
+       don't recompute it.
 
     State at 100 TB: ``chunks/`` grows with DISTINCT corpus chunks (the
     same order as the band index); per-batch cost tracks the batch, never
@@ -769,106 +778,50 @@ def make_chunk_ingest_batch_fn(
         chunk_dedup_rewrite_incremental,
     )
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        resolved = _resolve_epoch(spark, base, epoch_id, run_token)
-        if resolved is None:
-            return
-        bound, offset, physical, last = resolved
-        recover_base(spark, base, own_token=bound)
-        # max_epoch=last: a replay of a partially-committed epoch must not
-        # probe its own ghost chunk rows, or the whole batch's chunks would
-        # anti-join away against themselves (the read_corpus lesson).
-        state = read_chunk_state(spark, base, max_epoch=last)
+    def delta(spark: SparkSession, batch_df: DataFrame, last: int) -> _Delta:
         rewritten, new_chunks = chunk_dedup_rewrite_incremental(
             batch_df,
-            state,
+            read_chunk_state(spark, base, max_epoch=last),
             text_col,
             id_col,
             chunk_tokens=chunk_tokens,
             keeper_col="keeper_doc",
             checkpoint_shared=True,
         )
-        _range_sorted(rewritten, id_col).write.mode("overwrite").parquet(
-            f"{base}/docs/epoch={physical}"
-        )
-        _range_sorted(new_chunks, "chunk").write.mode("overwrite").parquet(
-            f"{base}/chunks/epoch={physical}"
-        )
-        _write_marker(spark, base, bound, offset, physical)
+        return _Delta([("docs", rewritten, id_col), ("chunks", new_chunks, "chunk")])
 
-    return apply_batch
+    return _epoch_batch_fn(base, run_token, "chunk", delta)
 
 
-def chunk_ingest_stream(
-    stream_df: DataFrame,
-    base: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 15,
-):
-    """Drive a document stream through chunk-dedup-rewriting ingestion."""
-    token = checkpoint_run_token(stream_df.sparkSession, checkpoint)
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_chunk_ingest_batch_fn(
-                base, text_col, id_col, chunk_tokens=chunk_tokens, run_token=token
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_components(
-    spark: SparkSession, base: str, max_epoch: int | None = None
-) -> DataFrame | None:
-    """The LIVE component label per doc from the accumulated state: each
-    epoch writes only the labels the batch created or changed, so the
-    serving view is latest-epoch-wins (``max_by(component, epoch)``). Only
-    docs that appear in at least one near-dup pair carry a row — the state
-    is pair-graph-sized, never corpus-sized; consumers coalesce absent
-    docs to their own id (``leakage_safe_split_from_components``)."""
-    path = f"{base}/components"
-    if not sinks.path_exists(spark, path):
-        return None
-    df = spark.read.parquet(path)
-    if max_epoch is not None:
-        df = df.filter(F.col("epoch") <= max_epoch)
-    return df.groupBy("doc").agg(F.max_by("component", "epoch").alias("component"))
-
-
-def read_components_for(
+def read_labels(
     spark: SparkSession,
     base: str,
-    ids: list,
+    name: str,
+    ids: list | None = None,
     max_epoch: int | None = None,
 ) -> DataFrame | None:
-    """Point-lookup view of the served labels: the LIVE component of each
-    given doc id only. The ids apply as a literal ``In(doc, ...)``
-    predicate that reaches the parquet scan as a PushedFilter; the state
-    being range-sorted on ``doc`` at write time, footer min/max stats
-    prune to the matching files — serving "which cluster is this doc in?"
-    costs the probe's key count, never the state size (same device as
-    ``read_band_index_for``). Latest-epoch-wins AFTER the prune is exact:
-    the reduction is per-doc, and every epoch row of a probed doc
-    survives the doc filter. Docs without a state row are unpaired —
-    consumers coalesce to the doc's own id, exactly as
-    ``leakage_safe_split_from_components`` does. Returns None before the
-    first commit."""
-    path = f"{base}/components"
-    if not sinks.path_exists(spark, path):
+    """The LIVE label per id of label state ``name`` (``"components"`` or
+    ``"entities"``; ``doc`` is the doc / entity row id): each epoch writes
+    only the labels the batch created or changed, so the serving view is
+    latest-epoch-wins (``max_by(component, epoch)``). Only ids that appear
+    in at least one pair carry a row — the state is pair-graph-sized,
+    never corpus-sized; consumers coalesce absent ids to their own id
+    (``leakage_safe_split_from_components``, ``golden_from_labels``).
+
+    ``ids`` makes it a point lookup ("which cluster / master record is
+    this row in?"): the ids apply as a literal ``In(doc, ...)`` predicate
+    that reaches the parquet scan as a PushedFilter, and the state being
+    range-sorted on ``doc`` at write time, footer min/max stats prune to
+    the matching files — the cost tracks the probe's key count, never the
+    state size. Latest-epoch-wins AFTER the prune is exact: the reduction
+    is per-doc, and every epoch row of a probed doc survives the filter.
+    Returns None before the first commit."""
+    df = _read_epoched(spark, f"{base}/{name}", max_epoch, keep_epoch=True)
+    if df is None:
         return None
-    df = spark.read.parquet(path)
-    if max_epoch is not None:
-        df = df.filter(F.col("epoch") <= max_epoch)
-    return (
-        df.filter(_in_literals("doc", list(ids)))
-        .groupBy("doc")
-        .agg(F.max_by("component", "epoch").alias("component"))
-    )
+    if ids is not None:
+        df = df.filter(_in_literals("doc", list(ids)))
+    return df.groupBy("doc").agg(F.max_by("component", "epoch").alias("component"))
 
 
 def _affected_component_slice(
@@ -1095,8 +1048,8 @@ def _merge_label_state(
         .unionByName(pairs.select(F.col("doc_b").alias("doc")))
         .distinct()
     )
-    if sinks.path_exists(spark, state_path):
-        state = spark.read.parquet(state_path).filter(F.col("epoch") <= last)
+    state = _read_epoched(spark, state_path, last, keep_epoch=True)
+    if state is not None:
         twin = None
         # the twin serves scan TWO only when (a) the state is past the
         # measured gate AND (b) the twin PROVABLY covers every committed
@@ -1189,7 +1142,8 @@ def make_component_ingest_batch_fn(
     call. Unlike ``make_dedup_ingest_batch_fn`` this stream RETAINS every
     document: near-dups are labeled, not dropped, so downstream policy
     (keep-best, co-assign splits, purge a whole cluster) stays a cheap
-    join against the served labels.
+    join against the served labels. Runs on the shared epoch skeleton
+    (``_epoch_batch_fn``) as a label family.
 
     Per micro-batch:
 
@@ -1221,12 +1175,10 @@ def make_component_ingest_batch_fn(
     3. APPEND: the full batch lands as ``docs/epoch=N``, its band rows as
        ``bands/epoch=N`` (future probes must see every doc), and the
        created/changed labels as ``components/epoch=N`` PLUS the
-       component-sorted twin ``components_by_label/epoch=N``; marker
-       last. Same run-token / rebind / per-epoch-overwrite exactly-once
-       recipe as the other ingest paths.
+       component-sorted twin ``components_by_label/epoch=N``.
 
     Fold invariant (pinned in tests/test_streaming_component_ingest.py):
-    after any prefix of batches, ``read_components`` equals
+    after any prefix of batches, ``read_labels(.., "components")`` equals
     ``connected_components(minhash_lsh_pairs(everything ingested))``
     exactly, and the served leakage-safe split equals the one-shot
     ``leakage_safe_split``.
@@ -1250,15 +1202,9 @@ def make_component_ingest_batch_fn(
     warning instead of failing the already-committed batch (r14 ADVICE
     medium).
     """
+    lsh = dict(k=k, bands=bands, n=n, verify_threshold=verify_threshold)
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        resolved = _resolve_epoch(spark, base, epoch_id, run_token)
-        if resolved is None:
-            return
-        bound, offset, physical, last = resolved
-        recover_base(spark, base, own_token=bound)
-
+    def delta(spark: SparkSession, batch_df: DataFrame, last: int) -> _Delta:
         # ONE band table per batch: it feeds the within-batch LSH, the
         # index prune, the incremental probe's new side and the bands
         # state write — four separate constructions would min-hash the
@@ -1266,89 +1212,31 @@ def make_component_ingest_batch_fn(
         batch_bands = dedup.minhash_band_table(
             batch_df, text_col, id_col, k=k, bands=bands, n=n
         ).localCheckpoint(eager=True)
-        within = dedup.minhash_lsh_pairs(
-            batch_df, text_col, id_col, k=k, bands=bands, n=n,
-            verify_threshold=verify_threshold, prebuilt_bands=batch_bands,
+        pairs = dedup.minhash_lsh_pairs(
+            batch_df, text_col, id_col, **lsh, prebuilt_bands=batch_bands
         ).select("doc_a", "doc_b")
         corpus = read_corpus(spark, base, max_epoch=last)
         index = read_band_index(spark, base, max_epoch=last)
         if corpus is not None and index is not None:
             # same literal-prune device as the dedup path — see there
-            index = _literal_pruned_index(index, batch_bands)
             cross = dedup.minhash_lsh_pairs_incremental(
-                batch_df, corpus, text_col, id_col,
-                k=k, bands=bands, n=n, verify_threshold=verify_threshold,
-                base_bands=index, new_bands=batch_bands,
+                batch_df, corpus, text_col, id_col, **lsh,
+                base_bands=_literal_pruned(index, batch_bands, "bh"),
+                new_bands=batch_bands,
             ).select(
                 F.col("doc_base").alias("doc_a"), F.col("doc_new").alias("doc_b")
             )
-            pairs = within.unionByName(cross)
-        else:
-            pairs = within
-        # the pair set is re-read several times below (nodes, CC edges);
-        # pin it once — it is batch-neighborhood-sized by construction
-        pairs = pairs.localCheckpoint(eager=True)
-
-        delta = _merge_label_state(spark, base, "components", pairs, last)
-
-        batch = batch_df.persist()
-        try:
-            _range_sorted(batch, id_col).write.mode("overwrite").parquet(
-                f"{base}/docs/epoch={physical}"
-            )
-            # all docs are retained on this path, so the pinned batch band
-            # table IS the bands state delta — no re-minhash, no filter
-            _range_sorted(batch_bands, "bh").write.mode("overwrite").parquet(
-                f"{base}/bands/epoch={physical}"
-            )
-            _write_label_delta(delta, base, "components", physical)
-        finally:
-            batch.unpersist()
-        _write_marker(spark, base, bound, offset, physical)
-        if compact_labels_every and (physical + 1) % compact_labels_every == 0:
-            # owner=bound: the lock carries this stream's run token so a
-            # crash mid-fold is self-healed by the next incarnation's
-            # recover_base (r14 ADVICE high). MaintenanceLockHeld — a
-            # concurrent operator purge/compact, or an orphan a foreign
-            # owner must resolve — defers the fold to the next cadence
-            # epoch instead of failing the (already-committed) batch and
-            # killing the streaming query (r14 ADVICE medium).
-            try:
-                compact_epochs(
-                    spark,
-                    base,
-                    datasets=("components", "components_by_label"),
-                    owner=bound,
-                )
-            except MaintenanceLockHeld as exc:
-                warnings.warn(
-                    f"cadence label fold deferred at epoch {physical}: {exc}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-
-    return apply_batch
-
-
-def component_ingest_stream(
-    stream_df: DataFrame,
-    base: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **lsh_kwargs,
-):
-    """Drive a document stream through component-labeling ingestion."""
-    token = checkpoint_run_token(stream_df.sparkSession, checkpoint)
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_component_ingest_batch_fn(
-                base, text_col, id_col, run_token=token, **lsh_kwargs
-            )
+            pairs = pairs.unionByName(cross)
+        # all docs are retained on this path, so the pinned batch band
+        # table IS the bands state delta — no re-minhash, no filter
+        return _Delta(
+            [("docs", batch_df, id_col), ("bands", batch_bands, "bh")],
+            pairs=pairs,
+            pin=batch_df,
         )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+
+    return _epoch_batch_fn(
+        base, run_token, "component", delta, "components", compact_labels_every
     )
 
 
@@ -1365,51 +1253,6 @@ def read_variant_index(
 ) -> DataFrame | None:
     """The accumulated deletion-variant posting index (vh-range-sorted)."""
     return _read_epoched(spark, f"{base}/variants", max_epoch)
-
-
-def read_entities(
-    spark: SparkSession, base: str, max_epoch: int | None = None
-) -> DataFrame | None:
-    """The LIVE entity label per row id from the accumulated state —
-    latest-epoch-wins, exactly as ``read_components`` (the states share
-    the (doc, component, epoch) schema; ``doc`` here is the entity row
-    id). Only ids that matched at least one pair carry a row; consumers
-    coalesce absent ids to their own id (``golden_from_labels``)."""
-    path = f"{base}/entities"
-    if not sinks.path_exists(spark, path):
-        return None
-    df = spark.read.parquet(path)
-    if max_epoch is not None:
-        df = df.filter(F.col("epoch") <= max_epoch)
-    return df.groupBy("doc").agg(F.max_by("component", "epoch").alias("component"))
-
-
-def read_entities_for(
-    spark: SparkSession,
-    base: str,
-    ids: list,
-    max_epoch: int | None = None,
-) -> DataFrame | None:
-    """Point-lookup view of the served entity labels: the LIVE entity of
-    each given row id only — "which master record is this row part of?"
-    served at probe-key cost. Same device as ``read_components_for``: the
-    ids apply as a literal ``In(doc, ...)`` predicate that reaches the
-    doc-range-sorted state's parquet scan as a PushedFilter;
-    latest-epoch-wins AFTER the prune is exact (the reduction is per-doc
-    and every epoch row of a probed doc survives the filter). Ids without
-    a state row are singletons — consumers coalesce to the id itself.
-    Returns None before the first commit."""
-    path = f"{base}/entities"
-    if not sinks.path_exists(spark, path):
-        return None
-    df = spark.read.parquet(path)
-    if max_epoch is not None:
-        df = df.filter(F.col("epoch") <= max_epoch)
-    return (
-        df.filter(_in_literals("doc", list(ids)))
-        .groupBy("doc")
-        .agg(F.max_by("component", "epoch").alias("component"))
-    )
 
 
 def make_entity_ingest_batch_fn(
@@ -1430,9 +1273,10 @@ def make_entity_ingest_batch_fn(
     as ONE join against that state (``golden_from_labels``) instead of a
     full re-match per call. Composition of the record-linkage operators
     (``fuzzy.edit1_pairs`` / ``deletion_postings``) with the
-    component-labeling ingest machinery — same epoch/marker exactly-once
-    protocol, same affected-slice incremental CC, same purge/compact
-    maintenance.
+    component-labeling ingest machinery — the same epoch skeleton
+    (``_epoch_batch_fn``, label family), the same affected-slice
+    incremental CC, the same purge/compact maintenance and
+    ``compact_labels_every`` cadence.
 
     Per micro-batch:
 
@@ -1450,98 +1294,40 @@ def make_entity_ingest_batch_fn(
        shared with the component path.
     3. APPEND: the batch rows land as ``rows/epoch=N`` (id-range-sorted),
        their postings as ``variants/epoch=N`` (vh-range-sorted), the
-       label delta under both sort orders; marker last.
+       label delta under both sort orders.
 
     Preconditions: ``id_col`` unique across the stream's lifetime (the
     ``resolve_entities`` contract). Fold invariant (pinned in
     tests/test_entity_ingest.py): after any prefix of batches,
-    ``golden_from_labels(read_entity_rows, read_entities)`` equals the
-    one-shot ``resolve_entities`` over everything ingested, exactly.
+    ``golden_from_labels(read_entity_rows, read_labels(.., "entities"))``
+    equals the one-shot ``resolve_entities`` over everything ingested,
+    exactly.
     """
     from healthcare_rcm_etl_pipeline_spark.operators import fuzzy
 
     agree_cols = list(agree_cols or [])
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        resolved = _resolve_epoch(spark, base, epoch_id, run_token)
-        if resolved is None:
-            return
-        bound, offset, physical, last = resolved
-        recover_base(spark, base, own_token=bound)
-
+    def delta(spark: SparkSession, batch_df: DataFrame, last: int) -> _Delta:
         batch_post = fuzzy.deletion_postings(
             batch_df, key_col, id_col, agree_cols, max_key_len
         ).localCheckpoint(eager=True)
-        within = fuzzy.edit1_pairs(
+        pairs = fuzzy.edit1_pairs(
             batch_df, key_col, id_col, agree_cols=agree_cols, max_key_len=max_key_len
         ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         index = read_variant_index(spark, base, max_epoch=last)
         if index is not None:
-            index = _literal_pruned(index, batch_post, "vh")
             cross = fuzzy.edit1_pairs_from_postings(
-                index, batch_post, agree_cols
+                _literal_pruned(index, batch_post, "vh"), batch_post, agree_cols
             ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-            pairs = within.unionByName(cross)
-        else:
-            pairs = within
-        pairs = pairs.localCheckpoint(eager=True)
-
-        delta = _merge_label_state(spark, base, "entities", pairs, last)
-
-        batch = batch_df.persist()
-        try:
-            _range_sorted(batch, id_col).write.mode("overwrite").parquet(
-                f"{base}/rows/epoch={physical}"
-            )
-            _range_sorted(batch_post, "vh").write.mode("overwrite").parquet(
-                f"{base}/variants/epoch={physical}"
-            )
-            _write_label_delta(delta, base, "entities", physical)
-        finally:
-            batch.unpersist()
-        _write_marker(spark, base, bound, offset, physical)
-        if compact_labels_every and (physical + 1) % compact_labels_every == 0:
-            # same self-maintenance cadence (and the same owner-stamped
-            # lock + lock-held deferral) as the component path: fold the
-            # (pair-graph-sized) label states only — O(state), arms the
-            # scan-TWO twin's mean-file-size gate axis
-            try:
-                compact_epochs(
-                    spark,
-                    base,
-                    datasets=("entities", "entities_by_label"),
-                    owner=bound,
-                )
-            except MaintenanceLockHeld as exc:
-                warnings.warn(
-                    f"cadence label fold deferred at epoch {physical}: {exc}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-
-    return apply_batch
-
-
-def entity_ingest_stream(
-    stream_df: DataFrame,
-    base: str,
-    checkpoint: str,
-    key_col: str,
-    id_col: str,
-    **kwargs,
-):
-    """Drive a row stream through incremental entity resolution."""
-    token = checkpoint_run_token(stream_df.sparkSession, checkpoint)
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_entity_ingest_batch_fn(
-                base, key_col, id_col, run_token=token, **kwargs
-            )
+            pairs = pairs.unionByName(cross)
+        return _Delta(
+            [("rows", batch_df, id_col), ("variants", batch_post, "vh")],
+            pairs=pairs,
+            pin=batch_df,
         )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+
+    return _epoch_batch_fn(
+        base, run_token, "entity", delta, "entities", compact_labels_every
     )
 
 

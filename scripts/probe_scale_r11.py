@@ -90,7 +90,7 @@ def probe_component_ingest(spark, n_batches: int = 8) -> dict:
 
     from healthcare_rcm_etl_pipeline_spark.streaming.ingest import (
         make_component_ingest_batch_fn,
-        read_components,
+        read_labels,
     )
 
     tmp = tempfile.mkdtemp(prefix="hrcm_r11_cingest_")
@@ -110,7 +110,7 @@ def probe_component_ingest(spark, n_batches: int = 8) -> dict:
             t0 = time.perf_counter()
             fn(batch, b)
             per_batch.append(round(time.perf_counter() - t0, 3))
-            comp = read_components(spark, f"{tmp}/base")
+            comp = read_labels(spark, f"{tmp}/base", "components")
             state_rows.append(comp.count() if comp is not None else 0)
         # post-warmup slope normalized by the median batch (batch 0 is
         # structurally cheaper: empty base, no cross probe) — the same

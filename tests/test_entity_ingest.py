@@ -6,8 +6,8 @@ marker exactly-once, purge/compact maintenance).
 
 Fold invariant pinned here: after ANY prefix of batches, golden records
 served from the persisted state (golden_from_labels over read_entity_rows +
-read_entities) equal the one-shot resolve_entities over everything ingested,
-exactly — the split_leakage_safe_served device applied to MDM."""
+read_labels(.., "entities")) equal the one-shot resolve_entities over
+everything ingested, exactly — the split_leakage_safe_served device applied to MDM."""
 
 from __future__ import annotations
 
@@ -50,7 +50,7 @@ def _served(spark, base):
     rows = ingest.read_entity_rows(spark, base).select(
         "id", "name", "nation", "seg", "bal"
     )
-    labels = ingest.read_entities(spark, base)
+    labels = ingest.read_labels(spark, base, "entities")
     if labels is None:
         labels = rows.sparkSession.createDataFrame([], "doc long, component long")
     return sorted(
@@ -78,7 +78,7 @@ def test_cross_batch_merge_and_agreement_blocking(spark, tmp_path):
     fn(_df(spark, BATCH2), 1)
     labels = {
         r["doc"]: r["component"]
-        for r in ingest.read_entities(spark, base).collect()
+        for r in ingest.read_labels(spark, base, "entities").collect()
     }
     # the cross-batch typo chain merged: 3 joined {1, 2} via the persisted
     # variant index, min-id label
@@ -143,7 +143,7 @@ def test_purge_forgets_entity_member(spark, tmp_path):
     assert served[1][1:] == (2, "john smith", "A", 10.0)
     labels = {
         r["doc"]: r["component"]
-        for r in ingest.read_entities(spark, base).collect()
+        for r in ingest.read_labels(spark, base, "entities").collect()
     }
     assert 2 not in labels and labels[1] == labels[3]
 
@@ -182,9 +182,9 @@ def test_fold_invariance_with_twin_path_forced(spark, tmp_path, monkeypatch):
 
 
 def test_read_entities_for_point_lookup(spark, tmp_path):
-    """Entity-label serving as a point lookup: read_entities_for returns
+    """Entity-label serving as a point lookup: read_labels(.., ids=...) returns
     the LIVE label of exactly the probed ids via a pushed-down literal
-    over the doc-range-sorted state, equal to the full-scan read_entities
+    over the doc-range-sorted state, equal to the full-scan read_labels
     restricted to those ids — including after the cross-batch merge."""
     base = str(tmp_path / "mdm")
     fn = ingest.make_entity_ingest_batch_fn(
@@ -192,22 +192,22 @@ def test_read_entities_for_point_lookup(spark, tmp_path):
     )
     fn(_df(spark, BATCH1), 0)
     fn(_df(spark, BATCH2), 1)
-    got = ingest.read_entities_for(spark, base, [2, 3, 5])
+    got = ingest.read_labels(spark, base, "entities", [2, 3, 5])
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "In(doc" in plan, plan
     rows = {r["doc"]: r["component"] for r in got.collect()}
     assert rows == {2: 1, 3: 1}  # 5 is a singleton: no state row
     full = {
         r["doc"]: r["component"]
-        for r in ingest.read_entities(spark, base).collect()
+        for r in ingest.read_labels(spark, base, "entities").collect()
         if r["doc"] in (2, 3, 5)
     }
     assert rows == full
-    assert ingest.read_entities_for(spark, str(tmp_path / "never"), [1]) is None
+    assert ingest.read_labels(spark, str(tmp_path / "never"), "entities", [1]) is None
 
 
 def test_entity_ingest_stream_end_to_end(spark, tmp_path):
-    """The writeStream wrapper (entity_ingest_stream) drives the same
+    """The writeStream driver (ingest_stream) drives the same
     batch fn through a real file-source stream with checkpointing: served
     golden records equal the one-shot resolve_entities, and a replayed
     run with nothing new changes nothing (run-token replay gate)."""
@@ -217,8 +217,9 @@ def test_entity_ingest_stream_end_to_end(spark, tmp_path):
 
     def _run_once():
         stream = spark.readStream.schema(SCHEMA).parquet(src)
-        q = ingest.entity_ingest_stream(
-            stream, base, ckpt, "name", "id", agree_cols=["nation", "seg"]
+        q = ingest.ingest_stream(
+            ingest.make_entity_ingest_batch_fn, stream, ckpt, base,
+            "name", "id", agree_cols=["nation", "seg"],
         )
         q.awaitTermination(120)
 

@@ -187,9 +187,9 @@ def test_component_state_scan_two_is_pushed_down_on_twin(spark, tmp_path):
 
 
 def test_read_components_for_point_lookup(spark, tmp_path):
-    """Label serving as a point lookup: read_components_for returns the
+    """Label serving as a point lookup: read_labels(.., ids=...) returns the
     LIVE label of exactly the probed ids via a pushed-down literal over
-    the doc-range-sorted state, and equals the full-scan read_components
+    the doc-range-sorted state, and equals the full-scan read_labels
     restricted to those ids — including after a label-changing merge
     (latest-epoch-wins must survive the prune)."""
     from pyspark.sql import Row
@@ -199,18 +199,18 @@ def test_read_components_for_point_lookup(spark, tmp_path):
     fn(_df(spark, [(1, A), (2, A2), (5, LONER)]), 0)
     fn(_df(spark, [(10, A)]), 1)  # merges into {1, 2}: doc 10 labeled 1
 
-    got = ingest.read_components_for(spark, base, [2, 10, 5])
+    got = ingest.read_labels(spark, base, "components", [2, 10, 5])
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "In(doc" in plan, plan
     rows = {r["doc"]: r["component"] for r in got.collect()}
     assert rows == {2: 1, 10: 1}  # 5 is unpaired: no state row
     full = {
         r["doc"]: r["component"]
-        for r in ingest.read_components(spark, base).collect()
+        for r in ingest.read_labels(spark, base, "components").collect()
         if r["doc"] in (2, 10, 5)
     }
     assert rows == full
-    assert ingest.read_components_for(spark, str(tmp_path / "never"), [1]) is None
+    assert ingest.read_labels(spark, str(tmp_path / "never"), "components", [1]) is None
 
 
 def test_twin_coverage_guard_and_backfill(spark, tmp_path, monkeypatch):

@@ -2,7 +2,7 @@
 make_component_ingest_batch_fn): every micro-batch's near-dup pairs merge
 into a persisted component labeling via incremental CC, and the stream
 RETAINS all docs (labels, not drops). The invariant under test: after any
-prefix of batches, ``read_components`` equals one-shot
+prefix of batches, ``read_labels(.., "components")`` equals one-shot
 ``connected_components(minhash_lsh_pairs(everything ingested))`` exactly —
 including the two-existing-components merge case star contraction must get
 right — and the leakage-safe split served from the state equals the
@@ -42,12 +42,16 @@ def _write_docs(spark, path, rows):
 
 def _run_once(spark, src, base, ckpt):
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = ingest.component_ingest_stream(stream, base, ckpt, **LSH)
+    q = ingest.ingest_stream(
+        ingest.make_component_ingest_batch_fn, stream, ckpt, base, **LSH
+    )
     q.awaitTermination(120)
 
 
 def _served(spark, base):
-    return sorted(tuple(r) for r in ingest.read_components(spark, base).collect())
+    return sorted(
+        tuple(r) for r in ingest.read_labels(spark, base, "components").collect()
+    )
 
 
 def _oneshot(spark, rows):
@@ -156,7 +160,7 @@ def test_served_split_equals_recompute(spark, tmp_path):
         df, dedup.minhash_lsh_pairs(df, "text", "doc_id", **LSH), "doc_id", fr
     )
     served = dedup.leakage_safe_split_from_components(
-        df, ingest.read_components(spark, base), "doc_id", fr
+        df, ingest.read_labels(spark, base, "components"), "doc_id", fr
     )
     assert sorted(map(tuple, served.collect())) == sorted(
         map(tuple, recomputed.collect())
@@ -171,7 +175,7 @@ def test_purged_label_id_not_resurrected(spark, tmp_path):
     other members' component VALUE (labels are opaque group keys).
     Incremental CC treats label values as graph nodes — the next batch
     touching the cluster must NOT write a (doc=<purged id>, ...) row back
-    into the state, or read_components would serve the purged doc again
+    into the state, or read_labels would serve the purged doc again
     (round-11 ADVICE)."""
     base = str(tmp_path / "corpus")
     fn = ingest.make_component_ingest_batch_fn(base, **LSH)

@@ -22,7 +22,7 @@ def _write_docs(spark, path, rows):
 
 def _run_once(spark, src, base, ckpt):
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = ingest.dedup_ingest_stream(stream, base, ckpt)
+    q = ingest.ingest_stream(ingest.make_dedup_ingest_batch_fn, stream, ckpt, base)
     q.awaitTermination(120)
     return q
 

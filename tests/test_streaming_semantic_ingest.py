@@ -32,7 +32,9 @@ def _write_vecs(spark, path, rows):
 
 def _run_once(spark, src, base, ckpt):
     stream = spark.readStream.schema("vec_id long, embedding array<double>").parquet(src)
-    q = ingest.semantic_ingest_stream(stream, base, ckpt, threshold=0.9)
+    q = ingest.ingest_stream(
+        ingest.make_semantic_ingest_batch_fn, stream, ckpt, base, threshold=0.9
+    )
     q.awaitTermination(120)
     return q
 
@@ -108,7 +110,10 @@ def test_semantic_fresh_checkpoint_rebinds(spark, tmp_path):
     src2 = str(tmp_path / "src2")
     _write_vecs(spark, src2, [(30, _vec(0)), (31, _vec(40))])
     stream = spark.readStream.schema("vec_id long, embedding array<double>").parquet(src2)
-    q = ingest.semantic_ingest_stream(stream, base, str(tmp_path / "vckpt2"), threshold=0.9)
+    q = ingest.ingest_stream(
+        ingest.make_semantic_ingest_batch_fn, stream, str(tmp_path / "vckpt2"), base,
+        threshold=0.9,
+    )
     q.awaitTermination(120)
     assert _ids(spark, base) == [1, 31]
 
