@@ -789,7 +789,8 @@ def _render_stdout_line(out: dict) -> str:
     if len(line) <= 1900:
         return line
     out = dict(out)
-    out["queries"] = {k: round(v, 2) for k, v in out.get("queries", {}).items()}
+    if "queries" in out:
+        out["queries"] = {k: round(v, 2) for k, v in out["queries"].items()}
     line = json.dumps(out, separators=(",", ":"))
     if len(line) <= 1900:
         return line
@@ -804,13 +805,14 @@ def _render_stdout_line(out: dict) -> str:
     line = json.dumps(out, separators=(",", ":"))
     if len(line) <= 1900:
         return line
-    out["queries"] = {
-        k: (int(round(v)) if v >= 100 else round(v, 1) if v >= 10 else v)
-        for k, v in out["queries"].items()
-    }
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) <= 1900:
-        return line
+    if "queries" in out:
+        out["queries"] = {
+            k: (int(round(v)) if v >= 100 else round(v, 1) if v >= 10 else v)
+            for k, v in out["queries"].items()
+        }
+        line = json.dumps(out, separators=(",", ":"))
+        if len(line) <= 1900:
+            return line
     out.pop("queries", None)
     return json.dumps(out, separators=(",", ":"))
 

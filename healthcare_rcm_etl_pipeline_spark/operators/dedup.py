@@ -603,7 +603,9 @@ def _minhash_mins_arrow(base: DataFrame, k: int) -> DataFrame:
                 continue
             col = b.column(b.schema.get_field_index("__hs"))
             offsets = col.offsets.to_numpy().astype(np.intp, copy=False)
-            values = col.values.to_numpy(zero_copy_only=False)
+            # a sliced array's child may run past offsets[-1]: hash only
+            # the values its rows cover
+            values = col.values.to_numpy(zero_copy_only=False)[: offsets[-1]]
             inner = hx.xxh64_long(values)  # uint64 (S,): hashLong(h, 42)
             basis = inner + hx._P5 + np.uint64(4)  # hashInt seed-expansion
             lengths = np.diff(offsets)

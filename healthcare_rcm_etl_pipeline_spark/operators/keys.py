@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from healthcare_rcm_etl_pipeline_spark.session import eager_checkpoint
+
 
 def dense_sk(
     df: DataFrame,
@@ -108,13 +110,17 @@ def first_row_per_key(
 _SK_CACHES: list[DataFrame] = []
 
 
-def release_sk_caches() -> None:
-    """Unpersist every relation cached by persist-mode ``dense_sk_scalable``
-    calls. Call AFTER the terminal action over the sk outputs — unpersisting
-    earlier would re-sample range boundaries on recomputation and corrupt
-    ids. sk-heavy pipelines (many id assignments per session) should either
-    call this between stages or pass ``materialize='checkpoint'``."""
-    while _SK_CACHES:
+def release_sk_caches(since: int = 0) -> None:
+    """Unpersist the relations cached by persist-mode ``dense_sk_scalable``
+    calls, those registered after the first ``since`` (a caller records
+    ``len(_SK_CACHES)`` on entry and releases only its own; the default
+    releases all). Call AFTER the terminal action over the sk outputs, or
+    once they are checkpointed — unpersisting earlier would re-sample range
+    boundaries on recomputation and corrupt ids. ``run_pipeline`` releases
+    its own after checkpointing the star; other sk-heavy callers (many id
+    assignments per session) should call this between stages or pass
+    ``materialize='checkpoint'``."""
+    while len(_SK_CACHES) > since:
         _SK_CACHES.pop().unpersist()
 
 
@@ -138,15 +144,15 @@ def dense_sk_scalable(
     (repartitionByRange samples, so recomputation could differ), so the
     ranked relation is materialized. ``materialize`` picks the lifetime:
 
-    - ``'persist'`` (default): cached and registered; the cache must outlive
-      the caller's action (unpersisting earlier would re-sample boundaries
-      and corrupt ids), so call ``release_sk_caches()`` after the terminal
-      action. Spark's LRU eviction bounds the damage either way.
-    - ``'checkpoint'``: lineage is TRUNCATED at the ranked relation —
-      reliable ``checkpoint()`` when a checkpoint dir is set, else
-      ``localCheckpoint()``. Ids are stable across any later re-execution
-      and no cache registration is needed; the right mode for sk-heavy
-      pipelines that would otherwise accumulate LRU pressure.
+    - ``'persist'`` (default): cached and registered in ``_SK_CACHES``; the
+      cache must outlive the caller's action or checkpoint (unpersisting
+      earlier would re-sample boundaries and corrupt ids), so the caller
+      releases it after with ``release_sk_caches(since=<len on entry>)``.
+      Spark's LRU eviction bounds the damage of a caller that never does.
+    - ``'checkpoint'``: lineage is TRUNCATED at the ranked relation
+      (``session.eager_checkpoint``). Ids are stable across any later
+      re-execution and no cache registration is needed; the right mode for
+      sk-heavy pipelines that would otherwise accumulate LRU pressure.
     """
     if materialize not in ("persist", "checkpoint"):
         raise ValueError(f"materialize must be persist|checkpoint, got {materialize!r}")
@@ -157,12 +163,7 @@ def dense_sk_scalable(
     w = Window.partitionBy("__pid").orderBy(*order_exprs)
     local = with_pid.withColumn("__local_rn", F.row_number().over(w) - 1)
     if materialize == "checkpoint":
-        sc = df.sparkSession.sparkContext
-        try:
-            has_dir = sc._jsc.sc().getCheckpointDir().isDefined()
-        except Exception:
-            has_dir = False
-        local = local.checkpoint(eager=True) if has_dir else local.localCheckpoint(eager=True)
+        local = eager_checkpoint(local)
     else:
         local = local.persist()
         _SK_CACHES.append(local)

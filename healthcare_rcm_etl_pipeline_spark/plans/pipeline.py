@@ -2,9 +2,18 @@
 
 Spark-native lifecycle replacing /root/reference/python/scd_implementation.py's
 orchestration (:102-132): extract -> standardize/union -> clean/enrich ->
-surrogate keys -> star schema -> SCD2 -> parquet staging. Everything stays a
-lazy DataFrame graph until the staging writes; the only barrier is the SCD2
-read-modify-write (versioned dirs, sinks.write_versioned).
+surrogate keys -> star schema -> SCD2 -> parquet staging. Extract, clean,
+the dimension builds and SCD2 stay one lazy DataFrame graph; the star tables
+are eager checkpoints (session.eager_checkpoint), in three steps: the five
+dimensions once SCD2 and stable_sk have produced them, then fact_transactions
+built against those checkpoints, then fact_claims built through the
+checkpointed fact_transactions. The quality checks, the staging writes and
+the returned frames all read the checkpoints, so the CSV graph runs once per
+table instead of once per action. The other barrier is the SCD2
+read-modify-write of the staged dim_patients (versioned dirs,
+sinks.write_versioned). Every Spark job of a run carries a job description:
+``pipeline.star.build`` for the surrogate-key jobs of the lazy build, then
+``pipeline.<table>.<checkpoint|check|write>``.
 
 Source layout defaults to the reference repo's own seed CSVs (the same data
 its MySQL DDL seeds), so the e2e tests run the real input. ``claims source
@@ -14,12 +23,14 @@ inference``: the reference tags claims by filename substring
 
 from __future__ import annotations
 
+import logging
 import os
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from healthcare_rcm_etl_pipeline_spark.operators import keys
 from healthcare_rcm_etl_pipeline_spark.operators.scd2 import apply_scd_type2
 from healthcare_rcm_etl_pipeline_spark.plans import model
 from healthcare_rcm_etl_pipeline_spark.plans.standardize import (
@@ -27,7 +38,10 @@ from healthcare_rcm_etl_pipeline_spark.plans.standardize import (
     add_unified_patient_id,
     integrate_sources,
 )
+from healthcare_rcm_etl_pipeline_spark.session import eager_checkpoint, job_description
 from healthcare_rcm_etl_pipeline_spark.sources import readers, schemas, sinks
+
+log = logging.getLogger(__name__)
 
 DB_TABLES = ["departments", "encounters", "patients", "providers", "transactions"]
 SCD_TRACKED = ["Address", "LastName"]  # scd_implementation.py:19
@@ -91,7 +105,8 @@ def run_pipeline(
     existing_dim_patients: DataFrame | None = None,
     use_cpt_lookup: bool = False,
 ) -> dict[str, DataFrame]:
-    """Full batch run; returns {table_name: DataFrame} of dims + facts.
+    """Full batch run; returns {table_name: DataFrame} of dims + facts,
+    each an eager checkpoint (see the module docstring).
 
     ``use_cpt_lookup``: opt-in enrichment of dim_procedures from the
     reference's dormant CPT lookup (Data/cptcode/cptcodes.csv — shipped but
@@ -99,6 +114,82 @@ def run_pipeline(
     description instead). Codes found in the lookup get the real CPT
     description; unknown codes keep the reference's synthetic
     'Desc for Code N' fallback. Off by default for strict parity."""
+    sk_caches = len(keys._SK_CACHES)
+    with job_description(spark, "pipeline.star.build"):
+        dims, transactions, claims = _lazy_dims(
+            spark, reference_root, staging_dir, run_date, existing_dim_patients, use_cpt_lookup
+        )
+
+    # The star is computed once: each table is checkpointed (not persisted —
+    # a cached plan skips AQE's final partition coalescing, which would
+    # change the staged file layout), and everything after reads the
+    # checkpoints. Once the dims are checkpointed, the sk rank relations
+    # this call persisted are no longer read by anything.
+    def checkpoint(name: str, df: DataFrame) -> DataFrame:
+        with job_description(spark, f"pipeline.{name}.checkpoint"):
+            return eager_checkpoint(df)
+
+    out = {name: checkpoint(name, df) for name, df in dims.items()}
+    keys.release_sk_caches(since=sk_caches)
+    out["fact_transactions"] = checkpoint(
+        "fact_transactions",
+        model.build_fact_transactions(
+            transactions,
+            out["dim_patients"].filter(F.col("is_current")),
+            out["dim_providers"],
+            out["dim_procedures"],
+            out["dim_date"],
+        ),
+    )
+    out["fact_claims"] = checkpoint(
+        "fact_claims",
+        model.build_fact_claims(claims, out["fact_transactions"], out["dim_date"]),
+    )
+    # the checks report, they don't fail the night
+    for fact in ("fact_transactions", "fact_claims"):
+        with job_description(spark, f"pipeline.{fact}.check"):
+            reports = model.validate_star({fact: out[fact]}, out)
+        for r in reports:
+            log.info("%s check %s: %d violations", fact, r.name, r.violation_count)
+
+    if staging_dir:
+        # staging-time stats (analytics.STAR_STATS_KEY): counted from the
+        # JUST-WRITTEN parquet — a footer-metadata read, not a scan of the
+        # checkpoint — so every downstream query build / view registration
+        # plans the size-aware join strategy with zero count jobs
+        # (scaled_lookup / register_star_views). Unstaged runs attach stats
+        # explicitly if wanted (analytics.attach_star_stats).
+        from healthcare_rcm_etl_pipeline_spark.plans import analytics as _an
+
+        stats: dict[str, int] = {}
+        for name, df in out.items():
+            path = os.path.join(staging_dir, name)
+            with job_description(spark, f"pipeline.{name}.write"):
+                if name == "dim_patients":
+                    path = os.path.join(path, f"v={sinks.write_versioned(df, path)}")
+                elif name.startswith("fact_"):
+                    # clustering analog of load.py:100-103: facts by patient_sk
+                    sinks.write_clustered(df, path, cluster_by=["patient_sk"])
+                else:
+                    sinks.write_parquet(df, path)
+                if name in _an.SF_GROWING_DIMS:
+                    stats[name] = spark.read.parquet(path).count()
+        out[_an.STAR_STATS_KEY] = stats  # type: ignore[assignment]
+    return out
+
+
+def _lazy_dims(
+    spark: SparkSession,
+    reference_root: str,
+    staging_dir: str | None,
+    run_date: str,
+    existing_dim_patients: DataFrame | None,
+    use_cpt_lookup: bool,
+) -> tuple[dict[str, DataFrame], DataFrame, DataFrame]:
+    """The five dimensions as one lazy graph over the CSVs (dim_patients
+    after SCD2 and stable_sk), plus the transactions and enriched claims the
+    facts are built from. Its only Spark jobs are the eager surrogate-key
+    ones (operators.keys)."""
     db_raw, claims_raw = extract(spark, reference_root)
     db, claims = transform(db_raw, claims_raw, run_date)
 
@@ -129,9 +220,7 @@ def run_pipeline(
     # (scd_implementation.py:96-98, rekey="literal"), which shifts sks after
     # any change run and silently points fact FKs at the wrong patients —
     # replicated by the scd2_type2_merge query for parity, NOT used here.
-    from healthcare_rcm_etl_pipeline_spark.operators.keys import first_row_per_key, stable_sk
-
-    incoming = first_row_per_key(
+    incoming = keys.first_row_per_key(
         dims["dim_patients"].drop("patient_sk"), ["unified_patient_id"]
     )
     existing = existing_dim_patients
@@ -146,57 +235,10 @@ def run_pipeline(
         rekey="none",
     )
     has_prior_sk = existing is not None and "patient_sk" in existing.columns
-    dims["dim_patients"] = stable_sk(
+    dims["dim_patients"] = keys.stable_sk(
         scd,
         ["unified_patient_id"],
         "patient_sk",
         existing=existing if has_prior_sk else None,
     )
-
-    facts = {
-        "fact_transactions": model.build_fact_transactions(
-            db["transactions"],
-            dims["dim_patients"].filter(F.col("is_current")),
-            dims["dim_providers"],
-            dims["dim_procedures"],
-            dims["dim_date"],
-        ),
-    }
-    facts["fact_claims"] = model.build_fact_claims(
-        claims, facts["fact_transactions"], dims["dim_date"]
-    )
-    model.validate_star(facts, dims)
-
-    out = {**dims, **facts}
-    if staging_dir:
-        for name, df in out.items():
-            if name == "dim_patients":
-                sinks.write_versioned(df, os.path.join(staging_dir, name))
-            elif name.startswith("fact_"):
-                # clustering analog of load.py:100-103: facts by patient_sk
-                sinks.write_clustered(
-                    df, os.path.join(staging_dir, name), cluster_by=["patient_sk"]
-                )
-            else:
-                sinks.write_parquet(df, os.path.join(staging_dir, name))
-        # staging-time stats (analytics.STAR_STATS_KEY): counted from the
-        # JUST-WRITTEN parquet — a footer-metadata read, no recompute of the
-        # dim graph — so every downstream query build / view registration
-        # plans the size-aware join strategy with zero count jobs
-        # (scaled_lookup / register_star_views). Unstaged runs stay pure
-        # lazy DataFrames and attach stats explicitly if wanted
-        # (analytics.attach_star_stats).
-        from healthcare_rcm_etl_pipeline_spark.plans import analytics as _an
-
-        stats: dict[str, int] = {}
-        for name in _an.SF_GROWING_DIMS:
-            if name == "dim_patients":
-                stats[name] = sinks.read_versioned(
-                    spark, os.path.join(staging_dir, name)
-                ).count()
-            elif name in out:
-                stats[name] = spark.read.parquet(
-                    os.path.join(staging_dir, name)
-                ).count()
-        out[_an.STAR_STATS_KEY] = stats  # type: ignore[assignment]
-    return out
+    return dims, db["transactions"], claims

@@ -3,14 +3,19 @@ cluster-safe defaults (AQE on, sane shuffle partitioning, UTC, Arrow).
 
 On a real cluster only ``master`` and memory sizing change; everything the
 engine does is partitioning-aware and never collects large data to the driver.
+
+Two session-scoped helpers sit next to the factory: ``eager_checkpoint``
+(the one lineage barrier that honours the session's checkpoint dir) and
+``job_description`` (a labelled block of Spark jobs).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -46,3 +51,30 @@ def get_spark(
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def eager_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and truncate its lineage: a reliable
+    ``checkpoint()`` when the session has a checkpoint dir, else
+    ``localCheckpoint()``. Unlike ``persist()``, the data is computed by the
+    AQE plan and keeps its final (coalesced) partitioning, and later actions
+    can never recompute it — re-running a range-partitioned rank would
+    re-sample its boundaries."""
+    try:
+        has_dir = df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isDefined()
+    except Exception:
+        has_dir = False
+    return df.checkpoint(eager=True) if has_dir else df.localCheckpoint(eager=True)
+
+
+@contextlib.contextmanager
+def job_description(spark: SparkSession, label: str):
+    """Label every Spark job launched inside the block with ``label``; the
+    caller's job description is restored after."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

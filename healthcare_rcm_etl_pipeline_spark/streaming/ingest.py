@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from healthcare_rcm_etl_pipeline_spark.functions.text import fingerprint_md5
 from healthcare_rcm_etl_pipeline_spark.operators import dedup, graph
+from healthcare_rcm_etl_pipeline_spark.session import job_description
 from healthcare_rcm_etl_pipeline_spark.sources import sinks
 
 
@@ -328,15 +329,12 @@ def _step(spark: SparkSession, family: str, name: str, steps: dict):
     """Run one skeleton step with every Spark job it launches labelled
     ``ingest.<family>.<name>`` (the caller's job description is restored
     after) and its wall seconds recorded in ``steps``."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"ingest.{family}.{name}")
     t0 = time.perf_counter()
     try:
-        yield
+        with job_description(spark, f"ingest.{family}.{name}"):
+            yield
     finally:
         steps[name] = round(time.perf_counter() - t0, 4)
-        sc.setLocalProperty("spark.job.description", prev)
 
 
 def _epoch_batch_fn(

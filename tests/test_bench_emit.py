@@ -68,3 +68,11 @@ def test_stdout_line_degrades_before_dropping_queries():
 def test_small_line_is_passed_through_verbatim():
     out = {"metric": "m", "value": 1.0, "unit": "sec", "queries": {"a": 0.5}, "sf": 0.1}
     assert json.loads(bench._render_stdout_line(out)) == out
+
+
+def test_long_line_without_queries_gets_no_queries_key():
+    # too long with the default separators, short enough once compacted:
+    # the degrade steps touch `queries` only when the input carries it
+    out = {f"k{i:03d}": 1 for i in range(200)}
+    assert len(json.dumps(out)) > 1900
+    assert json.loads(bench._render_stdout_line(out)) == out
