@@ -144,6 +144,17 @@ def _current_round() -> int | None:
     return (max(ns) + 1) if ns else None
 
 
+def _detail_path() -> str:
+    """Where a run writes its detail: ``$BENCH_DETAIL_PATH``, else the
+    git-ignored ``.bench/BENCH_DETAIL.json``. A bench run never edits the
+    tracked ``BENCH_DETAIL.json``; close-out copies a run's detail into it
+    with ``scripts/stamp_bench_note.py --from <path>``."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    return os.path.abspath(
+        os.environ.get("BENCH_DETAIL_PATH") or os.path.join(here, ".bench", "BENCH_DETAIL.json")
+    )
+
+
 def _prev_round() -> tuple[str | None, dict[str, float], float | None]:
     """Newest BENCH_r{N}.json with recoverable per-query numbers:
     (name, per-query secs, sentinel). Recovery order per round: parsed
@@ -691,8 +702,8 @@ def main() -> None:
     # JSON line must stay comfortably inside that window or it arrives
     # unparseable (round 4's did). So stdout carries the compact headline
     # document, and everything bulky — spread, per-query deltas, notes,
-    # the streaming-ingest trend — goes to BENCH_DETAIL.json next to the
-    # repo's committed bench artifacts.
+    # the streaming-ingest trend — goes to the run's detail file
+    # (_detail_path), never to the tracked BENCH_DETAIL.json.
     sentinel = {
         "before_sec": round(sentinel_before, 3),
         "after_sec": round(sentinel_after, 3),
@@ -708,7 +719,7 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "sentinel": sentinel,
-        "detail": "BENCH_DETAIL.json",
+        "detail": _detail_path(),
         "materialize": "noop-write",
     }
     detail = {
@@ -759,7 +770,8 @@ def main() -> None:
             for k, v in DELTA_NOTES.items()
             if k in timings
         }
-    with open(os.path.join(os.path.dirname(__file__) or ".", "BENCH_DETAIL.json"), "w") as f:
+    os.makedirs(os.path.dirname(out["detail"]), exist_ok=True)
+    with open(out["detail"], "w") as f:
         json.dump(detail, f, indent=1)
     print(_render_stdout_line(out), flush=True)
     spark.stop()

@@ -12,7 +12,9 @@ dense 0..n-1 ids in a defined order — is re-expressed here two ways:
 - ``dense_sk_scalable``: range-repartition by the ordering key, sort within
   partitions, per-partition row_number + broadcast cumulative offsets. Fully
   parallel, still produces the exact global-sort rank, safe at 100 TB. The
-  only driver-side data is one row count per partition.
+  only driver-side data is one row count per partition. The ranked relation
+  is materialized once, as an eager checkpoint: nothing is cached, so there
+  is no release step, and no later action can recompute it.
 
 ``monotonically_increasing_id`` is never used: it is non-dense and
 partition-layout-dependent, so ids would change under AQE/repartitioning.
@@ -32,7 +34,6 @@ def dense_sk(
     sk_col: str = "sk",
     start: int = 0,
     dedup: bool = True,
-    materialize: str = "persist",
 ) -> DataFrame:
     """Dense ordinal surrogate key over (optionally deduped) key columns.
 
@@ -43,9 +44,7 @@ def dense_sk(
     produces the identical ids fully in parallel, at the cost of one bounded
     driver round-trip (a row count per partition)."""
     out = df.dropDuplicates(key_cols) if dedup else df
-    return dense_sk_scalable(
-        out, order_cols=key_cols, sk_col=sk_col, start=start, materialize=materialize
-    )
+    return dense_sk_scalable(out, order_cols=key_cols, sk_col=sk_col, start=start)
 
 
 def stable_sk(
@@ -106,31 +105,12 @@ def first_row_per_key(
     )
 
 
-# persist-mode relations awaiting release (see release_sk_caches)
-_SK_CACHES: list[DataFrame] = []
-
-
-def release_sk_caches(since: int = 0) -> None:
-    """Unpersist the relations cached by persist-mode ``dense_sk_scalable``
-    calls, those registered after the first ``since`` (a caller records
-    ``len(_SK_CACHES)`` on entry and releases only its own; the default
-    releases all). Call AFTER the terminal action over the sk outputs, or
-    once they are checkpointed — unpersisting earlier would re-sample range
-    boundaries on recomputation and corrupt ids. ``run_pipeline`` releases
-    its own after checkpointing the star; other sk-heavy callers (many id
-    assignments per session) should call this between stages or pass
-    ``materialize='checkpoint'``."""
-    while len(_SK_CACHES) > since:
-        _SK_CACHES.pop().unpersist()
-
-
 def dense_sk_scalable(
     df: DataFrame,
     order_cols: list[str],
     sk_col: str = "sk",
     start: int = 0,
     num_partitions: int | None = None,
-    materialize: str = "persist",
 ) -> DataFrame:
     """Dense global-sort-rank ids without a single-task global window.
 
@@ -142,31 +122,18 @@ def dense_sk_scalable(
 
     The offsets job and the output job must see the SAME range boundaries
     (repartitionByRange samples, so recomputation could differ), so the
-    ranked relation is materialized. ``materialize`` picks the lifetime:
-
-    - ``'persist'`` (default): cached and registered in ``_SK_CACHES``; the
-      cache must outlive the caller's action or checkpoint (unpersisting
-      earlier would re-sample boundaries and corrupt ids), so the caller
-      releases it after with ``release_sk_caches(since=<len on entry>)``.
-      Spark's LRU eviction bounds the damage of a caller that never does.
-    - ``'checkpoint'``: lineage is TRUNCATED at the ranked relation
-      (``session.eager_checkpoint``). Ids are stable across any later
-      re-execution and no cache registration is needed; the right mode for
-      sk-heavy pipelines that would otherwise accumulate LRU pressure.
+    ranked relation is materialized once and its lineage truncated
+    (``session.eager_checkpoint``). Ids are then stable across any later
+    re-execution, nothing is registered in Spark's cache and there is
+    nothing for the caller to release. Unlike a cached plan, the checkpoint
+    keeps AQE's partition coalescing, so a small rank is one partition.
     """
-    if materialize not in ("persist", "checkpoint"):
-        raise ValueError(f"materialize must be persist|checkpoint, got {materialize!r}")
     n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     order_exprs = [F.col(c) for c in order_cols]
     parted = df.repartitionByRange(n_part, *order_exprs).sortWithinPartitions(*order_exprs)
     with_pid = parted.withColumn("__pid", F.spark_partition_id())
     w = Window.partitionBy("__pid").orderBy(*order_exprs)
-    local = with_pid.withColumn("__local_rn", F.row_number().over(w) - 1)
-    if materialize == "checkpoint":
-        local = eager_checkpoint(local)
-    else:
-        local = local.persist()
-        _SK_CACHES.append(local)
+    local = eager_checkpoint(with_pid.withColumn("__local_rn", F.row_number().over(w) - 1))
 
     # partition sizes: one long per partition — bounded driver traffic
     sizes = {

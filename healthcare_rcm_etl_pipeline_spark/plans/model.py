@@ -7,9 +7,12 @@ Spark-first re-expression of /root/reference/python/transform.py and
   phone strip, DOB parse, birthday-aware age — all Column exprs, no UDF)
 - enrich_claims        <- transform.py:33-44 (date coercion, safe-division
   coverage_percentage, days_to_payment, year/month)
-- attach_surrogate_keys<- transform.py:46-56 (dense ordinal sks joined back)
+- attach_surrogate_key <- transform.py:46-56 (dense ordinal sks joined back;
+  providers and departments only — patient_sk is assigned after SCD2, by
+  operators.keys.stable_sk in plans/pipeline.py)
 - build_dim_*          <- dimensional_modeling.py:12-48 (incl. dim_departments,
-  which the reference declares at load.py:55-58 but never builds — gap-fixed)
+  which the reference declares at load.py:55-58 but never builds — gap-fixed;
+  build_dim_patients returns the natural key + attributes, without an sk)
 - build_fact_*         <- dimensional_modeling.py:50-78 (broadcast FK-resolution
   join chain: dims are small by construction, so every join is a broadcast
   hash join — no shuffle of the fact table at any scale)
@@ -74,10 +77,10 @@ def attach_surrogate_key(df: DataFrame, natural_key: list[str], sk_col: str) -> 
     return df.join(F.broadcast(keys), natural_key, "left")
 
 
-def build_dim_patients(patients_with_sk: DataFrame) -> DataFrame:
-    """dimensional_modeling.py:18-20."""
-    return patients_with_sk.select(
-        "patient_sk",
+def build_dim_patients(patients: DataFrame) -> DataFrame:
+    """dimensional_modeling.py:18-20, without the sk: the pipeline keys the
+    dimension after its SCD2 merge (operators.keys.stable_sk)."""
+    return patients.select(
         "unified_patient_id",
         "FirstName",
         "LastName",

@@ -2,17 +2,20 @@
 
 Spark-native lifecycle replacing /root/reference/python/scd_implementation.py's
 orchestration (:102-132): extract -> standardize/union -> clean/enrich ->
-surrogate keys -> star schema -> SCD2 -> parquet staging. Extract, clean,
-the dimension builds and SCD2 stay one lazy DataFrame graph; the star tables
-are eager checkpoints (session.eager_checkpoint), in three steps: the five
-dimensions once SCD2 and stable_sk have produced them, then fact_transactions
-built against those checkpoints, then fact_claims built through the
-checkpointed fact_transactions. The quality checks, the staging writes and
-the returned frames all read the checkpoints, so the CSV graph runs once per
-table instead of once per action. The other barrier is the SCD2
-read-modify-write of the staged dim_patients (versioned dirs,
+surrogate keys -> star schema -> SCD2 -> parquet staging. Extract, clean and
+the dimension builds stay one lazy DataFrame graph up to two kinds of eager
+checkpoint (session.eager_checkpoint): each surrogate-key rank, and the SCD2
+merge of dim_patients, which stable_sk and the dim_patients checkpoint both
+read instead of replaying it. The star tables are checkpoints too, in three
+steps: the five dimensions once SCD2 and stable_sk have produced them, then
+fact_transactions built against those checkpoints, then fact_claims built
+through the checkpointed fact_transactions. The quality checks, the staging
+writes and the returned frames all read the checkpoints, so the CSV graph
+runs once per table instead of once per action. The other barrier is the
+SCD2 read-modify-write of the staged dim_patients (versioned dirs,
 sinks.write_versioned). Every Spark job of a run carries a job description:
-``pipeline.star.build`` for the surrogate-key jobs of the lazy build, then
+``pipeline.star.build`` for the surrogate-key ranks of the build,
+``pipeline.dim_patients.scd2`` for the SCD2 merge's checkpoint, then
 ``pipeline.<table>.<checkpoint|check|write>``.
 
 Source layout defaults to the reference repo's own seed CSVs (the same data
@@ -87,7 +90,6 @@ def transform(
     db = dict(db_data)
     db["patients"] = model.clean_patients(db["patients"], run_date)
     claims_t = model.enrich_claims(claims)
-    db["patients"] = model.attach_surrogate_key(db["patients"], ["unified_patient_id"], "patient_sk")
     db["providers"] = model.attach_surrogate_key(
         db["providers"], ["ProviderID", "source_hospital"], "provider_sk"
     )
@@ -114,7 +116,6 @@ def run_pipeline(
     description instead). Codes found in the lookup get the real CPT
     description; unknown codes keep the reference's synthetic
     'Desc for Code N' fallback. Off by default for strict parity."""
-    sk_caches = len(keys._SK_CACHES)
     with job_description(spark, "pipeline.star.build"):
         dims, transactions, claims = _lazy_dims(
             spark, reference_root, staging_dir, run_date, existing_dim_patients, use_cpt_lookup
@@ -123,14 +124,12 @@ def run_pipeline(
     # The star is computed once: each table is checkpointed (not persisted —
     # a cached plan skips AQE's final partition coalescing, which would
     # change the staged file layout), and everything after reads the
-    # checkpoints. Once the dims are checkpointed, the sk rank relations
-    # this call persisted are no longer read by anything.
+    # checkpoints.
     def checkpoint(name: str, df: DataFrame) -> DataFrame:
         with job_description(spark, f"pipeline.{name}.checkpoint"):
             return eager_checkpoint(df)
 
     out = {name: checkpoint(name, df) for name, df in dims.items()}
-    keys.release_sk_caches(since=sk_caches)
     out["fact_transactions"] = checkpoint(
         "fact_transactions",
         model.build_fact_transactions(
@@ -186,10 +185,11 @@ def _lazy_dims(
     existing_dim_patients: DataFrame | None,
     use_cpt_lookup: bool,
 ) -> tuple[dict[str, DataFrame], DataFrame, DataFrame]:
-    """The five dimensions as one lazy graph over the CSVs (dim_patients
-    after SCD2 and stable_sk), plus the transactions and enriched claims the
-    facts are built from. Its only Spark jobs are the eager surrogate-key
-    ones (operators.keys)."""
+    """The five dimensions over the CSVs (dim_patients after SCD2 and
+    stable_sk), plus the transactions and enriched claims the facts are built
+    from. Its Spark jobs are the eager surrogate-key ranks (operators.keys,
+    each one checkpoint) and the one checkpoint of the SCD2 merge, labelled
+    ``pipeline.dim_patients.scd2``; the rest of the graph stays lazy."""
     db_raw, claims_raw = extract(spark, reference_root)
     db, claims = transform(db_raw, claims_raw, run_date)
 
@@ -220,20 +220,24 @@ def _lazy_dims(
     # (scd_implementation.py:96-98, rekey="literal"), which shifts sks after
     # any change run and silently points fact FKs at the wrong patients —
     # replicated by the scd2_type2_merge query for parity, NOT used here.
-    incoming = keys.first_row_per_key(
-        dims["dim_patients"].drop("patient_sk"), ["unified_patient_id"]
-    )
+    incoming = keys.first_row_per_key(dims["dim_patients"], ["unified_patient_id"])
     existing = existing_dim_patients
     if existing is None and staging_dir:
         existing = sinks.read_versioned(spark, os.path.join(staging_dir, "dim_patients"))
-    scd = apply_scd_type2(
-        incoming,
-        existing,
-        key="unified_patient_id",
-        tracked=SCD_TRACKED,
-        run_date=run_date,
-        rekey="none",
-    )
+    # The merge is checkpointed once: stable_sk's key derivation and the
+    # dim_patients checkpoint both read it, instead of each replaying the
+    # extract -> first_row_per_key -> full-outer-join lineage.
+    with job_description(spark, "pipeline.dim_patients.scd2"):
+        scd = eager_checkpoint(
+            apply_scd_type2(
+                incoming,
+                existing,
+                key="unified_patient_id",
+                tracked=SCD_TRACKED,
+                run_date=run_date,
+                rekey="none",
+            )
+        )
     has_prior_sk = existing is not None and "patient_sk" in existing.columns
     dims["dim_patients"] = keys.stable_sk(
         scd,

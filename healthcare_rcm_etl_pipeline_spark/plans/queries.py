@@ -2933,7 +2933,7 @@ def q21_customer_deciles(spark, sf_dir):
     (range-partitioned sort + per-partition row_number + broadcast offsets),
     and the decile is computed arithmetically from (rank, N) with exact
     ntile semantics — the first N mod 10 buckets hold ceil(N/10) rows, the
-    rest floor(N/10). N is one long collected off the already-persisted
+    rest floor(N/10). N is one long collected off the already-checkpointed
     ranked relation, so the whole query stays distributed at any scale."""
     o = _t(spark, sf_dir, "orders")
     s = o.groupBy("o_custkey").agg(
@@ -2946,7 +2946,7 @@ def q21_customer_deciles(spark, sf_dir):
         order_cols=["__neg_spend", "o_custkey"],
         sk_col="__r0",
     ).drop("__neg_spend")
-    n = ranked.count()  # one long off the persisted ranked relation
+    n = ranked.count()  # one long off the checkpointed ranked relation
     small, rem = n // 10, n % 10  # bucket sizes: rem buckets of small+1
     cutoff = rem * (small + 1)
     r0 = F.col("__r0")
@@ -6399,7 +6399,7 @@ _KMEANS_ORACLE = """
       ) WHERE rn = 1
     )
     SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_points,
-           round(SUM(dist2), 3) AS inertia
+           CAST(round(SUM(CAST(dist2 AS DECIMAL(38, 6))), 3) AS DOUBLE) AS inertia
     FROM a2 GROUP BY cluster
 """
 
@@ -6420,16 +6420,21 @@ def kmeans_lloyd_q(spark, sf_dir):
     steps (d1/a1 → m1/c1 → d2/a2), hard-coding this table's dim=64 in its
     range(); the engine side reads the dim from the data.
 
-    Per-point rounded distances are summed into inertia and re-rounded to
-    3 dp: 1e4 points × 1e-16 relative float-order noise sits 6 orders
-    below the last kept digit at any realistic SF."""
+    Inertia sums the per-point 6-dp distances as DECIMAL(38, 6), rounds to
+    3 dp and casts back to double. A double sum is not exact: a cluster
+    whose exact sum is a half-way point such as 130.160500 can land on
+    130.16049999…, which Spark's round(double) takes down while DuckDB's
+    takes it up (corpus seed 821). The decimal sum is exact in both
+    engines, so both round the same half-up value."""
     from healthcare_rcm_etl_pipeline_spark.operators.clustering import kmeans_lloyd
 
     emb = _t(spark, sf_dir, "embeddings")
     assigned = kmeans_lloyd(emb, "embedding", "vec_id", k=8, iters=2, ndp=6)
     return assigned.groupBy("cluster").agg(
         F.count("*").cast("bigint").alias("n_points"),
-        F.round(F.sum("dist2"), 3).alias("inertia"),
+        F.round(F.sum(F.col("dist2").cast("decimal(38,6)")), 3)
+        .cast("double")
+        .alias("inertia"),
     )
 
 

@@ -10,7 +10,13 @@ re-stamp a one-command mechanical step: it replaces the existing
 ``closeout.render_bench_stamp`` — the SAME renderer the guard test
 asserts against — so prose and artifact cannot diverge.
 
-Usage: python scripts/stamp_bench_note.py
+A bench run writes its detail outside the tracked tree (bench.py
+``_detail_path``: ``$BENCH_DETAIL_PATH``, else the git-ignored
+``.bench/BENCH_DETAIL.json``). ``--from PATH`` first copies that run's
+detail into the tracked BENCH_DETAIL.json — the one deliberate close-out
+step that replaces it — and then re-stamps the note.
+
+Usage: python scripts/stamp_bench_note.py [--from PATH]
 Exit 0 on success (including no-op when already current); exit 1 if the
 newest note has no Stamp block to replace (write one by hand first, via
 the renderer).
@@ -18,12 +24,14 @@ the renderer).
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
+import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from closeout import REPO, render_bench_stamp  # noqa: E402
 
@@ -33,7 +41,13 @@ _STAMP_RE = re.compile(
 
 
 def main() -> int:
-    detail = json.load(open(os.path.join(REPO, "BENCH_DETAIL.json")))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--from", dest="src", help="a bench run's detail file to commit")
+    args = ap.parse_args()
+    tracked = os.path.join(REPO, "BENCH_DETAIL.json")
+    if args.src:
+        shutil.copyfile(args.src, tracked)
+    detail = json.load(open(tracked))
     stamp = render_bench_stamp(detail)
     scale_path = os.path.join(REPO, "SCALE.md")
     text = open(scale_path).read()

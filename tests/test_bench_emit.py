@@ -76,3 +76,17 @@ def test_long_line_without_queries_gets_no_queries_key():
     out = {f"k{i:03d}": 1 for i in range(200)}
     assert len(json.dumps(out)) > 1900
     assert json.loads(bench._render_stdout_line(out)) == out
+
+
+def test_detail_path_is_never_the_tracked_artifact(monkeypatch, tmp_path):
+    # a plain run writes a git-ignored file, never the tracked BENCH_DETAIL.json
+    import subprocess
+
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+    monkeypatch.delenv("BENCH_DETAIL_PATH", raising=False)
+    default = bench._detail_path()
+    assert default != os.path.join(here, "BENCH_DETAIL.json")
+    assert subprocess.run(["git", "-C", here, "check-ignore", "-q", default]).returncode == 0
+    # $BENCH_DETAIL_PATH wins
+    monkeypatch.setenv("BENCH_DETAIL_PATH", str(tmp_path / "run.json"))
+    assert bench._detail_path() == str(tmp_path / "run.json")

@@ -611,20 +611,16 @@ class TestMinhashArrowParity:
             dedup.minhash_signatures_expr(df, "text", "doc_id", k=64, n=3),
         )
 
-    def test_parity_testdata_and_band_table(self, spark, sf_dir):
-        from healthcare_rcm_etl_pipeline_spark.sources.readers import load_table
-
-        docs = load_table(spark, sf_dir, "documents")
+    def _assert_signatures_and_bands_identical(self, docs):
+        sig = dedup.minhash_signatures_expr(docs, "text", "doc_id", k=64, n=3)
         self._assert_identical(
-            dedup.minhash_signatures(docs, "text", "doc_id", k=64, n=3),
-            dedup.minhash_signatures_expr(docs, "text", "doc_id", k=64, n=3),
+            dedup.minhash_signatures(docs, "text", "doc_id", k=64, n=3), sig
         )
         # band hashes chain the signature longs: parity must survive them
         bands = {
             (r["doc"], r["band"]): r["bh"]
             for r in dedup.minhash_band_table(docs, "text", "doc_id").collect()
         }
-        sig = dedup.minhash_signatures_expr(docs, "text", "doc_id")
         ref_bands = {
             (r["doc"], r["band"]): r["bh"]
             for r in sig.select(
@@ -641,6 +637,19 @@ class TestMinhashArrowParity:
             ).select("doc", "bb.band", "bb.bh").collect()
         }
         assert bands == ref_bands
+
+    def test_parity_testdata_and_band_table(self, spark, sf_dir):
+        from healthcare_rcm_etl_pipeline_spark.sources.readers import load_table
+
+        self._assert_signatures_and_bands_identical(load_table(spark, sf_dir, "documents"))
+
+    def test_parity_testdata_first_docs(self, spark, sf_dir):
+        """Fast-tier slice of the real-data parity test above: the first 40
+        documents, signatures plus band hashes."""
+        from healthcare_rcm_etl_pipeline_spark.sources.readers import load_table
+
+        docs = load_table(spark, sf_dir, "documents").orderBy("doc_id").limit(40)
+        self._assert_signatures_and_bands_identical(docs)
 
     def test_parity_nonstandard_k(self, spark):
         rows = [(i, f"alpha beta gamma delta tok{i} epsilon zeta") for i in range(20)]

@@ -3,6 +3,8 @@ partitioning; the scalable variant must equal the global-sort rank."""
 
 from __future__ import annotations
 
+import pytest
+
 from healthcare_rcm_etl_pipeline_spark.operators.keys import dense_sk, dense_sk_scalable
 
 
@@ -27,31 +29,46 @@ def test_dense_sk_scalable_start_offset(spark):
 
 
 def test_dense_sk_scalable_checkpoint_mode_stable_ids(spark, tmp_path):
-    """materialize='checkpoint' truncates lineage at the ranked relation:
+    """With a checkpoint dir the ranked relation is a reliable checkpoint:
     ids must be identical across repeated actions (re-execution cannot
-    re-sample range boundaries) and no cache registration happens."""
-    from healthcare_rcm_etl_pipeline_spark.operators import keys as K
-
+    re-sample range boundaries)."""
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     data = [(i * 7919 % 1000,) for i in range(1000)]
     df = spark.createDataFrame(data, ["k"]).repartition(13)
-    before = len(K._SK_CACHES)
-    out = dense_sk_scalable(df, ["k"], num_partitions=7, materialize="checkpoint")
-    assert len(K._SK_CACHES) == before  # checkpoint mode registers nothing
+    out = dense_sk_scalable(df, ["k"], num_partitions=7)
     first = sorted((r["k"], r["sk"]) for r in out.collect())
     second = sorted((r["k"], r["sk"]) for r in out.collect())  # re-execution
     assert first == second == [(k, k) for k in range(1000)]
 
 
-def test_release_sk_caches_unpersists(spark):
-    from healthcare_rcm_etl_pipeline_spark.operators import keys as K
+@pytest.fixture
+def no_checkpoint_dir(spark):
+    """Run without a session checkpoint dir (so eager_checkpoint takes the
+    localCheckpoint path), restoring whatever dir was set."""
+    sc = spark.sparkContext._jsc.sc()
+    saved = sc.checkpointDir()
+    set_dir = getattr(sc, "checkpointDir_$eq")
+    set_dir(spark.sparkContext._jvm.scala.Option.apply(None))
+    yield
+    set_dir(saved)
 
-    df = spark.createDataFrame([(3,), (1,), (2,)], ["k"])
-    out = dense_sk_scalable(df, ["k"])
-    assert sorted(r["sk"] for r in out.collect()) == [0, 1, 2]
-    assert K._SK_CACHES
-    K.release_sk_caches()
-    assert not K._SK_CACHES
+
+def test_rank_registers_no_cache_and_keeps_ids_on_reexecution(spark, no_checkpoint_dir):
+    """The rank is one local checkpoint: nothing enters Spark's cache, the
+    lineage holds no range exchange to re-sample, and re-running the output
+    returns the same ids."""
+    assert not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    data = [(i * 7919 % 1000,) for i in range(1000)]
+    df = spark.createDataFrame(data, ["k"]).repartition(13)
+    out = dense_sk_scalable(df, ["k"], num_partitions=7)
+    assert cache.numCachedEntries() == before
+    plan = out._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" not in plan, plan
+    first = sorted((r["k"], r["sk"]) for r in out.collect())
+    second = sorted((r["k"], r["sk"]) for r in out.collect())  # re-execution
+    assert first == second == [(k, k) for k in range(1000)]
 
 
 def test_stable_sk_first_run_is_dense(spark):

@@ -1,8 +1,10 @@
 """The nightly star is computed once (plans/pipeline.py ``run_pipeline``):
 each star table is an eager checkpoint that the quality checks, the staging
 writes and the returned frames all read, instead of each of them replaying
-the CSV graph. Pinned on one SCD2 change night over generated two-hospital
-inputs (rcmbench.gen.HospitalSources, 0.02x the reference's rows)."""
+the CSV graph; the SCD2 merge and every surrogate-key rank are checkpoints
+too, so the night caches nothing. Pinned on one SCD2 change night over
+generated two-hospital inputs (rcmbench.gen.HospitalSources, 0.02x the
+reference's rows)."""
 
 from __future__ import annotations
 
@@ -10,7 +12,6 @@ import logging
 import os
 import sys
 
-from healthcare_rcm_etl_pipeline_spark.operators import keys
 from healthcare_rcm_etl_pipeline_spark.plans.pipeline import run_pipeline
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -18,22 +19,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from rcmbench.gen import HospitalSources  # noqa: E402
 
 SEED, SCALE = 5, 0.02
-# staged parquet files per table when every action replayed the CSV graph
-# (local[8], 8 shuffle partitions, this seed and scale): a cached star skips
-# AQE's final partition coalescing and would write more, smaller files
+# staged parquet files per table (local[8], 8 shuffle partitions, this seed
+# and scale). A cached star skips AQE's final partition coalescing and would
+# write more, smaller files. Until the ranks were checkpoints the layout was
+# 5/2/2/6/6/1/1: a persisted rank relation is a cached plan, which AQE does
+# not coalesce, so its 8 shuffle partitions reached dim_patients,
+# dim_procedures and dim_date; a checkpointed rank is coalesced to one.
 STAGED_FILES = {
-    "dim_patients": 5,
+    "dim_patients": 1,
     "dim_providers": 2,
     "dim_departments": 2,
-    "dim_procedures": 6,
-    "dim_date": 6,
+    "dim_procedures": 1,
+    "dim_date": 1,
     "fact_transactions": 1,
     "fact_claims": 1,
 }
 # Spark jobs of the night: 223 when every action replayed the graph, 112
-# with the checkpointed star (a reliable checkpoint dir adds one write job
-# per table)
-JOB_BUDGET = 140
+# with the checkpointed star, 95 once the SCD2 merge is checkpointed and the
+# dead patient rank is gone; the budget is 95 plus 15%
+JOB_BUDGET = 109
 
 
 def _jobs(spark) -> dict[int, str | None]:
@@ -55,9 +59,11 @@ def test_change_night_computes_the_star_once(spark, tmp_path, caplog):
     src.write(root)
     expected = src.expected()
 
-    # another caller's pending sk cache must survive the night
-    keys.dense_sk_scalable(spark.createDataFrame([(2,), (1,)], ["k"]), ["k"])
-    theirs, sk_entry = keys._SK_CACHES[-1], len(keys._SK_CACHES)
+    # the night caches nothing, and another caller's cached frame survives it
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    theirs = spark.createDataFrame([(2,), (1,)], ["k"]).persist()
+    theirs.count()
+    cached_on_entry = cache.numCachedEntries()
     sc = spark.sparkContext
     sc.setJobDescription("outer")
     try:
@@ -70,10 +76,9 @@ def test_change_night_computes_the_star_once(spark, tmp_path, caplog):
     finally:
         sc.setLocalProperty("spark.job.description", None)
 
-    # the night's rank caches are released, the other caller's are not
-    assert len(keys._SK_CACHES) == sk_entry
-    assert keys._SK_CACHES[-1] is theirs and theirs.is_cached
-    keys.release_sk_caches(since=sk_entry - 1)
+    assert cache.numCachedEntries() == cached_on_entry
+    assert cache.lookupCachedData(theirs._jdf).isDefined()
+    theirs.unpersist()
 
     # the night fires a bounded number of jobs, every one labelled
     assert len(labels) < JOB_BUDGET, len(labels)
@@ -83,6 +88,7 @@ def test_change_night_computes_the_star_once(spark, tmp_path, caplog):
             assert f"pipeline.{table}.{step}" in labels, (table, step)
     for fact in ("fact_transactions", "fact_claims"):
         assert f"pipeline.{fact}.check" in labels
+    assert "pipeline.dim_patients.scd2" in labels
 
     # every returned star table reads its checkpoint, never the CSVs
     tables = {k: v for k, v in star.items() if k in STAGED_FILES}

@@ -77,3 +77,23 @@ def test_rows_only_queries_run_and_repeat(name, spark):
     ra = sorted(tuple(r) for r in a.collect())
     rb = sorted(tuple(r) for r in b.collect())
     assert ra == rb and len(ra) >= 0
+
+
+def test_kmeans_inertia_half_way_sum_matches_oracle(spark, tmp_path):
+    """On the benchmark's generated corpus at seed 821, cluster 3's exact
+    sum of 6-dp distances is 130.160500, a half-way point: both sides must
+    round it half-up to 130.161 (a double sum lands on 130.16049999…)."""
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from rcmbench.gen import write_corpus
+
+    write_corpus(str(tmp_path), 821, 0.01)
+    srows = [tuple(r) for r in QUERIES["kmeans_lloyd"](spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+    drows = con.execute(ORACLES["kmeans_lloyd"]).fetchall()
+    con.close()
+    cols = ["cluster", "n_points", "inertia"]
+    assert _rowset(cols, srows) == _rowset(cols, drows)
+    assert (3, 135, 130.161) in srows
