@@ -44,7 +44,9 @@ DELTA_NOTES: dict[str, str] = {
     "streaming_ingest_batch": (
         "r16: per-batch band builds ride the mapInArrow minhash kernel; "
         "point-lookup In() predicates built as one parsed SQL expr "
-        "(py4j isin marshalling was ~0.6 ms/literal of driver time)"
+        "(py4j isin marshalling was ~0.6 ms/literal of driver time); "
+        "r17: the streaming_ingest detail also carries step_median_sec, the "
+        "batch fn's per-step seconds, copied outside the timed region"
     ),
     "ann_topk_ivf_pq": (
         "r16: candidate build fused into the ADC scoring stage; plan "
@@ -307,11 +309,14 @@ def _bench_streaming_ingest(spark, sf_dir: str, n_batches: int = 8) -> dict:
         fn = make_dedup_ingest_batch_fn(base)
         per_batch: list[float] = []
         index_rows: list[int] = []
+        steps: dict[str, list[float]] = {}
         for b in range(n_batches):
             batch = docs.filter((docs.doc_id % n_batches) == b)
             t0 = time.perf_counter()
             fn(batch, b)
             per_batch.append(round(time.perf_counter() - t0, 3))
+            for step, sec in fn.last_steps.items():
+                steps.setdefault(step, []).append(sec)
             index_rows.append(read_band_index(spark, base).count())
         total = round(sum(per_batch), 3)
         # slope of post-warmup per-batch cost per BATCH, normalized by the
@@ -340,6 +345,11 @@ def _bench_streaming_ingest(spark, sf_dir: str, n_batches: int = 8) -> dict:
             if len(per_batch) > 1 and per_batch[1]
             else None,
             "per_batch_slope": slope,
+            # the batch fn's own per-step seconds (resolve, delta, write,
+            # ...), median over the batches that ran the step
+            "step_median_sec": {
+                k: round(statistics.median(v), 3) for k, v in steps.items()
+            },
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -82,7 +82,11 @@ def main(argv: list[str] | None = None) -> int:
     sub = p.add_subparsers(dest="cmd", required=True)
 
     pp = sub.add_parser("pipeline", help="run the full ETL + SCD2 batch pipeline")
-    pp.add_argument("--source", default="/root/reference")
+    pp.add_argument(
+        "--source", default=None,
+        help="reference source tree (default: $HRCM_REFERENCE_ROOT, then the "
+        "reference checkout)",
+    )
     pp.add_argument("--staging", default=None)
     pp.add_argument("--run-date", default="2025-08-03")
     pp.set_defaults(fn=_cmd_pipeline)

@@ -27,8 +27,10 @@ so shuffled bytes stay small at 100 TB.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from healthcare_rcm_etl_pipeline_spark.functions.text import (
     ngram_array,
@@ -36,6 +38,7 @@ from healthcare_rcm_etl_pipeline_spark.functions.text import (
     token_count_ws,
     tokens,
 )
+from healthcare_rcm_etl_pipeline_spark.session import collect_bounded, job_description
 
 
 def chunk_documents(
@@ -899,55 +902,61 @@ def bpe_train(
     merged, pair_count) in learned order, and the final word table
     (word, w, cnt) with every learned merge applied.
 
-    Iterative, fully declarative, DETERMINISTIC: per round, (1) adjacent-
-    pair counts — integer sums, order-free; (2) the winner = top-1 by
-    (pair_count DESC, left_sym ASC, right_sym ASC) — a 1-row
-    TakeOrderedAndProject with a total tie-break, so every engine picks
-    the same merge; (3) the rewrite — the winner broadcast-cross-joined
-    onto the word table and applied as one string ``replace`` per word
-    (whole-stage codegen; greedy left-to-right, see
-    ``bpe_initial_words``). No driver-side state: centroid-style, the
-    merge never leaves the plan; ``localCheckpoint`` per round truncates
-    lineage exactly as in connected_components/kmeans. Per-round cost is
-    O(vocab), not O(corpus) — the corpus is touched once, in
-    ``bpe_initial_words``. Stops early if no pair remains (every word
-    collapsed to one symbol), which cannot happen at realistic
-    ``n_merges`` << vocab size. ``require_full=True`` turns that early
-    stop into a loud ValueError instead — callers whose oracle SQL
-    unrolls exactly ``n_merges`` stages (the registered corpus_bpe_*
-    queries) MUST set it: the oracle's ``FROM w{k-1} t, m{k} m`` cross
-    join with an empty m{k} cascades every later stage to empty, so a
-    silent short schedule would diverge (engine returns counts, oracle
-    returns zero rows) rather than fail.
+    Iterative and DETERMINISTIC: per round, (1) adjacent-pair counts —
+    integer sums, order-free; (2) the winner = top-1 by (pair_count DESC,
+    left_sym ASC, right_sym ASC) — a total tie-break, so every engine picks
+    the same merge; (3) the rewrite — one string ``replace`` per word
+    (greedy left-to-right, see ``bpe_initial_words``). The corpus is
+    touched once, in ``bpe_initial_words``, whose word table is
+    checkpointed; every round after is O(vocab), not O(corpus).
+
+    When the word table fits ``session._DRIVER_ROWS_MAX`` rows, the rounds
+    run on the driver (a count, then one bounded collect; Python pair
+    counts kept current across merges and ``str.replace``, which is the
+    same left-to-right, non-overlapping replace, and Python's code-point
+    string order equals Spark's UTF-8 binary order), and both tables
+    return as local relations. Above the bound each round runs in Spark:
+    a vocab-bounded pair count, a 1-row TakeOrderedAndProject, and the
+    winner broadcast-cross-joined onto the word table (whole-stage
+    codegen), with a ``localCheckpoint`` per round. Both paths return the
+    same rows and schemas. Jobs are labelled
+    ``corpus.bpe_train.<words|collect|winner|rewrite>``.
+
+    Stops early if no pair remains (every word collapsed to one symbol),
+    which cannot happen at realistic ``n_merges`` << vocab size.
+    ``require_full=True`` turns that early stop into a loud ValueError
+    instead — callers whose oracle SQL unrolls exactly ``n_merges`` stages
+    (the registered corpus_bpe_* queries) MUST set it: the oracle's
+    ``FROM w{k-1} t, m{k} m`` cross join with an empty m{k} cascades every
+    later stage to empty, so a silent short schedule would diverge (engine
+    returns counts, oracle returns zero rows) rather than fail.
     """
     spark = df.sparkSession
-    words = bpe_initial_words(df, text_col).localCheckpoint(eager=True)
-    merges = spark.createDataFrame(
-        [],
-        "step int, left_sym string, right_sym string, merged string, pair_count bigint",
-    )
+    with _bpe_step(spark, "words"):
+        words = bpe_initial_words(df, text_col).localCheckpoint(eager=True)
+    with _bpe_step(spark, "collect"):
+        local = collect_bounded(words, count_first=True)
+    if local is not None:
+        return _bpe_train_local(spark, local, words.schema, n_merges, require_full)
+    merges = spark.createDataFrame([], _BPE_MERGES_DDL)
     for step in range(1, n_merges + 1):
-        winner = (
-            _bpe_pairs(words)
-            .orderBy(F.desc("pair_count"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .select(
-                F.lit(step).alias("step"),
-                F.col("a").alias("left_sym"),
-                F.col("b").alias("right_sym"),
-                F.concat("a", "b").alias("merged"),
-                "pair_count",
-            )
-            .localCheckpoint(eager=True)
-        )
-        if winner.isEmpty():
-            if require_full:
-                raise ValueError(
-                    f"bpe_train exhausted mergeable pairs at step {step} "
-                    f"(< n_merges={n_merges}); the unrolled oracle assumes "
-                    "the full merge schedule — lower n_merges or use "
-                    "require_full=False"
+        with _bpe_step(spark, "winner"):
+            winner = (
+                _bpe_pairs(words)
+                .orderBy(F.desc("pair_count"), F.asc("a"), F.asc("b"))
+                .limit(1)
+                .select(
+                    F.lit(step).alias("step"),
+                    F.col("a").alias("left_sym"),
+                    F.col("b").alias("right_sym"),
+                    F.concat("a", "b").alias("merged"),
+                    "pair_count",
                 )
+                .localCheckpoint(eager=True)
+            )
+            exhausted = winner.isEmpty()
+        if exhausted:
+            _bpe_exhausted(step, n_merges, require_full)
             break
         merges = merges.unionByName(winner)
         # measured r15: keeping the rewrite lazy (replace chain truncated
@@ -955,20 +964,90 @@ def bpe_train(
         # round k's pair-count job rebuilds k one-row broadcasts, and the
         # sequential broadcast-build waits dominate. The per-round eager
         # checkpoint stays.
-        words = (
-            words.crossJoin(F.broadcast(winner))
-            .select(
-                "word",
-                F.replace(
-                    F.col("w"),
-                    F.concat(F.lit(" "), "left_sym", F.lit("  "), "right_sym", F.lit(" ")),
-                    F.concat(F.lit(" "), "merged", F.lit(" ")),
-                ).alias("w"),
-                "cnt",
+        with _bpe_step(spark, "rewrite"):
+            words = (
+                words.crossJoin(F.broadcast(winner))
+                .select(
+                    "word",
+                    F.replace(
+                        F.col("w"),
+                        F.concat(
+                            F.lit(" "), "left_sym", F.lit("  "), "right_sym", F.lit(" ")
+                        ),
+                        F.concat(F.lit(" "), "merged", F.lit(" ")),
+                    ).alias("w"),
+                    "cnt",
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
     return merges, words
+
+
+_BPE_MERGES_DDL = (
+    "step int, left_sym string, right_sym string, merged string, pair_count bigint"
+)
+
+
+def _bpe_step(spark, step: str):
+    """Label the Spark jobs of one ``bpe_train`` step
+    ``corpus.bpe_train.<step>``, nested under the caller's own label."""
+    return job_description(spark, f"corpus.bpe_train.{step}", nest=True)
+
+
+def _bpe_exhausted(step: int, n_merges: int, require_full: bool) -> None:
+    if require_full:
+        raise ValueError(
+            f"bpe_train exhausted mergeable pairs at step {step} "
+            f"(< n_merges={n_merges}); the unrolled oracle assumes "
+            "the full merge schedule — lower n_merges or use "
+            "require_full=False"
+        )
+
+
+def _bpe_train_local(spark, local, words_schema, n_merges, require_full):
+    """The driver rounds of ``bpe_train`` over the collected word table:
+    the same pair counts, winner order and rewrite as the Spark rounds.
+    The pair counts are taken once and then kept current: a merge
+    re-counts only the words that hold the winning pair (a substring scan
+    finds them), so a round costs the words it rewrites, not the table."""
+    ws = local.column("w").to_pylist()
+    cnts = local.column("cnt").to_pylist()
+    counts: dict[tuple[str, str], int] = {}
+
+    def tally(w: str, c: int) -> None:
+        syms = w.strip(" ").split("  ")
+        for pair in zip(syms, syms[1:]):
+            n = counts.get(pair, 0) + c
+            if n:
+                counts[pair] = n
+            else:
+                del counts[pair]
+
+    for w, c in zip(ws, cnts):
+        tally(w, c)
+    merges = []
+    for step in range(1, n_merges + 1):
+        if not counts:
+            _bpe_exhausted(step, n_merges, require_full)
+            break
+        (a, b), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((step, a, b, a + b, n))
+        old, new = f" {a}  {b} ", f" {a}{b} "
+        for i, w in enumerate(ws):
+            if old in w:
+                tally(w, -cnts[i])
+                ws[i] = w.replace(old, new)
+                tally(ws[i], cnts[i])
+    # the Spark rewrite's `w` is nullable once a merge has been applied
+    words_schema = StructType([
+        StructField(f.name, f.dataType, f.nullable or (f.name == "w" and bool(merges)))
+        for f in words_schema
+    ])
+    words = local.set_column(local.schema.get_field_index("w"), "w", pa.array(ws, pa.string()))
+    return (
+        spark.createDataFrame(merges, _BPE_MERGES_DDL),
+        spark.createDataFrame(words, words_schema),
+    )
 
 
 def bpe_token_counts(

@@ -16,21 +16,55 @@ O(log diameter), not O(diameter). Near-dup clusters are dense and shallow
 length 1000 now converges in ~10 rounds instead of 1000 (pinned by the
 diameter-stress test).
 
+The module also holds the other graph operators: ``bfs_hops`` (hop-bounded
+reach), ``pagerank_fixed_point`` (integer PageRank) and ``triangle_counts``.
+
 Scale notes (100 TB):
-- Each round is one equi-join (edges ⋈ labels on src) + one groupBy(dst)
-  min — both shuffle on node id; no collect, no driver state beyond the
-  per-round changed-count aggregate.
-- ``localCheckpoint`` truncates lineage every round: without it the plan
-  doubles per iteration and Catalyst analysis time explodes long before
-  the data does.
+- Each CC round is one equi-join (edges ⋈ labels on src) + one
+  groupBy(dst) min — both shuffle on node id; no collect, no driver state
+  beyond the per-round changed-count aggregate.
+- ``localCheckpoint`` truncates lineage every distributed round: without it
+  the plan doubles per iteration and Catalyst analysis time explodes long
+  before the data does.
 - Edges are held symmetric (a→b and b→a) so propagation needs no
   direction handling; self-loops carry each node's own label.
+- Bounded state runs on the driver: ``connected_components_bounded`` (up to
+  its ``collect_limit`` pairs), ``bfs_hops`` and ``pagerank_fixed_point``
+  (up to ``session._DRIVER_ROWS_MAX`` edge rows) collect their input once
+  through ``session.collect_bounded`` and iterate in Python or NumPy. The
+  row bound is a driver-memory budget below the measured break-even (see
+  ``session``); ``bfs_hops`` and ``pagerank_fixed_point`` count their
+  checkpointed edges first, so edges above it never reach the driver, and
+  keep the distributed loops. Both sides return the same rows and schema.
+- Every Spark job an operator launches is labelled ``graph.<op>.<step>``,
+  nested under the caller's job description.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from healthcare_rcm_etl_pipeline_spark.session import collect_bounded, job_description
+
+
+def _step(df: DataFrame, op: str, step: str):
+    """Label the Spark jobs of one step of a graph operator
+    ``graph.<op>.<step>``, nested under the caller's own label."""
+    return job_description(df.sparkSession, f"graph.{op}.{step}", nest=True)
+
+
+def _driver_edges(df: DataFrame) -> pa.Table | None:
+    """``df`` (a checkpoint) on the driver if it fits the driver row bound
+    and holds no NULL id (NULLs never join, so the NumPy rounds could not
+    mirror the distributed ones); else None."""
+    table = collect_bounded(df, count_first=True)
+    if table is None or any(c.null_count for c in table.columns):
+        return None
+    return table
 
 
 def connected_components(
@@ -75,18 +109,21 @@ def cc_rounds(
 def _cc_labels(
     pairs: DataFrame, src_col: str, dst_col: str, max_iters: int, compress: bool
 ) -> tuple[DataFrame, int]:
-    edges = (
-        pairs.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
-        .unionByName(pairs.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
+    with _step(pairs, "connected_components", "edges"):
+        edges = (
+            pairs.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
+            .unionByName(
+                pairs.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t"))
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        labels = (
+            edges.select(F.col("s").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
+            .localCheckpoint(eager=True)
+        )
     for rounds in range(1, max_iters + 1):
         # neighbor-propagated candidate labels, then keep the per-node min
         # of (current label, best neighbor label)
@@ -118,8 +155,9 @@ def _cc_labels(
                     "label",
                 )
             )
-        new_labels = stepped.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("new_label") != F.col("label")).count()
+        with _step(pairs, "connected_components", "round"):
+            new_labels = stepped.localCheckpoint(eager=True)
+            changed = new_labels.filter(F.col("new_label") != F.col("label")).count()
         labels = new_labels.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             return labels, rounds
@@ -170,16 +208,19 @@ def connected_components_bounded(
     still costs ~2 localCheckpoint jobs per round plus a changed-count job
     (the round-11 per-batch fixed-cost floor: job scheduling, not data,
     dominates a 12 s batch). Up to ``collect_limit`` edges are collected
-    (one bounded job, the same device as the 4096-literal index prune);
-    if they fit, min-id labels come from a driver union-find and return as
-    a local relation (downstream joins against it broadcast for free).
-    Above the bound, falls back to the distributed iteration untouched.
-    Output ≡ ``connected_components`` exactly — the min-label fixed point
-    is unique and order-independent (pinned in tests/test_graph.py)."""
+    (one bounded job through ``session.collect_bounded``, labelled
+    ``graph.connected_components_bounded.collect``); if they fit, min-id
+    labels come from a driver union-find and return as a local relation
+    (downstream joins against it broadcast for free). Above the bound,
+    falls back to the distributed iteration untouched. Output ≡
+    ``connected_components`` exactly — the min-label fixed point is unique
+    and order-independent (pinned in tests/test_graph.py)."""
     if collect_limit is not None:
-        rows = pairs.select(src_col, dst_col).limit(collect_limit + 1).collect()
-        if len(rows) <= collect_limit:
-            out = sorted(_union_find_min_labels((r[0], r[1]) for r in rows).items())
+        with _step(pairs, "connected_components_bounded", "collect"):
+            rows = collect_bounded(pairs.select(src_col, dst_col), collect_limit)
+        if rows is not None:
+            edges = zip(rows.column(0).to_pylist(), rows.column(1).to_pylist())
+            out = sorted(_union_find_min_labels(edges).items())
             schema = pairs.select(
                 F.col(src_col).alias(out_node), F.col(src_col).alias(out_component)
             ).schema
@@ -289,16 +330,24 @@ def bfs_hops(
     expansion, contamination blast radius, recall set growth).
 
     Level-synchronous frontier BFS: the frontier starts as the seeds at
-    hop 0; each round joins the CURRENT frontier (not the full visited
-    set) against the edges and anti-joins out already-visited nodes, so
-    round cost is O(edges touching the frontier) and the loop stops early
-    the moment a frontier comes back empty — on a 100 TB graph the work
-    is proportional to the reached neighborhood, never the node count.
-    Determinism: hop numbers are structural (min distance), independent
-    of partitioning; min() over multiple discovery paths settles ties.
-    ``localCheckpoint`` per round truncates the lineage exactly as in
-    ``connected_components`` — iterative plans otherwise double in size
-    per round and Catalyst analysis dominates long before the data does.
+    hop 0; each round expands only the CURRENT frontier (not the full
+    visited set) over the edges and drops already-visited nodes, and the
+    loop stops early the moment a frontier comes back empty. Determinism:
+    hop numbers are structural (min distance), independent of
+    partitioning and of where the rounds run.
+
+    The symmetric edge list and the distinct seeds are checkpointed first.
+    When both fit ``session._DRIVER_ROWS_MAX`` rows (a count, then one
+    bounded collect each), the rounds run on the driver in NumPy set
+    operations per hop and the result returns as a local relation: a
+    Spark round costs ~2 jobs whatever the frontier size. Above the bound
+    the rounds run in Spark: each joins the frontier against the edges and
+    anti-joins the visited set, so round cost is O(edges touching the
+    frontier) — on a 100 TB graph the work tracks the reached
+    neighborhood — with a ``localCheckpoint`` per round (iterative plans
+    otherwise double in size per round). Both paths return the same rows
+    and schema. Jobs are labelled
+    ``graph.bfs_hops.<edges|seeds|collect|hop>``.
 
     ``seeds``: one-column DataFrame of node ids. Returns (out_node,
     out_hops) for every node within ``max_hops`` of any seed — ALL
@@ -308,19 +357,43 @@ def bfs_hops(
     edges-semi-join is applied only to the EXPANSION frontier, where it
     is a pure optimization: isolated seeds cannot discover neighbors.
     """
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t"))
+    with _step(edges, "bfs_hops", "edges"):
+        e = (
+            edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
+            .unionByName(
+                edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t"))
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_seeds = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    with _step(edges, "bfs_hops", "seeds"):
+        all_seeds = (
+            seeds.select(F.col(seeds.columns[0]).alias("node"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    with _step(edges, "bfs_hops", "collect"):
+        local_e = _driver_edges(e)
+        local_seeds = _driver_edges(all_seeds) if local_e is not None else None
+    if local_seeds is not None:
+        levels = _bfs_levels(
+            local_e.column("s").to_numpy(zero_copy_only=False),
+            local_e.column("t").to_numpy(zero_copy_only=False),
+            local_seeds.column("node").to_numpy(zero_copy_only=False),
+            max_hops,
+        )
+        # the distributed result's node type: seeds unioned with edge ends
+        node = all_seeds.unionByName(e.select(F.col("t").alias("node"))).schema["node"]
+        out = pa.table({
+            out_node: np.concatenate(levels),
+            out_hops: np.repeat(np.arange(len(levels), dtype=np.int32),
+                                [len(lv) for lv in levels]),
+        })
+        schema = StructType([
+            StructField(out_node, node.dataType, node.nullable),
+            StructField(out_hops, IntegerType(), False),
+        ])
+        return edges.sparkSession.createDataFrame(out, schema)
     # The expansion frontier's seed semi-join folds into hop 1's job, and
     # ``visited`` is NEVER separately checkpointed: it is a union of
     # already-checkpointed frontiers (all_seeds + nxt_1..h), so its lineage
@@ -333,20 +406,40 @@ def bfs_hops(
     )
     visited = all_seeds.withColumn("hops", F.lit(0))
     for hop in range(1, max_hops + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("node", "s"), "s")
-            .select(F.col("t").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
+        with _step(edges, "bfs_hops", "hop"):
+            nxt = (
+                e.join(frontier.withColumnRenamed("node", "s"), "s")
+                .select(F.col("t").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .localCheckpoint(eager=True)
+            )
+            if nxt.isEmpty():
+                break
         visited = visited.unionByName(nxt.withColumn("hops", F.lit(hop)))
         frontier = nxt
     return visited.select(
         F.col("node").alias(out_node), F.col("hops").cast("int").alias(out_hops)
     )
+
+
+def _bfs_levels(s: np.ndarray, t: np.ndarray, seeds: np.ndarray, max_hops: int):
+    """The driver rounds of ``bfs_hops`` over the symmetric edge arrays
+    ``s -> t``: the list of per-hop node arrays, hop 0 = the distinct
+    ``seeds``. The same frontier rule as the Spark rounds: only seeds with
+    an edge expand, and an empty frontier ends the search."""
+    levels = [seeds]
+    visited = seeds
+    frontier = seeds[np.isin(seeds, s)]
+    for _ in range(max_hops):
+        nxt = np.unique(t[np.isin(s, frontier)])
+        nxt = nxt[~np.isin(nxt, visited)]
+        if nxt.size == 0:
+            break
+        levels.append(nxt)
+        visited = np.concatenate([visited, nxt])
+        frontier = nxt
+    return levels
 
 
 def pagerank_fixed_point(
@@ -372,29 +465,57 @@ def pagerank_fixed_point(
 
     Per step, each node sends floor(rank / outdeg) along every out-edge,
     and receives damp% of its incoming sum plus the constant teleport
-    floor((100-damp)% of scale/N): one co-partitionable edge-rank join +
-    one partial-aggregated sum per iteration — the canonical O(iters)
-    shuffle loop; ``localCheckpoint`` truncates lineage each round like
-    ``connected_components``. Overflow-safe by construction: total mass
-    stays ~scale, so damp_pct x any incoming sum fits a BIGINT. Dangling
-    nodes keep only the teleport term (their mass leaks — the standard
-    simple variant; symmetrize the edges for the undirected walk, which
-    has none).
+    floor((100-damp)% of scale/N). Overflow-safe by construction: total
+    mass stays ~scale, so damp_pct x any incoming sum fits a BIGINT.
+    Dangling nodes keep only the teleport term (their mass leaks — the
+    standard simple variant; symmetrize the edges for the undirected
+    walk, which has none).
+
+    The distinct edge list is checkpointed first. When it fits
+    ``session._DRIVER_ROWS_MAX`` rows, the power steps run on the driver
+    in NumPy int64 (a count, then one bounded collect; exact
+    ``np.add.at`` sums and ``//`` floors, bit-identical to the BIGINT plan
+    since every value is non-negative) and the ranks return as a local
+    relation. Above the bound each step is one co-partitionable edge-rank
+    join plus a partial-aggregated sum — the canonical O(iters) shuffle
+    loop — with a ``localCheckpoint`` per step. Both paths return the same
+    rows and schema. Jobs are labelled
+    ``graph.pagerank_fixed_point.<edges|collect|nodes|degrees|step>``.
     """
+    with _step(edges, "pagerank_fixed_point", "edges"):
+        e = (
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    with _step(edges, "pagerank_fixed_point", "collect"):
+        local = _driver_edges(e)
+    if local is not None:
+        nodes, ranks = _pagerank_local(
+            local.column("src").to_numpy(zero_copy_only=False),
+            local.column("dst").to_numpy(zero_copy_only=False),
+            iters, scale, damp_pct,
+        )
+        node = e.select(F.col("src").alias("node")).union(
+            e.select(F.col("dst").alias("node"))
+        ).schema["node"]
+        schema = StructType([
+            StructField("node", node.dataType, node.nullable),
+            # the Spark steps' `div` is a nullable expression
+            StructField("rank_scaled", LongType(), iters > 0),
+        ])
+        out = pa.table({"node": nodes, "rank_scaled": ranks})
+        return edges.sparkSession.createDataFrame(out, schema)
     par = edges.sparkSession.sparkContext.defaultParallelism
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(par, "node")
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()  # one scalar to the driver, like ivf_fit's N
+    with _step(edges, "pagerank_fixed_point", "nodes"):
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+            .repartition(par, "node")
+            .localCheckpoint(eager=True)
+        )
+        n_nodes = nodes.count()  # one scalar to the driver, like ivf_fit's N
     if n_nodes == 0:
         raise ValueError("empty edge set")
     init = scale // n_nodes
@@ -406,11 +527,12 @@ def pagerank_fixed_point(
     # step shuffle only node-sized relations (ranks out, contributions
     # back): localCheckpoint preserves the physical partitioning, so the
     # per-step join re-sorts but never re-exchanges the edge side.
-    edeg = (
-        e.join(e.groupBy("src").agg(F.count("*").alias("outdeg")), "src")
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
+    with _step(edges, "pagerank_fixed_point", "degrees"):
+        edeg = (
+            e.join(e.groupBy("src").agg(F.count("*").alias("outdeg")), "src")
+            .repartition(par, "src")
+            .localCheckpoint(eager=True)
+        )
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
     for _ in range(iters):
         contrib = (
@@ -421,18 +543,40 @@ def pagerank_fixed_point(
             )
         )
         summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(tele)
-                    + F.expr(f"({damp_pct} * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("rank"),
+        with _step(edges, "pagerank_fixed_point", "step"):
+            ranks = (
+                nodes.join(summed, "node", "left")
+                .select(
+                    "node",
+                    (
+                        F.lit(tele)
+                        + F.expr(f"({damp_pct} * coalesce(s, 0L)) div 100")
+                    ).cast("long").alias("rank"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
     return ranks.select("node", F.col("rank").alias("rank_scaled"))
+
+
+def _pagerank_local(
+    src: np.ndarray, dst: np.ndarray, iters: int, scale: int, damp_pct: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The driver power steps of ``pagerank_fixed_point`` over the distinct
+    edge arrays: (sorted node ids, int64 ranks), the same BIGINT arithmetic
+    as the Spark steps."""
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    if nodes.size == 0:
+        raise ValueError("empty edge set")
+    s, d = idx[: src.size], idx[src.size:]
+    init = scale // nodes.size
+    tele = ((100 - damp_pct) * init) // 100
+    outdeg = np.bincount(s, minlength=nodes.size)[s]
+    rank = np.full(nodes.size, init, dtype=np.int64)
+    for _ in range(iters):
+        summed = np.zeros(nodes.size, dtype=np.int64)
+        np.add.at(summed, d, rank[s] // outdeg)
+        rank = tele + (damp_pct * summed) // 100
+    return nodes, rank
 
 
 def triangle_counts(
@@ -486,11 +630,12 @@ def triangle_counts(
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = ed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=True)
+    with _step(edges, "triangle_counts", "orient"):
+        oriented = ed.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
+        ).localCheckpoint(eager=True)
     x, y = oriented.alias("x"), oriented.alias("y")
     wedges = x.join(
         y,

@@ -50,10 +50,19 @@ DB_TABLES = ["departments", "encounters", "patients", "providers", "transactions
 SCD_TRACKED = ["Address", "LastName"]  # scd_implementation.py:19
 
 
+def _reference_root(reference_root: str | None) -> str:
+    """The source tree to read: ``reference_root`` if given, else
+    ``$HRCM_REFERENCE_ROOT``, else the reference checkout's location."""
+    return reference_root or os.environ.get("HRCM_REFERENCE_ROOT") or "/root/reference"
+
+
 def extract(
-    spark: SparkSession, reference_root: str = "/root/reference"
+    spark: SparkSession, reference_root: str | None = None
 ) -> tuple[dict[str, DataFrame], DataFrame]:
-    """extraction.py:53-111 — CSV-backed (same data the MySQL DDL seeds)."""
+    """extraction.py:53-111 — CSV-backed (same data the MySQL DDL seeds).
+    ``reference_root`` defaults to ``$HRCM_REFERENCE_ROOT``, then the
+    reference checkout."""
+    reference_root = _reference_root(reference_root)
     hosp = os.path.join(reference_root, "SQL", "hospital_dbs")
     out: dict[str, DataFrame] = {}
     for tbl in DB_TABLES:
@@ -101,14 +110,15 @@ def transform(
 
 def run_pipeline(
     spark: SparkSession,
-    reference_root: str = "/root/reference",
+    reference_root: str | None = None,
     staging_dir: str | None = None,
     run_date: str = "2025-08-03",
     existing_dim_patients: DataFrame | None = None,
     use_cpt_lookup: bool = False,
 ) -> dict[str, DataFrame]:
     """Full batch run; returns {table_name: DataFrame} of dims + facts,
-    each an eager checkpoint (see the module docstring).
+    each an eager checkpoint (see the module docstring). ``reference_root``
+    defaults to ``$HRCM_REFERENCE_ROOT``, then the reference checkout.
 
     ``use_cpt_lookup``: opt-in enrichment of dim_procedures from the
     reference's dormant CPT lookup (Data/cptcode/cptcodes.csv — shipped but
@@ -118,7 +128,8 @@ def run_pipeline(
     'Desc for Code N' fallback. Off by default for strict parity."""
     with job_description(spark, "pipeline.star.build"):
         dims, transactions, claims = _lazy_dims(
-            spark, reference_root, staging_dir, run_date, existing_dim_patients, use_cpt_lookup
+            spark, _reference_root(reference_root), staging_dir, run_date,
+            existing_dim_patients, use_cpt_lookup,
         )
 
     # The star is computed once: each table is checkpointed (not persisted —

@@ -5798,10 +5798,12 @@ def q49_copurchase_pagerank_q(spark, sf_dir):
     is BIGINT fixed-point (operators/graph.py:pagerank_fixed_point), so
     per-node contribution sums are order-free and integer division
     floors identically in every engine — a float PageRank could never
-    hash-match a SQL twin. Each step is one co-partitionable edge-rank
-    join plus a partial-aggregated sum; lineage is localCheckpoint-
-    truncated per round. The oracle unrolls the 5 steps as CTE stages
-    (recursive CTEs cannot aggregate)."""
+    hash-match a SQL twin. The edge list (~231k directed edges at sf0.01,
+    ~2.4M at sf0.1) fits the driver row bound, so the 5 steps run in
+    NumPy int64 on the driver; above the bound each step is one
+    co-partitionable edge-rank join plus a partial-aggregated sum with a
+    localCheckpoint per round. The oracle unrolls the 5 steps as CTE
+    stages (recursive CTEs cannot aggregate)."""
     from healthcare_rcm_etl_pipeline_spark.operators.corpus import cooccurrence_pairs
     from healthcare_rcm_etl_pipeline_spark.operators.graph import pagerank_fixed_point
 
@@ -5933,11 +5935,13 @@ def q50_copurchase_reach_q(spark, sf_dir):
     ≥ 2 orders (q48's supported pairs, symmetrized).
 
     operators/graph.py:bfs_hops is level-synchronous frontier BFS: each
-    round joins only the CURRENT frontier against the edges and anti-joins
-    the visited set, so round cost tracks the reached neighborhood — on a
-    100 TB graph the untouched part of the graph is never shuffled, and an
-    empty frontier stops the loop early. Hop numbers are structural (min
-    distance), so the result is exact, not partition-dependent."""
+    round expands only the CURRENT frontier and drops the visited set, and
+    an empty frontier stops the loop early. A graph under the driver row
+    bound (this one at every registered sf) runs its rounds in NumPy on
+    the driver; above it each round is a Spark join of the frontier
+    against the edges, so on a 100 TB graph the untouched part of the
+    graph is never shuffled. Hop numbers are structural (min distance), so
+    the result is exact, not partition-dependent."""
     from healthcare_rcm_etl_pipeline_spark.operators.corpus import cooccurrence_pairs
     from healthcare_rcm_etl_pipeline_spark.operators.graph import bfs_hops
 
@@ -6504,10 +6508,11 @@ def corpus_bpe_train_q(spark, sf_dir):
     unrolled SQL twin, the q49/kmeans determinism device applied to vocab
     learning. See operators/corpus.py:bpe_train for the loop: the corpus
     is shuffled ONCE (word counts — the only corpus-scale stage); each
-    round is a vocab-bounded pair count (combinable integer agg), a 1-row
-    top-1 with a total (count DESC, pair ASC) tie-break, and a broadcast
-    cross-join rewrite via whole-stage-codegen string replace. No
-    driver-side state, localCheckpoint per round."""
+    round is a vocab-bounded pair count, a top-1 with a total
+    (count DESC, pair ASC) tie-break, and a string-replace rewrite. The
+    word table is vocab-sized, under the driver row bound, so the rounds
+    run on the driver; above the bound they run in Spark with a
+    localCheckpoint per round."""
     from healthcare_rcm_etl_pipeline_spark.operators.corpus import bpe_train
 
     d = _t(spark, sf_dir, "documents")
@@ -6609,10 +6614,11 @@ def decontaminate_blast_radius_q(spark, sf_dir):
     training corpus. Composes three verified operators: contamination
     seeds (GPT-3-style n-gram overlap vs source='src0', >= 2 shared
     3-grams), the capped Jaccard near-dup pair graph (max_df=20), and
-    operators/graph.py:bfs_hops — frontier-only expansion, so at 100 TB
-    the cost tracks the contaminated neighborhood, not the corpus, and a
-    contaminated doc with no near-dups still surfaces at hop 0 (its own
-    radius). hops = min near-dup distance from any benchmark hit — the
+    operators/graph.py:bfs_hops — frontier-only expansion (on the driver
+    while the pair graph and the seeds fit its row bound, in Spark above
+    it), so at 100 TB the cost tracks the contaminated neighborhood, not
+    the corpus, and a contaminated doc with no near-dups still surfaces at
+    hop 0 (its own radius). hops = min near-dup distance from any benchmark hit — the
     triage key (hop 0: drop; hop 1-2: review or drop by policy)."""
     from healthcare_rcm_etl_pipeline_spark.operators import corpus as corpus_ops
     from healthcare_rcm_etl_pipeline_spark.operators.graph import bfs_hops

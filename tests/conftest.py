@@ -40,3 +40,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def forced_distributed(monkeypatch):
+    """Force the iterative operators (pagerank_fixed_point, bfs_hops,
+    bpe_train) onto their distributed rounds: a zero driver row bound. Without
+    this fixture, test-sized inputs take the driver rounds."""
+    from healthcare_rcm_etl_pipeline_spark import session
+
+    monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", 0)
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def rounds(request, monkeypatch):
+    """Run a test once on each side of the driver row bound: ``driver`` keeps
+    the bound (test-sized inputs take the driver rounds), ``distributed``
+    sets it to 0 as ``forced_distributed`` does."""
+    if request.param == "distributed":
+        from healthcare_rcm_etl_pipeline_spark import session
+
+        monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", 0)
+    return request.param

@@ -90,3 +90,38 @@ def test_detail_path_is_never_the_tracked_artifact(monkeypatch, tmp_path):
     # $BENCH_DETAIL_PATH wins
     monkeypatch.setenv("BENCH_DETAIL_PATH", str(tmp_path / "run.json"))
     assert bench._detail_path() == str(tmp_path / "run.json")
+
+
+def test_streaming_ingest_reports_step_medians(monkeypatch):
+    # the ingest bench copies each batch's last_steps into per-step medians;
+    # Spark, the reader and the batch fn are stand-ins
+    from healthcare_rcm_etl_pipeline_spark.sources import readers
+    from healthcare_rcm_etl_pipeline_spark.streaming import ingest
+
+    class Frame:
+        doc_id = 0
+
+        def select(self, *cols):
+            return self
+
+        def filter(self, cond):
+            return self
+
+        def count(self):
+            return 4
+
+    def make_fn(base):
+        seconds = iter([{"resolve": 0.1, "write": 1.0},
+                        {"resolve": 0.3, "write": 2.0, "fold": 5.0},
+                        {"resolve": 0.2, "write": 4.0}])
+
+        def fn(batch, epoch):
+            fn.last_steps = next(seconds)
+
+        return fn
+
+    monkeypatch.setattr(readers, "load_table", lambda spark, sf_dir, name: Frame())
+    monkeypatch.setattr(ingest, "make_dedup_ingest_batch_fn", make_fn)
+    monkeypatch.setattr(ingest, "read_band_index", lambda spark, base: Frame())
+    stats = bench._bench_streaming_ingest(None, "unused", n_batches=3)
+    assert stats["step_median_sec"] == {"resolve": 0.2, "write": 2.0, "fold": 5.0}

@@ -11,10 +11,14 @@ corpus_bpe_token_count) already pin cross-engine exactness:
 - merge application equals a pure-Python reference BPE on random words;
 - token accounting: n_tokens_bpe shrinks monotonically vs chars and is
   exact on a hand-computed corpus.
+
+Each case runs twice: as written (test-sized word tables take the driver
+rounds) and in ``test_distributed_rounds`` with the rounds forced into Spark.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from healthcare_rcm_etl_pipeline_spark.operators import corpus
@@ -174,3 +178,20 @@ def test_require_full_raises_on_merge_exhaustion(spark):
     assert merges.count() < 5  # default: silent early stop (documented)
     with _pytest.raises(ValueError, match="exhausted mergeable pairs"):
         bpe_train(df, "text", n_merges=5, require_full=True)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_sennrich_canonical_example,
+        test_adjacent_and_overlapping_merge_application,
+        test_matches_pure_python_reference,
+        test_token_counts_hand_computed,
+        test_no_python_eval_in_plan,
+        test_require_full_raises_on_merge_exhaustion,
+    ],
+    ids=lambda case: case.__name__.removeprefix("test_"),
+)
+def test_distributed_rounds(spark, forced_distributed, case):
+    """Every case above with the merge rounds run in Spark."""
+    case(spark)

@@ -153,6 +153,39 @@ def test_pagerank_fixed_point_deterministic_and_sane(spark):
     assert 0.9 * 10**12 < total <= 10**12  # floors leak mass, never add
 
 
+def test_pagerank_fixed_point_distributed_rounds(spark, forced_distributed):
+    """The same claims with the power steps in Spark; the plain run above
+    takes the driver's NumPy steps."""
+    test_pagerank_fixed_point_deterministic_and_sane(spark)
+
+
+def test_bfs_isolated_seeds_and_early_empty_frontier(spark, monkeypatch):
+    """bfs_hops on both sides of the driver row bound: every distinct seed
+    sits at hop 0, an isolated seed included; only seeds with an edge
+    expand; the search ends at the first empty frontier (hop 4 of 6), and
+    the node type is the seed/edge union's (int seeds, long edges -> long).
+    Both paths return the same rows and schema."""
+    from healthcare_rcm_etl_pipeline_spark import session
+    from healthcare_rcm_etl_pipeline_spark.operators.graph import bfs_hops
+
+    edges = spark.createDataFrame(
+        [(1, 2), (3, 2), (3, 4), (10, 11)], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(1,), (1,), (99,), (10,)], "node int")
+    want = {1: 0, 99: 0, 10: 0, 2: 1, 11: 1, 3: 2, 4: 3}
+    out = {}
+    for bound in (session._DRIVER_ROWS_MAX, 0):
+        monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", bound)
+        df = bfs_hops(edges, seeds, max_hops=6)
+        rows = df.collect()
+        assert len(rows) == len(want)
+        assert {r.node: r.hops for r in rows} == want
+        out[bound] = df.schema
+    driver, distributed = out.values()
+    assert driver == distributed
+    assert driver.simpleString() == "struct<node:bigint,hops:int>"
+
+
 def test_bounded_cc_equals_distributed_both_branches(spark):
     """connected_components_bounded (round-12 per-batch job-floor cut):
     the driver union-find fast path and the collect_limit=0 distributed

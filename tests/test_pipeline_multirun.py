@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from healthcare_rcm_etl_pipeline_spark.plans.pipeline import run_pipeline
 from healthcare_rcm_etl_pipeline_spark.sources import sinks
+from rcmbench.gen import HospitalSources
 
 
 @pytest.fixture(scope="module")
@@ -39,3 +40,25 @@ def test_two_runs_promote_versions(spark, staging):
     # both physical versions remain readable (barrier semantics)
     assert spark.read.parquet(f"{staging}/dim_patients/v=1").count() == 10000
     assert spark.read.parquet(f"{staging}/dim_patients/v=2").count() == 10000
+
+
+def test_two_runs_on_generated_sources_from_env(spark, tmp_path, monkeypatch):
+    """The same two-run contract on generated hospital inputs (0.02x the
+    reference's rows), read through ``$HRCM_REFERENCE_ROOT``: no
+    ``reference_root`` argument is passed."""
+    src = HospitalSources(5, 0.02)
+    src.write(str(tmp_path / "reference"))
+    monkeypatch.setenv("HRCM_REFERENCE_ROOT", str(tmp_path / "reference"))
+    stage = str(tmp_path / "staging")
+    n = src.expected()["current_patients"]
+
+    run_pipeline(spark, staging_dir=stage, run_date="2025-08-03")
+    assert sinks.read_versioned(spark, f"{stage}/dim_patients").count() == n
+    run_pipeline(spark, staging_dir=stage, run_date="2025-08-10")
+    v2 = sinks.read_versioned(spark, f"{stage}/dim_patients")
+    assert v2.count() == n
+    assert v2.filter(~F.col("is_current")).count() == 0
+    assert {str(r[0]) for r in v2.select("effective_date").distinct().collect()} == {
+        "2025-08-03"
+    }
+    assert spark.read.parquet(f"{stage}/dim_patients/v=1").count() == n

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from healthcare_rcm_etl_pipeline_spark.plans.pipeline import run_pipeline
 from healthcare_rcm_etl_pipeline_spark.sources import sinks
+from rcmbench.gen import HospitalSources
 
 
 @pytest.fixture(scope="module")
@@ -114,3 +115,27 @@ def test_scd2_detects_real_changes(spark, mutated_source):
         assert stale == 0
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+
+
+def test_scd2_detects_generated_changes(spark, tmp_path):
+    """A change night on generated hospital inputs (0.02x the reference's
+    rows): every changed patient gets an expired v1 row and an open v2 row,
+    and every fact FK resolves against a current dim row."""
+    src = HospitalSources(5, 0.02)
+    stage, root = str(tmp_path / "staging"), str(tmp_path / "reference")
+    src.write_staged_dim_patients(stage, "2025-08-01")
+    src.advance()
+    src.write(root)
+    expected = src.expected()
+    run_pipeline(spark, reference_root=root, staging_dir=stage, run_date="2025-08-02")
+
+    dim = sinks.read_versioned(spark, os.path.join(stage, "dim_patients"))
+    expired = dim.filter(~F.col("is_current"))
+    assert expired.count() == expected["expired"] > 0
+    assert dim.filter(F.col("version") == 2).count() == expected["expired"]
+    assert {str(r[0]) for r in expired.select("expiry_date").distinct().collect()} == {
+        "2025-08-01"
+    }
+    assert dim.count() == expected["dim_patients"]
+    fact = spark.read.parquet(os.path.join(stage, "fact_transactions"))
+    assert fact.join(dim.filter(F.col("is_current")), "patient_sk", "left_anti").count() == 0

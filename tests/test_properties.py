@@ -323,13 +323,13 @@ def test_simhash_invariant_to_order_and_duplication(spark, toks, rng):
         max_size=30,
     )
 )
-def test_pagerank_matches_pure_python_integer_simulation(spark, edge_list):
+def test_pagerank_matches_pure_python_integer_simulation(spark, rounds, edge_list):
     """pagerank_fixed_point's whole claim is that the iteration is exact
     integer arithmetic — so a pure-Python simulation running the IDENTICAL
     integer ops on the same graph must reproduce every rank EXACTLY, for
     arbitrary random digraphs. Catches any translation slip (wrong floor,
     wrong dangling handling, off-by-one teleport) that a tolerance-based
-    check would absorb."""
+    check would absorb. Runs on both the driver and the Spark rounds."""
     from healthcare_rcm_etl_pipeline_spark.operators.graph import pagerank_fixed_point
 
     edges = sorted(set(edge_list))
@@ -431,13 +431,14 @@ def test_kmv_exact_regime_set_algebra_on_random_sets(spark, sa, sb):
     st.lists(st.integers(0, 14), min_size=1, max_size=4),
     st.integers(1, 4),
 )
-def test_bfs_hops_matches_pure_python_bfs(spark, edge_list, seed_list, max_hops):
+def test_bfs_hops_matches_pure_python_bfs(spark, rounds, edge_list, seed_list, max_hops):
     """bfs_hops on arbitrary random graphs must equal a pure-Python BFS:
     same reached set, same minimum hop distances, ALL seeds at hop 0
     (isolated seeds included — r7 ADVICE: an isolated seed is within 0
     hops of itself), and the max_hops bound. Catches frontier/visited slips
     (re-expanding visited nodes, off-by-one depth) that the fixed-seed
-    q50 oracle can't distinguish from a lucky topology."""
+    q50 oracle can't distinguish from a lucky topology. Runs on both the
+    driver and the Spark rounds."""
     from healthcare_rcm_etl_pipeline_spark.operators.graph import bfs_hops
 
     edges = sorted({(a, b) for a, b in edge_list if a != b})
