@@ -69,10 +69,18 @@ def render_bench_stamp(detail: dict) -> str:
     disagree on format or rounding.
     """
     s = detail["sentinel"]
+
+    def field(key, fmt=str):
+        # a detail written without the field renders n/a, never a guess
+        return fmt(s[key]) if key in s else "n/a"
+
+    def flag(v):
+        return str(bool(v)).lower()
+
     return (
         f"Stamp: BENCH_DETAIL.json round {detail['round']} — "
         f"comparable_total {detail['comparable_total']} s,\n"
-        f"sentinel drift {s['drift']}, vs_prev_round {s['vs_prev_round']}, "
-        f"contended {str(bool(s['contended'])).lower()}, "
-        f"env_shifted {str(bool(s['env_shifted'])).lower()}."
+        f"sentinel drift {s['drift']}, vs_prev_round {field('vs_prev_round')}, "
+        f"contended {field('contended', flag)}, "
+        f"env_shifted {field('env_shifted', flag)}."
     )

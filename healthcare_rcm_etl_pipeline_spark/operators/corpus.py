@@ -935,7 +935,7 @@ def bpe_train(
     with _bpe_step(spark, "words"):
         words = bpe_initial_words(df, text_col).localCheckpoint(eager=True)
     with _bpe_step(spark, "collect"):
-        local = collect_bounded(words, count_first=True)
+        local = collect_bounded(words)
     if local is not None:
         return _bpe_train_local(spark, local, words.schema, n_merges, require_full)
     merges = spark.createDataFrame([], _BPE_MERGES_DDL)

@@ -74,7 +74,6 @@ def leakage_safe_split(
     fractions: dict[str, float],
     salt: str = "split-v1",
     out_col: str = "split",
-    collect_limit: int | None = None,
 ) -> DataFrame:
     """Near-dup-aware train/val/test split: every member of a near-dup
     CLUSTER receives the SAME assignment — the split buckets on the
@@ -94,22 +93,10 @@ def leakage_safe_split(
     the same pure-expression md5 bucketing as ``deterministic_split``.
 
     Returns ``df``'s rows as (key_col, component, out_col).
-
-    ``collect_limit``: when set, components come from
-    ``connected_components_bounded`` — the driver union-find fast path for
-    pair graphs at or under the bound (one bounded limit-collect replaces
-    the iteration jobs, and the component lookup joins as a LOCAL relation
-    so the corpus-side join broadcasts); above the bound the distributed
-    iteration runs untouched. Output identical either way (the min-label
-    fixed point is unique).
     """
     from healthcare_rcm_etl_pipeline_spark.operators import graph
 
-    comp = (
-        graph.connected_components_bounded(pairs, collect_limit=collect_limit)
-        if collect_limit is not None
-        else graph.connected_components(pairs)
-    ).withColumnRenamed("doc", key_col)
+    comp = graph.connected_components(pairs).withColumnRenamed("doc", key_col)
     return leakage_safe_split_from_components(
         df, comp, key_col, fractions, salt, out_col
     )
@@ -1261,7 +1248,6 @@ def best_survivors(
     order_col: str,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    collect_limit: int | None = None,
 ) -> DataFrame:
     """Quality-aware dedup survivor selection: instead of the min-id
     convention, keep the cluster member that MAXIMIZES ``order_col``
@@ -1274,23 +1260,12 @@ def best_survivors(
     set is a fraction of the corpus and broadcasts.
 
     Returns surviving corpus rows (id_col, order_col).
-
-    ``collect_limit``: opt-in bounded-CC fast path, same contract as
-    ``leakage_safe_split`` (driver union-find at or under the bound,
-    distributed fallback above it; identical labels either way).
     """
     from healthcare_rcm_etl_pipeline_spark.operators.graph import (
         connected_components,
-        connected_components_bounded,
     )
 
-    clusters = (
-        connected_components_bounded(
-            pairs, src_col=src_col, dst_col=dst_col, collect_limit=collect_limit
-        )
-        if collect_limit is not None
-        else connected_components(pairs, src_col=src_col, dst_col=dst_col)
-    )
+    clusters = connected_components(pairs, src_col=src_col, dst_col=dst_col)
     return best_survivors_from_components(docs, clusters, id_col, order_col)
 
 

@@ -243,7 +243,6 @@ def resolve_entities(
     pairs: DataFrame,
     id_col: str,
     attrs: dict[str, str],
-    collect_limit: int | None = None,
 ) -> DataFrame:
     """Golden-record construction: match pairs -> entity clusters -> ONE
     survivor row per real-world entity (master-data management / patient
@@ -251,7 +250,7 @@ def resolve_entities(
     pipeline).
 
     Clusters are connected components over the (id_a, id_b) match graph
-    (min-member-id label, O(log diameter) pointer jumping); rows matching
+    (min-member-id label, ``graph.connected_components``); rows matching
     nothing are their own singleton entity, so the output covers EVERY
     input row exactly once. ``attrs`` maps attribute -> survivorship
     policy:
@@ -280,21 +279,11 @@ def resolve_entities(
 
     Returns (entity_id, n_members, *attrs) — entity_id typed like
     ``id_col``.
-
-    ``collect_limit``: opt-in bounded-CC fast path (driver union-find at
-    or under the bound, distributed fallback above; identical labels —
-    the min-label fixed point is unique).
     """
     from healthcare_rcm_etl_pipeline_spark.operators import graph
 
-    comp = (
-        graph.connected_components_bounded(
-            pairs, src_col="id_a", dst_col="id_b", collect_limit=collect_limit
-        )
-        if collect_limit is not None
-        else graph.connected_components(pairs, src_col="id_a", dst_col="id_b")
-    )
-    # no broadcast hint: matched nodes are usually a small fraction of the
-    # corpus but are NOT bounded by construction — AQE picks the strategy
-    # from the runtime size (blocking keeps comp tiny in the normal case).
+    # labels from the driver union-find carry a broadcast hint (they are
+    # bounded by session._DRIVER_ROWS_MAX); above the bound there is none
+    # and AQE picks the strategy from the runtime size.
+    comp = graph.connected_components(pairs, src_col="id_a", dst_col="id_b")
     return golden_from_labels(df, comp, id_col, attrs)

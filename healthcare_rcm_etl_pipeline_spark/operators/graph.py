@@ -3,18 +3,23 @@ pairwise dedup output (ngram_jaccard / minhash / simhash / embedding pairs)
 into dedup CLUSTERS: every doc labeled with the min doc-id of its component,
 so one survivor per cluster can be kept with a single groupBy.
 
-Algorithm: iterative min-label propagation (the MapReduce-CC shape of
-Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
-plus a per-round POINTER-JUMPING compression (label <- label(label), the
-hash-to-min idea of Rastogi et al., "Finding Connected Components in
-Map-Reduce in Logarithmic Rounds", ICDE'13): each node starts labeled with
-itself; every round each node takes the min of its own label and its
-neighbors' labels, then relabels through its label's own label — so the
-propagation distance roughly DOUBLES per round and convergence is
-O(log diameter), not O(diameter). Near-dup clusters are dense and shallow
-(a handful of rounds either way), but a pathological duplicate CHAIN of
-length 1000 now converges in ~10 rounds instead of 1000 (pinned by the
-diameter-stress test).
+Algorithm: the symmetric edge list is checkpointed, then labelled either on
+the driver (a union-find with union-by-min-id, when the edges fit
+``session._DRIVER_ROWS_MAX`` rows) or by iterative min-label propagation in
+Spark (the MapReduce-CC shape of Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC'14) plus a per-round POINTER-JUMPING step
+(label <- label(label), the hash-to-min idea of Rastogi et al., "Finding
+Connected Components in Map-Reduce in Logarithmic Rounds", ICDE'13): each
+node starts labeled with itself; every round each node takes the min of its
+own label and its neighbors' labels, then relabels through its label's own
+label. On a chain the jump roughly doubles the propagation distance per
+round: a duplicate chain of length 1000 converges in ~10 rounds instead of
+1000 (pinned by the diameter-stress test). That is no bound for general
+graphs: on uniform random pair graphs (4 cores) the Spark rounds took
+14-24 s at 65,536 pairs and 88 s and 20 rounds at 524,288 pairs, where a
+second draw did not converge in 20 rounds; the driver union-find took
+1.2-4.9 s and 4.8-5.6 s at those sizes, and 22 s at 2,097,152 pairs
+(4.2M symmetric edge rows, the driver bound).
 
 The module also holds the other graph operators: ``bfs_hops`` (hop-bounded
 reach), ``pagerank_fixed_point`` (integer PageRank) and ``triangle_counts``.
@@ -28,14 +33,13 @@ Scale notes (100 TB):
   before the data does.
 - Edges are held symmetric (a→b and b→a) so propagation needs no
   direction handling; self-loops carry each node's own label.
-- Bounded state runs on the driver: ``connected_components_bounded`` (up to
-  its ``collect_limit`` pairs), ``bfs_hops`` and ``pagerank_fixed_point``
-  (up to ``session._DRIVER_ROWS_MAX`` edge rows) collect their input once
-  through ``session.collect_bounded`` and iterate in Python or NumPy. The
-  row bound is a driver-memory budget below the measured break-even (see
-  ``session``); ``bfs_hops`` and ``pagerank_fixed_point`` count their
-  checkpointed edges first, so edges above it never reach the driver, and
-  keep the distributed loops. Both sides return the same rows and schema.
+- Bounded state runs on the driver: ``connected_components``, ``bfs_hops``
+  and ``pagerank_fixed_point`` checkpoint their edges, count them, and when
+  they fit ``session._DRIVER_ROWS_MAX`` rows collect them once through
+  ``session.collect_bounded`` and iterate in Python or NumPy. The row bound
+  is a driver-memory budget below the measured break-even (see
+  ``session``); edges above it never reach the driver and run the
+  distributed loops. Both sides return the same rows and schema.
 - Every Spark job an operator launches is labelled ``graph.<op>.<step>``,
   nested under the caller's job description.
 """
@@ -44,6 +48,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
@@ -59,9 +64,9 @@ def _step(df: DataFrame, op: str, step: str):
 
 def _driver_edges(df: DataFrame) -> pa.Table | None:
     """``df`` (a checkpoint) on the driver if it fits the driver row bound
-    and holds no NULL id (NULLs never join, so the NumPy rounds could not
+    and holds no NULL id (NULLs never join, so the driver rounds could not
     mirror the distributed ones); else None."""
-    table = collect_bounded(df, count_first=True)
+    table = collect_bounded(df)
     if table is None or any(c.null_count for c in table.columns):
         return None
     return table
@@ -74,22 +79,48 @@ def connected_components(
     max_iters: int = 20,
     out_node: str = "doc",
     out_component: str = "component",
-    compress: bool = True,
 ) -> DataFrame:
     """Label every node reachable through ``pairs`` with the minimum node id
     of its connected component. Only nodes appearing in at least one pair
     are returned (callers union singletons back if they need every row).
 
     Deterministic: min-label is order-independent, so the result does not
-    depend on partitioning or iteration scheduling.
+    depend on partitioning, iteration scheduling or where the labels are
+    computed.
 
-    ``compress`` enables the pointer-jumping step (one extra self-join per
-    round) that makes convergence O(log diameter); disable it only for the
-    convergence-behavior tests — every label is itself a node id of the same
-    component and labels only decrease, so compression never changes the
-    fixed point, just how fast it is reached.
+    The symmetric, distinct edge list is checkpointed first. When it fits
+    ``session._DRIVER_ROWS_MAX`` rows (a count, then one bounded collect)
+    and holds no NULL id, a driver union-find labels it and the labels
+    return as a local relation with a broadcast hint: a ``createDataFrame``
+    relation carries no size statistics, and without the hint a downstream
+    corpus join against it is planned sort-merge. It holds at most the
+    bound's node count (~64 MB of two long columns at the bound). Above
+    the bound the min-label rounds run in Spark on the same checkpoint
+    (``cc_rounds`` times them alone). Both paths return the same rows and
+    schema. Jobs are labelled
+    ``graph.connected_components.<edges|collect|round>``.
     """
-    labels, rounds = _cc_labels(pairs, src_col, dst_col, max_iters, compress)
+    edges = _cc_edges(pairs, src_col, dst_col)
+    with _step(pairs, "connected_components", "collect"):
+        local = _driver_edges(edges)
+    if local is not None:
+        # each undirected edge once: the union-find needs no reverse copy
+        local = local.filter(pc.less_equal(local.column("s"), local.column("t")))
+        labels = _union_find_min_labels(
+            zip(local.column("s").to_pylist(), local.column("t").to_pylist())
+        )
+        id_type = local.column("s").type
+        out = pa.table({
+            out_node: pa.array(list(labels), id_type),
+            out_component: pa.array(list(labels.values()), id_type),
+        })
+        node = edges.schema["s"]
+        schema = StructType([
+            StructField(out_node, node.dataType, node.nullable),
+            StructField(out_component, node.dataType, node.nullable),
+        ])
+        return F.broadcast(pairs.sparkSession.createDataFrame(out, schema))
+    labels, _ = _cc_rounds(pairs, edges, max_iters)
     return labels.select(
         F.col("node").alias(out_node), F.col("label").alias(out_component)
     )
@@ -100,17 +131,16 @@ def cc_rounds(
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iters: int = 20,
-    compress: bool = True,
 ) -> int:
-    """Rounds to convergence (for scale probes / diameter stress tests)."""
-    return _cc_labels(pairs, src_col, dst_col, max_iters, compress)[1]
+    """Rounds the Spark min-label loop takes to converge, whatever the
+    driver row bound (for scale probes / diameter stress tests)."""
+    return _cc_rounds(pairs, _cc_edges(pairs, src_col, dst_col), max_iters)[1]
 
 
-def _cc_labels(
-    pairs: DataFrame, src_col: str, dst_col: str, max_iters: int, compress: bool
-) -> tuple[DataFrame, int]:
+def _cc_edges(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The symmetric, distinct (s, t) edge list of ``pairs``, checkpointed."""
     with _step(pairs, "connected_components", "edges"):
-        edges = (
+        return (
             pairs.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
             .unionByName(
                 pairs.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t"))
@@ -118,6 +148,14 @@ def _cc_labels(
             .distinct()
             .localCheckpoint(eager=True)
         )
+
+
+def _cc_rounds(
+    pairs: DataFrame, edges: DataFrame, max_iters: int
+) -> tuple[DataFrame, int]:
+    """The Spark min-label rounds over the checkpointed ``edges``: the
+    (node, label) fixed point and the rounds it took."""
+    with _step(pairs, "connected_components", "round"):
         labels = (
             edges.select(F.col("s").alias("node"))
             .distinct()
@@ -140,21 +178,20 @@ def _cc_labels(
             ),
             "label",
         )
-        if compress:
-            # pointer jump: relabel through the label's own (new) label.
-            # Every label value is a node id, so the lookup always resolves;
-            # the chase roughly doubles propagation distance per round.
-            lookup = stepped.select(
-                F.col("node").alias("__ln"), F.col("new_label").alias("__ll")
-            )
-            stepped = (
-                stepped.join(lookup, stepped["new_label"] == lookup["__ln"], "left")
-                .select(
-                    "node",
-                    F.coalesce("__ll", "new_label").alias("new_label"),
-                    "label",
-                )
-            )
+        # pointer jump: relabel through the label's own (new) label.
+        # Every label value is a node id, so the lookup always resolves;
+        # on a chain the chase roughly doubles propagation distance per
+        # round. Labels only decrease and stay inside their component, so
+        # the jump never changes the fixed point, only how fast it is
+        # reached.
+        lookup = stepped.select(
+            F.col("node").alias("__ln"), F.col("new_label").alias("__ll")
+        )
+        stepped = stepped.join(
+            lookup, stepped["new_label"] == lookup["__ln"], "left"
+        ).select(
+            "node", F.coalesce("__ll", "new_label").alias("new_label"), "label"
+        )
         with _step(pairs, "connected_components", "round"):
             new_labels = stepped.localCheckpoint(eager=True)
             changed = new_labels.filter(F.col("new_label") != F.col("label")).count()
@@ -162,8 +199,8 @@ def _cc_labels(
         if changed == 0:
             return labels, rounds
     raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds — "
-        "component diameter exceeds 2^max_iters; raise max_iters"
+        f"connected_components did not converge in {max_iters} rounds; "
+        "raise max_iters"
     )
 
 
@@ -193,54 +230,6 @@ def _union_find_min_labels(edges) -> dict:
     return {n: find(n) for n in parent}
 
 
-def connected_components_bounded(
-    pairs: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iters: int = 20,
-    out_node: str = "doc",
-    out_component: str = "component",
-    collect_limit: int | None = 4096,
-) -> DataFrame:
-    """``connected_components`` with a DRIVER-SIDE union-find fast path for
-    SMALL pair sets — the streaming micro-batch case, where the pair set is
-    batch-neighborhood-sized by construction but the distributed iteration
-    still costs ~2 localCheckpoint jobs per round plus a changed-count job
-    (the round-11 per-batch fixed-cost floor: job scheduling, not data,
-    dominates a 12 s batch). Up to ``collect_limit`` edges are collected
-    (one bounded job through ``session.collect_bounded``, labelled
-    ``graph.connected_components_bounded.collect``); if they fit, min-id
-    labels come from a driver union-find and return as a local relation
-    (downstream joins against it broadcast for free). Above the bound,
-    falls back to the distributed iteration untouched. Output ≡
-    ``connected_components`` exactly — the min-label fixed point is unique
-    and order-independent (pinned in tests/test_graph.py)."""
-    if collect_limit is not None:
-        with _step(pairs, "connected_components_bounded", "collect"):
-            rows = collect_bounded(pairs.select(src_col, dst_col), collect_limit)
-        if rows is not None:
-            edges = zip(rows.column(0).to_pylist(), rows.column(1).to_pylist())
-            out = sorted(_union_find_min_labels(edges).items())
-            schema = pairs.select(
-                F.col(src_col).alias(out_node), F.col(src_col).alias(out_component)
-            ).schema
-            # broadcast hint (r15): createDataFrame arrives as an
-            # ExistingRDD with UnknownPartitioning and no stats, so an
-            # unhinted downstream join sort-merge-joins the corpus against
-            # it — the hint is what actually converts those joins to
-            # broadcast. Always safe: the relation is <= 2*collect_limit
-            # rows by construction.
-            return F.broadcast(pairs.sparkSession.createDataFrame(out, schema))
-    return connected_components(
-        pairs,
-        src_col=src_col,
-        dst_col=dst_col,
-        max_iters=max_iters,
-        out_node=out_node,
-        out_component=out_component,
-    )
-
-
 def connected_components_incremental(
     prev_labels: DataFrame,
     new_pairs: DataFrame,
@@ -249,7 +238,6 @@ def connected_components_incremental(
     max_iters: int = 20,
     out_node: str = "doc",
     out_component: str = "component",
-    collect_limit: int | None = None,
 ) -> DataFrame:
     """Merge a NEW batch of pairs into an existing component labeling
     without re-running CC over the full graph — the incremental-ingestion
@@ -274,12 +262,6 @@ def connected_components_incremental(
     Equals the full recompute exactly (min-id labels; pinned in tests).
     Returns (out_node, out_component) for every node in prev_labels or
     new_pairs.
-
-    ``collect_limit``: when set, the merge CC over (affected stars ∪ new
-    pairs) — batch-and-neighborhood-sized in the streaming ingest paths —
-    runs through ``connected_components_bounded``'s driver union-find
-    fast path instead of the iterative jobs (falls back above the bound;
-    output identical either way).
     """
     prev = prev_labels.select(
         F.col(out_node).alias("node"), F.col(out_component).alias("label")
@@ -297,14 +279,13 @@ def connected_components_incremental(
     star = affected.filter(F.col("node") != F.col("label")).select(
         F.col("node").alias(src_col), F.col("label").alias(dst_col)
     )
-    merged = connected_components_bounded(
+    merged = connected_components(
         star.unionByName(new_pairs.select(src_col, dst_col)),
         src_col=src_col,
         dst_col=dst_col,
         max_iters=max_iters,
         out_node=out_node,
         out_component=out_component,
-        collect_limit=collect_limit,
     )
     # an affected single-member component whose node appears in new_pairs
     # is already in merged (via its new edges); one that does NOT appear in

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,6 +33,7 @@ from healthcare_rcm_etl_pipeline_spark.functions.vector import (
     norm,
 )
 from healthcare_rcm_etl_pipeline_spark.operators.buckets import bounded_bucket_collect
+from healthcare_rcm_etl_pipeline_spark.session import collect_bounded, job_description
 
 
 def _splitmix(x: int) -> int:
@@ -1046,27 +1048,27 @@ def ivf_pq_topk(
 
 def _mmr_greedy_driver(
     cand: DataFrame,
-    pairs: DataFrame,
+    local_cand: pa.Table,
+    local_pairs: pa.Table,
     k: int,
     lam_num: int,
     lam_den: int,
     scale: float,
 ) -> DataFrame:
-    """Driver-side exact MMR greedy over the pool-bounded candidate/pair
-    sets (see the bound check in ``mmr_topk``). Mirrors the distributed
-    unrolled loop operation-for-operation: integer fixed-point scores,
-    (score_i, -cid) argmax tie-break, inner-join penalty semantics (a
-    candidate with no pair row to any selected member is excluded from
-    that round, exactly like the distributed ``cand ⋈ pen`` inner join),
-    and the single exact double division for the reported score."""
-    from pyspark.sql import types as T
-
+    """Driver-side exact MMR greedy over the collected pool-bounded
+    candidate/pair tables (see the bound check in ``mmr_topk``). Mirrors
+    the distributed unrolled loop operation-for-operation: integer
+    fixed-point scores, (score_i, -cid) argmax tie-break, inner-join
+    penalty semantics (a candidate with no pair row to any selected member
+    is excluded from that round, exactly like the distributed
+    ``cand ⋈ pen`` inner join), and the single exact double division for
+    the reported score."""
     rel: dict = {}
-    for r in cand.collect():
-        rel.setdefault(r[0], []).append((r[1], r[2]))
+    for qid, cid, ri in zip(*(c.to_pylist() for c in local_cand.columns)):
+        rel.setdefault(qid, []).append((cid, ri))
     sim: dict = {}
-    for r in pairs.collect():
-        sim.setdefault((r[0], r[1]), {})[r[2]] = r[3]
+    for qid, a, b, si in zip(*(c.to_pylist() for c in local_pairs.columns)):
+        sim.setdefault((qid, a), {})[b] = si
     lam_pen = lam_den - lam_num
     rows = []
     for qid, cands in rel.items():
@@ -1094,10 +1096,13 @@ def _mmr_greedy_driver(
             selected.append(cid)
             del remaining[cid]
             rows.append((qid, pos, cid, score_i / scale))
+    # the unrolled loop's schema: its pos is a literal, its neighbor and
+    # score come out of a max_by and a division
+    qid = cand.schema["query_id"]
     schema = T.StructType(
         [
-            T.StructField("query_id", cand.schema["query_id"].dataType, True),
-            T.StructField("pos", T.IntegerType(), True),
+            T.StructField("query_id", qid.dataType, qid.nullable),
+            T.StructField("pos", T.IntegerType(), False),
             T.StructField("neighbor_id", cand.schema["cid"].dataType, True),
             T.StructField("score", T.DoubleType(), True),
         ]
@@ -1115,7 +1120,6 @@ def mmr_topk(
     lam_num: int = 7,
     lam_den: int = 10,
     candidates: DataFrame | None = None,
-    max_driver_rows: int | None = 200_000,
 ) -> DataFrame:
     """Maximal Marginal Relevance diverse top-k (Carbonell & Goldstein,
     SIGIR'98): greedily pick k results maximizing
@@ -1132,7 +1136,12 @@ def mmr_topk(
     argmax; no driver-side per-query loop, no collect. The greedy
     recursion is inherently sequential in k, but k is a user constant
     (5-20) while the query set is the scale axis — and that axis is fully
-    parallel.
+    parallel. When the checkpointed candidate and pair sets each fit
+    ``session._DRIVER_ROWS_MAX`` rows (a count, then one collect each), an
+    integer Python greedy on the driver replaces the k stages with the
+    same arithmetic and tie-breaks (bit-equal output). Jobs are labelled
+    ``similarity.mmr_topk.<candidates|pairs|collect>``, nested under the
+    caller's job description.
 
     Cost shape at 100 TB: the only corpus-sized work is the relevance
     scan — ``brute_force_topk`` by default, or ANY ANN path passed via
@@ -1195,71 +1204,62 @@ def mmr_topk(
     # interpreted array fold per pair (dot) instead of three —
     # norm(a)*norm(b) is the same IEEE expression on the same values, so
     # sim_i is bit-identical to the cosine() form.
-    cw = (
-        cand.join(vecs, "cid")
-        .withColumn("__n", norm(F.col("__v")))
-        .localCheckpoint(eager=True)
-    )
-    pa = cw.select(
+    spark = corpus.sparkSession
+    with job_description(spark, "similarity.mmr_topk.candidates", nest=True):
+        cw = (
+            cand.join(vecs, "cid")
+            .withColumn("__n", norm(F.col("__v")))
+            .localCheckpoint(eager=True)
+        )
+    side_a = cw.select(
         "query_id",
         F.col("cid").alias("a"),
         F.col("__v").alias("__va"),
         F.col("__n").alias("__na"),
     )
-    pb = cw.select(
+    side_b = cw.select(
         "query_id",
         F.col("cid").alias("b"),
         F.col("__v").alias("__vb"),
         F.col("__n").alias("__nb"),
     )
-    pairs = (
-        pa.join(pb, "query_id")
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            "query_id",
-            "a",
-            "b",
-            F.round(
+    with job_description(spark, "similarity.mmr_topk.pairs", nest=True):
+        pairs = (
+            side_a.join(side_b, "query_id")
+            .filter(F.col("a") != F.col("b"))
+            .select(
+                "query_id",
+                "a",
+                "b",
                 F.round(
-                    dot("__va", "__vb")
-                    / F.nullif(F.col("__na") * F.col("__nb"), F.lit(0.0)),
-                    6,
+                    F.round(
+                        dot("__va", "__vb")
+                        / F.nullif(F.col("__na") * F.col("__nb"), F.lit(0.0)),
+                        6,
+                    )
+                    * 1e6,
+                    0,
                 )
-                * 1e6,
-                0,
+                .cast("bigint")
+                .alias("sim_i"),
             )
-            .cast("bigint")
-            .alias("sim_i"),
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
     cand = cw.select("query_id", "cid", "rel_i")
     scale = float(lam_den * 1_000_000)
 
-    # Bounded driver-side greedy (same contract as graph.py's bounded-CC
-    # union-find): everything past the relevance scan is pool-bounded —
-    # pool candidates and pool^2 pair sims per query, all exact BIGINTs
-    # already pinned by the localCheckpoints above. When that bounded set
-    # fits under ``max_driver_rows``, one collect + a pure-integer Python
-    # greedy replaces k unrolled join/agg stages (~3 Spark jobs each):
-    # identical fixed-point arithmetic, identical (score, -id) tie-break,
-    # identical exact division for the reported score — bit-equal output,
-    # pinned by tests/test_dedup_similarity.py against the distributed
-    # path. Above the bound (or with max_driver_rows=None) the fully
-    # distributed unrolled loop below runs unchanged — at 100 TB the
-    # query-set axis is unbounded and the driver path is never taken.
-    if max_driver_rows is not None:
-        # Bounded probe (the bounded-CC limit(n+1) idiom): count at most
-        # max_driver_rows+1 rows per side instead of two full-scan jobs
-        # over the pool^2 pair set — on the large path, where the driver
-        # greedy is never taken, the probe cost is capped at the bound.
-        # Under the cap limit().count() is exact, so the decision (and the
-        # driver≡distributed bit-equality it gates) is unchanged.
-        cap = max_driver_rows + 1
-        n_pairs = pairs.limit(cap).count()
-        n_cand = cand.limit(cap).count()
-        if n_pairs + n_cand <= max_driver_rows:
-            return _mmr_greedy_driver(cand, pairs, k, lam_num, lam_den, scale)
+    # Everything past the relevance scan is pool-bounded (pool candidates
+    # and pool^2 pair sims per query, exact BIGINTs pinned by the
+    # checkpoints above), so under the driver row bound the greedy runs on
+    # the driver; at 100 TB the query-set axis is unbounded and the
+    # unrolled loop below runs.
+    with job_description(spark, "similarity.mmr_topk.collect", nest=True):
+        local_cand = collect_bounded(cand)
+        local_pairs = collect_bounded(pairs) if local_cand is not None else None
+    if local_pairs is not None:
+        return _mmr_greedy_driver(
+            cand, local_cand, local_pairs, k, lam_num, lam_den, scale
+        )
 
     def _argmax(scored: DataFrame, pos: int) -> DataFrame:
         return (

@@ -852,8 +852,9 @@ _CLUSTERS_ORACLE = f"""
 
 @query("dedup_clusters", _CLUSTERS_ORACLE)
 def dedup_clusters_q(spark, sf_dir):
-    """Near-dup pairs -> dedup CLUSTERS via iterative min-label connected
-    components (operators.graph): every doc in a pair labeled with its
+    """Near-dup pairs -> dedup CLUSTERS via min-label connected components
+    (operators.graph: a driver union-find under the driver row bound, the
+    Spark rounds above it): every doc in a pair labeled with its
     component's min doc_id, ready for keep-one-per-cluster. Oracle =
     DuckDB recursive-CTE transitive closure over the SAME exact-Jaccard
     pair set — full independent recomputation of both the pairs and the
@@ -1473,23 +1474,20 @@ def dedup_survivors_q(spark, sf_dir):
     corpus a training run would consume. Losers (cluster members that are
     not their component's label) are anti-joined out.
 
-    r15: components come from ``connected_components_bounded`` — the
-    adaptive small-graph fast path the streaming ingest already uses
-    (driver union-find under a 4096-edge bound, distributed iteration
-    above it; the min-label fixed point is unique, so output is identical
-    either way). A near-dup pair graph is a small fraction of the corpus
-    by construction; when it is bounded-small, the labels return as a
-    LOCAL relation, the corpus-side anti-join broadcasts, and the ~8
-    iteration/checkpoint jobs disappear. The probe costs one bounded
-    limit-collect; the full-graph fallback is exercised by
-    ``dedup_clusters``."""
+    A near-dup pair graph is a small fraction of the corpus by
+    construction: when its edges fit ``session._DRIVER_ROWS_MAX`` rows,
+    ``connected_components`` labels them on the driver and returns a
+    broadcast-hinted LOCAL relation, so the corpus-side anti-join
+    broadcasts and the iteration jobs disappear (the min-label fixed point
+    is unique, so output is identical above the bound, where the rounds
+    run in Spark)."""
     from healthcare_rcm_etl_pipeline_spark.operators import graph
 
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(
         d, "text", "doc_id", n=3, threshold=0.5, max_df=20
     )
-    clusters = graph.connected_components_bounded(pairs, collect_limit=4096)
+    clusters = graph.connected_components(pairs)
     losers = clusters.filter(F.col("doc") != F.col("component")).select(
         F.col("doc").alias("doc_id")
     )
@@ -1554,11 +1552,8 @@ def split_leakage_safe_q(spark, sf_dir):
     pairs = dd.ngram_jaccard_pairs(
         d, "text", "doc_id", n=3, threshold=0.5, max_df=20
     )
-    # collect_limit: bounded-CC fast path (r15) — identical assignment, see
-    # dedup_keep_survivors
     return dd.leakage_safe_split(
-        d, pairs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1},
-        collect_limit=4096,
+        d, pairs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
     )
 
 
@@ -4703,9 +4698,7 @@ def dedup_keep_best_q(spark, sf_dir):
     pairs = dedup.ngram_jaccard_pairs(
         d, "text", "doc_id", n=3, threshold=0.5, max_df=20
     )
-    # collect_limit: bounded-CC fast path (r15) — identical labels, see
-    # dedup_keep_survivors
-    return dedup.best_survivors(d, pairs, "doc_id", "n_chars", collect_limit=4096)
+    return dedup.best_survivors(d, pairs, "doc_id", "n_chars")
 
 
 _EDIT1_ORACLE = """
@@ -4782,14 +4775,11 @@ def entity_resolution_golden_q(spark, sf_dir):
     pairs = fuzzy.edit1_pairs(
         c, "c_name", "c_custkey", agree_cols=["c_nationkey", "c_mktsegment"]
     )
-    # collect_limit: bounded-CC fast path (r15) — identical labels, see
-    # dedup_keep_survivors
     return fuzzy.resolve_entities(
         c,
         pairs,
         "c_custkey",
         {"c_name": "anchor", "c_mktsegment": "anchor", "c_acctbal": "max"},
-        collect_limit=4096,
     )
 
 
@@ -4811,13 +4801,8 @@ def dedup_clusters_incremental_q(spark, sf_dir):
     is_new_b = F.col("doc_b") % 4 == 0
     base_pairs = pairs.filter(~is_new_a & ~is_new_b)
     new_pairs = pairs.filter(is_new_a | is_new_b)
-    # bounded CC on both legs (r15): same fixed point, driver union-find
-    # under the 4096-edge bound with the distributed iteration as fallback
-    # — see dedup_keep_survivors for the rationale
-    prev = graph.connected_components_bounded(base_pairs, collect_limit=4096)
-    return graph.connected_components_incremental(
-        prev, new_pairs, collect_limit=4096
-    )
+    prev = graph.connected_components(base_pairs)
+    return graph.connected_components_incremental(prev, new_pairs)
 
 
 @query(
@@ -6336,11 +6321,10 @@ def dedup_keep_priority_q(spark, sf_dir):
     pairs = dedup.ngram_jaccard_pairs(
         d, "text", "doc_id", n=3, threshold=0.5, max_df=20
     )
-    # bounded CC (r15): identical min-label fixed point, driver union-find
-    # under the 4096-edge bound — labels arrive as a local relation, so the
-    # left join below broadcasts instead of shuffling the corpus (see
-    # dedup_keep_survivors for the full rationale)
-    labels = graph.connected_components_bounded(pairs, collect_limit=4096)
+    # labels arrive as a broadcast-hinted local relation under the driver
+    # row bound, so the left join below broadcasts instead of shuffling the
+    # corpus (see dedup_keep_survivors)
+    labels = graph.connected_components(pairs)
     labeled = (
         d.select(
             "doc_id",

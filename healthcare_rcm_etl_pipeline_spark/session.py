@@ -6,9 +6,11 @@ engine does is partitioning-aware and never collects large data to the driver.
 
 Three session-scoped helpers sit next to the factory: ``eager_checkpoint``
 (the one lineage barrier that honours the session's checkpoint dir),
-``collect_bounded`` (the one bounded collect to the driver, under the one
-driver row bound ``_DRIVER_ROWS_MAX``) and ``job_description`` (a labelled
-block of Spark jobs).
+``collect_bounded`` (the one bounded collect of a checkpoint to the driver,
+under the one driver row bound ``_DRIVER_ROWS_MAX``; every driver-side path
+in the package goes through it: connected components, BFS, PageRank, BPE
+and the MMR greedy) and ``job_description`` (a labelled block of Spark
+jobs).
 """
 
 from __future__ import annotations
@@ -21,15 +23,20 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 # Rows an operator may hold on the driver to run its rounds there instead of
-# in a distributed loop (graph.pagerank_fixed_point, graph.bfs_hops,
-# corpus.bpe_train). Measured on a 4-core host, driver vs Spark rounds:
-# PageRank and BPE are 2-4x faster on the driver at every size tried (up to
-# 4.2M edges and 1.6M words); BFS is ~20% faster at 2.1M symmetric edge rows
-# and even at 8.4M. So the bound is a driver-memory budget that stays below
-# BFS's break-even: the costliest driver state measured is ~220 B of Python
-# heap per BPE word and ~130 B per PageRank edge, and 1 << 22 rows keeps one
-# operator under ~1 GB. Read at call time, so tests can patch it (0 forces
-# the Spark rounds).
+# in a distributed loop (graph.connected_components, graph.bfs_hops,
+# graph.pagerank_fixed_point, corpus.bpe_train, similarity.mmr_topk).
+# Measured on a 4-core host, driver vs Spark rounds: PageRank and BPE are
+# 2-4x faster on the driver at every size tried (up to 4.2M edges and 1.6M
+# words); BFS is ~20% faster at 2.1M symmetric edge rows and even at 8.4M;
+# CC on uniform random pair graphs took 1.2-4.9 vs 14-24 s at 131k symmetric
+# edge rows, 5 s at 1M rows (where the Spark rounds took 88 s or did not
+# converge in 20) and 22 s at 4.2M; the MMR greedy (pool 20) took 5.5 vs
+# 10 s at 0.4M candidate+pair rows and 18 vs 19-20 s at 1.6M (even). So the
+# bound is a driver-memory budget that stays below BFS's break-even: the
+# costliest driver state measured is ~220 B of Python heap per BPE word,
+# ~190 B per MMR candidate/pair row, ~130 B per PageRank edge and ~77 B per
+# CC edge row, and 1 << 22 rows keeps one operator under ~1 GB. Read at
+# call time, so tests can patch it (0 forces the Spark rounds).
 _DRIVER_ROWS_MAX = 1 << 22
 
 
@@ -82,20 +89,15 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     return df.checkpoint(eager=True) if has_dir else df.localCheckpoint(eager=True)
 
 
-def collect_bounded(
-    df: DataFrame, limit: int | None = None, *, count_first: bool = False
-) -> pa.Table | None:
-    """``df`` as an Arrow table on the driver if it has at most ``limit``
-    rows (default: ``_DRIVER_ROWS_MAX`` at call time), else None. One
-    bounded job: ``limit + 1`` rows are fetched, never the whole relation.
-    ``count_first`` is for a checkpointed ``df``, whose count replays no
-    lineage: one count job comes first, and a ``df`` above the limit is
-    never moved to the driver."""
-    limit = _DRIVER_ROWS_MAX if limit is None else limit
-    if count_first and df.count() > limit:
+def collect_bounded(df: DataFrame) -> pa.Table | None:
+    """``df`` as an Arrow table on the driver if it has at most
+    ``_DRIVER_ROWS_MAX`` rows (read at call time), else None. ``df`` is a
+    checkpoint, whose count replays no lineage: one count job comes first,
+    so a ``df`` above the bound is never moved to the driver, then one
+    collect job."""
+    if df.count() > _DRIVER_ROWS_MAX:
         return None
-    table = df.limit(limit + 1).toArrow()
-    return table if table.num_rows <= limit else None
+    return df.toArrow()
 
 
 @contextlib.contextmanager

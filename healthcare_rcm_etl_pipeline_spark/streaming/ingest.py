@@ -154,7 +154,9 @@ def _range_sorted(df: DataFrame, *cols: str) -> DataFrame:
 # the index scan (the point-lookup device); above it, the join-based
 # prune_bands_to_probe inside minhash_lsh_pairs_incremental takes over —
 # a 4k-literal predicate is where driver-side plan cost and per-row-group
-# filter evaluation start to cost more than the scan they save.
+# filter evaluation start to cost more than the scan they save. It bounds
+# literal IN predicates only; state the operators hold on the driver is
+# bounded by session._DRIVER_ROWS_MAX.
 _PROBE_LITERAL_MAX = 4096
 
 
@@ -492,20 +494,16 @@ def make_dedup_ingest_batch_fn(
         batch_bands = dedup.minhash_band_table(
             batch, text_col, id_col, **lsh
         ).localCheckpoint(eager=True)
-        # pin the pair set: the bounded-CC probe below collects from it,
-        # and on fallback the distributed CC would otherwise re-execute
-        # the whole LSH lineage a second time
+        # pin the pair set: connected_components reads it once per edge
+        # direction, which would otherwise re-execute the LSH lineage twice
         pairs = dedup.minhash_lsh_pairs(
             batch, text_col, id_col, **lsh,
             verify_threshold=verify_threshold, prebuilt_bands=batch_bands,
         ).localCheckpoint(eager=True)
-        # bounded CC: a micro-batch's pair set is batch-sized, so the
-        # driver union-find fast path replaces ~6 iteration jobs with one
-        # bounded collect (distributed fallback above the bound)
+        # a micro-batch's pair set is batch-sized, so its components come
+        # from the driver union-find, not the Spark rounds
         losers = (
-            graph.connected_components_bounded(
-                pairs, collect_limit=_PROBE_LITERAL_MAX
-            )
+            graph.connected_components(pairs)
             .filter(F.col("doc") != F.col("component"))
             .select(F.col("doc").alias(id_col))
         )
@@ -1036,9 +1034,7 @@ def _merge_label_state(
     values as graph nodes, so the merge keeps only rows for docs known to
     exist — state members of the affected components plus this batch's
     pair nodes (a LIVE label node always has its own state row, so
-    normal runs lose nothing). collect_limit: the merge CC input is
-    batch-and-neighborhood-sized — the bounded driver union-find cuts the
-    per-batch job floor, distributed fallback above the bound."""
+    normal runs lose nothing)."""
     state_path = f"{base}/{name}"
     twin_path = f"{base}/{name}_by_label"
     nodes = (
@@ -1058,14 +1054,10 @@ def _merge_label_state(
         ):
             twin = spark.read.parquet(twin_path).filter(F.col("epoch") <= last)
         prev_affected = _affected_component_slice(state, nodes, twin)
-        delta = graph.connected_components_incremental(
-            prev_affected, pairs, collect_limit=_PROBE_LITERAL_MAX
-        )
+        delta = graph.connected_components_incremental(prev_affected, pairs)
         known = prev_affected.select("doc").unionByName(nodes).distinct()
         return delta.join(F.broadcast(known), "doc", "left_semi")
-    return graph.connected_components_bounded(
-        pairs, collect_limit=_PROBE_LITERAL_MAX
-    )
+    return graph.connected_components(pairs)
 
 
 def _epoch_dir_set(spark: SparkSession, root: str) -> set[int]:

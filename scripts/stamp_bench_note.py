@@ -36,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from closeout import REPO, render_bench_stamp  # noqa: E402
 
 _STAMP_RE = re.compile(
-    r"Stamp: BENCH_DETAIL\.json round \d+ — [^\n]*\n[^\n]*env_shifted (?:true|false)\."
+    r"Stamp: BENCH_DETAIL\.json round \d+ — [^\n]*\n[^\n]*env_shifted (?:true|false|n/a)\."
 )
 
 

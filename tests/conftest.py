@@ -44,9 +44,10 @@ def sf_dir() -> str:
 
 @pytest.fixture
 def forced_distributed(monkeypatch):
-    """Force the iterative operators (pagerank_fixed_point, bfs_hops,
-    bpe_train) onto their distributed rounds: a zero driver row bound. Without
-    this fixture, test-sized inputs take the driver rounds."""
+    """Force the operators with a driver path (connected_components,
+    pagerank_fixed_point, bfs_hops, bpe_train, mmr_topk) onto their
+    distributed rounds: a zero driver row bound. Without this fixture,
+    test-sized inputs take the driver rounds."""
     from healthcare_rcm_etl_pipeline_spark import session
 
     monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", 0)
@@ -62,3 +63,23 @@ def rounds(request, monkeypatch):
 
         monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", 0)
     return request.param
+
+
+@pytest.fixture
+def both_rounds(monkeypatch):
+    """Run a check on each side of the driver row bound inside ONE test id
+    (the ``rounds`` pair for tests whose ids stay unparametrized):
+    ``both_rounds(fn)`` calls ``fn()`` with the bound kept (test-sized
+    inputs take the driver rounds) and with the bound at 0 (the distributed
+    rounds), asserts the two results are equal and returns the result."""
+    from healthcare_rcm_etl_pipeline_spark import session
+
+    def run(fn):
+        driver = fn()
+        with monkeypatch.context() as m:
+            m.setattr(session, "_DRIVER_ROWS_MAX", 0)
+            distributed = fn()
+        assert driver == distributed
+        return driver
+
+    return run

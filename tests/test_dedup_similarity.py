@@ -430,47 +430,29 @@ def test_filtered_ann_beats_postfilter_when_head_crowded(spark):
     assert {r["neighbor_id"] for r in got} == {7, 8, 9, 10, 11}
 
 
-def test_mmr_driver_greedy_equals_distributed(spark):
-    """The bounded driver-side MMR greedy (max_driver_rows) must be
-    bit-equal to the distributed unrolled loop — same device contract as
-    graph.py's bounded-CC union-find. Covers the brute-force candidate
-    path, the external-candidate (IVF) path, and a query with fewer
-    candidates than k."""
+def test_mmr_driver_greedy_equals_distributed(spark, both_rounds):
+    """The driver-side MMR greedy (candidate and pair sets under the driver
+    row bound) must be bit-equal to the distributed unrolled loop (bound
+    0). Covers the brute-force candidate path, the external-candidate
+    (IVF) path, and a query with fewer candidates than k."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") % 40 == 0)
-    a = sorted(tuple(r) for r in similarity.mmr_topk(emb, q, k=5, pool=12).collect())
-    b = sorted(
-        tuple(r)
-        for r in similarity.mmr_topk(
-            emb, q, k=5, pool=12, max_driver_rows=None
-        ).collect()
-    )
-    assert a == b and len(a) > 0
+
+    def topk(corpus, queries, **kw):
+        return sorted(
+            tuple(r) for r in similarity.mmr_topk(corpus, queries, **kw).collect()
+        )
+
+    a = both_rounds(lambda: topk(emb, q, k=5, pool=12))
+    assert len(a) > 0
     cents = similarity.ivf_fit(emb, n_cells=4, iters=0)
     ca = similarity.ivf_topk(emb, q, cents, k=12, n_probe=4)
-    cb = similarity.ivf_topk(emb, q, cents, k=12, n_probe=4)
-    a2 = sorted(
-        tuple(r)
-        for r in similarity.mmr_topk(emb, q, k=5, pool=12, candidates=ca).collect()
-    )
-    b2 = sorted(
-        tuple(r)
-        for r in similarity.mmr_topk(
-            emb, q, k=5, pool=12, candidates=cb, max_driver_rows=None
-        ).collect()
-    )
-    assert a2 == b2
+    both_rounds(lambda: topk(emb, q, k=5, pool=12, candidates=ca))
     # fewer candidates than k: a 3-vector corpus, k=5 — both paths stop early
     tiny = emb.limit(3)
     tq = tiny.limit(1)
-    a3 = sorted(tuple(r) for r in similarity.mmr_topk(tiny, tq, k=5, pool=10).collect())
-    b3 = sorted(
-        tuple(r)
-        for r in similarity.mmr_topk(
-            tiny, tq, k=5, pool=10, max_driver_rows=None
-        ).collect()
-    )
-    assert a3 == b3 and 0 < len(a3) < 5
+    a3 = both_rounds(lambda: topk(tiny, tq, k=5, pool=10))
+    assert 0 < len(a3) < 5
 
 
 def _drifted_cur(emb):

@@ -57,36 +57,41 @@ class TestEdit1Pairs:
 
 
 class TestBestSurvivors:
-    def test_longest_member_kept_ties_to_lower_id(self, spark):
+    def test_longest_member_kept_ties_to_lower_id(self, spark, both_rounds):
         docs = spark.createDataFrame(
             [(1, 5), (2, 9), (3, 9), (4, 7)], "doc_id long, n_chars long"
         )
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3)], "doc_a long, doc_b long"
         )
-        got = sorted(
+        got = both_rounds(lambda: sorted(
             r["doc_id"]
             for r in dedup.best_survivors(docs, pairs, "doc_id", "n_chars").collect()
-        )
+        ))
         # cluster {1,2,3}: max n_chars 9 tie between 2 and 3 -> keep 2;
         # unpaired doc 4 always survives
         assert got == [2, 4]
 
-    def test_min_id_convention_differs_when_best_is_not_min(self, spark):
+    def test_min_id_convention_differs_when_best_is_not_min(self, spark, both_rounds):
+        from healthcare_rcm_etl_pipeline_spark.operators import graph
+
         d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         pairs = dedup.ngram_jaccard_pairs(
             d, "text", "doc_id", n=3, threshold=0.5, max_df=20
         )
-        best = {
-            r["doc_id"]
-            for r in dedup.best_survivors(d, pairs, "doc_id", "n_chars").collect()
-        }
+
+        def run():
+            best = {
+                r["doc_id"]
+                for r in dedup.best_survivors(d, pairs, "doc_id", "n_chars").collect()
+            }
+            clusters = graph.connected_components(pairs)
+            losers = clusters.filter(F.col("doc") != F.col("component")).count()
+            return best, losers
+
+        best, losers_minid = both_rounds(run)
         # same cardinality as the min-id policy (one survivor per cluster),
         # whatever the picks
-        from healthcare_rcm_etl_pipeline_spark.operators import graph
-
-        clusters = graph.connected_components(pairs)
-        losers_minid = clusters.filter(F.col("doc") != F.col("component")).count()
         assert len(best) == d.count() - losers_minid
 
 
@@ -143,28 +148,32 @@ class TestResolveEntities:
             "id long, name string, region string, bal double",
         )
 
-    def test_golden_records(self, spark):
+    def test_golden_records(self, spark, both_rounds):
         df = self._df(spark)
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3)], "id_a long, id_b long"
         )
-        got = {
+        got = both_rounds(lambda: {
             r["entity_id"]: r
             for r in fuzzy.resolve_entities(
                 df, pairs, "id", {"name": "anchor", "region": "anchor", "bal": "max"}
             ).collect()
-        }
+        })
         assert set(got) == {1, 9}
         assert got[1]["n_members"] == 3
         assert got[1]["name"] == "acme corp"  # anchor = min-id member
         assert got[1]["bal"] == 75.0          # max survivorship
         assert got[9]["n_members"] == 1 and got[9]["bal"] == 10.0
 
-    def test_covers_every_row_once(self, spark):
+    def test_covers_every_row_once(self, spark, both_rounds):
         df = self._df(spark)
         pairs = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
-        out = fuzzy.resolve_entities(df, pairs, "id", {"bal": "min"})
-        assert out.agg(F.sum("n_members")).first()[0] == df.count()
+        n = both_rounds(
+            lambda: fuzzy.resolve_entities(df, pairs, "id", {"bal": "min"})
+            .agg(F.sum("n_members"))
+            .first()[0]
+        )
+        assert n == df.count()
 
     def test_unknown_policy_raises(self, spark):
         df = self._df(spark)

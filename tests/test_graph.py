@@ -1,9 +1,12 @@
-"""Connected components: min-label propagation vs hand-computed components."""
+"""Connected components: the driver union-find and the Spark min-label
+rounds vs hand-computed components. Every CC check runs on both sides of the
+driver row bound through the ``both_rounds`` fixture."""
 
 from __future__ import annotations
 
 import pytest
 
+from healthcare_rcm_etl_pipeline_spark import session
 from healthcare_rcm_etl_pipeline_spark.operators.graph import connected_components
 
 
@@ -15,59 +18,54 @@ def _cc(spark, edges, **kw):
     }
 
 
-def test_two_components_and_chain(spark):
+def test_two_components_and_chain(spark, both_rounds):
     # component {1,2,3} as a chain, component {10,11} as an edge
-    got = _cc(spark, [(2, 1), (2, 3), (10, 11)])
+    got = both_rounds(lambda: _cc(spark, [(2, 1), (2, 3), (10, 11)]))
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_cycle_and_isolated_pair(spark):
-    got = _cc(spark, [(5, 6), (6, 7), (7, 5), (100, 42)])
+def test_cycle_and_isolated_pair(spark, both_rounds):
+    got = both_rounds(lambda: _cc(spark, [(5, 6), (6, 7), (7, 5), (100, 42)]))
     assert got == {5: 5, 6: 5, 7: 5, 42: 42, 100: 42}
 
 
-def test_long_path_converges_and_label_is_min(spark):
+def test_long_path_converges_and_label_is_min(spark, both_rounds):
     n = 12
-    got = _cc(spark, [(i, i + 1) for i in range(1, n)])
+    got = both_rounds(lambda: _cc(spark, [(i, i + 1) for i in range(1, n)]))
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
-def test_non_convergence_raises(spark):
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _cc(spark, [(i, i + 1) for i in range(1, 10)], max_iters=2)
+def test_non_convergence_raises(spark, monkeypatch):
+    """``max_iters`` bounds the Spark rounds only: they raise once it runs
+    out, while the driver union-find, which has no rounds, labels the same
+    chain."""
+    chain = [(i, i + 1) for i in range(1, 10)]
+    assert _cc(spark, chain, max_iters=2) == {i: 1 for i in range(1, 11)}
+    monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", 0)
+    with pytest.raises(
+        RuntimeError, match=r"did not converge in 2 rounds; raise max_iters$"
+    ):
+        _cc(spark, chain, max_iters=2)
 
 
-def test_empty_pairs(spark):
-    assert _cc(spark, []) == {}
+def test_empty_pairs(spark, both_rounds):
+    assert both_rounds(lambda: _cc(spark, [])) == {}
 
 
-def test_diameter_stress_chain_converges_in_log_rounds(spark):
+def test_diameter_stress_chain_converges_in_log_rounds(spark, both_rounds):
     """A 1000-link duplicate chain (diameter 1000) — the worst shape for
     plain min-label propagation, which would need ~1000 rounds. Pointer
-    jumping must converge within the default 20 (2^20 >> 1000) and the
-    labels must still be the component min."""
+    jumping must converge within the default 20 and the labels must still
+    be the component min."""
     from healthcare_rcm_etl_pipeline_spark.operators.graph import cc_rounds
 
     n = 1000
     edges = [(i, i + 1) for i in range(1, n)]
-    got = _cc(spark, edges)
+    got = both_rounds(lambda: _cc(spark, edges))
     assert got == {i: 1 for i in range(1, n + 1)}
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     rounds = cc_rounds(df)
     assert rounds <= 14  # ~log2(1000) + detection overhead
-
-
-def test_compression_off_needs_diameter_rounds(spark):
-    """Control for the stress test: without compression the same chain
-    needs ~diameter rounds — pinning that the log-round behavior really
-    comes from the pointer-jumping step."""
-    from healthcare_rcm_etl_pipeline_spark.operators.graph import cc_rounds
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 25)], "doc_a long, doc_b long"
-    )
-    assert cc_rounds(edges, max_iters=40, compress=False) >= 23
-    assert cc_rounds(edges, max_iters=40, compress=True) <= 8
 
 
 class TestIncrementalCC:
@@ -77,7 +75,7 @@ class TestIncrementalCC:
         pairs = spark.createDataFrame(pairs_rows, "doc_a long, doc_b long")
         return graph.connected_components(pairs)
 
-    def test_equals_full_recompute_on_random_merges(self, spark):
+    def test_equals_full_recompute_on_random_merges(self, spark, both_rounds):
         import random
 
         from healthcare_rcm_etl_pipeline_spark.operators import graph
@@ -91,39 +89,40 @@ class TestIncrementalCC:
         all_pairs = [(min(a, b), max(a, b)) for a, b in all_pairs]
         base = [(a, b) for a, b in all_pairs if a % 3 != 0 and b % 3 != 0]
         new = [(a, b) for a, b in all_pairs if a % 3 == 0 or b % 3 == 0]
-        prev = self._cc(spark, base)
-        inc = graph.connected_components_incremental(
-            prev, spark.createDataFrame(new, "doc_a long, doc_b long")
-        )
-        full = self._cc(spark, all_pairs)
-        assert sorted(map(tuple, inc.collect())) == sorted(map(tuple, full.collect()))
+        def run():
+            prev = self._cc(spark, base)
+            inc = graph.connected_components_incremental(
+                prev, spark.createDataFrame(new, "doc_a long, doc_b long")
+            )
+            full = self._cc(spark, all_pairs)
+            return sorted(map(tuple, inc.collect())), sorted(map(tuple, full.collect()))
 
-    def test_untouched_components_pass_through(self, spark):
+        inc, full = both_rounds(run)
+        assert inc == full
+
+    def _merged(self, spark, old_pairs, new_pairs):
+        """{doc: component} after merging ``new_pairs`` into the labels of
+        ``old_pairs``."""
         from healthcare_rcm_etl_pipeline_spark.operators import graph
 
-        prev = self._cc(spark, [(1, 2), (2, 3), (10, 11)])
-        new = spark.createDataFrame([(10, 20)], "doc_a long, doc_b long")
-        got = {r["doc"]: r["component"] for r in
-               graph.connected_components_incremental(prev, new).collect()}
+        prev = self._cc(spark, old_pairs)
+        new = spark.createDataFrame(new_pairs, "doc_a long, doc_b long")
+        return {r["doc"]: r["component"] for r in
+                graph.connected_components_incremental(prev, new).collect()}
+
+    def test_untouched_components_pass_through(self, spark, both_rounds):
+        got = both_rounds(
+            lambda: self._merged(spark, [(1, 2), (2, 3), (10, 11)], [(10, 20)])
+        )
         # {1,2,3} untouched; {10,11} absorbs 20
         assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 10}
 
-    def test_new_min_id_relabels_old_cluster(self, spark):
-        from healthcare_rcm_etl_pipeline_spark.operators import graph
-
-        prev = self._cc(spark, [(5, 6)])
-        new = spark.createDataFrame([(1, 6)], "doc_a long, doc_b long")
-        got = {r["doc"]: r["component"] for r in
-               graph.connected_components_incremental(prev, new).collect()}
+    def test_new_min_id_relabels_old_cluster(self, spark, both_rounds):
+        got = both_rounds(lambda: self._merged(spark, [(5, 6)], [(1, 6)]))
         assert got == {1: 1, 5: 1, 6: 1}
 
-    def test_bridge_merges_two_old_components(self, spark):
-        from healthcare_rcm_etl_pipeline_spark.operators import graph
-
-        prev = self._cc(spark, [(1, 2), (7, 8)])
-        new = spark.createDataFrame([(2, 7)], "doc_a long, doc_b long")
-        got = {r["doc"]: r["component"] for r in
-               graph.connected_components_incremental(prev, new).collect()}
+    def test_bridge_merges_two_old_components(self, spark, both_rounds):
+        got = both_rounds(lambda: self._merged(spark, [(1, 2), (7, 8)], [(2, 7)]))
         assert got == {1: 1, 2: 1, 7: 1, 8: 1}
 
 
@@ -186,35 +185,41 @@ def test_bfs_isolated_seeds_and_early_empty_frontier(spark, monkeypatch):
     assert driver.simpleString() == "struct<node:bigint,hops:int>"
 
 
-def test_bounded_cc_equals_distributed_both_branches(spark):
-    """connected_components_bounded (round-12 per-batch job-floor cut):
-    the driver union-find fast path and the collect_limit=0 distributed
-    fallback must both equal connected_components exactly — the min-label
-    fixed point is unique, so the device is a cost choice, never a
-    semantics choice."""
-    from healthcare_rcm_etl_pipeline_spark.operators.graph import (
-        connected_components_bounded,
-    )
+def test_bounded_cc_equals_distributed_both_branches(spark, both_rounds):
+    """connected_components' driver union-find and its Spark rounds (bound
+    0) must return the same rows and schema — the min-label fixed point is
+    unique, so the bound is a cost choice, never a semantics choice. The
+    schema must match for nullable and non-nullable ids alike (downstream
+    unions require identical field names/types)."""
+    from pyspark.sql import functions as F
+
+    def labelled(df):
+        out = connected_components(df)
+        return sorted(map(tuple, out.collect())), out.schema
 
     edges = [(2, 1), (2, 3), (10, 11), (7, 5), (5, 6), (6, 7), (20, 21), (21, 22),
              (22, 23), (23, 20), (40, 41)]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    want = sorted(map(tuple, connected_components(df).collect()))
-    fast = sorted(map(tuple, connected_components_bounded(df).collect()))
-    fallback = sorted(
-        map(tuple, connected_components_bounded(df, collect_limit=0).collect())
+    rows, schema = both_rounds(lambda: labelled(df))
+    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 5: 5, 6: 5, 7: 5, 20: 20, 21: 20,
+            22: 20, 23: 20, 40: 40, 41: 40}
+    assert rows == sorted(want.items())
+    assert schema.simpleString() == "struct<doc:bigint,component:bigint>"
+
+    not_null = spark.range(9).select(
+        F.col("id").alias("doc_a"), F.least("id", F.lit(2)).alias("doc_b")
     )
-    assert fast == want == fallback
-    # schema parity: downstream unions require identical field names/types
-    assert connected_components_bounded(df).schema == connected_components(df).schema
+    rows, schema = both_rounds(lambda: labelled(not_null))
+    assert rows == [(0, 0), (1, 1)] + [(i, 2) for i in range(2, 9)]
+    assert not any(f.nullable for f in schema.fields)
 
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert connected_components_bounded(empty).collect() == []
+    assert both_rounds(lambda: connected_components(empty).collect()) == []
 
 
 def test_bounded_cc_union_find_matches_bfs_reference():
     """Property check of the driver union-find inside
-    connected_components_bounded (no Spark in the loop): against an
+    connected_components (no Spark in the loop): against an
     independent BFS labeling over random edge lists, every node's label
     must be its component's MINIMUM id — the contract the distributed
     min-label iteration guarantees, and the reason the fast path can
@@ -264,21 +269,15 @@ def test_bounded_cc_union_find_matches_bfs_reference():
 
 
 def test_bounded_cc_fast_path_labels_broadcast_downstream(spark):
-    """r15: the union-find fast path's local relation must carry a
-    broadcast hint — createDataFrame arrives as an ExistingRDD with no
-    stats, and without the hint a corpus-sized join against 50 label rows
-    was planned sort-merge (the r15 before-plans show it). Pin the join
-    strategy, not just the values."""
-    from pyspark.sql import functions as F
-
-    from healthcare_rcm_etl_pipeline_spark.operators.graph import (
-        connected_components_bounded,
-    )
-
+    """The union-find's local relation (pairs under the driver row bound)
+    must carry a broadcast hint — createDataFrame arrives as an
+    ExistingRDD with no stats, and without the hint a corpus-sized join
+    against 50 label rows was planned sort-merge. Pin the join strategy,
+    not just the values."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
     )
-    labels = connected_components_bounded(pairs, collect_limit=4096)
+    labels = connected_components(pairs)
     corpus = spark.range(0, 1000).withColumnRenamed("id", "doc")
     joined = corpus.join(labels, "doc", "left")
     plan = joined._jdf.queryExecution().executedPlan().toString()
