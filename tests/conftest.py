@@ -42,6 +42,34 @@ def sf_dir() -> str:
     return "/root/testdata/sf0.001"
 
 
+@pytest.fixture(scope="session")
+def hospital_sources(tmp_path_factory):
+    """The hospital source tree the pipeline tests read, as ``(root, gen)``.
+
+    The tree resolves in the pipeline's own order (``$HRCM_REFERENCE_ROOT``,
+    then the reference checkout); ``gen`` is None for such a tree, whose
+    row counts are the real seed's (BASELINE.md). Where neither exists, the
+    tree is written by ``rcmbench.gen.HospitalSources(seed=17, scale=1.0)``
+    (the reference's 10,000 patients, 20,000 fact rows and 55 providers,
+    with the FIXTURES.md section A properties; the seed the oracle sweep
+    stamps hq1-hq11 on) and ``gen`` is that generator, whose rows give the
+    expected counts. For the rest of the session ``$HRCM_REFERENCE_ROOT``
+    points at the tree, so ``run_pipeline``'s default lookup reads it; the
+    variable is restored at teardown."""
+    from healthcare_rcm_etl_pipeline_spark.plans.pipeline import _reference_root
+
+    root, gen = _reference_root(None), None
+    if not os.path.isdir(os.path.join(root, "SQL", "hospital_dbs")):
+        from rcmbench.gen import HospitalSources
+
+        root = str(tmp_path_factory.mktemp("hospital_sources"))
+        gen = HospitalSources(seed=17, scale=1.0)
+        gen.write(root)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("HRCM_REFERENCE_ROOT", root)
+        yield root, gen
+
+
 @pytest.fixture
 def forced_distributed(monkeypatch):
     """Force the operators with a driver path (connected_components,

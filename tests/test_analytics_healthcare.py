@@ -35,7 +35,10 @@ def _rowset(cols, rows):
 
 
 @pytest.fixture(scope="module")
-def star_env(spark):
+def star_env(spark, hospital_sources):
+    """The first night's star on the ``hospital_sources`` tree (the reference
+    seed, else the generated one), staged, registered as Spark views and
+    read by DuckDB from the same staged files."""
     d = tempfile.mkdtemp(prefix="hrcm_analytics_")
     star = run_pipeline(spark, staging_dir=d, run_date="2025-08-03")
     # r14: a STAGED pipeline run attaches the staging-time stats itself

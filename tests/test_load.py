@@ -13,7 +13,9 @@ from healthcare_rcm_etl_pipeline_spark.plans.pipeline import run_pipeline
 
 
 @pytest.fixture(scope="module")
-def warehouse(spark):
+def warehouse(spark, hospital_sources):
+    """The first night's star on the ``hospital_sources`` tree (the reference
+    seed, else the generated one), loaded into a temporary warehouse."""
     d = tempfile.mkdtemp(prefix="hrcm_wh_")
     star = run_pipeline(spark, run_date="2025-08-03")
     results = wload.load_warehouse(spark, star, d)

@@ -22,7 +22,7 @@ def staging(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_two_runs_promote_versions(spark, staging):
+def test_two_runs_promote_versions(spark, staging, hospital_sources):
     run_pipeline(spark, staging_dir=staging, run_date="2025-08-03")
     v1 = sinks.read_versioned(spark, f"{staging}/dim_patients")
     assert v1.count() == 10000

@@ -40,7 +40,7 @@ def test_topk_plans_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_no_cartesian_anywhere(spark, sf_dir):
+def test_no_cartesian_anywhere(spark, sf_dir, hospital_sources):
     for name in QUERIES:
         plan = _plan(spark, name, sf_dir)
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
@@ -53,7 +53,7 @@ def _logical_nodes(node):
         yield from _logical_nodes(it.next())
 
 
-def test_no_unpartitioned_window_anywhere(spark, sf_dir):
+def test_no_unpartitioned_window_anywhere(spark, sf_dir, hospital_sources):
     """Sweep every registered query: a Window with an empty partitionSpec
     funnels the ENTIRE relation through one task (Exchange SinglePartition
     + single sort) — invisible at sf0.1, fatal at 100 TB. Checked on the
@@ -70,7 +70,7 @@ def test_no_unpartitioned_window_anywhere(spark, sf_dir):
     assert not offenders, f"unpartitioned Window in: {offenders}"
 
 
-def test_no_python_row_udf_anywhere(spark, sf_dir):
+def test_no_python_row_udf_anywhere(spark, sf_dir, hospital_sources):
     """Zero-UDF policy sweep: no registered query may plan a Python
     evaluation node. BatchEvalPython (row-at-a-time, ~10-100x slower than
     codegen) is banned outright; ArrowEvalPython (pandas UDF) is banned

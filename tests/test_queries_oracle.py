@@ -51,7 +51,9 @@ def duck():
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(name, spark, duck):
+def test_query_matches_oracle(name, spark, duck, hospital_sources):
+    # hospital_sources: the hq rows stage their star from run_pipeline's
+    # default source lookup (queries._hq_star)
     sdf = QUERIES[name](spark, SF_DIR)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
