@@ -1127,7 +1127,8 @@ def chunk_dedup_rewrite(
     by the ``dedup_chunks_rewrite_hashed`` oracle — text-mode SQL
     verbatim). ``hash_expr`` overrides the hash column for such tests.
 
-    MEASURED (scripts/probe_scale_r10.py, SCALE.md round-10): hash mode
+    MEASURED (scripts/probe_scale_r10.py, last present at 2cde84b;
+    SCALE.md round-10): hash mode
     does NOT reduce total shuffle at probed chunk widths — the recheck
     moves the chunk text through extra occurrence-sized joins, and at
     100x sf0.1 it shuffles 2.09x the bytes and takes 2.5x the wall time

@@ -3,11 +3,12 @@ pairwise dedup output (ngram_jaccard / minhash / simhash / embedding pairs)
 into dedup CLUSTERS: every doc labeled with the min doc-id of its component,
 so one survivor per cluster can be kept with a single groupBy.
 
-Algorithm: the symmetric edge list is checkpointed, then labelled either on
-the driver (a union-find with union-by-min-id, when the edges fit
-``session._DRIVER_ROWS_MAX`` rows) or by iterative min-label propagation in
-Spark (the MapReduce-CC shape of Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) plus a per-round POINTER-JUMPING step
+Algorithm: the raw pairs are checkpointed, then labelled either on the
+driver (a union-find with union-by-min-id, when they fit
+``session._DRIVER_ROWS_MAX`` rows) or by min-label propagation over their
+symmetric edges in Spark (the MapReduce-CC shape of Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14) plus a per-round
+POINTER-JUMPING step
 (label <- label(label), the hash-to-min idea of Rastogi et al., "Finding
 Connected Components in Map-Reduce in Logarithmic Rounds", ICDE'13): each
 node starts labeled with itself; every round each node takes the min of its
@@ -18,8 +19,7 @@ round: a duplicate chain of length 1000 converges in ~10 rounds instead of
 graphs: on uniform random pair graphs (4 cores) the Spark rounds took
 14-24 s at 65,536 pairs and 88 s and 20 rounds at 524,288 pairs, where a
 second draw did not converge in 20 rounds; the driver union-find took
-1.2-4.9 s and 4.8-5.6 s at those sizes, and 22 s at 2,097,152 pairs
-(4.2M symmetric edge rows, the driver bound).
+1.2-4.9 s and 4.8-5.6 s at those sizes, and 22 s at 2,097,152 pairs.
 
 The module also holds the other graph operators: ``bfs_hops`` (hop-bounded
 reach), ``pagerank_fixed_point`` (integer PageRank) and ``triangle_counts``.
@@ -31,11 +31,11 @@ Scale notes (100 TB):
 - ``localCheckpoint`` truncates lineage every distributed round: without it
   the plan doubles per iteration and Catalyst analysis time explodes long
   before the data does.
-- Edges are held symmetric (a→b and b→a) so propagation needs no
-  direction handling; self-loops carry each node's own label.
+- The Spark rounds hold edges symmetric (a→b and b→a) so propagation
+  needs no direction handling; self-loops carry each node's own label.
 - Bounded state runs on the driver: ``connected_components``, ``bfs_hops``
-  and ``pagerank_fixed_point`` checkpoint their edges, count them, and when
-  they fit ``session._DRIVER_ROWS_MAX`` rows collect them once through
+  and ``pagerank_fixed_point`` checkpoint their raw edges, count them, and
+  when they fit ``session._DRIVER_ROWS_MAX`` rows collect them once through
   ``session.collect_bounded`` and iterate in Python or NumPy. The row bound
   is a driver-memory budget below the measured break-even (see
   ``session``); edges above it never reach the driver and run the
@@ -48,7 +48,6 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
@@ -88,39 +87,37 @@ def connected_components(
     depend on partitioning, iteration scheduling or where the labels are
     computed.
 
-    The symmetric, distinct edge list is checkpointed first. When it fits
+    The raw pairs are checkpointed first (no shuffle). When they fit
     ``session._DRIVER_ROWS_MAX`` rows (a count, then one bounded collect)
-    and holds no NULL id, a driver union-find labels it and the labels
+    and hold no NULL id, a driver union-find labels them and the labels
     return as a local relation with a broadcast hint: a ``createDataFrame``
     relation carries no size statistics, and without the hint a downstream
-    corpus join against it is planned sort-merge. It holds at most the
-    bound's node count (~64 MB of two long columns at the bound). Above
-    the bound the min-label rounds run in Spark on the same checkpoint
+    corpus join against it is planned sort-merge. It holds at most twice
+    the bound's node count (~128 MB of two long columns). Above the bound
+    the min-label rounds run in Spark on the checkpoint's symmetric edges
     (``cc_rounds`` times them alone). Both paths return the same rows and
     schema. Jobs are labelled
     ``graph.connected_components.<edges|collect|round>``.
     """
-    edges = _cc_edges(pairs, src_col, dst_col)
+    raw = _raw_edges(pairs, src_col, dst_col, "connected_components")
     with _step(pairs, "connected_components", "collect"):
-        local = _driver_edges(edges)
+        local = _driver_edges(raw)
     if local is not None:
-        # each undirected edge once: the union-find needs no reverse copy
-        local = local.filter(pc.less_equal(local.column("s"), local.column("t")))
         labels = _union_find_min_labels(
             zip(local.column("s").to_pylist(), local.column("t").to_pylist())
         )
         id_type = local.column("s").type
         out = pa.table({
-            out_node: pa.array(list(labels), id_type),
-            out_component: pa.array(list(labels.values()), id_type),
+            out_node: pa.array(labels.keys(), id_type),
+            out_component: pa.array(labels.values(), id_type),
         })
-        node = edges.schema["s"]
+        node = _symmetric(raw).schema["s"]
         schema = StructType([
             StructField(out_node, node.dataType, node.nullable),
             StructField(out_component, node.dataType, node.nullable),
         ])
         return F.broadcast(pairs.sparkSession.createDataFrame(out, schema))
-    labels, _ = _cc_rounds(pairs, edges, max_iters)
+    labels, _ = _cc_rounds(pairs, _symmetric(raw), max_iters)
     return labels.select(
         F.col("node").alias(out_node), F.col("label").alias(out_component)
     )
@@ -134,27 +131,36 @@ def cc_rounds(
 ) -> int:
     """Rounds the Spark min-label loop takes to converge, whatever the
     driver row bound (for scale probes / diameter stress tests)."""
-    return _cc_rounds(pairs, _cc_edges(pairs, src_col, dst_col), max_iters)[1]
+    return _cc_rounds(pairs, _symmetric(pairs, src_col, dst_col), max_iters)[1]
 
 
-def _cc_edges(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """The symmetric, distinct (s, t) edge list of ``pairs``, checkpointed."""
-    with _step(pairs, "connected_components", "edges"):
-        return (
-            pairs.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
-            .unionByName(
-                pairs.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+def _raw_edges(df: DataFrame, src_col: str, dst_col: str, op: str) -> DataFrame:
+    """The ``(s, t)`` pairs of ``df``, both ids cast to their common type,
+    checkpointed: a narrow projection, no shuffle."""
+    id_type = df.select(src_col).union(df.select(dst_col)).schema[0].dataType
+    with _step(df, op, "edges"):
+        return df.select(
+            F.col(src_col).cast(id_type).alias("s"),
+            F.col(dst_col).cast(id_type).alias("t"),
+        ).localCheckpoint(eager=True)
+
+
+def _symmetric(df: DataFrame, src_col: str = "s", dst_col: str = "t") -> DataFrame:
+    """The symmetric, distinct ``(s, t)`` edges of ``df``'s pairs, lazily."""
+    return (
+        df.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
+        .unionByName(df.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t")))
+        .distinct()
+    )
 
 
 def _cc_rounds(
     pairs: DataFrame, edges: DataFrame, max_iters: int
 ) -> tuple[DataFrame, int]:
-    """The Spark min-label rounds over the checkpointed ``edges``: the
-    (node, label) fixed point and the rounds it took."""
+    """The Spark min-label rounds over the symmetric ``edges``, checkpointed
+    first: the (node, label) fixed point and the rounds it took."""
+    with _step(pairs, "connected_components", "edges"):
+        edges = edges.localCheckpoint(eager=True)
     with _step(pairs, "connected_components", "round"):
         labels = (
             edges.select(F.col("s").alias("node"))
@@ -227,7 +233,9 @@ def _union_find_min_labels(edges) -> dict:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    return {n: find(n) for n in parent}
+    for n in parent:  # in place: a resolved entry stays on its root
+        parent[n] = find(n)
+    return parent
 
 
 def connected_components_incremental(
@@ -317,18 +325,18 @@ def bfs_hops(
     hop numbers are structural (min distance), independent of
     partitioning and of where the rounds run.
 
-    The symmetric edge list and the distinct seeds are checkpointed first.
-    When both fit ``session._DRIVER_ROWS_MAX`` rows (a count, then one
-    bounded collect each), the rounds run on the driver in NumPy set
-    operations per hop and the result returns as a local relation: a
-    Spark round costs ~2 jobs whatever the frontier size. Above the bound
-    the rounds run in Spark: each joins the frontier against the edges and
+    The raw edges (no shuffle) and the distinct seeds are checkpointed
+    first. When both fit ``session._DRIVER_ROWS_MAX`` rows (a count, then
+    one bounded collect each), the rounds run on the driver in NumPy set
+    operations per hop over both directions of each edge, and the result
+    returns as a local relation: a Spark round costs ~2 jobs whatever the
+    frontier size. Above the bound the rounds run in Spark on the
+    checkpoint's symmetric edges: each joins the frontier against them and
     anti-joins the visited set, so round cost is O(edges touching the
-    frontier) — on a 100 TB graph the work tracks the reached
-    neighborhood — with a ``localCheckpoint`` per round (iterative plans
-    otherwise double in size per round). Both paths return the same rows
-    and schema. Jobs are labelled
-    ``graph.bfs_hops.<edges|seeds|collect|hop>``.
+    frontier) — on a 100 TB graph the work tracks the reached neighborhood
+    — with a ``localCheckpoint`` per round (iterative plans otherwise
+    double in size per round). Both paths return the same rows and schema.
+    Jobs are labelled ``graph.bfs_hops.<edges|seeds|collect|hop>``.
 
     ``seeds``: one-column DataFrame of node ids. Returns (out_node,
     out_hops) for every node within ``max_hops`` of any seed — ALL
@@ -338,15 +346,7 @@ def bfs_hops(
     edges-semi-join is applied only to the EXPANSION frontier, where it
     is a pure optimization: isolated seeds cannot discover neighbors.
     """
-    with _step(edges, "bfs_hops", "edges"):
-        e = (
-            edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
-            .unionByName(
-                edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("t"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    raw = _raw_edges(edges, src_col, dst_col, "bfs_hops")
     with _step(edges, "bfs_hops", "seeds"):
         all_seeds = (
             seeds.select(F.col(seeds.columns[0]).alias("node"))
@@ -354,17 +354,19 @@ def bfs_hops(
             .localCheckpoint(eager=True)
         )
     with _step(edges, "bfs_hops", "collect"):
-        local_e = _driver_edges(e)
+        local_e = _driver_edges(raw)
         local_seeds = _driver_edges(all_seeds) if local_e is not None else None
     if local_seeds is not None:
+        s, t = (local_e.column(c).to_numpy(zero_copy_only=False) for c in "st")
         levels = _bfs_levels(
-            local_e.column("s").to_numpy(zero_copy_only=False),
-            local_e.column("t").to_numpy(zero_copy_only=False),
+            np.concatenate([s, t]),
+            np.concatenate([t, s]),
             local_seeds.column("node").to_numpy(zero_copy_only=False),
             max_hops,
         )
         # the distributed result's node type: seeds unioned with edge ends
-        node = all_seeds.unionByName(e.select(F.col("t").alias("node"))).schema["node"]
+        ends = _symmetric(raw).select(F.col("t").alias("node"))
+        node = all_seeds.unionByName(ends).schema["node"]
         out = pa.table({
             out_node: np.concatenate(levels),
             out_hops: np.repeat(np.arange(len(levels), dtype=np.int32),
@@ -375,6 +377,8 @@ def bfs_hops(
             StructField(out_hops, IntegerType(), False),
         ])
         return edges.sparkSession.createDataFrame(out, schema)
+    with _step(edges, "bfs_hops", "edges"):
+        e = _symmetric(raw).localCheckpoint(eager=True)
     # The expansion frontier's seed semi-join folds into hop 1's job, and
     # ``visited`` is NEVER separately checkpointed: it is a union of
     # already-checkpointed frontiers (all_seeds + nxt_1..h), so its lineage
@@ -405,10 +409,10 @@ def bfs_hops(
 
 
 def _bfs_levels(s: np.ndarray, t: np.ndarray, seeds: np.ndarray, max_hops: int):
-    """The driver rounds of ``bfs_hops`` over the symmetric edge arrays
-    ``s -> t``: the list of per-hop node arrays, hop 0 = the distinct
-    ``seeds``. The same frontier rule as the Spark rounds: only seeds with
-    an edge expand, and an empty frontier ends the search."""
+    """The driver rounds of ``bfs_hops`` over the edge arrays ``s -> t``
+    (both directions of each edge, repeats allowed): the per-hop node
+    arrays, hop 0 = the distinct ``seeds``. Same frontier rule as the Spark
+    rounds: only seeds with an edge expand; an empty frontier ends it."""
     levels = [seeds]
     visited = seeds
     frontier = seeds[np.isin(seeds, s)]

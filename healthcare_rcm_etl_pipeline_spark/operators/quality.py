@@ -485,7 +485,8 @@ def windowed_embedding_centroid_drift(
     Streaming state is the open windows only — watermark-evicted.
 
     Dim posture (r14 verdict missing #2, measured in
-    ``scripts/probe_wdrift_dim_r15.py``): the unrolled aggregate's
+    ``scripts/probe_wdrift_dim_r15.py``, last present at 2cde84b): the
+    unrolled aggregate's
     ANALYSIS cost grows superlinearly with ``dim`` (one-time per query:
     6 s at dim 64 → 14 s at 256 → 42 s at 768 → 70 s at 1536 on this
     host) while the per-batch RUN cost grows gently (3.9 s → 6.8 s per
@@ -506,8 +507,8 @@ def windowed_embedding_centroid_drift(
         raise ValueError(
             f"dim={dim} outside the measured envelope (1..{_WDRIFT_MAX_DIM}): "
             "the unrolled streaming aggregation's analysis cost grows "
-            "superlinearly with dim (probe_wdrift_dim_r15). For wider "
-            "embeddings use the batch twin embedding_centroid_drift on "
+            "superlinearly with dim (scripts/probe_wdrift_dim_r15.py, last present at 2cde84b). "
+            "For wider embeddings use the batch twin embedding_centroid_drift on "
             "snapshots, or monitor a fixed slice of the vector."
         )
 

@@ -155,7 +155,6 @@ def point_in_time_join(
     eff_col: str = "effective_date",
     exp_col: str = "expiry_date",
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Join each fact row to the SCD2 dimension version valid AT the fact's
     timestamp: ``dim.eff <= fact.ts`` and (``dim.exp`` is null OR
@@ -167,17 +166,13 @@ def point_in_time_join(
     Scale: the version intervals of one key never overlap, so each fact
     matches at most one dim row — output cardinality == facts (inner drops
     facts outside all versions, e.g. before the key first appeared).
-    A dimension is bounded (patients/customers), facts are not; default is
-    a broadcast of the dim so the fact table never shuffles. With
-    ``broadcast_dim=False`` Catalyst plans an equi-join on ``key`` with the
-    range predicates as join residual — one keyed shuffle per side, still
-    no range explosion.
+    A dimension is bounded (patients/customers), facts are not, so the dim
+    is broadcast and the fact table never shuffles.
     """
     d = dim.select(
         F.col(key), *[F.col(c) for c in dim.columns if c != key]
     ).alias("__d")
     f = facts.alias("__f")
-    dside = F.broadcast(d) if broadcast_dim else d
     ts = F.col(f"__f.{ts_col}")
     cond = (
         (F.col(f"__f.{key}") == F.col(f"__d.{key}"))
@@ -185,6 +180,6 @@ def point_in_time_join(
         & (F.col(f"__d.{exp_col}").isNull() | (ts <= F.col(f"__d.{exp_col}")))
     )
     dim_attrs = [c for c in dim.columns if c != key]
-    return f.join(dside, cond, how).select(
+    return f.join(F.broadcast(d), cond, how).select(
         "__f.*", *[F.col(f"__d.{c}").alias(c) for c in dim_attrs]
     )

@@ -218,7 +218,8 @@ SQL: dict[str, str] = {
 # COMPRESSED parquet bytes: the r12 x100 probe's 1M-row patient dimension
 # estimated 1.1 MB after pruning (dictionary encoding hides ~30x), slid
 # under every static threshold, and the default broadcast plan ran 2.9x
-# slower than sort-merge (scripts/probe_scale_r12.py, SCALE.md r12/r13).
+# slower than sort-merge (scripts/probe_scale_r12.py, last present at 2cde84b;
+# SCALE.md r12/r13).
 _BROADCAST_MAX_DIM_ROWS = 100_000
 
 

@@ -40,14 +40,14 @@ from healthcare_rcm_etl_pipeline_spark.operators import quality
 from healthcare_rcm_etl_pipeline_spark.operators.keys import dense_sk
 
 
-def clean_patients(patients: DataFrame, run_date: str, strict_gender: bool = True) -> DataFrame:
-    """transform.py:18-31. strict_gender=True replicates the reference's
-    letters-only recode (full words -> 'Unknown', the observed output)."""
+def clean_patients(patients: DataFrame, run_date: str) -> DataFrame:
+    """transform.py:18-31, with the reference's letters-only gender recode
+    (full words -> 'Unknown', the observed output)."""
     out = patients
     for c in ["FirstName", "LastName", "MiddleName"]:
         out = out.withColumn(c, fill_unknown(title_case(F.col(c))))
     return (
-        out.withColumn("Gender", recode_gender(F.col("Gender"), strict=strict_gender))
+        out.withColumn("Gender", recode_gender(F.col("Gender"), strict=True))
         .withColumn("PhoneNumber", F.coalesce(clean_phone(F.col("PhoneNumber")), F.lit("")))
         .withColumn("DOB", F.col("DOB").cast("date"))
         .withColumn("age", age_years(F.col("DOB"), F.to_date(F.lit(run_date))))

@@ -7020,7 +7020,8 @@ def dedup_chunks_rewrite_hashed_q(spark, sf_dir):
     The oracle is therefore the text-mode SQL verbatim: an oracle-green
     run IS the end-to-end equality proof on real data, the same device as
     ``dedup_containment_capped``. NOTE the measured trade
-    (scripts/probe_scale_r10.py, SCALE.md round-10): the recheck's extra
+    (scripts/probe_scale_r10.py, last present at 2cde84b; SCALE.md
+    round-10): the recheck's extra
     occurrence-sized text joins make this mode shuffle ~2x the bytes of
     text mode at probed widths — text mode stays the default; this
     registration proves the variant's correctness end-to-end, not its

@@ -27,16 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 # graph.pagerank_fixed_point, corpus.bpe_train, similarity.mmr_topk).
 # Measured on a 4-core host, driver vs Spark rounds: PageRank and BPE are
 # 2-4x faster on the driver at every size tried (up to 4.2M edges and 1.6M
-# words); BFS is ~20% faster at 2.1M symmetric edge rows and even at 8.4M;
-# CC on uniform random pair graphs took 1.2-4.9 vs 14-24 s at 131k symmetric
-# edge rows, 5 s at 1M rows (where the Spark rounds took 88 s or did not
-# converge in 20) and 22 s at 4.2M; the MMR greedy (pool 20) took 5.5 vs
+# words); BFS (300 seeds, 3 hops, out-degree 8) took 4.6-7.2 vs 18-23 s at
+# 4.2M raw edges; CC on uniform random pair graphs took 1.2-4.9 vs 14-24 s
+# at 65k pairs, 5 s at 0.5M (where the Spark rounds took 88 s or did not
+# converge in 20) and 21 s at 4.2M; the MMR greedy (pool 20) took 5.5 vs
 # 10 s at 0.4M candidate+pair rows and 18 vs 19-20 s at 1.6M (even). So the
-# bound is a driver-memory budget that stays below BFS's break-even: the
-# costliest driver state measured is ~220 B of Python heap per BPE word,
-# ~190 B per MMR candidate/pair row, ~130 B per PageRank edge and ~77 B per
-# CC edge row, and 1 << 22 rows keeps one operator under ~1 GB. Read at
-# call time, so tests can patch it (0 forces the Spark rounds).
+# bound is a driver-memory budget, below every break-even measured: ~220 B
+# of Python heap per BPE word, ~200 B of driver RSS per CC raw pair, ~190 B
+# per MMR row and ~130 B per PageRank edge keep one operator under ~1 GB at
+# 1 << 22 rows. Read at call time (0 forces the Spark rounds).
 _DRIVER_ROWS_MAX = 1 << 22
 
 

@@ -149,7 +149,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return load_events(spark, sf_dir)
     return normalize_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-

@@ -877,7 +877,8 @@ def _affected_component_slice(
 
 
 # Twin-path gate — recalibrated from MEASUREMENT past the gate (r14,
-# scripts/probe_twin_gate_r14.py; the r13 8-GiB constant was an
+# scripts/probe_twin_gate_r14.py, last present at 2cde84b; the r13 8-GiB
+# constant was an
 # extrapolated crossover that the r14 probe showed incomplete): the two
 # paths grow on DIFFERENT axes. The semi-join's cost tracks state BYTES
 # (it decompresses the whole accumulated state every batch: 3.5 s at

@@ -158,40 +158,59 @@ def test_pagerank_fixed_point_distributed_rounds(spark, forced_distributed):
     test_pagerank_fixed_point_deterministic_and_sane(spark)
 
 
-def test_bfs_isolated_seeds_and_early_empty_frontier(spark, monkeypatch):
+def test_bfs_isolated_seeds_and_early_empty_frontier(spark, both_rounds, monkeypatch):
     """bfs_hops on both sides of the driver row bound: every distinct seed
     sits at hop 0, an isolated seed included; only seeds with an edge
     expand; the search ends at the first empty frontier (hop 4 of 6), and
     the node type is the seed/edge union's (int seeds, long edges -> long).
-    Both paths return the same rows and schema."""
-    from healthcare_rcm_etl_pipeline_spark import session
-    from healthcare_rcm_etl_pipeline_spark.operators.graph import bfs_hops
+    Both paths return the same rows and schema, also for raw edges with
+    duplicate pairs, reversed pairs, self-loops and mixed int/long id
+    columns; an edge with a NULL id never reaches the driver rounds."""
+    from healthcare_rcm_etl_pipeline_spark.operators import graph
 
-    edges = spark.createDataFrame(
-        [(1, 2), (3, 2), (3, 4), (10, 11)], "src long, dst long"
-    )
+    def hops(edges, seeds, max_hops):
+        df = graph.bfs_hops(edges, seeds, max_hops=max_hops)
+        rows = sorted(map(tuple, df.collect()), key=lambda r: (r[0] is None, r))
+        return rows, df.schema
+
+    cases = [
+        ([(1, 2), (3, 2), (3, 4), (10, 11)], "src long, dst long",
+         [(1, 0), (2, 1), (3, 2), (4, 3), (10, 0), (11, 1), (99, 0)]),
+    ] + [
+        ([(1, 2), (1, 2), (2, 1), (2, 2), (3, 2), (3, 3), (4, 3), (4, 3),
+          (10, 11), (11, 10), (99, 99)], ddl,
+         [(1, 0), (2, 1), (3, 2), (4, 3), (10, 0), (11, 1), (99, 0)])
+        for ddl in ("src long, dst long", "src int, dst long", "src long, dst int")
+    ]
     seeds = spark.createDataFrame([(1,), (1,), (99,), (10,)], "node int")
-    want = {1: 0, 99: 0, 10: 0, 2: 1, 11: 1, 3: 2, 4: 3}
-    out = {}
-    for bound in (session._DRIVER_ROWS_MAX, 0):
-        monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", bound)
-        df = bfs_hops(edges, seeds, max_hops=6)
-        rows = df.collect()
-        assert len(rows) == len(want)
-        assert {r.node: r.hops for r in rows} == want
-        out[bound] = df.schema
-    driver, distributed = out.values()
-    assert driver == distributed
-    assert driver.simpleString() == "struct<node:bigint,hops:int>"
+    for edges, ddl, want in cases:
+        rows, schema = both_rounds(lambda: hops(spark.createDataFrame(edges, ddl), seeds, 6))
+        assert rows == want, ddl
+        assert schema.simpleString() == "struct<node:bigint,hops:int>", ddl
+
+    def no_driver(*args):
+        raise AssertionError("a NULL-id edge reached the driver rounds")
+
+    monkeypatch.setattr(graph, "_bfs_levels", no_driver)
+    null_edges = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (2, 3)], "src long, dst long"
+    )
+    rows, _ = both_rounds(lambda: hops(null_edges, seeds, 3))
+    # the NULL node is reported once per hop after it is first reached (the
+    # visited anti-join never matches NULL): a known defect, see the FOUND
+    # line on bfs_hops in CHANGES.md
+    assert rows == [(1, 0), (2, 1), (3, 2), (10, 0), (99, 0), (None, 2), (None, 3)]
 
 
-def test_bounded_cc_equals_distributed_both_branches(spark, both_rounds):
+def test_bounded_cc_equals_distributed_both_branches(spark, both_rounds, monkeypatch):
     """connected_components' driver union-find and its Spark rounds (bound
     0) must return the same rows and schema — the min-label fixed point is
     unique, so the bound is a cost choice, never a semantics choice. The
     schema must match for nullable and non-nullable ids alike (downstream
     unions require identical field names/types)."""
     from pyspark.sql import functions as F
+
+    from healthcare_rcm_etl_pipeline_spark.operators import graph
 
     def labelled(df):
         out = connected_components(df)
@@ -215,6 +234,31 @@ def test_bounded_cc_equals_distributed_both_branches(spark, both_rounds):
 
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
     assert both_rounds(lambda: connected_components(empty).collect()) == []
+
+    # the union-find takes the raw pairs as they are: duplicate pairs,
+    # reversed pairs and self-loops, with mixed int/long id columns
+    shapes = [(1, 2), (1, 2), (2, 1), (3, 3), (4, 5), (5, 4), (5, 5), (2, 6),
+              (6, 2), (6, 6)]
+    for ddl in ("doc_a long, doc_b long", "doc_a int, doc_b long",
+                "doc_a long, doc_b int"):
+        rows, schema = both_rounds(lambda: labelled(spark.createDataFrame(shapes, ddl)))
+        assert rows == [(1, 1), (2, 1), (3, 3), (4, 4), (5, 4), (6, 1)], ddl
+        assert schema.simpleString() == "struct<doc:bigint,component:bigint>"
+
+    # a NULL-id pair never reaches the driver union-find, whatever the bound
+    def no_driver(edges):
+        raise AssertionError("NULL-id pairs reached the driver union-find")
+
+    monkeypatch.setattr(graph, "_union_find_min_labels", no_driver)
+    with_null = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (3, 4)], "doc_a long, doc_b long"
+    )
+    rows = both_rounds(lambda: sorted(
+        map(tuple, connected_components(with_null).collect()),
+        key=lambda r: (r[0] is None, r),
+    ))
+    # the NULL end is one node of its own, labelled NULL
+    assert rows == [(1, 1), (2, 1), (3, 3), (4, 3), (None, None)]
 
 
 def test_bounded_cc_union_find_matches_bfs_reference():
