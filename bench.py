@@ -621,10 +621,13 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark(app_name="hrcm-bench")
 
-    # Warm-up: run every headline query once at the smallest SF. Whole-stage
-    # codegen classes and JIT compilations are keyed by plan shape, not data
-    # size, so this populates the same caches a long-lived cluster session
-    # would have. Timed runs below then measure execution, not compilation.
+    # Warm-up: run every headline query once at the smallest SF. Generated
+    # classes are keyed by plan shape, not data size, and get_spark sizes
+    # Spark's codegen cache to 4000 classes (session._CODEGEN_CACHE_MAX; the
+    # default 100 is smaller than one change night), so the timed runs below
+    # reuse them instead of compiling. HotSpot compiles a method with C2
+    # only past 10x the JDK's tier-4 thresholds (session._JIT_FLAGS): hot
+    # loops still reach C2 within the warm pass, lukewarm code stays at C1.
     warm_dir = os.environ.get("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     if os.path.isdir(warm_dir):
         for name in HEADLINE:

@@ -96,7 +96,8 @@ def leakage_safe_split(
     """
     from healthcare_rcm_etl_pipeline_spark.operators import graph
 
-    comp = graph.connected_components(pairs).withColumnRenamed("doc", key_col)
+    comp = graph.broadcast_if_local(graph.connected_components(pairs))
+    comp = comp.withColumnRenamed("doc", key_col)
     return leakage_safe_split_from_components(
         df, comp, key_col, fractions, salt, out_col
     )
@@ -1261,11 +1262,11 @@ def best_survivors(
 
     Returns surviving corpus rows (id_col, order_col).
     """
-    from healthcare_rcm_etl_pipeline_spark.operators.graph import (
-        connected_components,
-    )
+    from healthcare_rcm_etl_pipeline_spark.operators import graph
 
-    clusters = connected_components(pairs, src_col=src_col, dst_col=dst_col)
+    clusters = graph.broadcast_if_local(
+        graph.connected_components(pairs, src_col=src_col, dst_col=dst_col)
+    )
     return best_survivors_from_components(docs, clusters, id_col, order_col)
 
 

@@ -282,8 +282,11 @@ def resolve_entities(
     """
     from healthcare_rcm_etl_pipeline_spark.operators import graph
 
-    # labels from the driver union-find carry a broadcast hint (they are
-    # bounded by session._DRIVER_ROWS_MAX); above the bound there is none
-    # and AQE picks the strategy from the runtime size.
-    comp = graph.connected_components(pairs, src_col="id_a", dst_col="id_b")
+    # labels from the driver union-find are hinted as the build side of
+    # golden_from_labels' join (they are bounded by
+    # session._DRIVER_ROWS_MAX); above the bound AQE picks the strategy
+    # from the runtime size.
+    comp = graph.broadcast_if_local(
+        graph.connected_components(pairs, src_col="id_a", dst_col="id_b")
+    )
     return golden_from_labels(df, comp, id_col, attrs)

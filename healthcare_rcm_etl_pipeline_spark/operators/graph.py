@@ -90,13 +90,12 @@ def connected_components(
     The raw pairs are checkpointed first (no shuffle). When they fit
     ``session._DRIVER_ROWS_MAX`` rows (a count, then one bounded collect)
     and hold no NULL id, a driver union-find labels them and the labels
-    return as a local relation with a broadcast hint: a ``createDataFrame``
-    relation carries no size statistics, and without the hint a downstream
-    corpus join against it is planned sort-merge. It holds at most twice
-    the bound's node count (~128 MB of two long columns). Above the bound
-    the min-label rounds run in Spark on the checkpoint's symmetric edges
-    (``cc_rounds`` times them alone). Both paths return the same rows and
-    schema. Jobs are labelled
+    return as a local relation: at most twice the bound's node count
+    (~128 MB of two long columns), with exact size statistics. A caller
+    that joins them as a build side hints them through
+    ``broadcast_if_local``. Above the bound the min-label rounds run in
+    Spark on the checkpoint's symmetric edges (``cc_rounds`` times them
+    alone). Both paths return the same rows and schema. Jobs are labelled
     ``graph.connected_components.<edges|collect|round>``.
     """
     raw = _raw_edges(pairs, src_col, dst_col, "connected_components")
@@ -116,11 +115,22 @@ def connected_components(
             StructField(out_node, node.dataType, node.nullable),
             StructField(out_component, node.dataType, node.nullable),
         ])
-        return F.broadcast(pairs.sparkSession.createDataFrame(out, schema))
+        return pairs.sparkSession.createDataFrame(out, schema)
     labels, _ = _cc_rounds(pairs, _symmetric(raw), max_iters)
     return labels.select(
         F.col("node").alias(out_node), F.col("label").alias(out_component)
     )
+
+
+def broadcast_if_local(labels: DataFrame) -> DataFrame:
+    """``connected_components``' labels with a broadcast hint when they are
+    the driver's local relation, bounded by the driver row bound; the Spark
+    rounds' labels are left to AQE. For a caller that joins the labels as
+    the build side: a local relation above the broadcast threshold would
+    otherwise be planned sort-merge against the corpus. Spark logs the
+    hint as unusable anywhere else (an unjoined return, the left side of a
+    semi or anti join)."""
+    return F.broadcast(labels) if labels.isLocal() else labels
 
 
 def cc_rounds(
@@ -356,6 +366,9 @@ def bfs_hops(
     with _step(edges, "bfs_hops", "collect"):
         local_e = _driver_edges(raw)
         local_seeds = _driver_edges(all_seeds) if local_e is not None else None
+    # an edge with a NULL end joins nothing: NULL never matches the visited
+    # anti-join, so it would be reported again on every hop
+    sym = _symmetric(raw.dropna())
     if local_seeds is not None:
         s, t = (local_e.column(c).to_numpy(zero_copy_only=False) for c in "st")
         levels = _bfs_levels(
@@ -365,7 +378,7 @@ def bfs_hops(
             max_hops,
         )
         # the distributed result's node type: seeds unioned with edge ends
-        ends = _symmetric(raw).select(F.col("t").alias("node"))
+        ends = sym.select(F.col("t").alias("node"))
         node = all_seeds.unionByName(ends).schema["node"]
         out = pa.table({
             out_node: np.concatenate(levels),
@@ -378,7 +391,7 @@ def bfs_hops(
         ])
         return edges.sparkSession.createDataFrame(out, schema)
     with _step(edges, "bfs_hops", "edges"):
-        e = _symmetric(raw).localCheckpoint(eager=True)
+        e = sym.localCheckpoint(eager=True)
     # The expansion frontier's seed semi-join folds into hop 1's job, and
     # ``visited`` is NEVER separately checkpointed: it is a union of
     # already-checkpointed frontiers (all_seeds + nxt_1..h), so its lineage

@@ -1476,18 +1476,18 @@ def dedup_survivors_q(spark, sf_dir):
 
     A near-dup pair graph is a small fraction of the corpus by
     construction: when its edges fit ``session._DRIVER_ROWS_MAX`` rows,
-    ``connected_components`` labels them on the driver and returns a
-    broadcast-hinted LOCAL relation, so the corpus-side anti-join
-    broadcasts and the iteration jobs disappear (the min-label fixed point
-    is unique, so output is identical above the bound, where the rounds
-    run in Spark)."""
+    ``connected_components`` labels them on the driver and returns a LOCAL
+    relation, hinted as the build side of the corpus-side anti-join, so
+    that join broadcasts and the iteration jobs disappear (the min-label
+    fixed point is unique, so output is identical above the bound, where
+    the rounds run in Spark)."""
     from healthcare_rcm_etl_pipeline_spark.operators import graph
 
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(
         d, "text", "doc_id", n=3, threshold=0.5, max_df=20
     )
-    clusters = graph.connected_components(pairs)
+    clusters = graph.broadcast_if_local(graph.connected_components(pairs))
     losers = clusters.filter(F.col("doc") != F.col("component")).select(
         F.col("doc").alias("doc_id")
     )
@@ -6321,10 +6321,10 @@ def dedup_keep_priority_q(spark, sf_dir):
     pairs = dedup.ngram_jaccard_pairs(
         d, "text", "doc_id", n=3, threshold=0.5, max_df=20
     )
-    # labels arrive as a broadcast-hinted local relation under the driver
-    # row bound, so the left join below broadcasts instead of shuffling the
-    # corpus (see dedup_keep_survivors)
-    labels = graph.connected_components(pairs)
+    # labels are a local relation under the driver row bound, hinted so the
+    # left join below broadcasts instead of shuffling the corpus (see
+    # dedup_keep_survivors)
+    labels = graph.broadcast_if_local(graph.connected_components(pairs))
     labeled = (
         d.select(
             "doc_id",

@@ -38,6 +38,34 @@ from pyspark.sql import DataFrame, SparkSession
 # 1 << 22 rows. Read at call time (0 forces the Spark rounds).
 _DRIVER_ROWS_MAX = 1 << 22
 
+# HotSpot's C2 (tier-4) thresholds, 10x the JDK 17 defaults (5000 / 15000 /
+# 40000), for the driver JVM, which in local mode also runs every task.
+# Methods that are only lukewarm in a 25-30 s application are no longer
+# recompiled by C2; hot loops still reach it within a fraction of a second.
+# Measured on a 4-core host with rcmbench (a fresh app per run): on one cold
+# change night plus hq1-hq11, C2 threads burned 41.2 of the JVM's 79.7 CPU-s
+# at the defaults and 15.5 of 55.6 at 10x; etl_nightly cpu_s fell from 78.5
+# to 55.6 s median over 10 interleaved pairs (seeds 11-20, 10/10 won) and
+# corpus from 78.3 to 56.4 s (5/5), with jobs, wall time and output bytes
+# unchanged. 3x left half of that saving. C1 only (-XX:TieredStopAtLevel=1)
+# burned the least CPU but made rcmbench's hot-loop sentinel 13x slower
+# (1.30-1.55 vs 0.08-0.12 s), so C2 stays on. bench.py's headline queries in
+# a warm session at sf0.1 measured even.
+_JIT_FLAGS = (
+    "-XX:Tier4InvocationThreshold=50000"
+    " -XX:Tier4CompileThreshold=150000"
+    " -XX:Tier4BackEdgeThreshold=400000"
+)
+
+# Entries of Spark's JVM-wide codegen cache (spark.sql.codegen.cache.maxEntries,
+# a static conf, default 100). LRU over a sequential working set larger than
+# the cache misses on every class: at 100 a repeated change night recompiled
+# all of its ~260 classes (12.3 s wall) and every dedup ingest batch 173-179;
+# at 4000 a second night compiles none (7.9 s). The retained classes cost
+# ~3.5 KB of metaspace each: 162.1 vs 161.2 MB used after three nights and a
+# full GC, so a full cache holds ~15 MB.
+_CODEGEN_CACHE_MAX = 4000
+
 
 def get_spark(
     app_name: str = "healthcare-rcm-etl-spark",
@@ -58,8 +86,10 @@ def get_spark(
         .config("spark.sql.warehouse.dir", os.path.join(scratch, "warehouse"))
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Dderby.system.home={scratch} -Dderby.stream.error.file={scratch}/derby.log",
+            f"-Dderby.system.home={scratch} -Dderby.stream.error.file={scratch}/derby.log"
+            f" {_JIT_FLAGS}",
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_MAX))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

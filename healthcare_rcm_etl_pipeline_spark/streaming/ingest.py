@@ -503,7 +503,7 @@ def make_dedup_ingest_batch_fn(
         # a micro-batch's pair set is batch-sized, so its components come
         # from the driver union-find, not the Spark rounds
         losers = (
-            graph.connected_components(pairs)
+            graph.broadcast_if_local(graph.connected_components(pairs))
             .filter(F.col("doc") != F.col("component"))
             .select(F.col("doc").alias(id_col))
         )

@@ -5,11 +5,15 @@ driver's CORRECTNESS gate uses, over the FULL registry instead of its
 50-query sample.
 
 Usage: python scripts/oracle_sweep.py [sf_dir] [--json PATH]
-(default sf_dir /root/testdata/sf0.01). Prints one line per mismatch and a
-final TOTAL/FAILURES line; exit 1 on any failure. --json appends a
-one-object summary line {sf_dir, total, failures} to PATH — the committed
-per-round sweep artifact (round-7 ADVICE: the full-registry result must be
-reproducible from the repo, not just from a session log).
+(default sf_dir /root/testdata/sf0.01). The session is ``get_spark``'s:
+``$SPARK_GRAFT_CPUS`` cores (default: all) and ``$HRCM_DRIVER_MEM`` of
+driver memory (default 12g). hq1-hq11 read the hospital tree that
+``$HRCM_REFERENCE_ROOT`` names, else the reference checkout. Prints one
+line per mismatch and a final TOTAL/FAILURES line; exit 1 on any failure.
+--json appends a one-object summary line {sf_dir, total, failures, cpus,
+driver_memory, hq_root, ...} to PATH — the committed per-round sweep
+artifact (round-7 ADVICE: the full-registry result must be reproducible
+from the repo, not just from a session log).
 """
 
 from __future__ import annotations
@@ -49,7 +53,7 @@ def main() -> int:
         json_path = args[i + 1]
         del args[i : i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    spark = get_spark(cpus=16, driver_memory="16g", app_name="hrcm-oracle-sweep")
+    spark = get_spark(app_name="hrcm-oracle-sweep")
     assert len(entrymod.entry(spark).collect()) > 0
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -83,6 +87,7 @@ def main() -> int:
         import subprocess
 
         from closeout import source_digest
+        from healthcare_rcm_etl_pipeline_spark.plans.pipeline import _reference_root
 
         # Provenance stamps (r14 verdict #2): source_digest is the
         # asserted field — tests/test_closeout.py recomputes it on the
@@ -107,6 +112,9 @@ def main() -> int:
                         "failures": fails,
                         "source_digest": source_digest(),
                         "git_head": head,
+                        "cpus": spark.sparkContext.defaultParallelism,
+                        "driver_memory": spark.conf.get("spark.driver.memory"),
+                        "hq_root": _reference_root(None),
                     }
                 )
                 + "\n"

@@ -165,7 +165,8 @@ def test_bfs_isolated_seeds_and_early_empty_frontier(spark, both_rounds, monkeyp
     the node type is the seed/edge union's (int seeds, long edges -> long).
     Both paths return the same rows and schema, also for raw edges with
     duplicate pairs, reversed pairs, self-loops and mixed int/long id
-    columns; an edge with a NULL id never reaches the driver rounds."""
+    columns; an edge with a NULL id never reaches the driver rounds, and
+    the Spark rounds drop it."""
     from healthcare_rcm_etl_pipeline_spark.operators import graph
 
     def hops(edges, seeds, max_hops):
@@ -196,10 +197,9 @@ def test_bfs_isolated_seeds_and_early_empty_frontier(spark, both_rounds, monkeyp
         [(1, 2), (2, None), (None, 3), (2, 3)], "src long, dst long"
     )
     rows, _ = both_rounds(lambda: hops(null_edges, seeds, 3))
-    # the NULL node is reported once per hop after it is first reached (the
-    # visited anti-join never matches NULL): a known defect, see the FOUND
-    # line on bfs_hops in CHANGES.md
-    assert rows == [(1, 0), (2, 1), (3, 2), (10, 0), (99, 0), (None, 2), (None, 3)]
+    # an edge with a NULL end is no edge: NULL is never reached (it would
+    # never match the visited anti-join, so it would repeat every hop)
+    assert rows == [(1, 0), (2, 1), (3, 2), (10, 0), (99, 0)]
 
 
 def test_bounded_cc_equals_distributed_both_branches(spark, both_rounds, monkeypatch):
@@ -312,18 +312,36 @@ def test_bounded_cc_union_find_matches_bfs_reference():
     check()
 
 
-def test_bounded_cc_fast_path_labels_broadcast_downstream(spark):
+def test_bounded_cc_fast_path_labels_broadcast_downstream(spark, monkeypatch):
     """The union-find's local relation (pairs under the driver row bound)
-    must carry a broadcast hint — createDataFrame arrives as an
-    ExistingRDD with no stats, and without the hint a corpus-sized join
-    against 50 label rows was planned sort-merge. Pin the join strategy,
-    not just the values."""
+    carries no broadcast hint of its own: Spark logs a hint as unusable
+    on an unjoined return or on the left of a semi/anti join, as in
+    connected_components_incremental. A corpus-sized join against it still
+    broadcasts, on the local relation's exact size statistics, and
+    ``broadcast_if_local`` hints it for a build side too large for them.
+    The Spark rounds' labels are never hinted. Pin the join strategy, not
+    just the values."""
+    from healthcare_rcm_etl_pipeline_spark import session
+    from healthcare_rcm_etl_pipeline_spark.operators import graph
+
+    def hinted(df):
+        return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
     )
     labels = connected_components(pairs)
+    assert labels.isLocal() and not hinted(labels)
+    assert hinted(graph.broadcast_if_local(labels))
     corpus = spark.range(0, 1000).withColumnRenamed("id", "doc")
     joined = corpus.join(labels, "doc", "left")
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+    new = spark.createDataFrame([(3, 10)], "doc_a long, doc_b long")
+    assert not hinted(graph.connected_components_incremental(labels, new))
+
+    monkeypatch.setattr(session, "_DRIVER_ROWS_MAX", 0)
+    spark_labels = connected_components(pairs)
+    assert not spark_labels.isLocal()
+    assert not hinted(graph.broadcast_if_local(spark_labels))
