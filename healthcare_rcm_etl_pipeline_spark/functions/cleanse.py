@@ -10,7 +10,7 @@ Reference parity notes (file:line cites are into /root/reference):
 - fill_unknown      <- python/transform.py:22,24,25
 - recode_gender     <- python/transform.py:23-24 (M/F/O map after upper();
   the reference's data holds full words so everything lands on "Unknown" —
-  replicated under strict=True, fixed under strict=False)
+  replicated as-is)
 - clean_phone       <- python/transform.py:25 (strip non-digits)
 - unified_source_id <- python/extraction.py:96
 - age_years         <- python/transform.py:27-30 (birthday-aware integer age,
@@ -46,19 +46,20 @@ def fill_unknown(col: ColumnOrName, fill: str = "Unknown") -> Column:
     return F.coalesce(_c(col), F.lit(fill))
 
 
-def recode_gender(col: ColumnOrName, strict: bool = False) -> Column:
+def recode_gender(col: ColumnOrName) -> Column:
     """Dictionary recode of gender (F4).
 
-    strict=True replicates the reference literally: upper() then map of
-    single letters M/F/O only — full words become "Unknown" (the observed
-    behavior in the reference's golden dim_patients output).
-    strict=False additionally accepts full words.
+    Replicates the reference literally: upper() then map of single letters
+    M/F/O only — full words become "Unknown" (the observed behavior in the
+    reference's golden dim_patients output).
     """
     u = F.upper(F.trim(_c(col)))
-    m = F.when(u == "M", "Male").when(u == "F", "Female").when(u == "O", "Other")
-    if not strict:
-        m = m.when(u == "MALE", "Male").when(u == "FEMALE", "Female").when(u == "OTHER", "Other")
-    return m.otherwise(F.lit("Unknown"))
+    return (
+        F.when(u == "M", "Male")
+        .when(u == "F", "Female")
+        .when(u == "O", "Other")
+        .otherwise(F.lit("Unknown"))
+    )
 
 
 def clean_phone(col: ColumnOrName) -> Column:

@@ -79,13 +79,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(ngram_array(toks, n))
 
 
-def word_shingles(col: ColumnOrName, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (array<string>), JVM-side. Convenience
-    form for single expressions; hot paths should materialize tokens() into
-    a column and use shingles_from_tokens (see that docstring)."""
-    return shingles_from_tokens(tokens(col), n)
-
-
 def stopword_ratio(col: ColumnOrName, stopwords: list[str] | None = None) -> Column:
     """Fraction of tokens that are stopwords (double, deterministic)."""
     sw = stopwords or LANG_MARKERS["en"]
@@ -176,25 +169,22 @@ def redact_pii(col: ColumnOrName, kinds: list[str] | None = None) -> Column:
     return out
 
 
-def kgram_hashes(col: ColumnOrName, k: int = 8, portable: bool = True) -> Column:
+def kgram_hashes(col: ColumnOrName, k: int = 8) -> Column:
     """Rolling character k-gram hashes of canonical text (array<bigint>).
 
     The per-position hash plays the role of a Rabin-Karp rolling hash: one
     64-bit value per window position over the canonicalized string. Pure
-    higher-order expressions — per-doc, no shuffle. ``portable=True`` hashes
-    each k-gram with a 60-bit md5 prefix so any md5-capable engine (DuckDB,
-    Trino, BigQuery) reproduces the values bit-for-bit for oracles;
-    ``portable=False`` uses xxhash64 (the fast engine-internal path).
-    Docs shorter than k produce an empty array.
+    higher-order expressions — per-doc, no shuffle. Each k-gram is hashed
+    with a 60-bit md5 prefix so any md5-capable engine (DuckDB, Trino,
+    BigQuery) reproduces the values bit-for-bit for oracles. Docs shorter
+    than k produce an empty array.
     """
     t = normalize_text(col)
     n = F.length(t)
 
     def gram_hash(i: Column) -> Column:
         g = t.substr(i, F.lit(k))
-        if portable:
-            return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-        return F.xxhash64(g)
+        return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
 
     return F.when(
         n >= k, F.transform(F.sequence(F.lit(1), n - (k - 1)), gram_hash)

@@ -418,22 +418,15 @@ def domain_cap_sample(
     id_col: str,
     cap: int,
     salt: str = "domcap-v1",
-    exact: bool = False,
 ) -> DataFrame:
     """Per-domain document cap (corpus balancing: no single source/domain
-    dominates the training mix). Two modes:
-
-    - ``exact=False`` (default, the 100 TB path): per-domain KEEP FRACTION
-      ``min(1, cap / n_domain)`` applied via the deterministic md5-bucket
-      device (see deterministic_split) — one map-side-combined count per
-      domain, broadcast back, then a narrow filter. Kept count is cap in
-      expectation (± binomial noise); NO per-domain sort, so a 10^8-doc hot
-      domain costs the same as a cold one. Deterministic: the same doc
-      survives on every run/engine/partitioning.
-    - ``exact=True``: at most ``cap`` rows per domain exactly, chosen by
-      md5-bucket order via a per-domain row_number window. Right when
-      domains are known-bounded (the window sorts each domain inside one
-      task); wrong for web-scale domain skew.
+    dominates the training mix): a per-domain KEEP FRACTION
+    ``min(1, cap / n_domain)`` applied via the deterministic md5-bucket
+    device (see deterministic_split) — one map-side-combined count per
+    domain, broadcast back, then a narrow filter. Kept count is cap in
+    expectation (± binomial noise); NO per-domain sort, so a 10^8-doc hot
+    domain costs the same as a cold one. Deterministic: the same doc
+    survives on every run/engine/partitioning.
 
     Returns the surviving rows (all columns).
     """
@@ -447,13 +440,6 @@ def domain_cap_sample(
         ).cast("bigint")
         % 1_000_000
     )
-    if exact:
-        w = Window.partitionBy(domain_col).orderBy(bucket.asc(), F.col(id_col).asc())
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= cap)
-            .drop("__rn")
-        )
     counts = df.groupBy(domain_col).agg(F.count("*").alias("__n_dom"))
     keep_below = F.least(
         F.lit(1_000_000),

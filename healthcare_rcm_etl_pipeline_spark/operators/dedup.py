@@ -231,7 +231,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    cap_mode: str = "window",
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs, posting-list style without a
     self-join: group docs per shingle, emit each shingle's doc-pair
@@ -244,27 +243,17 @@ def ngram_jaccard_pairs(
     corpora drop stop-shingles first via ``max_df`` (they carry no near-dup
     signal and dominate cost).
 
-    ``cap_mode`` picks how the cap is enforced:
-    - "window" (default): single-pass — a partition-count window over __sh
-      tags each posting with its shingle's df and filters before
-      collect_list; the downstream groupBy(__sh) REUSES the window's hash
-      partitioning, so the cap costs no extra exchange (measured 25% faster
-      end-to-end than antijoin, identical output). The window buffers each
-      shingle's postings spillably but never materializes an array — safe
-      until a single stop-shingle's postings dwarf one task's spill budget.
-    - "antijoin" (adversarial-web mode): count df first via map-side-combined
-      aggregation, anti-join the hot set out BEFORE any per-shingle
-      buffering — a 10^8-doc stop-shingle is never concentrated in one task.
-      Costs a second pass over the shingling lineage (the df count and the
-      probe side prune different columns, so Catalyst cannot reuse one
-      exchange for both).
-    - "filter": aggregate all posting lists, then drop rows with
-      size(ds) > max_df. Cheapest when the hottest shingle's list still
-      fits comfortably in an executor (caps up to ~10^6 × max_df); unsafe
-      for adversarial/web corpora where one stop-shingle spans 10^8+ docs.
+    The cap is a single pass: a partition-count window over __sh tags
+    each posting with its shingle's df and filters before collect_list;
+    the downstream groupBy(__sh) REUSES the window's hash partitioning, so
+    the cap costs no extra exchange. The window buffers each shingle's
+    postings spillably but never materializes an array — safe until a
+    single stop-shingle's postings dwarf one task's spill budget. (An
+    anti-join of the hot set and a post-aggregation size filter gave
+    identical output and measured slower; SCALE.md keeps the numbers.)
     """
     cooc = _posting_cooccurrence(
-        _shingle_posting(df, text_col, id_col, n), max_df, cap_mode
+        _shingle_posting(df, text_col, id_col, n), max_df
     )
     return (
         cooc.withColumn(
@@ -326,25 +315,16 @@ def _hashed_window_posting(
     )
 
 
-def _posting_cooccurrence(
-    post: DataFrame, max_df: int | None, cap_mode: str
-) -> DataFrame:
+def _posting_cooccurrence(post: DataFrame, max_df: int | None) -> DataFrame:
     """Shared core of the posting-list pair ops: (doc, n_shingles, shingle)
     postings -> (doc_a, doc_b, n_a, n_b, n_common) co-occurrence counts,
-    with the stop-shingle skew cap applied per ``cap_mode`` (see
-    ngram_jaccard_pairs for the mode trade-offs)."""
-    if cap_mode not in ("window", "antijoin", "filter"):
-        raise ValueError(
-            f"cap_mode must be 'window', 'antijoin' or 'filter', got {cap_mode!r}"
-        )
+    with the stop-shingle skew cap applied (see ngram_jaccard_pairs)."""
     # hash the shingle string ONCE to a 64-bit key: all downstream shuffles
     # (df cap + pair grouping) move 8-byte longs, never the strings; a
     # cross-shingle collision (~n²/2^64) would merge two posting lists —
     # negligible for any real corpus
     post = post.withColumn("__sh", F.xxhash64("shingle")).drop("shingle")
-    if max_df is not None and cap_mode == "antijoin":
-        post = df_cap_shingles(post, max_df, col="__sh")
-    if max_df is not None and cap_mode == "window":
+    if max_df is not None:
         from pyspark.sql import Window
 
         w = Window.partitionBy("__sh")
@@ -356,8 +336,6 @@ def _posting_cooccurrence(
     grouped = post.groupBy(F.col("__sh")).agg(
         F.sort_array(F.collect_list(F.struct("doc", "n_shingles"))).alias("ds")
     )
-    if max_df is not None and cap_mode == "filter":
-        grouped = grouped.filter(F.size("ds") <= max_df)
     # all (i<j) combinations of each shingle's posting list
     pairs = grouped.select(F.explode(_pairs_in_array(F.col("ds"))).alias("p")).select(
         F.col("p.a.doc").alias("doc_a"),
@@ -377,7 +355,6 @@ def containment_pairs(
     n: int = 3,
     threshold_pct: int = 70,
     max_df: int | None = None,
-    cap_mode: str = "window",
 ) -> DataFrame:
     """Shingle-CONTAINMENT near-dup pairs: C(A→B) = |A∩B| / |A| — the
     asymmetric cousin of Jaccard (Broder's resemblance vs containment,
@@ -395,13 +372,13 @@ def containment_pairs(
 
     Same posting-list core (and therefore the same scale story) as
     ``ngram_jaccard_pairs``: one pass, two shuffles, ``max_df`` stop-
-    shingle cap with the three documented enforcement modes. Containment
-    is MORE cap-sensitive than Jaccard — a dropped stop-shingle removes
-    intersection mass from small docs disproportionately — so size max_df
-    above the largest doc's shingle count when subset recall matters.
+    shingle cap. Containment is MORE cap-sensitive than Jaccard — a
+    dropped stop-shingle removes intersection mass from small docs
+    disproportionately — so size max_df above the largest doc's shingle
+    count when subset recall matters.
     """
     cooc = _posting_cooccurrence(
-        _shingle_posting(df, text_col, id_col, n), max_df, cap_mode
+        _shingle_posting(df, text_col, id_col, n), max_df
     )
     min_sz = F.least(F.col("n_a"), F.col("n_b"))
     return (
@@ -424,7 +401,6 @@ def exact_substring_pairs(
     window: int = 20,
     min_windows: int = 1,
     max_df: int | None = None,
-    cap_mode: str = "window",
 ) -> DataFrame:
     """Exact-substring duplication detection, the Spark-shaped analog of the
     suffix-array dedup in Lee et al. 2022 ("Deduplicating Training Data
@@ -446,11 +422,11 @@ def exact_substring_pairs(
     distinct shared windows and dup_frac = n_shared / min(n_a, n_b) — an
     upper-bound estimate of the smaller doc's duplicated fraction. Skew:
     same stop-shingle hazard as the n-gram ops (a window shared by d docs
-    emits d(d-1)/2 pairs) — ``max_df``/``cap_mode`` apply unchanged, though
+    emits d(d-1)/2 pairs) — ``max_df`` applies unchanged, though
     at window >= 20 natural stop-windows are rare; caps matter for
     machine-generated boilerplate corpora."""
     cooc = _posting_cooccurrence(
-        _hashed_window_posting(df, text_col, id_col, window), max_df, cap_mode
+        _hashed_window_posting(df, text_col, id_col, window), max_df
     )
     return (
         cooc.filter(F.col("n_common") >= min_windows)
@@ -479,24 +455,6 @@ def _pairs_in_array(ds: F.Column) -> F.Column:
             ),
         )
     )
-
-
-def df_cap_shingles(post: DataFrame, max_df: int, col: str = "shingle") -> DataFrame:
-    """Drop shingles whose document frequency exceeds max_df (skew guard).
-
-    Anti-joins the posting list against the HOT set (df > max_df), which is
-    small by construction (|hot| <= total_postings / max_df) — the cheap side
-    of the join, and AQE will broadcast it when it fits. A stop-shingle shared
-    by d docs would otherwise emit d(d-1)/2 pairs from one collect_list row;
-    at web scale this cap is mandatory, not optional.
-    """
-    hot = (
-        post.groupBy(col)
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") > max_df)
-        .select(col)
-    )
-    return post.join(hot, col, "left_anti")
 
 
 def _minhash_shingle_hashes(

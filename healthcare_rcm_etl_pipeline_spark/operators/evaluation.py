@@ -48,7 +48,6 @@ def retrieval_eval(
     doc_col: str = "neighbor_id",
     rank_col: str = "rank",
     grade_col: str = "grade",
-    include_malformed_count: bool = False,
 ) -> DataFrame:
     """Per-query graded retrieval metrics at cutoff ``k``.
 
@@ -63,16 +62,8 @@ def retrieval_eval(
     grade>0 qrels and idcg is the query's own ideal ordering (grade DESC,
     doc ASC) truncated at k. Queries with no positive qrels get
     ndcg/recall/mrr = 0.0 (a judged-empty query scores zero, it does not
-    divide by zero).
-
-    ``include_malformed_count=True`` (r14 ADVICE: the rank-domain guard
-    excludes NULL / sub-1 ranks SILENTLY, which can mask a broken
-    upstream ranker) adds an ``n_malformed`` column — the per-query count
-    of excluded result rows (rank NULL or < 1; ranks past ``k`` are
-    contract-ignored, not malformed) — and queries whose EVERY result row
-    is malformed then still surface (metrics 0.0, n_hits 0) instead of
-    vanishing. The default keeps the original schema, so registered
-    oracles are unchanged.
+    divide by zero). Result rows with a NULL or sub-1 rank are excluded,
+    so a query whose every result row is malformed does not appear.
     """
     disc = ndcg_discounts(k)
     darr = F.array(*[F.lit(d) for d in disc])
@@ -138,7 +129,7 @@ def retrieval_eval(
         .agg(F.count("*").cast("bigint").alias("n_rel"))
     )
 
-    out = (
+    return (
         per_q.join(per_q_ideal, "qid", "left")
         .join(n_rel, "qid", "left")
         .select(
@@ -163,23 +154,4 @@ def retrieval_eval(
             .alias("mrr"),
             "n_hits",
         )
-    )
-    if not include_malformed_count:
-        return out
-    bad = (
-        results.filter(F.col(rank_col).isNull() | (F.col(rank_col) < 1))
-        .groupBy(query_col)
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_malformed"))
-    )
-    # full outer: an all-malformed query has no valid-rank row, so it is
-    # absent from per_q — it must still surface with its count
-    return out.join(bad, query_col, "full_outer").select(
-        query_col,
-        F.coalesce("ndcg", F.lit(0.0)).alias("ndcg"),
-        F.coalesce("recall", F.lit(0.0)).alias("recall"),
-        F.coalesce("mrr", F.lit(0.0)).alias("mrr"),
-        F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-        F.coalesce(F.col("n_malformed"), F.lit(0))
-        .cast("bigint")
-        .alias("n_malformed"),
     )

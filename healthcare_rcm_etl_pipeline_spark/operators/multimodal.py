@@ -11,10 +11,9 @@ baseline-sequential JPEG (a full T.81 Huffman + IDCT decoder in
 operators/jpeg.py) — implemented from the published format specs in pure
 numpy (``decode_image``), plus a nearest-neighbor ``resize_nearest``.
 Formats that genuinely need PIL/ffmpeg (progressive JPEG, PNG's zlib
-streams, video containers) fall back to ``decode_stub``: strict mode
-raises, lenient mode emits deterministic fake dimensions flagged
-``decoded=False`` so fake features can never be mistaken for real ones
-downstream.
+streams, video containers) fall back to ``decode_stub``, which emits
+deterministic fake dimensions flagged ``decoded=False`` so fake features
+can never be mistaken for real ones downstream.
 
 At 100 TB: payload bytes stay in executors end-to-end (parquet binary ->
 Arrow batch -> pandas bytes), nothing is collected; `maxRecordsPerBatch`
@@ -197,27 +196,22 @@ def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return img[ys][:, xs]
 
 
-def decode_stub(payload: bytes, strict: bool = False) -> tuple[int, int]:
-    """Fallback for formats needing PIL/ffmpeg (not in this container):
-    strict raises; lenient returns deterministic fake (width, height)
-    derived from the payload hash (stable, testable, flagged as fake)."""
-    if strict:
-        raise NotImplementedError(
-            "progressive-JPEG/PNG/video decode requires PIL/ffmpeg — not in "
-            "this container (baseline JPEG decodes for real via operators/jpeg.py)"
-        )
+def decode_stub(payload: bytes) -> tuple[int, int]:
+    """Fallback for formats needing PIL/ffmpeg: deterministic fake
+    (width, height) derived from the payload hash (stable, testable,
+    flagged as fake by its callers)."""
     h = hashlib.sha256(payload).digest()
     return 16 + h[0] % 240, 16 + h[1] % 240
 
 
-def decode_features(payload: bytes, strict: bool = False) -> tuple[int, int, int, float, bool]:
+def decode_features(payload: bytes) -> tuple[int, int, int, float, bool]:
     """(width, height, channels, mean_luma, decoded) — real decode when the
     format allows, declared fake otherwise."""
     try:
         img = decode_image(payload)
         return img.shape[1], img.shape[0], img.shape[2], float(img.mean()), True
     except ValueError:
-        w, h = decode_stub(payload, strict=strict)
+        w, h = decode_stub(payload)
         return w, h, 0, float("nan"), False
 
 
@@ -297,7 +291,7 @@ def decode_wav(payload: bytes) -> dict:
     }
 
 
-def audio_features(payload: bytes, strict: bool = False) -> tuple:
+def audio_features(payload: bytes) -> tuple:
     """(sample_rate, channels, bits, n_samples, duration, rms, peak, zcr,
     decoded) — real for PCM WAV, declared-fake fallback otherwise (the
     image-path policy applied to audio)."""
@@ -316,10 +310,6 @@ def audio_features(payload: bytes, strict: bool = False) -> tuple:
             True,
         )
     except ValueError:
-        if strict:
-            raise NotImplementedError(
-                "compressed audio decode requires codec libs — not in this container"
-            ) from None
         h = hashlib.sha256(payload).digest()
         return (8000 * (1 + h[0] % 6), 1 + h[1] % 2, 16, 0, float("nan"),
                 float("nan"), float("nan"), float("nan"), False)
@@ -397,16 +387,15 @@ def sample_frames(
     payload_col: str = "payload",
     every: int = 1,
     max_frames: int = 32,
-    strict: bool = False,
 ) -> DataFrame:
     """Frame sampling over video payloads (mapInPandas, EXPLODING output:
     one row per sampled frame). Real for concatenated-netpbm streams —
     every ``every``-th frame up to ``max_frames``, each decoded for
     (width, height, mean_luma) with a content sha256. Container formats
-    (mp4/webm) need ffmpeg: strict raises; lenient emits ONE placeholder
-    row flagged ``decoded=false`` so downstream counts stay honest. The
-    plumbing contract — schema, batching, per-frame rows — is identical
-    either way, which is the part a real cluster cares about."""
+    (mp4/webm) need ffmpeg: they emit ONE placeholder row flagged
+    ``decoded=false`` so downstream counts stay honest. The plumbing
+    contract — schema, batching, per-frame rows — is identical either way,
+    which is the part a real cluster cares about."""
     id_name, payload_name = id_col, payload_col
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -427,10 +416,6 @@ def sample_frames(
                         rows["frame_sha256"].append(hashlib.sha256(fr).hexdigest())
                         rows["decoded"].append(True)
                 except ValueError:
-                    if strict:
-                        raise NotImplementedError(
-                            "container video decode requires ffmpeg — not in this container"
-                        ) from None
                     w, h = decode_stub(payload)
                     rows["doc_id"].append(int(doc_id))
                     rows["frame_idx"].append(0)

@@ -427,7 +427,6 @@ def windowed_embedding_centroid_drift(
     ts_col: str,
     duration: str = "1 hour",
     dim: int = 64,
-    include_malformed_count: bool = False,
 ) -> DataFrame:
     """Vector-drift MONITORING: per (group, tumbling event-time window) of
     the CURRENT stream, the cosine between the group's PINNED reference
@@ -467,17 +466,8 @@ def windowed_embedding_centroid_drift(
     alive with defined semantics, and a mass dim change (encoder swap)
     surfaces as a collapsing ``n_cur``. (The two-snapshot batch twin
     ``embedding_centroid_drift`` posexplodes and needs no dim parameter;
-    it assumes curated equal-dim snapshots.)
-    ``include_malformed_count=True`` (r14 ADVICE: silent exclusion in a
-    MONITOR can mask the upstream encoder bug it exists to catch) makes
-    the exclusion observable: an extra ``n_malformed`` column counts the
-    window's excluded current rows (NULL or wrong-dim vectors), computed
-    in the SAME single aggregation (conditional counts/sums — still
-    streaming-legal, still ANSI-safe because ``element_at`` only
-    evaluates inside the well-formed branch), and windows whose rows are
-    ALL malformed now surface (n_cur = 0, centroid_cos = NULL) instead
-    of vanishing. The default keeps the original filter path and schema
-    — registered oracles are unchanged.
+    it assumes curated equal-dim snapshots.) A window whose rows are ALL
+    malformed emits no row.
 
     Shape at 100 TB: the stream is scanned once; the shuffle carries one
     row per (group, window) of width dim+1 (map-side combinable sums —
@@ -496,8 +486,7 @@ def windowed_embedding_centroid_drift(
     — no unroll, no ceiling) on snapshots, or monitor a fixed 1536-wide
     slice of the vector.
 
-    Returns (group_col, window_start, centroid_cos, n_ref, n_cur
-    [, n_malformed]).
+    Returns (group_col, window_start, centroid_cos, n_ref, n_cur).
     """
     from healthcare_rcm_etl_pipeline_spark.functions.vector import cosine
 
@@ -530,57 +519,26 @@ def windowed_embedding_centroid_drift(
             *[_isum(i).alias(f"__rs{i}") for i in range(dim)],
         )
     )
-    if include_malformed_count:
-        # conditional aggregation instead of a pre-filter: malformed rows
-        # stay IN the groupBy (their count is the monitoring signal) but
-        # contribute NULL to every sum — element_at is only evaluated in
-        # the well-formed branch, so ANSI stays safe for short vectors
-        cur_agg = cur.groupBy(
-            group_col, F.window(ts_col, duration).alias("__w")
-        ).agg(
-            F.count(F.when(well_formed, F.lit(1))).alias("__ct"),
-            F.count(F.when(~well_formed, F.lit(1))).alias("__cm"),
-            *[
-                F.sum(
-                    F.when(
-                        well_formed,
-                        F.round(
-                            F.round(
-                                F.element_at(F.col(vec_col), i + 1).cast("double"),
-                                6,
-                            )
-                            * F.lit(1_000_000.0),
-                            0,
-                        ).cast("bigint"),
-                    )
-                ).alias(f"__cs{i}")
-                for i in range(dim)
-            ],
+    cur_agg = (
+        cur.filter(well_formed)
+        .groupBy(group_col, F.window(ts_col, duration).alias("__w"))
+        .agg(
+            F.count(F.lit(1)).alias("__ct"),
+            *[_isum(i).alias(f"__cs{i}") for i in range(dim)],
         )
-    else:
-        cur_agg = (
-            cur.filter(well_formed)
-            .groupBy(group_col, F.window(ts_col, duration).alias("__w"))
-            .agg(
-                F.count(F.lit(1)).alias("__ct"),
-                *[_isum(i).alias(f"__cs{i}") for i in range(dim)],
-            )
-        )
+    )
     j = cur_agg.join(F.broadcast(ref_grid), group_col, "left")
     rv = F.array(*[F.col(f"__rs{i}").cast("double") for i in range(dim)])
     cv = F.array(*[F.col(f"__cs{i}").cast("double") for i in range(dim)])
-    has_ref = F.col("__rt").isNotNull()
-    comparable = has_ref & (F.col("__ct") > 0) if include_malformed_count else has_ref
-    cols = [
+    return j.select(
         group_col,
         F.col("__w.start").alias("window_start"),
-        F.when(comparable, F.round(cosine(rv, cv), 6)).alias("centroid_cos"),
+        F.when(F.col("__rt").isNotNull(), F.round(cosine(rv, cv), 6)).alias(
+            "centroid_cos"
+        ),
         F.col("__rt").cast("bigint").alias("n_ref"),
         F.col("__ct").cast("bigint").alias("n_cur"),
-    ]
-    if include_malformed_count:
-        cols.append(F.col("__cm").cast("bigint").alias("n_malformed"))
-    return j.select(*cols)
+    )
 
 
 def embedding_centroid_drift(

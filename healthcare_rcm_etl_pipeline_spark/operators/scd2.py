@@ -154,7 +154,6 @@ def point_in_time_join(
     ts_col: str,
     eff_col: str = "effective_date",
     exp_col: str = "expiry_date",
-    how: str = "inner",
 ) -> DataFrame:
     """Join each fact row to the SCD2 dimension version valid AT the fact's
     timestamp: ``dim.eff <= fact.ts`` and (``dim.exp`` is null OR
@@ -164,8 +163,9 @@ def point_in_time_join(
     date) — historical facts there silently take on today's attributes.
 
     Scale: the version intervals of one key never overlap, so each fact
-    matches at most one dim row — output cardinality == facts (inner drops
-    facts outside all versions, e.g. before the key first appeared).
+    matches at most one dim row — output cardinality == facts, minus the
+    facts outside all versions (e.g. before the key first appeared), which
+    the inner join drops.
     A dimension is bounded (patients/customers), facts are not, so the dim
     is broadcast and the fact table never shuffles.
     """
@@ -180,6 +180,6 @@ def point_in_time_join(
         & (F.col(f"__d.{exp_col}").isNull() | (ts <= F.col(f"__d.{exp_col}")))
     )
     dim_attrs = [c for c in dim.columns if c != key]
-    return f.join(F.broadcast(d), cond, how).select(
+    return f.join(F.broadcast(d), cond, "inner").select(
         "__f.*", *[F.col(f"__d.{c}").alias(c) for c in dim_attrs]
     )

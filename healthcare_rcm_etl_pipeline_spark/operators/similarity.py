@@ -82,15 +82,14 @@ def lsh_candidate_pairs(
     n_tables: int = 12,
     dim: int = 64,
     seed: int = 42,
-    multiprobe: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate (id_a < id_b) pairs colliding in ANY table's sign-sketch
-    bucket (OR-construction; multiprobe additionally matches buckets at
-    Hamming distance 1 per table). Linear in the corpus: each vector lands
-    in n_tables buckets (× (1+n_planes) probes), pairs are emitted only
-    within buckets — never a full cross join. Callers verify candidates
-    with the exact measure; recall is tuned by (n_planes, n_tables).
+    bucket (OR-construction) or at Hamming distance 1 per table
+    (multiprobe). Linear in the corpus: each vector lands in n_tables
+    buckets (× (1+n_planes) probes), pairs are emitted only within
+    buckets — never a full cross join. Callers verify candidates with the
+    exact measure; recall is tuned by (n_planes, n_tables).
 
     One explode carries every (table, bucket, is_base) entry, ONE groupBy
     per-bucket emits pairs where at least one side is a base entry — the
@@ -111,21 +110,18 @@ def lsh_candidate_pairs(
 
     def _entries(t: int) -> list[F.Column]:
         base = F.col(f"__b{t}")
-        out = [
+        return [
             F.struct(
                 F.lit(t).alias("tbl"), base.alias("bkt"), F.lit(True).alias("is_base")
             )
+        ] + [
+            F.struct(
+                F.lit(t).alias("tbl"),
+                base.bitwiseXOR(F.lit(1 << i)).alias("bkt"),
+                F.lit(False).alias("is_base"),
+            )
+            for i in range(n_planes)
         ]
-        if multiprobe:
-            out += [
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    base.bitwiseXOR(F.lit(1 << i)).alias("bkt"),
-                    F.lit(False).alias("is_base"),
-                )
-                for i in range(n_planes)
-            ]
-        return out
 
     entries = v.select(
         "__id",
@@ -387,11 +383,11 @@ def brute_force_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
-    exclude_self: bool = True,
     attr_cols: tuple[str, ...] = (),
     pair_predicate: F.Column | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k per query. Queries are broadcast (small side).
+    """Exact cosine top-k per query, excluding the query itself. Queries
+    are broadcast (small side).
 
     Filtered (pre-filter) search: ``attr_cols`` carries metadata columns
     through both sides as ``q_<attr>`` / ``n_<attr>``; ``pair_predicate``
@@ -426,8 +422,7 @@ def brute_force_topk(
             6,
         ),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
+    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     if pair_predicate is not None:
         scored = scored.filter(pair_predicate)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -448,13 +443,12 @@ def lsh_bucket_topk(
     n_tables: int = 6,
     dim: int = 64,
     seed: int = 42,
-    multiprobe: bool = True,
     target_bucket_rows: int = 256,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH with OR-construction:
     ``n_tables`` independent plane sets, each bucketing into 2^n_planes
     buckets; a corpus vector is a candidate if it collides with the query in
-    ANY table (multiprobe additionally probes all Hamming-1 buckets).
+    ANY table, probing every Hamming-1 bucket too (multiprobe).
 
     Candidate cost ≈ n_tables × (1 + n_planes) × bucket size — linear in the
     corpus, tunable recall/cost. Recall vs brute force is asserted in tests.
@@ -487,8 +481,8 @@ def lsh_bucket_topk(
         c = sign_sketch(c, "__cvec", planes, out_col=f"__b{t}")
         q = sign_sketch(q, "__qvec", planes, out_col=f"__b{t}")
 
-    # explode each side to (table, bucket) pairs; query side optionally
-    # fans out to the Hamming-1 neighborhood of its bucket per table
+    # explode each side to (table, bucket) pairs; the query side fans out
+    # to the Hamming-1 neighborhood of its bucket per table
     c_kv = c.select(
         "neighbor_id",
         "__cvec",
@@ -509,9 +503,7 @@ def lsh_bucket_topk(
 
     def _probes(t: F.Column) -> list[F.Column]:
         base = F.col(f"__b{t}")
-        probes = [base]
-        if multiprobe:
-            probes += [base.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
+        probes = [base] + [base.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
         return [F.struct(F.lit(t).alias("tbl"), p.alias("bkt")) for p in probes]
 
     q_kv = q.select(
@@ -593,6 +585,14 @@ def lsh_bucket_topk(
 # compiling the projection — those fall back to the compact
 # zip_with/aggregate form (interpreted per evaluation, but correctness
 # configs like that only appear in tests/audits).
+# Measured (sf0.01, 4-core local session, warm, median of 3 noop writes):
+# at the registered 32x16x2 = 1024 terms, pq_fit's Lloyd aggregate (the
+# CASE over 32 argmins) and pq_encode's projection do not fit one method —
+# Janino fails with "Code grows beyond 64 KB" (the 64 KB hugeMethodLimit),
+# so each run pays the failed compile, then falls back to per-operator
+# code. ann_topk_pq took 13.2 s as shipped, 8.7 s with whole-stage codegen
+# off and 8.9 s with the lambda form (limit 0); ann_topk_ivf_pq 13.3 /
+# 9.7 / 10.4 s. The limit is left as is until that is settled.
 _UNROLL_MAX_TERMS = 2048
 
 

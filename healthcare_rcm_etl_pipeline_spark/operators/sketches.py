@@ -152,18 +152,3 @@ def kmv_intersect_estimate(a: F.Column, b: F.Column, k: int) -> F.Column:
     return (
         shared.cast("double") / F.size(u).cast("double")
     ) * kmv_distinct_estimate(u, k)
-
-
-def kmv_difference_estimate(a: F.Column, b: F.Column, k: int) -> F.Column:
-    """|A \\ B| ≈ (fraction of the union sketch present in A but not B) ×
-    D(union sketch) — completes the KMV set algebra (union, intersection,
-    difference) from the same per-side sketches; same O(k²) one-row
-    arithmetic as the intersection estimator, same 1/sqrt(k)-on-the-union
-    error envelope."""
-    u = kmv_union(a, b, k)
-    only_a = F.size(
-        F.filter(u, lambda x: F.array_contains(a, x) & ~F.array_contains(b, x))
-    )
-    return (
-        only_a.cast("double") / F.size(u).cast("double")
-    ) * kmv_distinct_estimate(u, k)

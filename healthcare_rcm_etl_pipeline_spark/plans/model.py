@@ -47,7 +47,7 @@ def clean_patients(patients: DataFrame, run_date: str) -> DataFrame:
     for c in ["FirstName", "LastName", "MiddleName"]:
         out = out.withColumn(c, fill_unknown(title_case(F.col(c))))
     return (
-        out.withColumn("Gender", recode_gender(F.col("Gender"), strict=True))
+        out.withColumn("Gender", recode_gender(F.col("Gender")))
         .withColumn("PhoneNumber", F.coalesce(clean_phone(F.col("PhoneNumber")), F.lit("")))
         .withColumn("DOB", F.col("DOB").cast("date"))
         .withColumn("age", age_years(F.col("DOB"), F.to_date(F.lit(run_date))))
@@ -114,37 +114,14 @@ def build_dim_departments(departments_with_sk: DataFrame) -> DataFrame:
     )
 
 
-def build_dim_procedures(
-    transactions: DataFrame, cptcodes: DataFrame | None = None
-) -> DataFrame:
+def build_dim_procedures(transactions: DataFrame) -> DataFrame:
     """dimensional_modeling.py:29-35: distinct non-null codes, ordinal sk,
-    synthetic description. With ``cptcodes`` (the reference's dormant lookup,
-    Data/cptcode/cptcodes.csv), real descriptions are joined in instead —
-    gap-fix over the reference's 'Desc for Code N' placeholder."""
+    synthetic description (the reference never reads its CPT lookup)."""
     codes = transactions.select("ProcedureCode").na.drop().distinct()
     dim = dense_sk(codes, ["ProcedureCode"], sk_col="procedure_sk")
-    if cptcodes is None:
-        return dim.withColumn(
-            "ProcedureDescription",
-            F.concat(F.lit("Desc for Code "), F.col("ProcedureCode").cast("string")),
-        )
-    # try_cast: the lookup carries alphanumeric Category-III codes ('0585T')
-    # that can never match the int ProcedureCode — they drop to null instead
-    # of throwing under ANSI mode.
-    lookup = (
-        cptcodes.select(
-            F.col("CPT Codes").try_cast("int").alias("ProcedureCode"),
-            F.trim(F.col("Procedure Code Descriptions")).alias("ProcedureDescription"),
-        )
-        .na.drop(subset=["ProcedureCode"])
-        .dropDuplicates(["ProcedureCode"])
-    )
-    return dim.join(F.broadcast(lookup), "ProcedureCode", "left").withColumn(
+    return dim.withColumn(
         "ProcedureDescription",
-        F.coalesce(
-            F.col("ProcedureDescription"),
-            F.concat(F.lit("Desc for Code "), F.col("ProcedureCode").cast("string")),
-        ),
+        F.concat(F.lit("Desc for Code "), F.col("ProcedureCode").cast("string")),
     )
 
 

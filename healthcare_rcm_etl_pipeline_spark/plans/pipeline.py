@@ -114,22 +114,14 @@ def run_pipeline(
     staging_dir: str | None = None,
     run_date: str = "2025-08-03",
     existing_dim_patients: DataFrame | None = None,
-    use_cpt_lookup: bool = False,
 ) -> dict[str, DataFrame]:
     """Full batch run; returns {table_name: DataFrame} of dims + facts,
     each an eager checkpoint (see the module docstring). ``reference_root``
-    defaults to ``$HRCM_REFERENCE_ROOT``, then the reference checkout.
-
-    ``use_cpt_lookup``: opt-in enrichment of dim_procedures from the
-    reference's dormant CPT lookup (Data/cptcode/cptcodes.csv — shipped but
-    never read by the reference, dimensional_modeling.py:34 fakes the
-    description instead). Codes found in the lookup get the real CPT
-    description; unknown codes keep the reference's synthetic
-    'Desc for Code N' fallback. Off by default for strict parity."""
+    defaults to ``$HRCM_REFERENCE_ROOT``, then the reference checkout."""
     with job_description(spark, "pipeline.star.build"):
         dims, transactions, claims = _lazy_dims(
             spark, _reference_root(reference_root), staging_dir, run_date,
-            existing_dim_patients, use_cpt_lookup,
+            existing_dim_patients,
         )
 
     # The star is computed once: each table is checkpointed (not persisted —
@@ -194,7 +186,6 @@ def _lazy_dims(
     staging_dir: str | None,
     run_date: str,
     existing_dim_patients: DataFrame | None,
-    use_cpt_lookup: bool,
 ) -> tuple[dict[str, DataFrame], DataFrame, DataFrame]:
     """The five dimensions over the CSVs (dim_patients after SCD2 and
     stable_sk), plus the transactions and enriched claims the facts are built
@@ -204,18 +195,11 @@ def _lazy_dims(
     db_raw, claims_raw = extract(spark, reference_root)
     db, claims = transform(db_raw, claims_raw, run_date)
 
-    cpt = None
-    if use_cpt_lookup:
-        cpt = readers.read_csv(
-            spark,
-            os.path.join(reference_root, "Data", "cptcode", "cptcodes.csv"),
-            schemas.HOSPITAL_TABLE_SCHEMAS["cptcodes"],
-        )
     dims = {
         "dim_patients": model.build_dim_patients(db["patients"]),
         "dim_providers": model.build_dim_providers(db["providers"], db["departments"]),
         "dim_departments": model.build_dim_departments(db["departments"]),
-        "dim_procedures": model.build_dim_procedures(db["transactions"], cptcodes=cpt),
+        "dim_procedures": model.build_dim_procedures(db["transactions"]),
         "dim_date": model.build_dim_date(db["transactions"], db["encounters"]),
     }
 

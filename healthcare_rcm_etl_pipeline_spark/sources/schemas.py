@@ -95,15 +95,6 @@ CLAIMS = T.StructType(
     ]
 )
 
-CPTCODES = T.StructType(
-    [
-        T.StructField("Procedure Code Category", T.StringType()),
-        T.StructField("CPT Codes", T.StringType()),
-        T.StructField("Procedure Code Descriptions", T.StringType()),
-        T.StructField("Code Status", T.StringType()),
-    ]
-)
-
 HOSPITAL_TABLE_SCHEMAS: dict[str, T.StructType] = {
     "patients_a": PATIENTS_A,
     "patients_b": PATIENTS_B,
@@ -112,5 +103,4 @@ HOSPITAL_TABLE_SCHEMAS: dict[str, T.StructType] = {
     "encounters": ENCOUNTERS,
     "transactions": TRANSACTIONS,
     "claims": CLAIMS,
-    "cptcodes": CPTCODES,
 }

@@ -34,8 +34,8 @@ def coerce_dates(df: DataFrame, date_cols: list[str]) -> DataFrame:
     return out
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
 def write_clustered(
@@ -43,7 +43,6 @@ def write_clustered(
     path: str,
     partition_by: list[str] | None = None,
     cluster_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Partitioned + sorted-within-partitions parquet (clustering analog of
     load.py:100-103). repartition on the partition columns first so each
@@ -53,7 +52,7 @@ def write_clustered(
         out = out.repartition(*[F.col(c) for c in partition_by])
     if cluster_by:
         out = out.sortWithinPartitions(*[F.col(c) for c in cluster_by])
-    writer = out.write.mode(mode)
+    writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -399,65 +399,29 @@ class TestWindowedEmbeddingCentroidDrift:
 
 
 class TestWindowedCentroidDriftMalformedCount:
-    """r15 (r14 verdict wrong #3): the monitor's silent exclusion of
-    malformed vectors becomes observable — include_malformed_count=True
-    adds an n_malformed column counted in the SAME single aggregation,
-    and all-malformed windows surface instead of vanishing."""
-
-    def test_malformed_burst_is_counted(self, spark):
-        ref = _wvecs(spark, [(0, [1.0, 0.0])])
-        cur = _wvecs(
-            spark,
-            [(0, [1.0, 0.0]), (0, [5.0]), (0, [1.0, 0.0, 9.0]), (0, None)],
-        )
-        row = quality.windowed_embedding_centroid_drift(
-            ref, cur, "embedding", "label", "ts", "1 hour", dim=2,
-            include_malformed_count=True,
-        ).first()
-        assert row["n_cur"] == 1 and row["n_malformed"] == 3
-        assert row["centroid_cos"] == 1.0  # the good row still scores
-
-    def test_all_malformed_window_surfaces(self, spark):
-        """Default path drops a window with zero valid vectors; the
-        counting path must SURFACE it (n_cur=0, cos NULL) — a total
-        encoder breakage is exactly what the monitor exists to catch."""
-        ref = _wvecs(spark, [(0, [1.0, 0.0])])
-        cur = _wvecs(spark, [(0, [7.0]), (0, None)])
-        assert (
-            quality.windowed_embedding_centroid_drift(
-                ref, cur, "embedding", "label", "ts", "1 hour", dim=2
-            ).count()
-            == 0
-        )
-        row = quality.windowed_embedding_centroid_drift(
-            ref, cur, "embedding", "label", "ts", "1 hour", dim=2,
-            include_malformed_count=True,
-        ).first()
-        assert (row["n_cur"], row["n_malformed"]) == (0, 2)
-        assert row["centroid_cos"] is None
+    """The monitor excludes malformed vectors (NULL or wrong-dim) from
+    every sum and count, and a window with no valid vector emits no row."""
 
     def test_default_schema_and_values_unchanged(self, spark):
-        """The flag defaults off and the registered oracle surface must
-        not move: same columns, same rows, same values."""
-        ref = _wvecs(spark, [(0, [2.0, 0.0]), (1, [0.0, 1.0])])
-        cur = _wvecs(spark, [(0, [1.0, 0.0]), (0, [3.0]), (1, [0.0, 2.0])])
+        """Same columns, same rows, same values as the registered oracle
+        surface; malformed rows never reach a sum, an all-malformed window
+        drops out."""
+        ref = _wvecs(spark, [(0, [2.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.0])])
+        cur = _wvecs(
+            spark,
+            [(0, [1.0, 0.0]), (0, [3.0]), (0, None), (1, [0.0, 2.0]),
+             (2, [7.0]), (2, None)],
+        )
         out = quality.windowed_embedding_centroid_drift(
             ref, cur, "embedding", "label", "ts", "1 hour", dim=2
         )
         assert out.columns == [
             "label", "window_start", "centroid_cos", "n_ref", "n_cur",
         ]
-        counted = quality.windowed_embedding_centroid_drift(
-            ref, cur, "embedding", "label", "ts", "1 hour", dim=2,
-            include_malformed_count=True,
-        )
         assert sorted(
             (r["label"], r["centroid_cos"], r["n_ref"], r["n_cur"])
             for r in out.collect()
-        ) == sorted(
-            (r["label"], r["centroid_cos"], r["n_ref"], r["n_cur"])
-            for r in counted.collect()
-        )
+        ) == [(0, 1.0, 1, 1), (1, 1.0, 1, 1)]
 
     def test_dim_ceiling_asserted(self, spark):
         import pytest as _pytest

@@ -18,11 +18,9 @@ def test_title_case_and_fill(spark):
 
 def test_recode_gender_strict_vs_tolerant(spark):
     df = spark.createDataFrame([("M",), ("f",), ("Male",), ("x",), (None,)], ["g"])
-    strict = [r[0] for r in df.select(cleanse.recode_gender("g", strict=True)).collect()]
+    strict = [r[0] for r in df.select(cleanse.recode_gender("g")).collect()]
     # reference parity: full words collapse to Unknown (transform.py:23-24)
     assert strict == ["Male", "Female", "Unknown", "Unknown", "Unknown"]
-    tol = [r[0] for r in df.select(cleanse.recode_gender("g", strict=False)).collect()]
-    assert tol == ["Male", "Female", "Male", "Unknown", "Unknown"]
 
 
 def test_clean_phone(spark):
@@ -75,9 +73,9 @@ def test_tokens_and_shingles(spark):
     df = spark.createDataFrame([("  The  quick brown fox  ",)], ["t"])
     toks = df.select(text.tokens("t")).collect()[0][0]
     assert toks == ["the", "quick", "brown", "fox"]
-    sh = df.select(text.word_shingles("t", 3)).collect()[0][0]
+    sh = df.select(text.shingles_from_tokens(text.tokens("t"), 3)).collect()[0][0]
     assert sorted(sh) == ["quick brown fox", "the quick brown"]
-    assert df.select(text.word_shingles("t", 5)).collect()[0][0] == []
+    assert df.select(text.shingles_from_tokens(text.tokens("t"), 5)).collect()[0][0] == []
 
 
 def test_langid_markers(spark):

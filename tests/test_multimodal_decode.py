@@ -151,13 +151,6 @@ def test_sample_frames_real_pnm_stream_in_spark(spark):
     assert len(fake) == 1 and not fake[0].decoded
 
 
-def test_audio_and_frames_strict_raise():
-    from healthcare_rcm_etl_pipeline_spark.operators.multimodal import audio_features
-
-    with pytest.raises(NotImplementedError):
-        audio_features(b"OggSwhatever", strict=True)
-
-
 def test_decode_wav_zero_channels_is_value_error_not_crash():
     """A crafted fmt chunk with channels=0 must land in the flagged-fake
     fallback (ValueError), not ZeroDivisionError out of the Spark worker."""

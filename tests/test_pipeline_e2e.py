@@ -11,17 +11,12 @@ a generated tree the expected counts come from the generator's own rows."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from healthcare_rcm_etl_pipeline_spark.operators import quality
-from healthcare_rcm_etl_pipeline_spark.plans.pipeline import _reference_root, run_pipeline
+from healthcare_rcm_etl_pipeline_spark.plans.pipeline import run_pipeline
 from rcmbench.gen import CLAIM_COLS, ENCOUNTER_COLS, PATIENT_COLS_A, TRANSACTION_COLS
-
-# the reference seed's CPT lookup; generated source trees write none
-CPT_LOOKUP = os.path.join(_reference_root(None), "Data", "cptcode", "cptcodes.csv")
 
 GOLDEN_SCHEMAS = {
     # column sets of /root/reference/Analysis/staging/*.parquet (SURVEY §5)
@@ -164,28 +159,3 @@ def test_scd_first_run_stamping(star):
     dp = star["dim_patients"]
     assert dp.filter(~F.col("is_current")).count() == 0
     assert {r[0] for r in dp.select("version").distinct().collect()} == {1}
-
-
-@pytest.mark.skipif(not os.path.exists(CPT_LOOKUP), reason=f"no CPT lookup at {CPT_LOOKUP}")
-def test_cpt_lookup_enrichment_opt_in(spark):
-    """use_cpt_lookup=True joins the reference's dormant CPT lookup
-    (Data/cptcode/cptcodes.csv — shipped but never read by the reference,
-    dimensional_modeling.py:34): codes present in the lookup get the real
-    CPT description, the rest keep the synthetic 'Desc for Code N'
-    fallback, and the sk assignment is identical either way."""
-    star = run_pipeline(spark, run_date="2025-08-03", use_cpt_lookup=True)
-    dim = star["dim_procedures"]
-    assert dim.count() == 996
-    real = dim.filter(~F.col("ProcedureDescription").startswith("Desc for Code"))
-    fake = dim.filter(F.col("ProcedureDescription").startswith("Desc for Code"))
-    # 12 of the 996 seed procedure codes exist in the CPT lookup
-    assert real.count() == 12
-    assert fake.count() == 984
-    assert dim.filter(F.col("ProcedureDescription").isNull()).count() == 0
-    # enrichment must not disturb the surrogate keys
-    base = run_pipeline(spark, run_date="2025-08-03")["dim_procedures"]
-    assert sorted(
-        (r.ProcedureCode, r.procedure_sk) for r in dim.select("ProcedureCode", "procedure_sk").collect()
-    ) == sorted(
-        (r.ProcedureCode, r.procedure_sk) for r in base.select("ProcedureCode", "procedure_sk").collect()
-    )

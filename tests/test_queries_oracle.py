@@ -69,16 +69,9 @@ def test_query_matches_oracle(name, spark, duck, hospital_sources):
     assert sset == dset, f"{name}: value mismatch, first diffs: {mism}"
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run_and_repeat(name, spark):
-    # no oracle for engine-internal-hash ops — determinism across fresh
-    # plans is the correctness evidence the driver's rows-only check leans on
-    a = QUERIES[name](spark, SF_DIR)
-    b = QUERIES[name](spark, SF_DIR)
-    assert len(a.columns) > 0
-    ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
-    assert ra == rb and len(ra) >= 0
+def test_every_registered_query_has_an_oracle():
+    # a query without an oracle would only be run, never value-checked
+    assert set(QUERIES) - set(ORACLES) == set()
 
 
 def test_kmeans_inertia_half_way_sum_matches_oracle(spark, tmp_path):

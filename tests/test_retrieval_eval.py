@@ -66,6 +66,17 @@ def test_rank_cutoff_excludes_deep_hits(spark):
     # so ndcg = disc[4]/disc[1] = log2(2)/log2(5)
     assert at4["n_hits"] == 1
     assert at4["ndcg"] == pytest.approx(math.log2(2) / math.log2(5), abs=2e-6)
+    # below the domain: NULL and sub-1 ranks are excluded, and a query whose
+    # every result row is malformed does not appear
+    bad = spark.createDataFrame(
+        [(1, 13, 1), (1, 11, 0), (1, 12, None), (2, 20, -3), (2, 21, None)],
+        "query_id long, neighbor_id long, rank int",
+    )
+    out = retrieval_eval(bad, qrels, k=3)
+    assert out.columns == ["query_id", "ndcg", "recall", "mrr", "n_hits"]
+    assert [(r["query_id"], r["ndcg"], r["n_hits"]) for r in out.collect()] == [
+        (1, 1.0, 1)
+    ]
 
 
 def test_mrr_uses_first_relevant_rank(spark):
@@ -78,45 +89,3 @@ def test_mrr_uses_first_relevant_rank(spark):
     )
     (row,) = retrieval_eval(results, qrels, k=3).collect()
     assert row["mrr"] == 0.5
-
-
-def test_malformed_rank_count_surfaces(spark):
-    """r15 (r14 verdict wrong #3): the NULL/sub-1 rank exclusion becomes
-    observable — include_malformed_count adds n_malformed per query, an
-    all-malformed query surfaces with zero metrics instead of vanishing,
-    and the default schema/values are unchanged."""
-    results = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 0), (1, 12, None), (2, 20, -3), (2, 21, None)],
-        "query_id long, neighbor_id long, rank int",
-    )
-    qrels = spark.createDataFrame(
-        [(1, 10, 2)], "query_id long, neighbor_id long, grade int"
-    )
-    # default: query 2 (all-malformed) vanishes, schema unchanged
-    base = retrieval_eval(results, qrels, k=3)
-    assert base.columns == ["query_id", "ndcg", "recall", "mrr", "n_hits"]
-    assert [r["query_id"] for r in base.collect()] == [1]
-
-    counted = {
-        r["query_id"]: r
-        for r in retrieval_eval(
-            results, qrels, k=3, include_malformed_count=True
-        ).collect()
-    }
-    assert counted[1]["n_malformed"] == 2  # rank 0 + rank NULL
-    assert counted[1]["ndcg"] == 1.0 and counted[1]["n_hits"] == 1
-    assert counted[2]["n_malformed"] == 2  # the broken-ranker tell
-    assert (
-        counted[2]["ndcg"],
-        counted[2]["recall"],
-        counted[2]["mrr"],
-        counted[2]["n_hits"],
-    ) == (0.0, 0.0, 0.0, 0)
-    # ranks past k are contract-ignored, NOT malformed
-    deep = spark.createDataFrame(
-        [(1, 10, 1), (1, 13, 9)], "query_id long, neighbor_id long, rank int"
-    )
-    (row,) = retrieval_eval(
-        deep, qrels, k=3, include_malformed_count=True
-    ).collect()
-    assert row["n_malformed"] == 0

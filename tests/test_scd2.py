@@ -153,9 +153,6 @@ def test_pit_fact_before_first_version(spark):
     facts = _facts(spark, [(1, "p2", D(2024, 1, 1)), (2, "p2", D(2024, 3, 2))])
     inner = point_in_time_join(facts, _pit_dim(spark), "pid", "ts")
     assert [r.fid for r in inner.collect()] == [2]
-    left = point_in_time_join(facts, _pit_dim(spark), "pid", "ts", how="left")
-    rows = {r.fid: r.version for r in left.collect()}
-    assert rows == {1: None, 2: 1}
 
 
 def test_pit_at_most_one_match_per_fact(spark):

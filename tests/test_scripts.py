@@ -2,7 +2,8 @@
 (measurements go through rcmbench's tracer, not a fresh probe per round),
 and every package name a kept script imports or reads off an imported
 package module still exists, so an API change breaks this test instead of
-silently breaking a tool nothing else runs."""
+silently breaking a tool nothing else runs. A third guard keeps boolean
+switches that only tests set out of the package."""
 
 from __future__ import annotations
 
@@ -71,3 +72,78 @@ def test_script_package_names_resolve(script):
         and not _is_module(f"{module}.{name}")
     ]
     assert missing == []
+
+
+# Non-test code: every caller a package switch can have outside tests/.
+CALLER_ROOTS = (PKG, "bench.py", "rcmbench", "scripts", "__spark_entry__.py", "closeout.py")
+
+# Boolean switches no non-test caller sets, kept on purpose.
+TEST_ONLY_SWITCHES_KEPT = {
+    ("backfill_label_twin", "steal_lock"): "operator lock-recovery escape hatch "
+    "(the lock-held error tells the operator to pass it)",
+    ("purge_ids", "steal_lock"): "operator lock-recovery escape hatch",
+    ("compact_epochs", "steal_lock"): "operator lock-recovery escape hatch",
+}
+
+
+def _py_files(root: str) -> list[str]:
+    path = os.path.join(REPO, root)
+    if path.endswith(".py"):
+        return [path]
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs if f.endswith(".py")
+    )
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
+def _bool_switches() -> list[tuple[str, str, int | None]]:
+    """(function, parameter, position or None if keyword-only) for every
+    package parameter whose default is True or False."""
+    out = []
+    for path in _py_files(PKG):
+        for fn in ast.walk(_parse(path)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            defaulted = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+            for arg, d in defaulted + list(zip(a.kwonlyargs, a.kw_defaults)):
+                if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                    i = pos.index(arg) if arg in pos else None
+                    out.append((fn.name, arg.arg, i))
+    return out
+
+
+def _sets(call: ast.Call, param: str, position: int | None) -> bool:
+    """Whether a call may set the parameter: by keyword, by position, or
+    through */** unpacking (which this scan cannot see into)."""
+    if any(k.arg in (param, None) for k in call.keywords):
+        return True
+    if any(isinstance(x, ast.Starred) for x in call.args):
+        return True
+    return position is not None and len(call.args) > position
+
+
+def test_no_boolean_switch_only_tests_set():
+    calls: dict[str, list[ast.Call]] = {}
+    for root in CALLER_ROOTS:
+        for path in _py_files(root):
+            for node in ast.walk(_parse(path)):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = getattr(f, "id", None) or getattr(f, "attr", None)
+                    calls.setdefault(name, []).append(node)
+    unset = sorted(
+        f"{fn}({param}=...)"
+        for fn, param, position in _bool_switches()
+        if (fn, param) not in TEST_ONLY_SWITCHES_KEPT
+        and not any(_sets(c, param, position) for c in calls.get(fn, []))
+    )
+    assert unset == [], (
+        "boolean switches no non-test caller sets (keep the branch production "
+        "takes and delete the rest, or allowlist with a reason): " + ", ".join(unset)
+    )

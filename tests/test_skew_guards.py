@@ -84,11 +84,10 @@ def _mk_stop_shingle_docs(spark):
     return spark.createDataFrame(rows)
 
 
-@pytest.mark.parametrize("cap_mode", ["window", "antijoin", "filter"])
-def test_max_df_drops_stop_shingle_keeps_true_pairs(spark, cap_mode):
+def test_max_df_drops_stop_shingle_keeps_true_pairs(spark):
     docs = _mk_stop_shingle_docs(spark)
     pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", threshold=0.5, max_df=5, cap_mode=cap_mode
+        docs, "text", "doc_id", threshold=0.5, max_df=5
     ).collect()
     # the stop-shingle (df=32 > 5) is dropped BEFORE pair emission: no pair
     # exists whose only overlap is the stop-phrase — the 32*31/2 blowup from
