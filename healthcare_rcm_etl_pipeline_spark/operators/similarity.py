@@ -577,34 +577,13 @@ def lsh_bucket_topk(
 # tail with an exact rerank of a short ADC list (the standard two-stage).
 
 
-# max total multiply-add terms (m x k_cb x sub_dim) to UNROLL into plain
-# codegen'd arithmetic: the recommended code budgets (~1-2 bits/dim, e.g.
-# 32x16x2 or 16x16x4 = 1024 terms) compile fast and run ~20x quicker than
-# the interpreted lambda form, but a degenerate codebook (k_cb ~ corpus
-# size) unrolls to tens of thousands of terms and Janino OOMs the driver
-# compiling the projection — those fall back to the compact
-# zip_with/aggregate form (interpreted per evaluation, but correctness
-# configs like that only appear in tests/audits).
-# Measured (sf0.01, 4-core local session, warm, median of 3 noop writes):
-# at the registered 32x16x2 = 1024 terms, pq_fit's Lloyd aggregate (the
-# CASE over 32 argmins) and pq_encode's projection do not fit one method —
-# Janino fails with "Code grows beyond 64 KB" (the 64 KB hugeMethodLimit),
-# so each run pays the failed compile, then falls back to per-operator
-# code. ann_topk_pq took 13.2 s as shipped, 8.7 s with whole-stage codegen
-# off and 8.9 s with the lambda form (limit 0); ann_topk_ivf_pq 13.3 /
-# 9.7 / 10.4 s. The limit is left as is until that is settled.
-_UNROLL_MAX_TERMS = 2048
-
-
 def _dlit(x: float) -> str:
     # exact double literal for SQL text: repr round-trips, the string cast
     # parses it back to the identical double in Spark and DuckDB alike
     return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
-def _sq_dist_sql(
-    col: str, centroid: list[float], offset: int = 0, unroll: bool = True
-) -> str:
+def _sq_dist_sql(col: str, centroid: list[float], offset: int = 0) -> str:
     """SQL text for the squared L2 distance between
     col[offset : offset+len(centroid)] and a literal centroid.
 
@@ -615,50 +594,35 @@ def _sq_dist_sql(
     (the data itself was 20 rows). One ``F.expr`` per projection column
     parses JVM-side in milliseconds and yields the identical tree.
 
-    ``unroll=True``: plain multiply-adds over element_at — whole-stage
-    codegen'd. ``unroll=False``: the compact zip_with/aggregate lambda
-    form (interpreted per evaluation, but its generated code is tiny) for
-    oversized codebooks — Janino OOMs compiling tens of thousands of
-    unrolled terms (see _UNROLL_MAX_TERMS). Both forms fold terms
-    left-to-right and cast elements individually, so they produce
-    bit-identical doubles. ``col`` must name a materialized array column
-    (raw float vector is fine)."""
-    if not unroll:
-        lits = ", ".join(_dlit(x) for x in centroid)
-        sub = f"slice(`{col}`, {offset + 1}, {len(centroid)})"
-        return (
-            f"aggregate(zip_with({sub}, array({lits}), "
-            "(a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-    terms = " + ".join(
-        f"(CAST(element_at(`{col}`, {offset + i + 1}) AS DOUBLE) - {_dlit(x)}) * "
-        f"(CAST(element_at(`{col}`, {offset + i + 1}) AS DOUBLE) - {_dlit(x)})"
-        for i, x in enumerate(centroid)
+    The compact zip_with/aggregate lambda form: elements cast one by one,
+    terms folded left-to-right from 0.0. Its generated code stays small
+    at any codebook size. The unrolled multiply-add form it replaced did
+    not: at the registered 32x16x2 config pq_fit's Lloyd aggregate and
+    pq_encode's projection grew past Janino's 64 KB method limit and fell
+    back to per-operator code, so ``ann_topk_pq`` took 13.2 s against
+    this form's 8.9 s, and ``ann_topk_ivf_pq`` 13.3 s against 10.4 s
+    (sf0.01, 4-core local session, warm, median of 3). ``col`` must name
+    a materialized array column (raw float vector is fine)."""
+    lits = ", ".join(_dlit(x) for x in centroid)
+    sub = f"slice(`{col}`, {offset + 1}, {len(centroid)})"
+    return (
+        f"aggregate(zip_with({sub}, array({lits}), "
+        "(a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     )
-    return f"({terms})"
 
 
-def _argmin_sql(
-    col: str, codebook: list[list[float]], offset: int = 0, unroll: bool = True
-) -> str:
+def _argmin_sql(col: str, codebook: list[list[float]], offset: int = 0) -> str:
     """SQL text for the index of the nearest codebook centroid (ties ->
     lowest code). array_max over (negated-distance, negated-code) structs
     compares field-wise, so the max struct is the min distance, then the
     min code — the same device as ``_cell_scores``."""
     structs = ", ".join(
-        f"struct(round(-{_sq_dist_sql(col, c, offset, unroll)}, 9) AS negd, "
+        f"struct(round(-{_sq_dist_sql(col, c, offset)}, 9) AS negd, "
         f"{-ci} AS negc)"
         for ci, c in enumerate(codebook)
     )
     return f"CAST(-(array_max(array({structs})).negc) AS INT)"
-
-
-def _pq_unroll(codebooks: list[list[list[float]]]) -> bool:
-    m = len(codebooks)
-    k_cb = len(codebooks[0])
-    sub_dim = len(codebooks[0][0])
-    return m * k_cb * sub_dim <= _UNROLL_MAX_TERMS
 
 
 # Seed-candidate oversampling factor: the hash-threshold prefilter in
@@ -767,10 +731,9 @@ def pq_fit(
     for j, b in enumerate(books):
         if len(b) < k_cb:  # corpus smaller than k_cb: pad by repeating
             books[j] = (b * k_cb)[:k_cb]
-    unroll = m * k_cb * sub_dim <= _UNROLL_MAX_TERMS
     for _ in range(iters):
         case = "CASE " + " ".join(
-            f"WHEN j = {j} THEN {_argmin_sql('s', books[j], unroll=unroll)}"
+            f"WHEN j = {j} THEN {_argmin_sql('s', books[j])}"
             for j in range(m)
         ) + " END"
         rows = (
@@ -808,11 +771,10 @@ def pq_encode(
     relation instead of the float vectors."""
     m = len(codebooks)
     sub_dim = len(codebooks[0][0])
-    unroll = _pq_unroll(codebooks)
     codes = F.expr(
         "array("
         + ", ".join(
-            _argmin_sql(vec_col, codebooks[j], offset=j * sub_dim, unroll=unroll)
+            _argmin_sql(vec_col, codebooks[j], offset=j * sub_dim)
             for j in range(m)
         )
         + ")"

@@ -40,6 +40,11 @@ entity) run this protocol through ONE skeleton, ``_epoch_batch_fn``, and
 supply only their probe and delta logic; ``ingest_stream`` drives any of
 them from a stream. (``events.make_upsert_batch_fn`` keeps its own bare
 integer marker: no run token, no rebind.)
+
+The label states (``components/``, ``entities/``) are stored once,
+range-sorted on ``doc``. Bases written before that still hold
+component-sorted ``components_by_label/`` / ``entities_by_label/`` copies;
+nothing reads, purges or compacts those dirs, so they are simply ignored.
 """
 
 from __future__ import annotations
@@ -140,7 +145,7 @@ def _range_sorted(df: DataFrame, *cols: str) -> DataFrame:
     """Range-partition + sort a state relation on its probe key before the
     epoch write, so every parquet file covers a NARROW key range and a
     later literal point probe (``isin`` over collected keys —
-    ``read_band_index_for`` / ``read_chunk_state_for``) is pruned to the
+    ``_literal_pruned``) is pruned to the
     matching files/row groups by footer min/max stats instead of scanning
     the whole accumulated state. Costs one sampled range exchange per
     epoch write; buys state-size-independent point lookups."""
@@ -225,18 +230,18 @@ def read_band_index_for(
     max_epoch: int | None = None,
 ) -> DataFrame | None:
     """Point-lookup view of the band index: only rows whose band-hash
-    matches one of the probe's keys. The keys are COLLECTED (bounded:
-    probe docs × bands values) and applied as a literal ``In(bh, ...)``
-    predicate, which reaches the parquet scan (PushedFilters) and — the
-    state being range-sorted on ``bh`` at write time — prunes to the
-    matching files/row groups. Keeping a same-bh row from a different
-    band is harmless (the bucket key downstream is (band, bh)); dropping
-    any row with a non-probe bh is exact (it can never share a bucket
-    with the probe). Scan cost tracks the PROBE's key count, not the
-    corpus."""
-    keys = [r[0] for r in probe_bands.select("bh").distinct().collect()]
+    matches one of the probe's keys. Up to ``_PROBE_LITERAL_MAX`` distinct
+    keys are collected and applied as a literal ``In(bh, ...)`` predicate
+    (``_literal_pruned``), which reaches the parquet scan (PushedFilters)
+    and — the state being range-sorted on ``bh`` at write time — prunes
+    to the matching files/row groups; a bigger probe gets the whole index
+    back, and the join prune inside ``minhash_lsh_pairs_incremental``
+    does the work. Keeping a same-bh row from a different band is
+    harmless (the bucket key downstream is (band, bh)); dropping any row
+    with a non-probe bh is exact (it can never share a bucket with the
+    probe). Scan cost tracks the PROBE's key count, not the corpus."""
     idx = read_band_index(spark, base, max_epoch)
-    return None if idx is None else idx.filter(_in_literals("bh", keys))
+    return None if idx is None else _literal_pruned(idx, probe_bands, "bh")
 
 
 def _doc_fetch(spark: SparkSession, base: str, id_col: str, last: int):
@@ -363,12 +368,12 @@ def _epoch_batch_fn(
       merged into the label state here (``_merge_label_state``).
     - ``write``: every delta dataset OVERWRITES its ``epoch=N`` directory,
       range-sorted on its probe key — idempotent on replay — then the
-      label delta under both sort orders (``_write_label_delta``). The
-      delta's ``pin`` is persisted around these writes.
+      label delta, doc-sorted (``_write_label_delta``). The delta's
+      ``pin`` is persisted around these writes.
     - ``commit``: the marker advances, last.
     - ``fold`` (label families, every ``compact_labels_every`` committed
       epochs): opt-in self-maintenance, ``compact_epochs`` over the label
-      state pair (see ``make_component_ingest_batch_fn``).
+      state (see ``make_component_ingest_batch_fn``).
 
     Each step's jobs carry the Spark job description
     ``ingest.<family>.<step>``; the seconds of the steps that ran land on
@@ -415,12 +420,7 @@ def _epoch_batch_fn(
             # killing the streaming query (r14 ADVICE medium).
             with _step(spark, family, "fold", steps):
                 try:
-                    compact_epochs(
-                        spark,
-                        base,
-                        datasets=(labels, f"{labels}_by_label"),
-                        owner=bound,
-                    )
+                    compact_epochs(spark, base, datasets=(labels,), owner=bound)
                 except MaintenanceLockHeld as exc:
                     warnings.warn(
                         f"cadence label fold deferred at epoch {physical}: {exc}",
@@ -665,16 +665,14 @@ _DATASETS = (
     "vectors",
     "chunks",
     "components",
-    "components_by_label",
     "rows",
     "variants",
     "entities",
-    "entities_by_label",
 )
 
 # label-state datasets: rows supersede per doc across epochs
 # (latest-epoch-wins), compaction resolves + re-sorts, tiered mode skips
-_LABEL_STATES = ("components", "components_by_label", "entities", "entities_by_label")
+_LABEL_STATES = ("components", "entities")
 _MAINT_LOCK = "_MAINT_LOCK"
 
 
@@ -686,21 +684,6 @@ def read_chunk_state(
     return _read_epoched(spark, f"{base}/chunks", max_epoch)
 
 
-def read_chunk_state_for(
-    spark: SparkSession,
-    base: str,
-    chunk_keys: list,
-    max_epoch: int | None = None,
-) -> DataFrame | None:
-    """Point-lookup view of the keeper-chunk state: only rows whose chunk
-    text matches one of the given keys, via a literal ``In(chunk, ...)``
-    predicate the range-sorted state files prune against (same device as
-    ``read_band_index_for``). ``chunk_keys`` must be a BOUNDED list — a
-    few probe docs' chunks, not a large batch's."""
-    st = read_chunk_state(spark, base, max_epoch)
-    return None if st is None else st.filter(_in_literals("chunk", chunk_keys))
-
-
 def probe_chunk_rewrite(
     spark: SparkSession,
     base: str,
@@ -710,11 +693,13 @@ def probe_chunk_rewrite(
     chunk_tokens: int = 15,
 ) -> DataFrame:
     """Serve "how would these documents be rewritten against the corpus?"
-    as a POINT LOOKUP: the probe docs' chunk keys (collected — bounded by
-    docs × chunks/doc) prune the persisted keeper-chunk state scan, then
-    the standard incremental rewrite runs against that pruned slice.
-    Output ≡ ``chunk_dedup_rewrite_incremental(docs, full state)`` exactly
-    (a state row whose chunk is not among the probe's keys cannot affect
+    as a POINT LOOKUP: up to ``_PROBE_LITERAL_MAX`` distinct chunk keys of
+    the probe docs prune the persisted keeper-chunk state scan as a
+    literal ``In(chunk, ...)`` (``_literal_pruned``; above the bound the
+    rewrite's own anti-join is the only prune), then the standard
+    incremental rewrite runs against that pruned slice. Output ≡
+    ``chunk_dedup_rewrite_incremental(docs, full state)`` exactly (a
+    state row whose chunk is not among the probe's keys cannot affect
     the anti-join). Read-only: state is NOT mutated — the serving twin of
     ``make_chunk_ingest_batch_fn`` step 1."""
     from healthcare_rcm_etl_pipeline_spark.operators.corpus import (
@@ -722,15 +707,12 @@ def probe_chunk_rewrite(
         chunk_dedup_rewrite_incremental,
     )
 
-    occ = _chunk_occurrences(docs_df, text_col, id_col, chunk_tokens)
-    keys = [
-        r[0]
-        for r in occ.filter(F.col("__chunk").isNotNull())
-        .select("__chunk")
-        .distinct()
-        .collect()
-    ]
-    state = read_chunk_state_for(spark, base, keys, max_epoch=_read_epoch(spark, base))
+    state = read_chunk_state(spark, base, max_epoch=_read_epoch(spark, base))
+    if state is not None:
+        keys = _chunk_occurrences(docs_df, text_col, id_col, chunk_tokens).select(
+            F.col("__chunk").alias("chunk")
+        )
+        state = _literal_pruned(state, keys, "chunk")
     rewritten, _ = chunk_dedup_rewrite_incremental(
         docs_df, state, text_col, id_col, chunk_tokens=chunk_tokens
     )
@@ -820,35 +802,18 @@ def read_labels(
     return df.groupBy("doc").agg(F.max_by("component", "epoch").alias("component"))
 
 
-def _affected_component_slice(
-    state: DataFrame, nodes: DataFrame, state_by_label: DataFrame | None = None
-) -> DataFrame:
+def _affected_component_slice(state: DataFrame, nodes: DataFrame) -> DataFrame:
     """Every state row of every component touched by ``nodes`` — the slice
     incremental CC needs. Scan ONE (live labels of the node set) is a
     point lookup: the node ids inline as a pushed-down ``In(doc, ...)``
     literal over the doc-range-sorted state (``_literal_pruned`` — file/
     row-group pruning via footer stats; semi-join fallback above the
     literal bound keeps the plan bounded for huge batches). Scan TWO
-    (rows of the touched components) runs against the COMPONENT-sorted
-    state twin (``components_by_label/`` — same delta rows per epoch,
-    range-sorted on ``component`` at write time) when the caller passes
-    one — the batch path gates this on accumulated state size
-    (``_TWIN_MIN_BYTES``): the touched-label set is bounded (<= the
-    pair-node count), so it inlines as a pushed-down ``In(component,
-    ...)`` literal and footer min/max stats prune to the matching row
-    groups — per-batch state DATA read tracks the touched neighborhood,
-    not the accumulated label state. The broadcast semi-join stays as
-    the exactness layer (and the sole prune above the literal bound).
-    With ``state_by_label=None`` (small states below the gate, pre-twin
-    bases) scan TWO is the bare semi-join over the main state — measured
-    faster below the gate (probe r13).
-
-    The literal applies to the TWIN ONLY: pushing ``In(component, ...)``
-    into the doc-sorted main state is measurably harmful (probe r13:
-    per-row filter evaluation with no row-group skip — the labels are
-    decorrelated from the doc sort, so min/max can't prune — ran 6x
-    SLOWER than the bare semi-join at 128M state rows), so the
-    no-twin fallback keeps the r12 semi-join shape.
+    (rows of the touched components) is a broadcast semi-join of the
+    touched-label set over the state. No ``In(component, ...)`` literal
+    is pushed there: the labels are decorrelated from the doc sort, so
+    footer min/max cannot prune, and per-row filter evaluation ran 6x
+    SLOWER than the bare semi-join at 128M state rows (SCALE.md r13).
 
     Cross-epoch exactness (why no latest-epoch-wins is needed here): a
     doc's label only changes when its whole component merges, so every
@@ -861,155 +826,17 @@ def _affected_component_slice(
         .join(F.broadcast(nodes), "doc", "left_semi")
         .groupBy("doc")
         .agg(F.max_by("component", "epoch").alias("component"))
-        # node-bounded by construction; pinning it keeps the touched-label
-        # collect below from re-running scan ONE
+        # node-bounded by construction; pinning it keeps each re-read of
+        # the slice (the CC merge, the known-doc guard) from re-running
+        # scan ONE
         .localCheckpoint(eager=True)
     )
     touched = live_mine.select("component").distinct()
-    side = state_by_label if state_by_label is not None else state
-    if state_by_label is not None:
-        side = _literal_pruned(side, touched, "component")
     return (
-        side.join(F.broadcast(touched), "component", "left_semi")
+        state.join(F.broadcast(touched), "component", "left_semi")
         .select("doc", "component")
         .distinct()
     )
-
-
-# Twin-path gate — recalibrated from MEASUREMENT past the gate (r14,
-# scripts/probe_twin_gate_r14.py, last present at 2cde84b; the r13 8-GiB
-# constant was an
-# extrapolated crossover that the r14 probe showed incomplete): the two
-# paths grow on DIFFERENT axes. The semi-join's cost tracks state BYTES
-# (it decompresses the whole accumulated state every batch: 3.5 s at
-# 3.7 GiB -> 8.1 s at 9.3 GiB, ~0.8 s/GiB). The twin fetch's cost tracks
-# its FILE count (~1.5 ms/file of footer + task overhead; the pushed
-# literal makes the data read neighborhood-sized): on an UNMAINTAINED
-# base whose epoch count grows with the state (~1.9 MB mean file), the
-# twin never pays — 8.7 s vs the semi-join's 8.1 s even at 9.3 GiB —
-# while on a COMPACTED base (10 epochs, 27 MB mean file, same 1.28B rows)
-# the twin wins 3.1x (1.44 s vs 4.40 s). So the gate requires BOTH: the
-# byte floor (below it the semi-join is measured faster everywhere) and a
-# compacted twin (mean file size >= _TWIN_MIN_MEAN_FILE_BYTES = 16 MiB —
-# between the measured losing 1.9 MB and winning 27 MB regimes; at
-# 16 MiB/file the twin's per-file term costs ~0.1 s/GiB vs the
-# semi-join's ~0.8 s/GiB decompress, 8x headroom). compact_epochs is the
-# lever that raises mean file size — maintenance is what ARMS the index,
-# and it clears these caches on completion. The twin is WRITTEN from the
-# first epoch either way — delta-sized, so the index is ready when the
-# state crosses the gate.
-_TWIN_MIN_BYTES = 8 << 30
-_TWIN_MIN_MEAN_FILE_BYTES = 16 << 20
-
-# Size-gate cache (per twin path): getContentSummary is a recursive
-# O(files) listing — on an object store that is one full tree walk PER
-# MICRO-BATCH once the twin exists, growing with epoch count. The gate is
-# sticky once crossed (label states only ever append between maintenance
-# ops; maintenance clears the cache via _reset_twin_caches) and below the
-# gate re-lists only every _TWIN_RECHECK_EVERY batches — a late gate
-# crossing costs at most that many batches on the (measured-faster-below-
-# the-gate) semi-join plan, never correctness.
-_TWIN_RECHECK_EVERY = 8
-_TWIN_GATE_MEMO: dict[str, dict] = {}
-
-# Twin completeness marker: scan TWO may serve from the twin ONLY if the
-# twin covers every committed epoch of the main state. A base created
-# before the twin existed gets a PARTIAL twin (only post-upgrade epochs
-# are double-written); reading it would silently drop pre-upgrade members
-# of touched components and merge incremental CC on an incomplete slice.
-# The marker is written at twin CREATION: "complete" when the twin is
-# born together with the state (fresh base), "partial <epoch>" when the
-# state pre-existed. Marker-less twins (pre-r14 bases, or a crash between
-# the twin's first write and the marker) are conservatively PARTIAL —
-# run backfill_label_twin to prove completeness.
-_TWIN_SINCE = "_TWIN_SINCE"
-_TWIN_COMPLETE_MEMO: dict[str, bool] = {}
-
-
-def _reset_twin_caches() -> None:
-    """Drop the per-process twin gate/completeness caches — called by the
-    maintenance ops (purge/compact/recover/backfill), which are the only
-    writers that can shrink the twin or change its coverage."""
-    _TWIN_GATE_MEMO.clear()
-    _TWIN_COMPLETE_MEMO.clear()
-
-
-def _twin_worth_probing(spark: SparkSession, twin_path: str) -> bool:
-    memo = _TWIN_GATE_MEMO.setdefault(twin_path, {"crossed": False, "since": 0})
-    if memo["crossed"]:
-        return True
-    if memo["since"] > 0:
-        memo["since"] -= 1
-        return False
-    memo["since"] = _TWIN_RECHECK_EVERY - 1
-    if not sinks.path_exists(spark, twin_path):
-        return False
-    fs, _ = sinks._fs_path(spark, twin_path)
-    summ = fs.getContentSummary(_jpath(spark, twin_path))
-    length, files = summ.getLength(), summ.getFileCount()
-    memo["crossed"] = bool(
-        length >= _TWIN_MIN_BYTES
-        and length >= files * _TWIN_MIN_MEAN_FILE_BYTES
-    )
-    return memo["crossed"]
-
-
-def _twin_complete(spark: SparkSession, base: str, name: str) -> bool:
-    """True iff the component-sorted twin provably covers every committed
-    epoch of the main state (the _TWIN_SINCE contract above). Sticky-True
-    per process: completeness is only ever GAINED (appends write both
-    sides; maintenance rewrites both sides and clears the memo)."""
-    key = f"{base}/{name}"
-    if _TWIN_COMPLETE_MEMO.get(key):
-        return True
-    marker = sinks.read_text_marker(
-        spark, f"{base}/{name}_by_label/{_TWIN_SINCE}", ""
-    )
-    ok = marker.strip() == "complete"
-    if ok:
-        _TWIN_COMPLETE_MEMO[key] = True
-    return ok
-
-
-def backfill_label_twin(
-    spark: SparkSession, base: str, name: str, steal_lock: bool = False
-) -> int:
-    """Build (or complete) the component-sorted twin of label state
-    ``{base}/{name}`` from the main state — the upgrade path for bases
-    created before the twin existed, whose partial twin scan TWO must not
-    read (``_twin_complete``). Copies every committed state epoch the twin
-    is missing (re-sorted on ``component`` so the ``In(component, ...)``
-    literal's row-group pruning holds), then stamps the twin "complete".
-    One O(missing epochs) job under the maintenance lock — the honest
-    one-time cost of building an index over pre-existing data.
-    Returns the number of epoch partitions copied."""
-    fs, lock = _acquire_maintenance_lock(spark, base, steal_lock)
-    try:
-        recover_base(spark, base, ignore_lock=True)
-        state_root = f"{base}/{name}"
-        twin_root = f"{base}/{name}_by_label"
-        last = _read_epoch(spark, base)
-        copied = 0
-        if sinks.path_exists(spark, state_root):
-            listing = fs.listStatus(_jpath(spark, state_root))
-            for st in listing:
-                d = st.getPath().getName()
-                if not (st.isDirectory() and d.startswith("epoch=")):
-                    continue
-                if int(d.split("=")[1]) > last:
-                    continue  # uncommitted ghost: replay overwrites both sides
-                if sinks.path_exists(spark, f"{twin_root}/{d}"):
-                    continue  # already double-written
-                part = spark.read.parquet(f"{state_root}/{d}")
-                _range_sorted(part, "component").write.mode("overwrite").parquet(
-                    f"{twin_root}/{d}"
-                )
-                copied += 1
-        sinks.write_text_marker(spark, f"{twin_root}/{_TWIN_SINCE}", "complete")
-        _reset_twin_caches()
-        return copied
-    finally:
-        _release_maintenance_lock(spark, fs, lock)
 
 
 def _merge_label_state(
@@ -1020,8 +847,7 @@ def _merge_label_state(
     last: int,
 ) -> DataFrame:
     """Merge a micro-batch's pair set into the accumulated label state at
-    ``{base}/{name}`` (doc-sorted; component-sorted twin at
-    ``{base}/{name}_by_label``) and return the epoch's label DELTA
+    ``{base}/{name}`` (doc-sorted) and return the epoch's label DELTA
     (doc, component) — the incremental-CC core shared by the
     component-labeling and entity-resolution ingest paths (both states
     carry the generic (doc, component, epoch) schema; for entities,
@@ -1029,90 +855,36 @@ def _merge_label_state(
 
     Only the AFFECTED slice of the state feeds the merge
     (``_affected_component_slice`` — scan ONE point lookup on doc, scan
-    TWO file-pruned via the twin), and the purged-id resurrection guard
-    applies: a purged doc's id can survive as other members' component
-    VALUE (labels are opaque group keys), star contraction treats label
-    values as graph nodes, so the merge keeps only rows for docs known to
-    exist — state members of the affected components plus this batch's
-    pair nodes (a LIVE label node always has its own state row, so
-    normal runs lose nothing)."""
-    state_path = f"{base}/{name}"
-    twin_path = f"{base}/{name}_by_label"
+    TWO semi-join on the touched labels), and the purged-id resurrection
+    guard applies: a purged doc's id can survive as other members'
+    component VALUE (labels are opaque group keys), star contraction
+    treats label values as graph nodes, so the merge keeps only rows for
+    docs known to exist — state members of the affected components plus
+    this batch's pair nodes (a LIVE label node always has its own state
+    row, so normal runs lose nothing)."""
     nodes = (
         pairs.select(F.col("doc_a").alias("doc"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc")))
         .distinct()
     )
-    state = _read_epoched(spark, state_path, last, keep_epoch=True)
+    state = _read_epoched(spark, f"{base}/{name}", last, keep_epoch=True)
     if state is not None:
-        twin = None
-        # the twin serves scan TWO only when (a) the state is past the
-        # measured gate AND (b) the twin PROVABLY covers every committed
-        # epoch (_TWIN_SINCE) — a partial twin (pre-upgrade base) would
-        # silently omit pre-upgrade members of touched components
-        if _twin_worth_probing(spark, twin_path) and _twin_complete(
-            spark, base, name
-        ):
-            twin = spark.read.parquet(twin_path).filter(F.col("epoch") <= last)
-        prev_affected = _affected_component_slice(state, nodes, twin)
+        prev_affected = _affected_component_slice(state, nodes)
         delta = graph.connected_components_incremental(prev_affected, pairs)
         known = prev_affected.select("doc").unionByName(nodes).distinct()
         return delta.join(F.broadcast(known), "doc", "left_semi")
     return graph.connected_components(pairs)
 
 
-def _epoch_dir_set(spark: SparkSession, root: str) -> set[int]:
-    """Epoch numbers of the ``epoch=N`` directories under ``root`` (one
-    listing; {} for a missing root). Used to DERIVE the twin coverage
-    stamp when the marker is absent — see ``_write_label_delta``."""
-    if not sinks.path_exists(spark, root):
-        return set()
-    fs, _ = sinks._fs_path(spark, root)
-    return {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(_jpath(spark, root))
-        if st.isDirectory() and st.getPath().getName().startswith("epoch=")
-    }
-
-
 def _write_label_delta(delta: DataFrame, base: str, name: str, physical: int) -> None:
-    """Append an epoch's label delta under BOTH probe-key sort orders:
-    doc-sorted main state (label serving, scan ONE) and component-sorted
-    twin (scan TWO's file-pruned touched-component fetch). The delta is
-    batch-neighborhood-sized, so the double write is the cheap side of
-    the trade (SCALE.md r13). Whenever the coverage marker (_TWIN_SINCE)
-    is absent AFTER the double write — the twin's first epoch, or a
-    replay of a crash that landed between the twin write and the marker
-    write — the stamp is DERIVED from disk (r14 ADVICE low: the old
-    first-write-only stamp left a crash-orphaned marker-less twin
-    permanently "partial" even though every epoch was double-written):
-    "complete" iff the twin's epoch-dir set equals the main state's
-    (appends write both sides, maintenance folds them as a pair, so set
-    equality is exact coverage), else "partial <min twin epoch>" —
-    scan TWO then refuses it until ``backfill_label_twin`` completes it.
-    The derivation can never stamp a falsely-complete twin: a twin
-    missing any state epoch fails the set equality. Steady state pays
-    nothing (marker present → no listings)."""
-    spark = delta.sparkSession
-    state_root = f"{base}/{name}"
-    twin_root = f"{base}/{name}_by_label"
+    """Append an epoch's label delta as ``{base}/{name}/epoch=N``,
+    range-sorted on ``doc`` (label serving and scan ONE prune on it).
+    The delta is pinned first: the range exchange samples it before the
+    write, and its lineage holds the state scans of the merge."""
     delta = delta.localCheckpoint(eager=True)
     _range_sorted(delta, "doc").write.mode("overwrite").parquet(
-        f"{state_root}/epoch={physical}"
+        f"{base}/{name}/epoch={physical}"
     )
-    _range_sorted(delta, "component").write.mode("overwrite").parquet(
-        f"{twin_root}/epoch={physical}"
-    )
-    marker = f"{twin_root}/{_TWIN_SINCE}"
-    if not sinks.path_exists(spark, marker):
-        state_eps = _epoch_dir_set(spark, state_root)
-        twin_eps = _epoch_dir_set(spark, twin_root)
-        stamp = (
-            "complete"
-            if twin_eps == state_eps
-            else f"partial {min(twin_eps)}"
-        )
-        sinks.write_text_marker(spark, marker, stamp)
 
 
 def make_component_ingest_batch_fn(
@@ -1153,20 +925,16 @@ def make_component_ingest_batch_fn(
        point lookup: the pair-node set is bounded, so its ids inline as a
        pushed-down ``In(doc, ...)`` literal over the doc-range-sorted
        state (file/row-group pruning; join-prune fallback above the
-       literal bound). Scan TWO (component-keyed) becomes a point lookup
-       once the state outgrows ``_TWIN_MIN_BYTES`` (r13): the bounded
-       touched-label set inlines as a pushed-down ``In(component, ...)``
-       literal over the COMPONENT-sorted state twin
-       (``components_by_label/`` — the same delta rows, re-sorted), so
-       data read tracks the touched neighborhood instead of the
-       accumulated state; below the gate the bare semi-join is measured
-       faster (probe r13) and remains the plan. CC itself runs over
-       (affected stars ∪ new pairs) — batch-and-neighborhood-sized, never
+       literal bound). Scan TWO (component-keyed) is a broadcast
+       semi-join of the touched-label set over the state: it reads the
+       whole label state, which is pair-graph-sized (≪ corpus), and was
+       measured faster than any component-sorted copy of it up to 512M
+       state rows (SCALE.md r13/r14). CC itself runs over (affected
+       stars ∪ new pairs) — batch-and-neighborhood-sized, never
        corpus-sized.
     3. APPEND: the full batch lands as ``docs/epoch=N``, its band rows as
        ``bands/epoch=N`` (future probes must see every doc), and the
-       created/changed labels as ``components/epoch=N`` PLUS the
-       component-sorted twin ``components_by_label/epoch=N``.
+       created/changed labels as ``components/epoch=N``.
 
     Fold invariant (pinned in tests/test_streaming_component_ingest.py):
     after any prefix of batches, ``read_labels(.., "components")`` equals
@@ -1175,12 +943,11 @@ def make_component_ingest_batch_fn(
     ``leakage_safe_split``.
 
     ``compact_labels_every``: opt-in self-maintenance — every N committed
-    epochs, fold the two label states (``components`` +
-    ``components_by_label``) via ``compact_epochs(datasets=...)``: an
-    O(state) rewrite (the states are pair-graph-sized, ≪ corpus) that
-    bounds their epoch/file count and keeps the twin's mean file size
-    past the r14 gate's second axis — the stream ARMS its own scan-TWO
-    index instead of waiting for an operator's maintenance window. Runs
+    epochs, fold the label state (``components``) via
+    ``compact_epochs(datasets=...)``: an O(state) rewrite (the state is
+    pair-graph-sized, ≪ corpus) that bounds its epoch/file count, and so
+    the per-file cost of both scans, without waiting for an operator's
+    maintenance window. Runs
     inside the batch under the maintenance lock, stamped with this
     stream's run token (this stream is the single writer): a crash
     mid-fold orphans the lock, and the next incarnation's batch-side
@@ -1279,13 +1046,12 @@ def make_entity_ingest_batch_fn(
        (``_literal_pruned`` — the band-index device), then
        ``edit1_pairs_from_postings`` joins on (vh, *agree_cols) and
        levenshtein-verifies. The index is probed, never rebuilt.
-    2. INCREMENTAL CC: ``_merge_label_state`` into ``entities/`` (+ the
-       component-sorted ``entities_by_label`` twin) — affected-slice
-       point lookups, bounded driver union-find, purged-id guard, all
-       shared with the component path.
+    2. INCREMENTAL CC: ``_merge_label_state`` into ``entities/`` —
+       affected-slice scans, bounded driver union-find, purged-id guard,
+       all shared with the component path.
     3. APPEND: the batch rows land as ``rows/epoch=N`` (id-range-sorted),
        their postings as ``variants/epoch=N`` (vh-range-sorted), the
-       label delta under both sort orders.
+       label delta as ``entities/epoch=N`` (doc-range-sorted).
 
     Preconditions: ``id_col`` unique across the stream's lifetime (the
     ``resolve_entities`` contract). Fold invariant (pinned in
@@ -1550,15 +1316,8 @@ def recover_base(
             out[sub] = _sweep_dataset(root, names, apply)
         return out
 
-    def _apply(out: dict[str, int]) -> dict[str, int]:
-        # recovery rolled a swap back/forward: the twin's size and
-        # coverage may have changed under the per-process caches
-        if any(out.values()):
-            _reset_twin_caches()
-        return out
-
     if ignore_lock:
-        return _apply(_sweep(apply=True))
+        return _sweep(apply=True)
     lock = f"{base}/{_MAINT_LOCK}"
     if fs.exists(_jpath(spark, lock)):
         # r14 ADVICE (high): a lock stamped with THIS stream's own run
@@ -1591,7 +1350,7 @@ def recover_base(
         # by the same stream's next incarnation
         _stamp_lock_owner(spark, fs, lock, own_token)
     try:
-        return _apply(_sweep(apply=True))  # re-scan under the lock
+        return _sweep(apply=True)  # re-scan under the lock
     finally:
         _release_maintenance_lock(spark, fs, lock)
 
@@ -1664,11 +1423,9 @@ def purge_ids(
             ("vectors", vec_id_col),
             ("chunks", "keeper_doc"),
             ("components", "doc"),
-            ("components_by_label", "doc"),
             ("rows", id_col),
             ("variants", "doc"),
             ("entities", "doc"),
-            ("entities_by_label", "doc"),
         ):
             root = f"{base}/{sub}"
             if not sinks.path_exists(spark, root):
@@ -1697,7 +1454,6 @@ def purge_ids(
                 _must_rename(spark, fs, tmp, part)  # the commit
                 _must_delete(spark, fs, trash)
             rewritten[sub] = len(affected)
-        _reset_twin_caches()  # twin size shrank under the sticky gate
         return rewritten
     finally:
         _release_maintenance_lock(spark, fs, lock)
@@ -1747,14 +1503,12 @@ def compact_epochs(
     The _EPOCH marker is untouched. Returns {dataset: folded_dir_count}.
 
     ``datasets``: optional subset of dataset names to fold (default: all
-    of ``_DATASETS``). The practical use is ARMING the scan-TWO twin
-    without an O(corpus) rewrite: the label states are pair-graph-sized
-    (≪ corpus) but only fold in FULL mode, so
-    ``compact_epochs(spark, base, datasets=("components",
-    "components_by_label"))`` folds JUST them — O(state) — which is what
-    raises the twin's mean file size past ``_TWIN_MIN_MEAN_FILE_BYTES``
-    (the r14 gate's second axis). The ingest loops expose this as the
-    opt-in ``compact_labels_every`` cadence.
+    of ``_DATASETS``). The practical use is bounding a label state's
+    file count without an O(corpus) rewrite: the label states are
+    pair-graph-sized (≪ corpus) but only fold in FULL mode, so
+    ``compact_epochs(spark, base, datasets=("components",))`` folds JUST
+    that state — O(state). The ingest loops expose this as the opt-in
+    ``compact_labels_every`` cadence.
 
     Single-writer + checked-FS-API discipline as in ``purge_ids``: the
     ``_MAINT_LOCK`` gate (which batch-side recover_base must itself
@@ -1767,16 +1521,6 @@ def compact_epochs(
     unknown = sorted(set(targets) - set(_DATASETS))
     if unknown:
         raise ValueError(f"unknown compact_epochs datasets: {unknown}")
-    # label states fold as a PAIR: the full fold GCs superseded label rows
-    # (latest-per-doc), so folding one sort order without its twin leaves
-    # the two stores with different row sets (still serving-equivalent,
-    # but a divergence no reader should have to reason about) and epoch
-    # layouts that drift apart. Refuse the asymmetric call.
-    for a, b in (("components", "components_by_label"), ("entities", "entities_by_label")):
-        if (a in targets) != (b in targets):
-            raise ValueError(
-                f"label states fold as a pair: include both {a!r} and {b!r}"
-            )
     fs, lock = _acquire_maintenance_lock(spark, base, steal_lock, owner=owner)
     try:
         recover_base(spark, base, ignore_lock=True)
@@ -1823,14 +1567,12 @@ def compact_epochs(
                 # land at epoch=target, so superseded labels must not
                 # survive into the merged partition (and the fold doubles
                 # as garbage collection of superseded label rows). Re-sort
-                # on the dataset's probe key so the point-lookup pruning
-                # (doc for the main state, component for the twin)
-                # survives compaction.
+                # on doc so the point-lookup pruning survives compaction.
                 df = _range_sorted(
                     df.groupBy("doc").agg(
                         F.max_by("component", "epoch").alias("component")
                     ),
-                    "component" if sub.endswith("_by_label") else "doc",
+                    "doc",
                 )
             else:
                 df = df.drop("epoch")
@@ -1843,7 +1585,6 @@ def compact_epochs(
             _must_rename(spark, fs, tmp, f"{root}/epoch={target}")  # the commit
             _must_delete(spark, fs, trash)
             folded[sub] = len(committed)
-        _reset_twin_caches()  # folds rewrite both sort orders
         return folded
     finally:
         _release_maintenance_lock(spark, fs, lock)

@@ -135,7 +135,7 @@ def test_purge_forgets_entity_member(spark, tmp_path):
     fn(_df(spark, BATCH2), 1)
     rewritten = ingest.purge_ids(spark, base, [2], id_col="id")
     assert rewritten["rows"] >= 1 and rewritten["variants"] >= 1
-    assert rewritten["entities"] >= 1 and rewritten["entities_by_label"] >= 1
+    assert rewritten["entities"] >= 1
     served = {r[0]: r for r in map(tuple, _served(spark, base))}
     # the purged row contributes nothing: its max balance is gone, the
     # surviving members stay co-labeled
@@ -159,26 +159,9 @@ def test_compact_preserves_served_golden(spark, tmp_path):
     folded = ingest.compact_epochs(spark, base)
     assert folded["entities"] >= 2 and folded["rows"] >= 2
     assert _served(spark, base) == before
-    # tiered mode skips every label-state sort order
+    # tiered mode skips the label state
     tiered = ingest.compact_epochs(spark, base, small_bytes=1 << 30)
-    assert tiered["entities"] == 0 and tiered["entities_by_label"] == 0
-
-
-def test_fold_invariance_with_twin_path_forced(spark, tmp_path, monkeypatch):
-    """The size-gated twin branch of scan TWO must ingest identically to
-    the semi-join branch (it is a scan optimization, never a semantics
-    change): with the gate forced open every batch takes the literal-
-    pruned twin fetch, and the served golden records must still equal the
-    one-shot resolve_entities."""
-    monkeypatch.setattr(ingest, "_TWIN_MIN_BYTES", 0)
-    monkeypatch.setattr(ingest, "_TWIN_MIN_MEAN_FILE_BYTES", 0)
-    base = str(tmp_path / "mdm_twin")
-    fn = ingest.make_entity_ingest_batch_fn(
-        base, "name", "id", agree_cols=["nation", "seg"]
-    )
-    fn(_df(spark, BATCH1), 0)
-    fn(_df(spark, BATCH2), 1)
-    assert _served(spark, base) == _oneshot(spark, BATCH1 + BATCH2)
+    assert tiered["entities"] == 0
 
 
 def test_read_entities_for_point_lookup(spark, tmp_path):

@@ -3,7 +3,8 @@
 and every package name a kept script imports or reads off an imported
 package module still exists, so an API change breaks this test instead of
 silently breaking a tool nothing else runs. A third guard keeps boolean
-switches that only tests set out of the package."""
+switches that only tests set out of the package, and a fourth keeps its
+allowlist free of switches that no longer exist."""
 
 from __future__ import annotations
 
@@ -79,9 +80,8 @@ CALLER_ROOTS = (PKG, "bench.py", "rcmbench", "scripts", "__spark_entry__.py", "c
 
 # Boolean switches no non-test caller sets, kept on purpose.
 TEST_ONLY_SWITCHES_KEPT = {
-    ("backfill_label_twin", "steal_lock"): "operator lock-recovery escape hatch "
+    ("purge_ids", "steal_lock"): "operator lock-recovery escape hatch "
     "(the lock-held error tells the operator to pass it)",
-    ("purge_ids", "steal_lock"): "operator lock-recovery escape hatch",
     ("compact_epochs", "steal_lock"): "operator lock-recovery escape hatch",
 }
 
@@ -126,6 +126,13 @@ def _sets(call: ast.Call, param: str, position: int | None) -> bool:
     if any(isinstance(x, ast.Starred) for x in call.args):
         return True
     return position is not None and len(call.args) > position
+
+
+def test_kept_switches_exist():
+    """An allowlist entry whose function or parameter is gone would keep
+    excusing a switch that a later change brings back under that name."""
+    present = {(fn, param) for fn, param, _ in _bool_switches()}
+    assert sorted(set(TEST_ONLY_SWITCHES_KEPT) - present) == []
 
 
 def test_no_boolean_switch_only_tests_set():

@@ -13,6 +13,12 @@ near-dup (jaccard >= 0.5) of BOTH families while the families themselves
 stay below threshold (A∩B 3-shingles: 18/58 = 0.31) — so the bridge batch
 must merge two committed components. bands=32 (rows=2) keeps the LSH
 collision probability ~1 at these jaccards, so the pair set is stable.
+
+Old bases: a base written when every label epoch was also stored
+component-sorted (``components_by_label/`` plus its ``_TWIN_SINCE``
+coverage marker) keeps ingesting, purging and compacting, and serves
+exactly what a fresh base serves; the leftover ``components_by_label/`` is
+simply ignored (``test_old_base_with_label_twin_keeps_working``).
 """
 
 from __future__ import annotations
@@ -118,7 +124,6 @@ def test_component_state_purge_and_compact(spark, tmp_path):
 
     rewritten = ingest.purge_ids(spark, base, [2])
     assert rewritten["components"] >= 1
-    assert rewritten["components_by_label"] >= 1  # twin purged in lockstep
     served = _served(spark, base)
     assert all(doc != 2 for doc, _ in served)
     # survivors keep their cluster (1, 10 still co-labeled)
@@ -132,14 +137,10 @@ def test_component_state_purge_and_compact(spark, tmp_path):
     # folded state is fully resolved: one row per doc
     raw = spark.read.parquet(f"{base}/components")
     assert raw.count() == raw.select("doc").distinct().count()
-    # the component-sorted twin tracks the main state through purge+compact
-    twin = spark.read.parquet(f"{base}/components_by_label")
-    assert sorted(map(tuple, twin.collect())) == sorted(map(tuple, raw.collect()))
 
-    # tiered mode must not touch components (either sort order)
+    # tiered mode must not touch components
     tiered = ingest.compact_epochs(spark, base, small_bytes=1 << 30)
     assert tiered["components"] == 0
-    assert tiered["components_by_label"] == 0
 
 
 def test_served_split_equals_recompute(spark, tmp_path):
@@ -206,28 +207,11 @@ def _mkdf(spark, rows):
     return spark.createDataFrame([_Row(doc_id=i, text=t) for i, t in rows])
 
 
-def test_fold_invariance_with_twin_path_forced(spark, tmp_path, monkeypatch):
-    """Same device as the entity-ingest twin test: with _TWIN_MIN_BYTES
-    forced to 0, scan TWO takes the component-sorted-twin literal fetch on
-    every batch, and the served labeling must still equal the one-shot
-    CC(minhash_lsh_pairs(everything ingested))."""
-    monkeypatch.setattr(ingest, "_TWIN_MIN_BYTES", 0)
-    monkeypatch.setattr(ingest, "_TWIN_MIN_MEAN_FILE_BYTES", 0)
-    base = str(tmp_path / "corpus_twin")
-    fn = ingest.make_component_ingest_batch_fn(base, **LSH)
-    day1 = [(1, A), (2, A2), (5, LONER)]
-    day2 = [(3, B), (4, B2), (10, A), (20, BRIDGE)]
-    fn(_mkdf(spark, day1), 0)
-    fn(_mkdf(spark, day2), 1)
-    assert _served(spark, base) == _oneshot(spark, day1 + day2)
-
-
 def test_compact_datasets_subset_folds_only_label_states(spark, tmp_path):
-    """r14: `compact_epochs(datasets=...)` folds ONLY the named datasets —
-    the O(state) label-state fold that arms the scan-TWO twin's
-    mean-file-size gate axis WITHOUT the O(corpus) full fold. The docs
-    and bands epochs stay untouched; the served labeling is unchanged;
-    unknown dataset names are rejected."""
+    """`compact_epochs(datasets=...)` folds ONLY the named datasets — the
+    O(state) label-state fold that bounds its file count WITHOUT the
+    O(corpus) full fold. The docs and bands epochs stay untouched; the
+    served labeling is unchanged; unknown dataset names are rejected."""
     import pytest as _pytest
 
     base = str(tmp_path / "corpus")
@@ -246,33 +230,21 @@ def test_compact_datasets_subset_folds_only_label_states(spark, tmp_path):
         )
 
     docs_before = _epoch_dirs("docs")
-    folded = ingest.compact_epochs(
-        spark, base, datasets=("components", "components_by_label")
-    )
-    assert folded["components"] >= 2 and folded["components_by_label"] >= 2
-    assert "docs" not in folded and "bands" not in folded
+    folded = ingest.compact_epochs(spark, base, datasets=("components",))
+    assert list(folded) == ["components"] and folded["components"] >= 2
     assert _epoch_dirs("docs") == docs_before  # corpus untouched
     assert len(_epoch_dirs("components")) == 1
-    assert len(_epoch_dirs("components_by_label")) == 1
     assert _served(spark, base) == before
-    # twin tracks the main state through the subset fold
-    raw = spark.read.parquet(f"{base}/components")
-    twin = spark.read.parquet(f"{base}/components_by_label")
-    assert sorted(map(tuple, twin.collect())) == sorted(map(tuple, raw.collect()))
 
     with _pytest.raises(ValueError):
         ingest.compact_epochs(spark, base, datasets=("nope",))
-    # label states fold as a pair: one sort order without its twin would
-    # GC superseded rows on one side only
-    with _pytest.raises(ValueError):
-        ingest.compact_epochs(spark, base, datasets=("components",))
 
 
 def test_component_ingest_auto_label_fold(spark, tmp_path):
-    """r14: `compact_labels_every` makes the stream arm its own twin —
-    every N epochs the label states fold in-loop (under the maintenance
-    lock), bounding their file count, and the fold invariant still holds:
-    the auto-folding run serves EXACTLY the labels of an unfolded run."""
+    """r14: `compact_labels_every` makes the stream maintain its own label
+    state — every N epochs it folds in-loop (under the maintenance lock),
+    bounding its file count, and the fold invariant still holds: the
+    auto-folding run serves EXACTLY the labels of an unfolded run."""
     import os as _os
 
     base_a = str(tmp_path / "auto")
@@ -306,12 +278,12 @@ def test_component_ingest_auto_label_fold(spark, tmp_path):
 
 def test_crash_midfold_selfheals_on_next_batch(spark, tmp_path):
     """r14 ADVICE (high), end to end: a crash INSIDE the in-loop cadence
-    fold — after the components fold committed but mid-way through the
-    components_by_label trash-moves — orphans the run-token-stamped
-    maintenance lock with the twin's epochs parked in .compact_trash.
-    The restarted stream's next batch must steal its own orphan, roll the
-    twin back, and serve the exact one-shot labeling; before the fix the
-    lock suppressed healing and scan TWO read a twin missing components.
+    fold — mid-way through the components trash-moves — orphans the
+    run-token-stamped maintenance lock with the state's epochs parked in
+    .compact_trash. The restarted stream's next batch must steal its own
+    orphan, roll the state back, and serve the exact one-shot labeling;
+    before the fix the lock suppressed healing and the merge read a
+    state missing components.
     """
     import os as _os
     import shutil as _shutil
@@ -327,14 +299,14 @@ def test_crash_midfold_selfheals_on_next_batch(spark, tmp_path):
     fn(_mkdf(spark, days[0]), 0)
     fn(_mkdf(spark, days[1]), 1)  # cadence fold ran here
 
-    # fabricate the mid-fold crash: twin epochs moved aside, tmp present,
+    # fabricate the mid-fold crash: state epochs moved aside, tmp present,
     # lock orphaned with this stream's token
-    twin_root = f"{base}/components_by_label"
-    trash = f"{twin_root}/.compact_trash"
+    root = f"{base}/components"
+    trash = f"{root}/.compact_trash"
     _os.makedirs(trash)
-    for d in [x for x in _os.listdir(twin_root) if x.startswith("epoch=")]:
-        _shutil.move(f"{twin_root}/{d}", f"{trash}/{d}")
-    _os.makedirs(f"{twin_root}/.compact_tmp")
+    for d in [x for x in _os.listdir(root) if x.startswith("epoch=")]:
+        _shutil.move(f"{root}/{d}", f"{trash}/{d}")
+    _os.makedirs(f"{root}/.compact_tmp")
     with open(f"{base}/{ingest._MAINT_LOCK}", "w") as f:
         f.write(tok)
 
@@ -344,11 +316,8 @@ def test_crash_midfold_selfheals_on_next_batch(spark, tmp_path):
 
     assert not _os.path.exists(f"{base}/{ingest._MAINT_LOCK}")
     assert not _os.path.exists(trash)
+    assert not _os.path.exists(f"{root}/.compact_tmp")
     assert _served(spark, base) == _oneshot(spark, days[0] + days[1] + day3)
-    # twin rolled back + this epoch's append: same rows as the main state
-    raw = spark.read.parquet(f"{base}/components")
-    twin = spark.read.parquet(twin_root)
-    assert sorted(map(tuple, twin.collect())) == sorted(map(tuple, raw.collect()))
 
 
 def test_inloop_fold_defers_on_foreign_lock(spark, tmp_path):
@@ -394,40 +363,54 @@ def test_inloop_fold_defers_on_foreign_lock(spark, tmp_path):
     assert len(comp_dirs) == 1  # the re-armed fold caught up
 
 
-def test_twin_marker_rederived_when_absent(spark, tmp_path):
-    """r14 ADVICE (low): a crash between the twin's first parquet write
-    and the _TWIN_SINCE marker write leaves a marker-less twin that the
-    old first-write-only stamp never repaired. The stamp is now DERIVED
-    after every double-write while the marker is absent: equal epoch-dir
-    sets -> "complete" (the double-write invariant guarantees coverage);
-    a twin genuinely missing a state epoch -> "partial <min twin epoch>"
-    and scan TWO stays refused until backfill_label_twin."""
+def test_old_base_with_label_twin_keeps_working(spark, tmp_path):
+    """The label twin is made by hand, as the two-copy writer left it:
+    each committed label epoch re-sorted on component under
+    components_by_label/epoch=N, and a "complete" _TWIN_SINCE marker.
+    Ingest, purge and full compaction then run on that base and on a
+    fresh one; served labels stay identical at every step, and nothing
+    reads or rewrites the leftover dir."""
     import os as _os
-    import shutil as _shutil
 
-    base = str(tmp_path / "corpus")
-    fn = ingest.make_component_ingest_batch_fn(base, **LSH)
-    fn(_mkdf(spark, [(1, A), (2, A2), (5, LONER)]), 0)
-    fn(_mkdf(spark, [(3, B), (4, B2)]), 1)
-    twin_root = f"{base}/components_by_label"
-    marker = f"{twin_root}/{ingest._TWIN_SINCE}"
-    assert open(marker).read().strip() == "complete"
+    old = str(tmp_path / "old")
+    fresh = str(tmp_path / "fresh")
+    fn_old = ingest.make_component_ingest_batch_fn(old, **LSH)
+    fn_fresh = ingest.make_component_ingest_batch_fn(fresh, **LSH)
+    days = [
+        [(1, A), (2, A2), (5, LONER)],
+        [(3, B), (4, B2)],
+        [(10, A)],
+        [(20, BRIDGE)],
+    ]
+    for ep, rows in enumerate(days[:2]):
+        fn_old(_mkdf(spark, rows), ep)
+        fn_fresh(_mkdf(spark, rows), ep)
 
-    # crash-orphaned marker: next batch re-derives "complete"
-    _os.remove(marker)
-    ingest._reset_twin_caches()
-    fn(_mkdf(spark, [(10, A)]), 2)
-    assert open(marker).read().strip() == "complete"
-    assert ingest._twin_complete(spark, base, "components")
+    twin = f"{old}/components_by_label"
+    for ep in range(2):
+        spark.read.parquet(f"{old}/components/epoch={ep}").repartitionByRange(
+            "component"
+        ).sortWithinPartitions("component").write.parquet(f"{twin}/epoch={ep}")
+    with open(f"{twin}/_TWIN_SINCE", "w") as f:
+        f.write("complete")
+    leftover = sorted((d, sorted(fs)) for d, _, fs in _os.walk(twin))
 
-    # genuinely partial twin (an epoch dir lost): derived stamp refuses
-    _os.remove(marker)
-    _shutil.rmtree(f"{twin_root}/epoch=0")
-    ingest._reset_twin_caches()
-    fn(_mkdf(spark, [(20, BRIDGE)]), 3)
-    stamp = open(marker).read().strip()
-    assert stamp.startswith("partial "), stamp
-    assert not ingest._twin_complete(spark, base, "components")
-    # backfill completes it again
-    ingest.backfill_label_twin(spark, base, "components")
-    assert open(marker).read().strip() == "complete"
+    for ep, rows in enumerate(days[2:], start=2):
+        fn_old(_mkdf(spark, rows), ep)
+        fn_fresh(_mkdf(spark, rows), ep)
+        assert _served(spark, old) == _served(spark, fresh)
+    assert _served(spark, old) == _oneshot(spark, [r for d in days for r in d])
+
+    purged = ingest.purge_ids(spark, old, [2])
+    assert purged == ingest.purge_ids(spark, fresh, [2])
+    assert _served(spark, old) == _served(spark, fresh)
+
+    folded = ingest.compact_epochs(spark, old)
+    assert folded == ingest.compact_epochs(spark, fresh)
+    assert folded["components"] >= 2
+    assert _served(spark, old) == _served(spark, fresh)
+
+    fn_old(_mkdf(spark, [(30, B)]), 4)
+    fn_fresh(_mkdf(spark, [(30, B)]), 4)
+    assert _served(spark, old) == _served(spark, fresh)
+    assert sorted((d, sorted(fs)) for d, _, fs in _os.walk(twin)) == leftover
