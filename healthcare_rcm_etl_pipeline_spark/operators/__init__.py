@@ -11,5 +11,4 @@ from healthcare_rcm_etl_pipeline_spark.operators import (  # noqa: F401
     scd2,
     similarity,
     sketches,
-    skew,
 )

@@ -38,7 +38,7 @@ from healthcare_rcm_etl_pipeline_spark.functions.text import (
     token_count_ws,
     tokens,
 )
-from healthcare_rcm_etl_pipeline_spark.session import collect_bounded, job_description
+from healthcare_rcm_etl_pipeline_spark.session import collect_bounded, job_description, local_frame
 
 
 def chunk_documents(
@@ -594,7 +594,7 @@ def decontaminate_bloom(
         .distinct()
     )
     mask = bloom_build_mask(bench_sh, "shingle", m_bits, k)
-    mask_df = spark.createDataFrame([(mask,)], "__bloom_mask array<bigint>")
+    mask_df = local_frame(spark, [(mask,)], "__bloom_mask array<bigint>")
 
     base = df.select(
         id_col, shingles_from_tokens(tokens(text_col), n).alias("__sh")
@@ -924,7 +924,7 @@ def bpe_train(
         local = collect_bounded(words)
     if local is not None:
         return _bpe_train_local(spark, local, words.schema, n_merges, require_full)
-    merges = spark.createDataFrame([], _BPE_MERGES_DDL)
+    merges = local_frame(spark, [], _BPE_MERGES_DDL)
     for step in range(1, n_merges + 1):
         with _bpe_step(spark, "winner"):
             winner = (
@@ -1031,7 +1031,7 @@ def _bpe_train_local(spark, local, words_schema, n_merges, require_full):
     ])
     words = local.set_column(local.schema.get_field_index("w"), "w", pa.array(ws, pa.string()))
     return (
-        spark.createDataFrame(merges, _BPE_MERGES_DDL),
+        local_frame(spark, merges, _BPE_MERGES_DDL),
         spark.createDataFrame(words, words_schema),
     )
 
@@ -1230,8 +1230,6 @@ def chunk_dedup_rewrite_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
     chunk_tokens: int = 15,
-    keeper_col: str | None = None,
-    checkpoint_shared: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental/streaming form of ``chunk_dedup_rewrite``: rewrite ONE
     arriving batch against the accumulated keeper-chunk state, the way
@@ -1247,8 +1245,8 @@ def chunk_dedup_rewrite_incremental(
     keeper within the batch. Returns ``(rewritten, new_chunks)``:
     the rewritten batch in chunk_dedup_rewrite's exact output schema, and
     the batch's newly-claimed chunk texts for the caller to append to the
-    state (a persisted parquet in the ingest pipeline, a unioned
-    localCheckpoint in a driver loop).
+    state (a unioned localCheckpoint in the ``dedup_chunks_incremental``
+    fold).
 
     EQUIVALENCE to the batch rewrite: when batches arrive in ascending
     ``id_col`` order (the append-only ingest case), folding this op over
@@ -1264,34 +1262,14 @@ def chunk_dedup_rewrite_incremental(
     State at 100 TB: the chunk state grows with DISTINCT corpus chunks —
     the same order as the persisted LSH band index, partitionable by
     chunk hash; the probe is one anti-join keyed on the chunk text.
-
-    ``keeper_col``: when set, ``new_chunks`` also carries the claiming
-    doc's id under that name — the provenance the streaming ingest path's
-    GDPR purge needs (a purged doc's claimed chunk TEXTS must leave the
-    state too; a later re-arrival of the same text then re-claims it).
-    ``checkpoint_shared=True`` localCheckpoints BOTH shared roots — the
-    chunk-occurrence relation ``occ`` (consumed by the anti-join AND
-    directly as the reassembly base) and the post-anti-join set ``fresh``
-    (consumed by the keeper aggregate and the state output) — so a caller
-    running two separate actions over the returned frames (the ingest
-    batch fn writes docs and chunk state as two parquet writes) executes
-    the chunking once and the state probe once, not twice each. Both
-    checkpoints are batch-sized, not corpus-sized.
     """
     occ = _chunk_occurrences(batch, text_col, id_col, chunk_tokens)
-    if checkpoint_shared:
-        occ = occ.localCheckpoint(eager=True)
     fresh = occ.filter(F.col("__chunk").isNotNull())
     if seen_chunks is not None:
         fresh = fresh.join(
             seen_chunks.select(F.col("chunk").alias("__chunk")), "__chunk", "left_anti"
         )
-    if checkpoint_shared:
-        fresh = fresh.localCheckpoint(eager=True)
     keeper = fresh.groupBy("__chunk").agg(F.min("doc").alias("__keep_doc"))
     kept = fresh.join(keeper, "__chunk").filter(F.col("doc") == F.col("__keep_doc"))
-    state_cols = [F.col("__chunk").alias("chunk")] + (
-        [F.col("__keep_doc").alias(keeper_col)] if keeper_col else []
-    )
-    new_chunks = keeper.select(*state_cols)
+    new_chunks = keeper.select(F.col("__chunk").alias("chunk"))
     return _rewrite_from_kept(occ, kept, id_col), new_chunks

@@ -987,7 +987,7 @@ def minhash_lsh_pairs_incremental(
     bounded Python list, see above) and returning their (id_col, text_col)
     rows, e.g. a literal ``isin`` filter over a range-sorted parquet
     corpus that parquet row-group stats prune to the matching files
-    (streaming/ingest.py:probe_near_dups). With it, ``base_df`` may be
+    (streaming/ingest.py:_doc_fetch). With it, ``base_df`` may be
     None (it is otherwise only the text source); requires ``base_bands``
     and ``max_bucket`` (the bound that makes collecting the ids safe).
 

@@ -9,7 +9,7 @@ Decode is REAL for the formats a numpy-only container can parse —
 binary netpbm (P6 RGB / P5 gray), uncompressed 24-bit BI_RGB BMP, and
 baseline-sequential JPEG (a full T.81 Huffman + IDCT decoder in
 operators/jpeg.py) — implemented from the published format specs in pure
-numpy (``decode_image``), plus a nearest-neighbor ``resize_nearest``.
+numpy (``decode_image``).
 Formats that genuinely need PIL/ffmpeg (progressive JPEG, PNG's zlib
 streams, video containers) fall back to ``decode_stub``, which emits
 deterministic fake dimensions flagged ``decoded=False`` so fake features
@@ -185,15 +185,6 @@ def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
 
     return df.select(id_col).mapInPandas(_gen, JPEG_SYNTH_SCHEMA)
-
-
-def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize, pure index arithmetic (no interpolation
-    libraries): output pixel (y, x) samples input (y*h//out_h, x*w//out_w)."""
-    h, w = img.shape[0], img.shape[1]
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return img[ys][:, xs]
 
 
 def decode_stub(payload: bytes) -> tuple[int, int]:

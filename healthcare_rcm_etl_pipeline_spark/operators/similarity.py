@@ -33,7 +33,7 @@ from healthcare_rcm_etl_pipeline_spark.functions.vector import (
     norm,
 )
 from healthcare_rcm_etl_pipeline_spark.operators.buckets import bounded_bucket_collect
-from healthcare_rcm_etl_pipeline_spark.session import collect_bounded, job_description
+from healthcare_rcm_etl_pipeline_spark.session import collect_bounded, job_description, local_frame
 
 
 def _splitmix(x: int) -> int:
@@ -875,7 +875,7 @@ def _pq_lut_frame(
             for j in range(m)
         ]
     )
-    return queries.sparkSession.createDataFrame(lut_rows, schema)
+    return local_frame(queries.sparkSession, lut_rows, schema)
 
 
 def _pq_adc_rank(
@@ -1069,7 +1069,7 @@ def _mmr_greedy_driver(
             T.StructField("score", T.DoubleType(), True),
         ]
     )
-    return cand.sparkSession.createDataFrame(rows, schema)
+    return local_frame(cand.sparkSession, rows, schema)
 
 
 def mmr_topk(
@@ -1415,9 +1415,7 @@ def ivf_drift_refresh(
         for cell, c in enumerate(stale)
         for pos in range(dim)
     ]
-    stale_df = spark.createDataFrame(
-        stale_rows, "cell int, pos int, stale_scaled bigint"
-    )
+    stale_df = local_frame(spark, stale_rows, "cell int, pos int, stale_scaled bigint")
     # broadcast the aggregated side (n_cells x dim rows, bounded): the
     # left/build side of a left-outer join cannot be the broadcast side
     return (

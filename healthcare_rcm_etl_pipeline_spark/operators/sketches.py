@@ -26,6 +26,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from healthcare_rcm_etl_pipeline_spark.session import local_frame
+
 
 def cms_heavy_hitters(
     df: DataFrame,
@@ -72,9 +74,7 @@ def cms_heavy_hitters(
         rows.append(
             (r["key"], r["exact_n"], r["exact_n"] <= est <= r["exact_n"] + bound)
         )
-    return spark.createDataFrame(
-        rows, "key string, exact_n bigint, cms_within_bound boolean"
-    )
+    return local_frame(spark, rows, "key string, exact_n bigint, cms_within_bound boolean")
 
 
 def kmv_sketches(

@@ -54,6 +54,7 @@ from healthcare_rcm_etl_pipeline_spark.operators.keys import dense_sk, dense_sk_
 from healthcare_rcm_etl_pipeline_spark.operators.multimodal import with_binary_payload
 from healthcare_rcm_etl_pipeline_spark.operators.scd2 import apply_scd_type2, stamp_first_version
 from healthcare_rcm_etl_pipeline_spark.plans.standardize import union_with_drift
+from healthcare_rcm_etl_pipeline_spark.session import local_frame
 from healthcare_rcm_etl_pipeline_spark.sources.readers import load_table
 from healthcare_rcm_etl_pipeline_spark.streaming import events as ev
 
@@ -2617,9 +2618,7 @@ def drift_centroid_windowed_q(spark, sf_dir):
 def events_dedup_q(spark, sf_dir):
     """Exact event dedup by key: the input is doubled (union with itself)
     then deduped with first_row_per_key (deterministic survivor, unlike
-    dropDuplicates) — result must equal the original table exactly. The
-    streaming twin (dropDuplicatesWithinWatermark, bounded state) is
-    equivalence-tested in tests/test_streaming.py."""
+    dropDuplicates) — result must equal the original table exactly."""
     from healthcare_rcm_etl_pipeline_spark.operators.keys import first_row_per_key
 
     e = _t(spark, sf_dir, "events")
@@ -6124,12 +6123,9 @@ def events_pattern_conversion_q(spark, sf_dir):
     partitioned by user (no global ordering) and MAX is order-
     independent. The frame is RANGE (peers included), not ROWS: the
     pattern's semantics are purely TIMESTAMP-based — a view/error sharing
-    the purchase's exact ts counts regardless of event_id order — which
-    is what makes the streaming interval-join twin
-    (streaming/events.py:pattern_conversions) exactly equivalent on ALL
-    inputs, including same-user same-ts ties at the purchase; a ROWS
-    frame keyed on (ts, event_id) would exclude a same-ts row sorting
-    after the purchase that the join form admits (r8 advice). At 100 TB
+    the purchase's exact ts counts regardless of event_id order, as the
+    oracle's RANGE frame does; a ROWS frame keyed on (ts, event_id) would
+    exclude a same-ts row sorting after the purchase. At 100 TB
     this is one hash-partition shuffle on user_id and a sorted spill per
     partition; the veto adds a column, not a pass."""
     from pyspark.sql import Window
@@ -7410,7 +7406,7 @@ def _served_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _served_components_base(spark, sf_dir), "components"
     )
     if comps is None:  # a pair-free corpus never writes component state
-        return spark.createDataFrame([], "doc long, component long")
+        return local_frame(spark, [], "doc long, component long")
     return comps
 
 
@@ -7510,7 +7506,7 @@ def entity_resolution_golden_served_q(spark, sf_dir):
     rows = _ingest.read_entity_rows(spark, base).drop("epoch")
     labels = _ingest.read_labels(spark, base, "entities")
     if labels is None:
-        labels = spark.createDataFrame([], "doc long, component long")
+        labels = local_frame(spark, [], "doc long, component long")
     return fuzzy.golden_from_labels(
         rows,
         labels,

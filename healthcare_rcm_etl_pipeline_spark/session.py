@@ -4,13 +4,14 @@ cluster-safe defaults (AQE on, sane shuffle partitioning, UTC, Arrow).
 On a real cluster only ``master`` and memory sizing change; everything the
 engine does is partitioning-aware and never collects large data to the driver.
 
-Three session-scoped helpers sit next to the factory: ``eager_checkpoint``
+Four session-scoped helpers sit next to the factory: ``eager_checkpoint``
 (the one lineage barrier that honours the session's checkpoint dir),
 ``collect_bounded`` (the one bounded collect of a checkpoint to the driver,
 under the one driver row bound ``_DRIVER_ROWS_MAX``; every driver-side path
 in the package goes through it: connected components, BFS, PageRank, BPE
-and the MMR greedy) and ``job_description`` (a labelled block of Spark
-jobs).
+and the MMR greedy), ``local_frame`` (the way back: driver-side rows as a
+frame that starts no Python worker) and ``job_description`` (a labelled
+block of Spark jobs).
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import tempfile
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Rows an operator may hold on the driver to run its rounds there instead of
 # in a distributed loop (graph.connected_components, graph.bfs_hops,
@@ -56,6 +59,25 @@ _JIT_FLAGS = (
     " -XX:Tier4CompileThreshold=150000"
     " -XX:Tier4BackEdgeThreshold=400000"
 )
+
+# Compiler-floor levers measured against these settings and not taken (4
+# cores, rcmbench --seconds 1 --trace 0, a fresh application per run):
+# - Tier-4 thresholds 100x: etl_nightly cpu_s 43.9-45.6 -> 35.4-40.5 s and
+#   C2 CPU 8.4-9.7 -> 2.4-2.9 s, but on corpus executor-thread CPU rose from
+#   10.3-10.8 to 19.4-21.3 s and round wall from 21-22 to 26-27 s, with
+#   cpu_s flat.
+# - Tier-3 thresholds 10x: C1 CPU 6.1/6.4 -> 3.2/3.3 s, cpu_s even (41.4/47.5
+#   -> 42.6/41.4 s). With Tier-4 100x on top, the py4j thread took 3.5-4.7 s
+#   and the task threads 3.8-3.9 s more CPU, and round wall rose from
+#   20.6/23.2 to 25.9/30.0 s.
+# - Whole-stage codegen off: etl_nightly won 8 of 10 pairs, medians 45.2 ->
+#   40.6 s, a gap inside the baseline's 5.0 s IQR; corpus flat; the hot-loop
+#   sentinel ran 3-4x slower.
+# - -XX:+UseSerialGC: etl_nightly won 5 of 5 pairs, medians 46.0 -> 41.9 s,
+#   but a single-threaded collector is untested at 32 cores.
+# A confirming pair per lever at seed 861 (cpu_s, etl_nightly / corpus;
+# baseline 50.8 and 52.5 / 56.4 and 47.6 s) read: Tier-4 100x 45.2 / 47.1,
+# Tier-3 10x 53.2 / 51.2, codegen off 45.3 / 51.9, SerialGC 50.3 / 55.2.
 
 # Entries of Spark's JVM-wide codegen cache (spark.sql.codegen.cache.maxEntries,
 # a static conf, default 100). LRU over a sequential working set larger than
@@ -127,6 +149,22 @@ def collect_bounded(df: DataFrame) -> pa.Table | None:
     if df.count() > _DRIVER_ROWS_MAX:
         return None
     return df.toArrow()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s column order) as a frame over an
+    Arrow table, which Spark plans as a ``LocalRelation`` with ``schema``'s
+    types and nullability. A Python list plans as a ``LogicalRDD`` over
+    ``sc.parallelize``: running it starts a pyspark daemon plus a Python
+    worker per core just to unpickle the rows."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 @contextlib.contextmanager

@@ -2,7 +2,8 @@
 
 - CSV with explicit schema + permissive date parsing (S2/S3; glob paths go
   straight into spark.read).
-- Parquet for the driver testdata and for prior-dimension state (S4).
+- Parquet for the driver testdata (S4); prior-dimension state is read by
+  ``sinks.read_versioned``.
 - JDBC reader (S1): the reference pulls 5 tables × 2 MySQL DBs with
   SELECT * (/root/reference/python/extraction.py:30-41); the same tables
   ship as CSVs, which the e2e tests use. The JDBC path takes partitioning
@@ -42,29 +43,6 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
         .schema(schema)
         .csv(path)
     )
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """JSON-lines scan. ALWAYS pass a schema in production: schema inference
-    is a full extra pass over the data (fatal at 100 TB) and infers
-    inconsistent types across files; with an explicit schema malformed rows
-    coerce to null fields (PERMISSIVE), matching the CSV reader's policy."""
-    reader = spark.read.option("mode", "PERMISSIVE")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same columnar pushdown/pruning properties as parquet
-    (PushedFilters + ReadSchema reach the scan, asserted in tests)."""
-    return spark.read.orc(path)
 
 
 def read_jdbc(

@@ -10,7 +10,7 @@ equivalents:
   clustering analog; readers get partition pruning + locality on the sort
   keys. At 100 TB this is the difference between scanning one partition and
   scanning the lake.
-- coerce_dates / normalize nulls at the edge (S7) — Spark nulls are native.
+- Sink-side DATE coercion (S7) is ``plans.load.bind_schema``'s try_cast.
 - write_versioned: the SCD2 read-modify-write barrier (SURVEY.md §3):
   parquet can't be overwritten while being read, so each run writes
   ``<path>/v=<n+1>`` and promotes via a _CURRENT marker file.
@@ -22,16 +22,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def coerce_dates(df: DataFrame, date_cols: list[str]) -> DataFrame:
-    """Sink-side DATE coercion (S7) — load.py:105-109. try_cast: malformed
-    values coerce to null (pandas errors='coerce' parity) instead of raising
-    under Spark 4's default ANSI mode."""
-    out = df
-    for c in date_cols:
-        out = out.withColumn(c, F.col(c).try_cast("date"))
-    return out
 
 
 def write_parquet(df: DataFrame, path: str) -> None:
@@ -56,27 +46,6 @@ def write_clustered(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    buckets: int,
-    bucket_cols: list[str],
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Hash-bucketed managed table (CLUSTERED BY ... INTO n BUCKETS).
-
-    Both sides of a join bucketed on the join key with the same bucket count
-    join WITHOUT a shuffle — the pre-partitioning substitutes for the
-    exchange. At 100 TB this converts every fact⋈fact or fact⋈big-dim join
-    from a full-network shuffle into a local merge; asserted in
-    tests/test_bucketing.py via the physical plan (no Exchange).
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
 
 
 def _fs_path(spark: SparkSession, path: str):
@@ -140,101 +109,6 @@ def write_int_marker(spark: SparkSession, path: str, value: int) -> None:
 
 def _current_version(spark: SparkSession, base: str) -> int:
     return read_int_marker(spark, os.path.join(base, "_CURRENT"), 0)
-
-
-def zorder_value(cols: list[str], bits: int = 8, bounds: dict[str, tuple[float, float]] | None = None):
-    """Morton (z-order) interleave expression over numeric columns.
-
-    Each column is scaled to a ``bits``-bit integer via its (min, max)
-    bounds — pass them from ``df.agg(min, max)`` or approxQuantile; driver
-    holds only 2 floats per column — then the bit-planes are interleaved so
-    nearby (x, y) pairs get nearby z values. Pure column arithmetic,
-    codegen'd.
-    """
-    n = len(cols)
-    parts = []
-    for j, c in enumerate(cols):
-        lo, hi = (bounds or {}).get(c, (0.0, 1.0))
-        span = (hi - lo) or 1.0
-        scaled = F.least(
-            F.lit((1 << bits) - 1),
-            F.greatest(
-                F.lit(0),
-                ((F.col(c).cast("double") - F.lit(lo)) / F.lit(span) * F.lit((1 << bits) - 1))
-                .cast("bigint"),
-            ),
-        )
-        for i in range(bits):
-            parts.append(
-                F.shiftleft(F.shiftrightunsigned(scaled, i).bitwiseAND(F.lit(1)), i * n + j)
-            )
-    z = parts[0]
-    for p in parts[1:]:
-        z = z.bitwiseOR(p)
-    return z
-
-
-def write_zordered(
-    df: DataFrame, path: str, cols: list[str], n_files: int, bits: int = 8
-) -> None:
-    """Z-order clustered parquet write: rows are range-partitioned and
-    sorted by the Morton interleave of ``cols``, so EVERY clustered
-    column's min/max footprint per file is narrow — a point/range predicate
-    on ANY of them prunes most files via row-group stats. A linear sort
-    gives that property to its leading column only; at 100 TB the second
-    predicate column otherwise reads the whole table. (Same layout device
-    as Delta/Iceberg OPTIMIZE ZORDER, expressed with plain Spark ops.)
-
-    Column bounds come from one tiny min/max aggregate (2 doubles per
-    column to the driver).
-    """
-    bounds_row = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"{c}__lo") for c in cols],
-        *[F.max(F.col(c).cast("double")).alias(f"{c}__hi") for c in cols],
-    ).collect()[0]
-    bounds = {c: (bounds_row[f"{c}__lo"], bounds_row[f"{c}__hi"]) for c in cols}
-    z = zorder_value(cols, bits=bits, bounds=bounds)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def compact_versioned(
-    spark: SparkSession, base: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Small-files compaction for a versioned dataset: rewrite the current
-    version into ~``total_bytes / target_file_bytes`` evenly-sized files as
-    the NEXT version (readers flip atomically via the _CURRENT marker, so
-    compaction never blocks or corrupts concurrent reads).
-
-    Incremental/streaming sinks accrete a file per micro-batch per
-    partition; at 100 TB the resulting millions of tiny files dominate scan
-    cost (footer reads + task scheduling) long before data volume does —
-    periodic compaction is maintenance, not optimization. Sizes come from a
-    Hadoop FS listing (works on HDFS/object stores); the rewrite is a plain
-    round-robin ``repartition(n)`` so output files are even with no skew
-    from any data column.
-    """
-    import math
-
-    v = _current_version(spark, base)
-    if v == 0:
-        raise ValueError(f"no promoted version under {base}")
-    fs, p = _fs_path(spark, os.path.join(base, f"v={v}"))
-    total = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            total += f.getLen()
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(os.path.join(base, f"v={v}"))
-    return write_versioned(df.repartition(n), base)
 
 
 def read_versioned(spark: SparkSession, base: str) -> DataFrame | None:

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from healthcare_rcm_etl_pipeline_spark.functions.cleanse import money_sum
 
@@ -80,43 +79,6 @@ def sessionize(events: DataFrame, gap: str = "15 minutes") -> DataFrame:
             "n_events",
             "total_value",
         )
-    )
-
-
-def stateful_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: running per-user
-    event count + value total maintained in state across micro-batches.
-
-    This is the escape hatch for semantics window/session aggregations can't
-    express (e.g. cross-batch running totals emitted every batch). State is
-    one tiny tuple per user; Arrow batches keep the Python boundary cheap.
-    Works only under streaming (batch groups have no GroupState) — the batch
-    twin is a plain groupBy aggregation.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [T.StructField("n", T.LongType()), T.StructField("total", T.DoubleType())]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [total]})
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", getattr(GroupStateTimeout, timeout)
     )
 
 
@@ -188,169 +150,3 @@ def view_purchase_join(
     return joined.select(
         "user_id", "view_id", "purchase_id", "view_ts", "purchase_ts", "purchase_value"
     )
-
-
-def pattern_conversions(
-    events: DataFrame, within: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming twin of the ``events_pattern_conversion`` batch query:
-    purchases preceded by a view within ``within`` with no error between
-    the view and the purchase, emitted per conversion as
-    (user_id, purchase_id, purchase_ts). The SAME body runs in batch.
-
-    The batch query expresses the pattern as running conditional MAXes in
-    one window pass; window functions don't stream, so this is the
-    watermark-compatible reformulation as interval joins — equivalent by
-    a witness argument: *some* view with no error before the purchase
-    exists iff the LAST view has none (any error after the last view is
-    after every view). Concretely: views ⋈ purchases on user within
-    (purchase_ts - within, purchase_ts], left-outer ⋈ errors on user
-    within [view_ts, purchase_ts], keep rows with no error match, then
-    de-duplicate per purchase (several clean views may witness the same
-    purchase). Tie policy is TIMESTAMP-based END TO END: an error sharing
-    the last view's timestamp vetoes, and a view/error sharing the
-    PURCHASE's timestamp counts/vetoes too — the batch window uses a
-    RANGE frame (peers included, no event_id ordering) precisely so the
-    join form's inclusive <= bounds and the window form agree on
-    same-user same-ts ties at the purchase, not just on tie-free data
-    (r8 advice closed; tests/test_streaming.py pins a constructed tie).
-
-    Streaming state stays bounded exactly as in ``view_purchase_join``:
-    user-equi join keys partition the state; every interval condition is
-    two-sided, so both join buffers evict at watermark; the final
-    ``dropDuplicates`` includes the event-time column, so dedup state
-    evicts too. Append mode end-to-end (chained stateful operators)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    v = src.filter(F.col("event_type") == "view").select(
-        F.col("user_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    p = src.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("__p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    e = src.filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("__e_user"),
-        F.col("ts").alias("error_ts"),
-    )
-    iv = F.expr(f"INTERVAL {within}")
-    vp = v.join(
-        p,
-        (F.col("user_id") == F.col("__p_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - iv),
-    )
-    # the joined stream carries TWO watermarked event-time columns
-    # (view_ts, purchase_ts); downstream stateful operators require
-    # exactly one, so view_ts is demoted to a plain timestamp (the
-    # unix_micros round-trip strips the event-time metadata — values are
-    # unchanged) and purchase_ts stays the stream's event time
-    if events.isStreaming:
-        vp = vp.withColumn(
-            "view_ts", F.expr("timestamp_micros(unix_micros(view_ts))")
-        )
-    vpe = vp.join(
-        e,
-        (F.col("user_id") == F.col("__e_user"))
-        & (F.col("error_ts") >= F.col("view_ts"))
-        & (F.col("error_ts") <= F.col("purchase_ts"))
-        # two-sided purchase_ts<->error_ts bound (implied by the view
-        # window) so both join buffers evict at the watermark
-        & (F.col("error_ts") >= F.col("purchase_ts") - iv),
-        "left_outer",
-    )
-    return (
-        vpe.filter(F.col("error_ts").isNull())
-        .select("user_id", "purchase_id", "purchase_ts")
-        .dropDuplicates(["purchase_id", "purchase_ts"])
-    )
-
-
-def make_upsert_batch_fn(base: str, keys: list[str], order_cols: list[str]):
-    """foreachBatch body for an exactly-once-style keyed upsert into a
-    versioned parquet dataset (sources.sinks.write_versioned).
-
-    Idempotence under replay: foreachBatch re-delivers a micro-batch with the
-    SAME epoch_id after a failure/restart; the last applied epoch is recorded
-    in an ``_EPOCH`` marker (Hadoop FS — works on HDFS/object stores), and
-    epochs <= it are skipped, so a replayed batch cannot double-apply. Epoch
-    ids from a single streaming query are monotonic, which makes the single
-    marker sufficient (the standard Structured Streaming foreachBatch
-    exactly-once recipe).
-
-    Merge semantics: per key, the survivor is the first row under
-    ``order_cols`` DESCENDING (latest wins), with incoming-beats-current as
-    the tie-break. Ordering by recency before origin matters: an
-    out-of-order or stale delivery (order key older than the stored row)
-    must NOT clobber newer state — "incoming always wins" breaks exactly
-    that replay case.
-    """
-    from pyspark.sql import Window
-
-    from healthcare_rcm_etl_pipeline_spark.sources import sinks
-
-    def _last_epoch(spark: SparkSession) -> int:
-        return sinks.read_int_marker(spark, f"{base}/_EPOCH", -1)
-
-    def _write_epoch(spark: SparkSession, epoch_id: int) -> None:
-        sinks.write_int_marker(spark, f"{base}/_EPOCH", epoch_id)
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if epoch_id <= _last_epoch(spark):
-            return  # replayed epoch: already applied
-        incoming = batch_df.withColumn("__new", F.lit(1))
-        current = sinks.read_versioned(spark, base)
-        merged = (
-            incoming
-            if current is None
-            else current.withColumn("__new", F.lit(0)).unionByName(incoming)
-        )
-        w = Window.partitionBy(*keys).orderBy(
-            *[F.desc_nulls_last(c) for c in order_cols], F.desc("__new")
-        )
-        resolved = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__new")
-        )
-        sinks.write_versioned(resolved, base)
-        _write_epoch(spark, epoch_id)
-
-    return apply_batch
-
-
-def stream_upsert_versioned(
-    stream_df: DataFrame,
-    base: str,
-    keys: list[str],
-    order_cols: list[str],
-    checkpoint: str,
-):
-    """Drive a stream into the idempotent versioned upsert via foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(make_upsert_batch_fn(base, keys, order_cols))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def dedup_events(
-    events: DataFrame, keys: list[str] | None = None, within: str = "10 minutes"
-) -> DataFrame:
-    """Exact dedup by key, batch AND streaming.
-
-    Batch: deterministic first-row-per-key (explicit within-key ordering).
-    Streaming: ``dropDuplicatesWithinWatermark`` — per-key state is EVICTED
-    once the watermark passes, so state is bounded by the duplicate-arrival
-    horizon instead of growing with the whole stream (the plain
-    ``dropDuplicates`` on an unbounded stream is a state leak at scale).
-    """
-    keys = keys or ["event_id"]
-    if events.isStreaming:
-        return events.withWatermark("ts", within).dropDuplicatesWithinWatermark(keys)
-    from healthcare_rcm_etl_pipeline_spark.operators.keys import first_row_per_key
-
-    return first_row_per_key(events, keys)

@@ -35,16 +35,17 @@ usual; different token (new checkpoint against an existing base) -> the
 stream REBINDS, mapping its first batch to the next free physical epoch.
 Ingestion continues where the corpus left off instead of dropping data.
 
-All five ingest families (dedup above, semantic, chunk, component,
-entity) run this protocol through ONE skeleton, ``_epoch_batch_fn``, and
-supply only their probe and delta logic; ``ingest_stream`` drives any of
-them from a stream. (``events.make_upsert_batch_fn`` keeps its own bare
-integer marker: no run token, no rebind.)
+All four ingest families (dedup above, semantic, component, entity) run
+this protocol through ONE skeleton, ``_epoch_batch_fn``, and supply only
+their probe and delta logic; ``ingest_stream`` drives any of them from a
+stream.
 
 The label states (``components/``, ``entities/``) are stored once,
 range-sorted on ``doc``. Bases written before that still hold
 component-sorted ``components_by_label/`` / ``entities_by_label/`` copies;
 nothing reads, purges or compacts those dirs, so they are simply ignored.
+The same holds for the ``chunks/`` keeper-chunk state of bases written by
+the retired chunk-dedup ingest family.
 """
 
 from __future__ import annotations
@@ -60,7 +61,7 @@ from pyspark.sql import functions as F
 
 from healthcare_rcm_etl_pipeline_spark.functions.text import fingerprint_md5
 from healthcare_rcm_etl_pipeline_spark.operators import dedup, graph
-from healthcare_rcm_etl_pipeline_spark.session import job_description
+from healthcare_rcm_etl_pipeline_spark.session import job_description, local_frame
 from healthcare_rcm_etl_pipeline_spark.sources import sinks
 
 
@@ -173,9 +174,9 @@ def _in_literals(col: str, keys) -> F.Column:
     the pruned scan it gates runs in 0.3 s (r16 probe; guide §4: bound
     what crosses the Python boundary). The parsed form is the same
     Catalyst ``In`` — same semantics, same parquet PushedFilter — built
-    from one string transfer. Non-int keys (e.g. chunk-text probes,
-    bounded small) keep the isin path; bool is excluded from the fast
-    path (it is an int subclass but renders as True/False, not SQL)."""
+    from one string transfer. Non-int keys keep the isin path; bool is
+    excluded from the fast path (it is an int subclass but renders as
+    True/False, not SQL)."""
     ks = list(keys)
     if ks and all(type(k) is int for k in ks):
         return F.expr(f"`{col}` IN ({','.join(map(str, ks))})")
@@ -215,33 +216,14 @@ def _literal_pruned(
     per-row-group filter evaluation than the scan it saves). ``limit``
     defaults to the module's ``_PROBE_LITERAL_MAX`` at CALL time (tests
     pin the fallback branch by patching it). On the band index
-    (``col="bh"``) the prune is exact by the ``read_band_index_for``
-    argument."""
+    (``col="bh"``) the prune is exact: keeping a same-bh row from a
+    different band is harmless (the bucket key downstream is (band, bh)),
+    and a row with a non-probe bh can never share a bucket with the
+    probe."""
     if limit is None:
         limit = _PROBE_LITERAL_MAX
     keys = _probe_keys(probe, col, limit)
     return state if len(keys) > limit else state.filter(_in_literals(col, keys))
-
-
-def read_band_index_for(
-    spark: SparkSession,
-    base: str,
-    probe_bands: DataFrame,
-    max_epoch: int | None = None,
-) -> DataFrame | None:
-    """Point-lookup view of the band index: only rows whose band-hash
-    matches one of the probe's keys. Up to ``_PROBE_LITERAL_MAX`` distinct
-    keys are collected and applied as a literal ``In(bh, ...)`` predicate
-    (``_literal_pruned``), which reaches the parquet scan (PushedFilters)
-    and — the state being range-sorted on ``bh`` at write time — prunes
-    to the matching files/row groups; a bigger probe gets the whole index
-    back, and the join prune inside ``minhash_lsh_pairs_incremental``
-    does the work. Keeping a same-bh row from a different band is
-    harmless (the bucket key downstream is (band, bh)); dropping any row
-    with a non-probe bh is exact (it can never share a bucket with the
-    probe). Scan cost tracks the PROBE's key count, not the corpus."""
-    idx = read_band_index(spark, base, max_epoch)
-    return None if idx is None else _literal_pruned(idx, probe_bands, "bh")
 
 
 def _doc_fetch(spark: SparkSession, base: str, id_col: str, last: int):
@@ -257,47 +239,6 @@ def _doc_fetch(spark: SparkSession, base: str, id_col: str, last: int):
         )
 
     return fetch
-
-
-def probe_near_dups(
-    spark: SparkSession,
-    base: str,
-    probe_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    verify_threshold: float = 0.5,
-) -> DataFrame | None:
-    """Serve "what are this document's near-dups in the corpus?" as a
-    POINT LOOKUP: the probe's band keys prune the persisted index scan
-    (``read_band_index_for``), and candidate base TEXT is fetched by a
-    literal id filter over the range-sorted docs state (``_doc_fetch``,
-    the same seam the dedup ingest uses) — so a few-doc probe touches a
-    few files of each state dataset, never the corpus. Output ≡
-    ``minhash_lsh_pairs_incremental(probe, full corpus)`` exactly (pinned
-    in tests/test_streaming_component_ingest.py). Returns None before the
-    first commit; does not mutate state."""
-    last = _read_epoch(spark, base)
-    probe_bands = dedup.minhash_band_table(
-        probe_df, text_col, id_col, k=k, bands=bands, n=n
-    )
-    idx = read_band_index_for(spark, base, probe_bands, max_epoch=last)
-    if idx is None:
-        return None
-    return dedup.minhash_lsh_pairs_incremental(
-        probe_df,
-        None,
-        text_col,
-        id_col,
-        k=k,
-        bands=bands,
-        n=n,
-        verify_threshold=verify_threshold,
-        base_bands=idx,
-        base_lookup=_doc_fetch(spark, base, id_col, last),
-    )
 
 
 def _resolve_epoch(
@@ -663,7 +604,6 @@ _DATASETS = (
     "docs",
     "bands",
     "vectors",
-    "chunks",
     "components",
     "rows",
     "variants",
@@ -674,101 +614,6 @@ _DATASETS = (
 # (latest-epoch-wins), compaction resolves + re-sorts, tiered mode skips
 _LABEL_STATES = ("components", "entities")
 _MAINT_LOCK = "_MAINT_LOCK"
-
-
-def read_chunk_state(
-    spark: SparkSession, base: str, max_epoch: int | None = None
-) -> DataFrame | None:
-    """The accumulated keeper-chunk state (chunk, keeper_doc) across
-    committed epochs — the chunk-dedup twin of ``read_band_index``."""
-    return _read_epoched(spark, f"{base}/chunks", max_epoch)
-
-
-def probe_chunk_rewrite(
-    spark: SparkSession,
-    base: str,
-    docs_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 15,
-) -> DataFrame:
-    """Serve "how would these documents be rewritten against the corpus?"
-    as a POINT LOOKUP: up to ``_PROBE_LITERAL_MAX`` distinct chunk keys of
-    the probe docs prune the persisted keeper-chunk state scan as a
-    literal ``In(chunk, ...)`` (``_literal_pruned``; above the bound the
-    rewrite's own anti-join is the only prune), then the standard
-    incremental rewrite runs against that pruned slice. Output ≡
-    ``chunk_dedup_rewrite_incremental(docs, full state)`` exactly (a
-    state row whose chunk is not among the probe's keys cannot affect
-    the anti-join). Read-only: state is NOT mutated — the serving twin of
-    ``make_chunk_ingest_batch_fn`` step 1."""
-    from healthcare_rcm_etl_pipeline_spark.operators.corpus import (
-        _chunk_occurrences,
-        chunk_dedup_rewrite_incremental,
-    )
-
-    state = read_chunk_state(spark, base, max_epoch=_read_epoch(spark, base))
-    if state is not None:
-        keys = _chunk_occurrences(docs_df, text_col, id_col, chunk_tokens).select(
-            F.col("__chunk").alias("chunk")
-        )
-        state = _literal_pruned(state, keys, "chunk")
-    rewritten, _ = chunk_dedup_rewrite_incremental(
-        docs_df, state, text_col, id_col, chunk_tokens=chunk_tokens
-    )
-    return rewritten
-
-
-def make_chunk_ingest_batch_fn(
-    base: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 15,
-    run_token: str | None = None,
-):
-    """foreachBatch body for chunk-level-deduplicated ingestion: each
-    micro-batch is REWRITTEN (cross-corpus duplicated chunks cut, CCNet
-    "remove duplicated lines" style) against the accumulated keeper-chunk
-    state before landing — the streaming consumer of
-    ``corpus.chunk_dedup_rewrite_incremental``, whose ascending-id fold is
-    pinned hash-equal to the one-shot batch rewrite by the
-    ``dedup_chunks_incremental`` registered oracle query. Runs on the
-    shared epoch skeleton (``_epoch_batch_fn``).
-
-    Per micro-batch:
-
-    1. REWRITE: one anti-join of the batch's chunk occurrences against the
-       persisted state (equi-join on the chunk key — the corpus text is
-       never re-scanned), batch-local min-id keeper groupBy, per-doc
-       bounded reassembly.
-    2. APPEND: the rewritten docs land as ``docs/epoch=N`` (schema
-       doc_id, n_chunks, n_kept, clean_text) and the batch's newly-claimed
-       chunks as ``chunks/epoch=N`` (chunk, keeper_doc — keeper provenance
-       so ``purge_ids`` can forget a purged doc's claimed texts). The
-       shared rewrite lineage is localCheckpointed once so the two writes
-       don't recompute it.
-
-    State at 100 TB: ``chunks/`` grows with DISTINCT corpus chunks (the
-    same order as the band index); per-batch cost tracks the batch, never
-    the corpus.
-    """
-    from healthcare_rcm_etl_pipeline_spark.operators.corpus import (
-        chunk_dedup_rewrite_incremental,
-    )
-
-    def delta(spark: SparkSession, batch_df: DataFrame, last: int) -> _Delta:
-        rewritten, new_chunks = chunk_dedup_rewrite_incremental(
-            batch_df,
-            read_chunk_state(spark, base, max_epoch=last),
-            text_col,
-            id_col,
-            chunk_tokens=chunk_tokens,
-            keeper_col="keeper_doc",
-            checkpoint_shared=True,
-        )
-        return _Delta([("docs", rewritten, id_col), ("chunks", new_chunks, "chunk")])
-
-    return _epoch_batch_fn(base, run_token, "chunk", delta)
 
 
 def read_labels(
@@ -1366,11 +1211,8 @@ def purge_ids(
     """Tombstone deletion ("right to be forgotten") propagated through the
     ingest base AND its derived indexes: the given ids are removed from
     ``docs/``, their band rows from ``bands/``, (for vector bases) their
-    rows from ``vectors/``, and (for chunk-dedup bases) the chunk-state
-    rows they CLAIMED from ``chunks/`` — keeper-chunk state stores the
-    claimed chunk TEXT, which is the purged doc's content; forgetting the
-    doc must forget those texts too (a later re-arrival of the same text
-    simply re-claims it).
+    rows from ``vectors/``, and their rows from the component, row,
+    variant and entity states.
 
     Cost scales with the AFFECTED epoch partitions, not the corpus: one
     pass finds which ``epoch=N`` directories contain a tombstoned id
@@ -1401,8 +1243,7 @@ def purge_ids(
     commit rename would let the trash cleanup destroy the only copy.
     """
     if isinstance(ids, list):
-        ids = spark.createDataFrame([(int(i),) for i in ids], "__pid long")
-        ids = ids.select(F.col("__pid"))
+        ids = local_frame(spark, [(int(i),) for i in ids], "__pid long")
     else:
         ids = ids.select(F.col(ids.columns[0]).alias("__pid"))
 
@@ -1421,7 +1262,6 @@ def purge_ids(
             ("docs", id_col),
             ("bands", "doc"),
             ("vectors", vec_id_col),
-            ("chunks", "keeper_doc"),
             ("components", "doc"),
             ("rows", id_col),
             ("variants", "doc"),

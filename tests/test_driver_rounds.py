@@ -65,6 +65,22 @@ def test_collect_bounded(spark, monkeypatch):
     assert session.collect_bounded(df) is None
 
 
+def test_driver_rounds_return_local_relations(spark, sf_dir):
+    """The BPE merges and the MMR greedy's result are driver-built frames:
+    Arrow tables, planned as a LocalRelation. A Python-list frame would be
+    a LogicalRDD over ``sc.parallelize``, whose collect starts a pyspark
+    daemon and a Python worker per core."""
+    from healthcare_rcm_etl_pipeline_spark.operators import corpus
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
+    merges, _ = corpus.bpe_train(docs, "text", n_merges=3)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    mmr = similarity.mmr_topk(emb, emb.filter("vec_id % 40 = 0"), k=3, pool=6)
+    for df in (merges, mmr):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
 @pytest.mark.parametrize("name", DRIVER_ROUND_QUERIES)
 def test_driver_and_distributed_rounds_agree(
     spark, monkeypatch, corpus_dir, sf_dir, name

@@ -109,7 +109,7 @@ def test_single_vs_multi_batch_fold_identical(spark, tmp_path):
 def test_variant_index_probe_is_pushed_down(spark, tmp_path):
     """Cross-corpus candidate generation probes the persisted variant
     index with the batch's bounded vh set as a pushed-down literal over
-    the vh-range-sorted state — the read_band_index_for device."""
+    the vh-range-sorted state — the band-index literal-prune device."""
     base = str(tmp_path / "mdm")
     fn = ingest.make_entity_ingest_batch_fn(
         base, "name", "id", agree_cols=["nation", "seg"]

@@ -1,5 +1,5 @@
 """The exactly-once epoch skeleton every streaming ingest family runs on
-(streaming/ingest.py ``_epoch_batch_fn``), pinned once over all five
+(streaming/ingest.py ``_epoch_batch_fn``), pinned once over all four
 families on tiny inline frames: re-applying a committed epoch id changes
 nothing, a new run token against an existing base commits at the next
 physical epoch, and every family reports the same per-step timings."""
@@ -34,10 +34,6 @@ FAMILIES = {
     "semantic": (
         ingest.make_semantic_ingest_batch_fn,
         VECS, [(1, _vec(0)), (2, _vec(40))], [(10, _vec(20))], "vectors",
-    ),
-    "chunk": (
-        ingest.make_chunk_ingest_batch_fn,
-        TEXT, [(1, f"{A} {B}"), (2, B)], [(10, f"{B} {C}")], "docs",
     ),
     "component": (
         ingest.make_component_ingest_batch_fn,

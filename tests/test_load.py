@@ -38,43 +38,15 @@ def test_loaded_schemas_match_declared(warehouse):
         assert actual == declared, f"{name}: {actual} != {declared}"
 
 
-def test_read_jsonl_schema_and_permissive(spark, tmp_path):
+def test_bind_schema_try_casts_malformed_dates(spark):
+    """Sink-side DATE coercion (SURVEY S7): a malformed value becomes NULL
+    instead of failing the load under Spark 4's ANSI mode."""
     from pyspark.sql import types as T
 
-    from healthcare_rcm_etl_pipeline_spark.sources.readers import read_jsonl
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello", "score": 0.5}\n'
-        '{"doc_id": 2, "text": "world", "score": "not a number"}\n'
-        '{"doc_id": 3, "text": null, "score": 1.25}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    rows = {r["doc_id"]: r for r in read_jsonl(spark, str(p), schema).collect()}
-    assert rows[1]["score"] == 0.5 and rows[3]["text"] is None
-    # malformed field coerces, row survives (PERMISSIVE)
-    assert 2 in rows
-
-
-def test_read_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from healthcare_rcm_etl_pipeline_spark.sources.readers import read_orc
-
-    src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    d = str(tmp_path / "orders_orc")
-    src.write.mode("overwrite").orc(d)
-    back = read_orc(spark, d)
-    assert back.count() == src.count()
-    q = back.filter(F.col("o_orderstatus") == "F").select("o_orderkey", "o_totalprice")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "o_orderstatus" in plan.split("PushedFilters")[1][:200]
+    df = spark.createDataFrame([("2024-01-05",), ("not-a-date",)], ["d"])
+    schema = T.StructType([T.StructField("d", T.DateType())])
+    vals = [r[0] for r in wload.bind_schema(df, schema).collect()]
+    assert str(vals[0]) == "2024-01-05" and vals[1] is None
 
 
 def test_normalize_ntz_casts_all_ntz_columns(spark, tmp_path):

@@ -12,7 +12,6 @@ import pytest
 from healthcare_rcm_etl_pipeline_spark.operators.multimodal import (
     decode_image,
     extract_features,
-    resize_nearest,
 )
 
 
@@ -47,13 +46,6 @@ def test_decode_image_roundtrip(maker, ch):
     out = decode_image(payload)
     assert out.shape == (7, 13, ch)
     np.testing.assert_array_equal(out, img)
-
-
-def test_resize_nearest_exact():
-    _, img = make_ppm(8, 8)
-    small = resize_nearest(img, 4, 2)
-    assert small.shape == (2, 4, 3)
-    np.testing.assert_array_equal(small, img[[0, 4]][:, [0, 2, 4, 6]])
 
 
 def test_extract_features_real_decode_in_spark(spark):

@@ -4,11 +4,13 @@ and every package name a kept script imports or reads off an imported
 package module still exists, so an API change breaks this test instead of
 silently breaking a tool nothing else runs. A third guard keeps boolean
 switches that only tests set out of the package, and a fourth keeps its
-allowlist free of switches that no longer exist."""
+allowlist free of switches that no longer exist. The last two do the same
+for whole top-level package functions that only tests reach."""
 
 from __future__ import annotations
 
 import ast
+import functools
 import importlib
 import importlib.util
 import os
@@ -95,6 +97,8 @@ def _py_files(root: str) -> list[str]:
     )
 
 
+# each file is parsed once: the switch and function guards walk the same trees
+@functools.lru_cache(maxsize=None)
 def _parse(path: str) -> ast.Module:
     with open(path) as f:
         return ast.parse(f.read(), path)
@@ -153,4 +157,86 @@ def test_no_boolean_switch_only_tests_set():
     assert unset == [], (
         "boolean switches no non-test caller sets (keep the branch production "
         "takes and delete the rest, or allowlist with a reason): " + ", ".join(unset)
+    )
+
+
+# Top-level package functions nothing outside tests/ references, kept on purpose.
+TEST_ONLY_FUNCTIONS_KEPT = {
+    "sources.readers:read_jdbc": "the paper's Phase 2 extract from the "
+    "hospital MySQL databases (PAPER.md)",
+    "plans.load:load_warehouse": "the paper's Phase 6 load into the "
+    "BigQuery warehouse (PAPER.md)",
+    "streaming.ingest:purge_ids": "operator data-removal op (tombstones ids "
+    "in every dataset of an ingest base)",
+    "streaming.ingest:ingest_stream": "the Structured Streaming driver; it "
+    "mints the run token the epoch protocol's replay and rebind rules rely on",
+    "streaming.events:stream_from_files": "streaming test harness: a "
+    "watermarked parquet file-source stream",
+    "streaming.events:run_stream_to_memory": "streaming test harness: drains "
+    "a stream into a memory sink (availableNow trigger)",
+    "operators.dedup:minhash_signatures_expr": "bit-parity reference the "
+    "Arrow minhash kernel is tested against",
+}
+
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _is_query(fn: ast.FunctionDef) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in fn.decorator_list
+    )
+
+
+def _package_functions() -> list[tuple[str, str, ast.FunctionDef]]:
+    """(module:function, path, node) for every top-level package function
+    that is not registered with ``@query``."""
+    out = []
+    for path in _py_files(PKG):
+        module = os.path.relpath(path, os.path.join(REPO, PKG))[:-3].replace(os.sep, ".")
+        for fn in _parse(path).body:
+            if isinstance(fn, _DEF) and not _is_query(fn):
+                out.append((f"{module}:{fn.name}", path, fn))
+    return out
+
+
+def _referrers() -> dict[str, set[tuple[str, str | None]]]:
+    """Name -> the (path, top-level function or None) places outside tests/
+    that mention it as a name, an attribute or an import alias."""
+    refs: dict[str, set[tuple[str, str | None]]] = {}
+    for root in CALLER_ROOTS:
+        for path in _py_files(root):
+            for top in _parse(path).body:
+                owner = (path, top.name if isinstance(top, _DEF) else None)
+                for node in ast.walk(top):
+                    if isinstance(node, ast.Name):
+                        name = node.id
+                    elif isinstance(node, ast.Attribute):
+                        name = node.attr
+                    elif isinstance(node, ast.alias):
+                        name = node.name.rsplit(".", 1)[-1]
+                    else:
+                        continue
+                    refs.setdefault(name, set()).add(owner)
+    return refs
+
+
+def test_kept_functions_exist():
+    """An allowlist entry whose function is gone would keep excusing a
+    function that a later change brings back under that name."""
+    present = {key for key, _, _ in _package_functions()}
+    assert sorted(set(TEST_ONLY_FUNCTIONS_KEPT) - present) == []
+
+
+def test_no_package_function_only_tests_reach():
+    refs = _referrers()
+    unreached = sorted(
+        f"{key} ({fn.end_lineno - fn.lineno + 1} lines)"
+        for key, path, fn in _package_functions()
+        if key not in TEST_ONLY_FUNCTIONS_KEPT
+        and not refs.get(fn.name, set()) - {(path, fn.name)}
+    )
+    assert unreached == [], (
+        "package functions nothing outside tests/ references (delete them with "
+        "their tests, or allowlist with a reason): " + ", ".join(unreached)
     )

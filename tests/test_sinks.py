@@ -1,4 +1,4 @@
-"""Sink behaviors (SURVEY.md §2a S5-S8): clustered writes, versioned SCD2
+"""Sink behaviors (SURVEY.md §2a S5, S6, S8): clustered writes, versioned SCD2
 barrier with atomic promote, row-count reconciliation."""
 
 from __future__ import annotations
@@ -51,81 +51,3 @@ def test_rowcount_reconcile(spark, tmpdir):
     path = os.path.join(tmpdir, "out")
     sinks.write_parquet(df, path)
     assert sinks.rowcount_reconcile(spark, df, path)
-
-
-def test_coerce_dates(spark):
-    df = spark.createDataFrame([("2024-01-05",), ("not-a-date",)], ["d"])
-    out = sinks.coerce_dates(df, ["d"])
-    vals = [r[0] for r in out.collect()]
-    assert str(vals[0]) == "2024-01-05" and vals[1] is None
-
-
-def test_compact_versioned_reduces_files_preserves_rows(spark, tmp_path):
-    import os
-
-    from healthcare_rcm_etl_pipeline_spark.sources import sinks
-
-    base = str(tmp_path / "versioned")
-    df = spark.range(10_000).withColumn("v", F.col("id") * 2)
-    # simulate a micro-batch-accreted dataset: 64 tiny files
-    sinks.write_versioned(df.repartition(64), base)
-    v_dir = os.path.join(base, "v=1")
-    n_before = len([f for f in os.listdir(v_dir) if f.endswith(".parquet")])
-    assert n_before == 64
-
-    new_v = sinks.compact_versioned(spark, base, target_file_bytes=10 * 1024 * 1024)
-    assert new_v == 2
-    v_dir2 = os.path.join(base, f"v={new_v}")
-    n_after = len([f for f in os.listdir(v_dir2) if f.endswith(".parquet")])
-    assert n_after < n_before
-    out = sinks.read_versioned(spark, base)
-    assert out.count() == 10_000
-    assert out.agg(F.sum("v")).collect()[0][0] == df.agg(F.sum("v")).collect()[0][0]
-
-
-def test_compact_versioned_requires_promoted_version(spark, tmp_path):
-    import pytest
-
-    from healthcare_rcm_etl_pipeline_spark.sources import sinks
-
-    with pytest.raises(ValueError, match="no promoted version"):
-        sinks.compact_versioned(spark, str(tmp_path / "nothing"))
-
-
-def test_zorder_write_narrows_every_clustered_column(spark, tmp_path):
-    import duckdb
-
-    from healthcare_rcm_etl_pipeline_spark.sources import sinks
-
-    orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
-    zdir = str(tmp_path / "zorder")
-    ldir = str(tmp_path / "linear")
-    sinks.write_zordered(orders, zdir, ["o_custkey", "o_totalprice"], n_files=64)
-    (
-        orders.repartitionByRange(64, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.mode("overwrite")
-        .parquet(ldir)
-    )
-
-    def overlap_fraction(d, lo, hi):
-        rows = duckdb.sql(
-            f"""SELECT filename, MIN(o_totalprice) AS mn, MAX(o_totalprice) AS mx
-                FROM read_parquet('{d}/*.parquet', filename=true) GROUP BY 1"""
-        ).fetchall()
-        hit = sum(1 for _, mn, mx in rows if mx >= lo and mn <= hi)
-        return hit / len(rows)
-
-    stats = orders.agg(
-        F.expr("percentile(o_totalprice, 0.495)"), F.expr("percentile(o_totalprice, 0.505)")
-    ).collect()[0]
-    lo, hi = float(stats[0]), float(stats[1])  # ~1%-wide band mid-range
-    z_frac = overlap_fraction(zdir, lo, hi)
-    l_frac = overlap_fraction(ldir, lo, hi)
-    # linear sort on o_custkey leaves o_totalprice full-range in ~every file;
-    # z-order must bound BOTH columns per file
-    assert z_frac <= l_frac / 2, f"zorder {z_frac:.2f} vs linear {l_frac:.2f}"
-    # and the data itself round-trips
-    back = spark.read.parquet(zdir)
-    assert back.count() == orders.count()
-    assert back.agg(F.sum("o_orderkey")).collect()[0][0] == orders.agg(F.sum("o_orderkey")).collect()[0][0]

@@ -1,79 +1,14 @@
-"""Salted aggregation / replicated join equal their unsalted twins on a
-deliberately skewed dataset (90% of rows share one key)."""
+"""AQE's skew-join handling splits a hot key's sort-merge-join partition."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from healthcare_rcm_etl_pipeline_spark.operators.skew import (
-    replicated_join,
-    salted_aggregate,
-    with_salt,
-)
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    return (
-        spark.range(10_000)
-        .withColumn("key", F.when(F.col("id") % 10 != 0, "HOT").otherwise(F.concat(F.lit("k"), F.col("id"))))
-        .withColumn("val", (F.col("id") % 97).cast("double"))
-    )
-
-
-def test_salt_is_deterministic_and_bounded(skewed):
-    a = with_salt(skewed, "id", 8).select("id", "__salt")
-    b = with_salt(skewed, "id", 8).select("id", "__salt")
-    assert a.exceptAll(b).count() == 0
-    assert a.agg(F.max("__salt"), F.min("__salt")).collect()[0] == (7, 0)
-
-
-def test_salted_aggregate_matches_plain(skewed):
-    plain = {
-        (r["key"]): (r["n"], r["total"], r["mx"])
-        for r in skewed.groupBy("key")
-        .agg(F.count("*").alias("n"), F.sum("val").alias("total"), F.max("val").alias("mx"))
-        .collect()
-    }
-    salted = {
-        (r["key"]): (r["n"], r["total"], r["mx"])
-        for r in salted_aggregate(
-            skewed,
-            ["key"],
-            {"n": (F.count("*"), "sum"), "total": (F.sum("val"), "sum"), "mx": (F.max("val"), "max")},
-            unique_col="id",
-            buckets=16,
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_replicated_join_matches_plain(spark, skewed):
-    dim = spark.createDataFrame(
-        [("HOT", "hot-dim")] + [(f"k{i}", f"d{i}") for i in range(0, 10_000, 10)],
-        "key string, attr string",
-    )
-    plain = skewed.join(dim, "key", "left").select("id", "attr")
-    salted = replicated_join(skewed, dim, ["key"], "id", buckets=8).select("id", "attr")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
-def test_salted_aggregate_rejects_non_algebraic(skewed):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unsupported merge"):
-        salted_aggregate(
-            skewed, ["key"], {"a": (F.avg("val"), "avg")}, unique_col="id"
-        )
 
 
 def test_aqe_splits_skewed_join_partition(spark):
     """Pin the AQE skew-join knob working: a 90%-hot key in a sort-merge
     join gets its partition split (skew=true in the final adaptive plan)
-    once it exceeds the skew thresholds — the engine-level complement to
-    the explicit salting operators in this module. The DF itself must be
+    once it exceeds the skew thresholds. The DF itself must be
     executed (collect) — an action like count() builds a different plan
     and leaves this one un-finalized."""
     saved = {

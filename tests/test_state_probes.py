@@ -1,28 +1,22 @@
-"""Point-lookup serving over the persisted ingest state (round-10 verdict
-item 6): the band index and keeper-chunk state are range-sorted on their
-probe keys at write time, and the probe readers apply the collected keys as
-LITERAL predicates — so the scan is pruned by parquet pushdown + footer
-stats instead of reading the whole state. Pinned here: (a) the pruned
-probes are output-EXACT vs the full-scan paths, (b) the literal predicate
-actually reaches the scan (PushedFilters in the executed plan)."""
+"""Point-lookup reads of the persisted ingest state: the band index and
+label states are range-sorted on their probe keys at write time, and the
+ingest batches apply the collected keys as LITERAL predicates — so the scan
+is pruned by parquet pushdown + footer stats instead of reading the whole
+state. Pinned here: (a) the pruned reads are output-EXACT vs the full-scan
+paths, (b) the literal predicate actually reaches the scan (PushedFilters
+in the executed plan)."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 
 from healthcare_rcm_etl_pipeline_spark.operators import dedup
-from healthcare_rcm_etl_pipeline_spark.operators.corpus import (
-    chunk_dedup_rewrite_incremental,
-)
 from healthcare_rcm_etl_pipeline_spark.streaming import ingest
 
 _T = [f"t{i}" for i in range(40)]
 A = " ".join(_T)
 A2 = " ".join(_T[:39] + ["zz"])
 LONER = " ".join(f"q{i}" for i in range(40))
-C1 = " ".join(f"a{i}" for i in range(15))
-C2 = " ".join(f"b{i}" for i in range(15))
-C3 = " ".join(f"c{i}" for i in range(15))
 
 
 def _df(spark, rows):
@@ -36,48 +30,20 @@ def _ingest_base(spark, tmp_path, rows):
     return base
 
 
-def test_probe_near_dups_equals_full_scan(spark, tmp_path):
-    base = _ingest_base(spark, tmp_path, [(1, A), (5, LONER)])
-    probe = _df(spark, [(100, A2), (101, " ".join(f"x{i}" for i in range(40)))])
-
-    got = ingest.probe_near_dups(spark, base, probe)
-    full = dedup.minhash_lsh_pairs_incremental(
-        probe, ingest.read_corpus(spark, base), "text", "doc_id"
-    )
-    keyf = lambda r: (r["doc_base"], r["doc_new"], r["n_common"], r["jaccard"])
-    assert sorted(map(keyf, got.collect())) == sorted(map(keyf, full.collect()))
-    assert {(r["doc_base"], r["doc_new"]) for r in got.collect()} == {(1, 100)}
-
-
 def test_probe_band_index_scan_is_pushed_down(spark, tmp_path):
     base = _ingest_base(spark, tmp_path, [(1, A), (5, LONER)])
     probe = _df(spark, [(100, A2)])
     pb = dedup.minhash_band_table(probe, "text", "doc_id")
-    idx = ingest.read_band_index_for(spark, base, pb)
+    idx = ingest._literal_pruned(ingest.read_band_index(spark, base), pb, "bh")
     plan = idx._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "In(bh" in plan, plan
-
-
-def test_probes_on_empty_base(spark, tmp_path):
-    """Serving before the first commit: the near-dup probe reports the
-    no-index state as None; the chunk probe degrades to the batch-local
-    rewrite (nothing claimed yet)."""
-    base = str(tmp_path / "never_written")
-    probe = _df(spark, [(1, A)])
-    assert ingest.probe_near_dups(spark, base, probe) is None
-    row = ingest.probe_chunk_rewrite(
-        spark, base, _df(spark, [(1, f"{C1} {C2}")])
-    ).collect()[0]
-    assert (row["n_chunks"], row["n_kept"]) == (2, 2)
 
 
 def test_ingest_literal_prune_fallback_is_equivalent(spark, tmp_path, monkeypatch):
     """Both branches of the batch-path index prune must ingest identically:
     with the literal bound forced to 0 every batch takes the join-based
     fallback, and the resulting corpus must equal the literal-pruned run's
-    (the prune is a scan optimization, never a semantics change). The
-    serving probes share the device: at bound 0 they read the whole state
-    and must still equal the full-scan paths."""
+    (the prune is a scan optimization, never a semantics change)."""
     rows1 = [(1, A), (5, LONER)]
     rows2 = [(100, A2), (101, " ".join(f"y{i}" for i in range(40)))]
 
@@ -96,58 +62,11 @@ def test_ingest_literal_prune_fallback_is_equivalent(spark, tmp_path, monkeypatc
     # the cross-corpus near-dup (100 vs 1) was dropped either way
     assert all(r[0] != 100 for r in literal)
 
-    base = str(tmp_path / "fb")
     probe = _df(spark, [(200, A2), (201, LONER)])
     pb = dedup.minhash_band_table(probe, "text", "doc_id")
-    plan = ingest.read_band_index_for(spark, base, pb)._jdf.queryExecution()
+    idx = ingest.read_band_index(spark, str(tmp_path / "fb"))
+    plan = ingest._literal_pruned(idx, pb, "bh")._jdf.queryExecution()
     assert "In(bh" not in plan.executedPlan().toString()  # fallback taken
-    got = ingest.probe_near_dups(spark, base, probe)
-    full = dedup.minhash_lsh_pairs_incremental(
-        probe, ingest.read_corpus(spark, base), "text", "doc_id"
-    )
-    keyf = lambda r: (r["doc_base"], r["doc_new"], r["n_common"], r["jaccard"])
-    assert sorted(map(keyf, got.collect())) == sorted(map(keyf, full.collect()))
-    assert {(r["doc_base"], r["doc_new"]) for r in got.collect()} == {
-        (1, 200),
-        (5, 201),
-    }
-
-    chunk_base = str(tmp_path / "chunks")
-    ingest.make_chunk_ingest_batch_fn(chunk_base)(
-        _df(spark, [(1, f"{C1} {C2}"), (2, f"{C2} {C3}")]), 0
-    )
-    cprobe = _df(spark, [(100, f"{C1} {C3} {' '.join(f'z{i}' for i in range(15))}")])
-    got_c = ingest.probe_chunk_rewrite(spark, chunk_base, cprobe)
-    full_c, _ = chunk_dedup_rewrite_incremental(
-        cprobe, ingest.read_chunk_state(spark, chunk_base), "text", "doc_id"
-    )
-    assert sorted(map(tuple, got_c.collect())) == sorted(map(tuple, full_c.collect()))
-    row = got_c.collect()[0]
-    assert (row["n_chunks"], row["n_kept"]) == (3, 1)
-
-
-def test_probe_chunk_rewrite_equals_full_state(spark, tmp_path):
-    base = str(tmp_path / "corpus")
-    fn = ingest.make_chunk_ingest_batch_fn(base)
-    fn(_df(spark, [(1, f"{C1} {C2}"), (2, f"{C2} {C3}")]), 0)
-
-    probe = _df(spark, [(100, f"{C1} {C3} {' '.join(f'z{i}' for i in range(15))}")])
-    got = ingest.probe_chunk_rewrite(spark, base, probe)
-    full, _ = chunk_dedup_rewrite_incremental(
-        probe, ingest.read_chunk_state(spark, base), "text", "doc_id"
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, full.collect()))
-    row = got.collect()[0]
-    # C1 and C3 are claimed by the corpus; only the fresh z-chunk survives
-    assert (row["n_chunks"], row["n_kept"]) == (3, 1)
-
-    keys = spark.createDataFrame([(C1,), (C2,)], "chunk string")
-    st = ingest._literal_pruned(ingest.read_chunk_state(spark, base), keys, "chunk")
-    plan = st._jdf.queryExecution().executedPlan().toString()
-    # Catalyst folds a 1-key isin to EqualTo; either way it must be PUSHED
-    assert "PushedFilters" in plan and (
-        "In(chunk" in plan or "EqualTo(chunk" in plan
-    ), plan
 
 
 def test_component_state_scan_one_is_pushed_down(spark, tmp_path):

@@ -41,27 +41,6 @@ def test_tumbling_window_streaming_matches_batch(spark, sf_dir, event_dir):
     assert len(s) >= len(b) - 1  # the last open window may be withheld
 
 
-def test_stateful_user_totals_matches_batch_agg(spark, sf_dir, event_dir):
-    from pyspark.sql import functions as F
-
-    schema = spark.read.parquet(event_dir).schema
-    stream = spark.readStream.schema(schema).parquet(event_dir)
-    out = _run_stream(spark, ev.stateful_user_totals(stream), "t_state", "update")
-    # final state per user (last update row) must equal the batch aggregate
-    final = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 4))
-        for r in out.orderBy("n_events").collect()  # update sink: last wins per key
-    }
-    batch = {
-        r["user_id"]: (r["n"], round(r["t"], 4))
-        for r in load_events(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    assert final == batch
-
-
 def test_watermark_drops_late_events(spark):
     """Late-data policy: with a 10-minute watermark, an event arriving a
     micro-batch later but hours behind the stream's max event time must NOT
@@ -125,26 +104,6 @@ def test_sessionize_streaming_runs(spark, event_dir):
     assert {"user_id", "session_start", "session_end", "n_events", "total_value"} <= cols
 
 
-def test_streaming_dedup_within_watermark(spark, sf_dir, event_dir):
-    import shutil as _sh
-    import tempfile as _tf
-
-    # double the events into a fresh stream source: every event arrives twice
-    d = _tf.mkdtemp(prefix="hrcm_dupstream_")
-    try:
-        src = load_events(spark, sf_dir)
-        src.unionAll(src).write.mode("overwrite").parquet(d)
-        schema = spark.read.parquet(d).schema
-        stream = spark.readStream.schema(schema).parquet(d)
-        out = _run_stream(spark, ev.dedup_events(stream), "t_dedup", "append")
-        # each event_id survives exactly once, and the set equals the source
-        got = {r["event_id"] for r in out.collect()}
-        assert out.count() == len(got)
-        assert got == {r["event_id"] for r in src.select("event_id").collect()}
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
-
-
 def test_stream_stream_join_matches_batch(spark, event_dir):
     batch = {
         tuple(r)
@@ -157,115 +116,13 @@ def test_stream_stream_join_matches_batch(spark, event_dir):
     assert got == batch and len(batch) > 0
 
 
-def test_foreach_batch_upsert_idempotent(spark):
-    import shutil as _sh
-    import tempfile as _tf
-
-    from healthcare_rcm_etl_pipeline_spark.sources import sinks
-
-    base = _tf.mkdtemp(prefix="hrcm_upsert_")
-    try:
-        fn = ev.make_upsert_batch_fn(base, keys=["k"], order_cols=["seq"])
-        b0 = spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], "k int, seq int, v string")
-        b1 = spark.createDataFrame([(2, 2, "b2"), (3, 1, "c")], "k int, seq int, v string")
-        fn(b0, 0)
-        fn(b1, 1)
-        state = {r["k"]: (r["seq"], r["v"]) for r in sinks.read_versioned(spark, base).collect()}
-        assert state == {1: (1, "a"), 2: (2, "b2"), 3: (1, "c")}
-        v_before = sinks._current_version(spark, base)
-        fn(b1, 1)  # replayed epoch: must be a no-op
-        fn(b1, 0)  # older epoch replay: also a no-op
-        assert sinks._current_version(spark, base) == v_before
-        # stale incoming (lower seq) must NOT clobber the current row
-        fn(spark.createDataFrame([(2, 1, "stale")], "k int, seq int, v string"), 2)
-        state = {r["k"]: (r["seq"], r["v"]) for r in sinks.read_versioned(spark, base).collect()}
-        assert state[2] == (2, "b2")
-    finally:
-        _sh.rmtree(base, ignore_errors=True)
-
-
-def test_stream_upsert_versioned_end_to_end(spark, event_dir):
-    import shutil as _sh
-    import tempfile as _tf
-
-    from healthcare_rcm_etl_pipeline_spark.operators.keys import first_row_per_key
-    from healthcare_rcm_etl_pipeline_spark.sources import sinks
-
-    base = _tf.mkdtemp(prefix="hrcm_upsertstream_")
-    ckpt = _tf.mkdtemp(prefix="hrcm_upsertckpt_")
-    try:
-        src = spark.read.parquet(event_dir).limit(200)
-        d = _tf.mkdtemp(prefix="hrcm_upsertsrc_")
-        src.write.mode("overwrite").parquet(d)
-        stream = spark.readStream.schema(src.schema).parquet(d)
-        q = ev.stream_upsert_versioned(stream, base, ["user_id"], ["ts", "event_id"], ckpt)
-        q.awaitTermination(120)
-        got = {r["user_id"]: r["event_id"] for r in sinks.read_versioned(spark, base).collect()}
-        # expected: latest event per user (ts desc, event_id desc tiebreak)
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-        exp = {
-            r["user_id"]: r["event_id"]
-            for r in spark.read.parquet(d)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .collect()
-        }
-        assert got == exp and len(exp) > 0
-        _sh.rmtree(d, ignore_errors=True)
-    finally:
-        _sh.rmtree(base, ignore_errors=True)
-        _sh.rmtree(ckpt, ignore_errors=True)
-
-
-def test_pattern_conversions_streaming_matches_batch(spark, sf_dir, event_dir):
-    """The MATCH_RECOGNIZE-lite pattern (view -> purchase within 30 min,
-    no error in between) runs END-TO-END under Structured Streaming as
-    chained stateful operators (two interval joins + watermarked dedup,
-    append mode) and must emit exactly the batch result of the same body.
-    A second bridge assertion ties that body to the REGISTERED
-    window-formulation query (events_pattern_conversion): identical
-    per-user conversion counts on the same events — so the streaming
-    path is transitively anchored to the DuckDB oracle."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entrymod
-
-    batch = ev.pattern_conversions(load_events(spark, sf_dir))
-    b = {tuple(r) for r in batch.collect()}
-    assert len(b) > 0
-
-    schema = spark.read.parquet(event_dir).schema
-    stream = spark.readStream.schema(schema).parquet(event_dir)
-    out = _run_stream(spark, ev.pattern_conversions(stream), "t_pattern", "append")
-    got = {tuple(r) for r in out.collect()}
-    # availableNow drains the source; watermark may withhold only state
-    # still open at end-of-stream, and the final watermark advances past
-    # every event, so the emitted set must equal the batch set
-    assert got == b
-
-    # bridge: join-formulation counts == registered window-formulation query
-    a = {
-        (r["user_id"], r["n"])
-        for r in batch.groupBy("user_id").agg(F.count("*").alias("n")).collect()
-    }
-    q = entrymod.queries()["events_pattern_conversion"](spark, sf_dir)
-    w = {(r["user_id"], r["n_conversions"]) for r in q.collect()}
-    assert a == w
-
-
-def test_pattern_conversions_same_ts_ties_match_window_form(spark, tmp_path):
-    """Constructed same-user same-timestamp ties AT THE PURCHASE — the
-    case absent from the sf events data that the r8 advice flagged. The
-    join form (pattern_conversions, batch mode) and the registered RANGE-
-    frame window query must agree exactly: semantics are purely
-    timestamp-based, so an error sharing the purchase's ts vetoes and a
-    view sharing it witnesses, regardless of event_id order."""
+def test_pattern_conversion_query_same_ts_ties(spark, tmp_path):
+    """Constructed same-user same-timestamp ties AT THE PURCHASE, a case
+    absent from the sf events data. The registered RANGE-frame window
+    query's semantics are purely timestamp-based: an error sharing the
+    purchase's ts vetoes and a view sharing it witnesses, regardless of
+    event_id order."""
     from datetime import datetime
-
-    from pyspark.sql import functions as F
 
     from healthcare_rcm_etl_pipeline_spark.plans.queries import QUERIES
 
@@ -279,7 +136,7 @@ def test_pattern_conversions_same_ts_ties_match_window_form(spark, tmp_path):
         # user 2: view SHARING the purchase ts, higher event_id -> converts
         (201, t(5), 2, "purchase", 9.0, None),
         (202, t(5), 2, "view", 0.0, None),
-        # user 3: error sharing the LAST VIEW's ts -> vetoed (both forms)
+        # user 3: error sharing the LAST VIEW's ts -> vetoed
         (300, t(0), 3, "view", 0.0, None),
         (301, t(0), 3, "error", 0.0, None),
         (302, t(5), 3, "purchase", 9.0, None),
@@ -294,18 +151,11 @@ def test_pattern_conversions_same_ts_ties_match_window_form(spark, tmp_path):
     )
     df.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
 
-    join_form = {
-        (r["user_id"], r["n"])
-        for r in ev.pattern_conversions(df)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
     window_form = {
         (r["user_id"], r["n_conversions"])
         for r in QUERIES["events_pattern_conversion"](spark, str(tmp_path)).collect()
     }
-    assert join_form == window_form == {(2, 1), (4, 1)}
+    assert window_form == {(2, 1), (4, 1)}
 
 
 def test_windowed_drift_streaming_matches_batch(spark, sf_dir, event_dir):
